@@ -1,21 +1,22 @@
 package graft.pipelines
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Small-file compaction for parquet datasets — the maintenance operator
-  * every long-running ingest needs at scale: streaming/micro-batch sinks
-  * and over-parallel writes leave thousands of KB-sized files per
-  * directory, and at 100 TB the resulting footer reads + scheduler
-  * pressure dominate scan cost long before the bytes do.
+/** Small-file compaction for [[Versioned]] tables — the maintenance
+  * operator every long-running ingest needs at scale: streaming/micro-
+  * batch publishes and over-parallel writes leave thousands of KB-sized
+  * files per version, and at 100 TB the resulting footer reads +
+  * scheduler pressure dominate scan cost long before the bytes do.
   *
-  * The rewrite sizes its output from the actual byte total
-  * (ceil(bytes / targetBytes) files) and republishes through
-  * [[Runner.AtomicParquetSink]], so readers see either the old fragmented
-  * version or the complete compacted one — never a partial directory.
-  * All listing/sizing goes through the Hadoop `FileSystem` API ([[Fs]]);
-  * note the sink's rename-based swap is for HDFS/local — on object
-  * stores compact into a [[Versioned]] table instead.
+  * A compaction is an ordinary publish: the latest committed version is
+  * rewritten into the next one, sized from its actual byte total
+  * (ceil(bytes / targetBytes) files), so readers see either the old
+  * fragmented version or the complete compacted one — never a partial
+  * directory — and time travel still reaches the version before it. The
+  * commit is [[Versioned]]'s exclusive marker create, so compaction runs
+  * unchanged on local disk, HDFS and object stores; all listing/sizing
+  * goes through the Hadoop `FileSystem` API ([[Fs]]).
   *
   * By default partitions merge with `coalesce` (no shuffle — the scale
   * default: compaction should move bytes once, not twice); pass
@@ -30,64 +31,78 @@ object Compaction {
   private def parquetFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
     Fs.list(dir).filter(_.getPath.getName.endsWith(".parquet"))
 
-  /** Compact `baseDir/name` in place (atomic publish). Flat datasets
-    * only: a Hive-partitioned layout (`k=v/` subdirectories) would be
-    * silently flattened by a whole-dataset rewrite, so it is rejected —
-    * compact each partition directory individually instead. A directory
-    * with no parquet files is likewise rejected (rather than dying later
-    * inside schema inference, or being mistaken for a healthy no-op).
+  /** Compact the latest committed version of the [[Versioned]] table
+    * `baseDir/name` into its next version (default retention).
     *
-    * QUIESCED datasets only, now ENFORCED (r14): the whole
-    * listing → rewrite → swap span holds the dataset's writer lease
-    * (`<baseDir>/_LEASE_<name>` — the same lease
-    * [[Runner.AtomicParquetSink]] takes), so a compaction racing a
-    * live producer on the same path is REFUSED with
-    * [[Versioned.ConcurrentWriterException]] instead of silently
-    * discarding whatever the producer appended between the listing and
-    * the swap (the r13 "documented but unguarded" gap). The guard is
-    * only as atomic as the connector's exclusive create — see the S3A
-    * caveat in [[Fs]]; and producers writing through raw
-    * `df.write.parquet` rather than the sink family still bypass it. A
-    * dataset with live concurrent appends belongs in [[Versioned]]
-    * (whose publishes never replace directories) — compaction there is
-    * a new version, not an in-place swap. */
+    *  - A plain version is rewritten whole and republished through
+    *    [[Versioned.publish]].
+    *  - A partitioned (manifest) version goes through ONE
+    *    [[Versioned.publishDelta]]: only partitions holding more files
+    *    than their own ceil(bytes / targetBytes) are rewritten (each
+    *    sized independently), every other partition is linked unchanged
+    *    — the layout is preserved and untouched partitions keep their
+    *    bytes. When no partition needs it, nothing is published.
+    *
+    * The whole listing → rewrite → commit span holds the table's writer
+    * lease (`<table>/_LEASE`, the one every publish takes), so a
+    * compaction racing a live producer is REFUSED with
+    * [[Versioned.ConcurrentWriterException]] instead of discarding what
+    * the producer committed in between. The guard is only as atomic as
+    * the connector's exclusive create — see the S3A caveat in [[Fs]].
+    *
+    * The report counts parquet files across the whole table before and
+    * after, the bytes of the source version, and the file count the
+    * compacted version is sized for. */
   def compact(spark: SparkSession, baseDir: String, name: String,
       targetBytes: Long = 128L * 1024 * 1024,
-      shuffle: Boolean = false): CompactReport =
-    Versioned.withLeases(Seq(new Path(s"$baseDir/_LEASE_$name"))) {
-      val dir = new Path(s"$baseDir/$name")
-      val hasPartitionDirs = Fs.list(dir).exists(st =>
-        st.isDirectory && st.getPath.getName.contains("="))
-      require(!hasPartitionDirs,
-        s"$dir is Hive-partitioned; compact each partition directory, " +
-          "not the dataset root (a whole-dataset rewrite drops the layout)")
-      val before = parquetFiles(dir)
-      require(before.nonEmpty,
-        s"$dir has no parquet files to compact (missing or empty dataset)")
-      val total = before.map(_.getLen).sum
-      val nOut = math.max(1L, (total + targetBytes - 1) / targetBytes).toInt
-      val df = spark.read.parquet(dir.toString)
-      val sized = if (shuffle) df.repartition(nOut) else df.coalesce(nOut)
-      Runner.AtomicParquetSink(baseDir, s"compact-${System.nanoTime()}")
-        .write(sized, name)
-      CompactReport(before.size, parquetFiles(dir).size, total, nOut)
-    }
-
-  /** Compact every partition of a Hive-layout dataset, one atomic
-    * publish per partition directory — the loop the flat-dataset guard
-    * tells users to run, packaged. Partitions compact independently
-    * (each is its own [[compact]] call), so a huge table can be
-    * maintained incrementally and a failure affects one partition.
-    * Returns (partition dir name → report), insertion-ordered. */
-  def compactPartitioned(spark: SparkSession, baseDir: String, name: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      shuffle: Boolean = false): Seq[(String, CompactReport)] = {
-    val root = new Path(s"$baseDir/$name")
-    val parts = Fs.list(root).filter(st =>
-      st.isDirectory && st.getPath.getName.contains("=")).map(_.getPath.getName)
-    require(parts.nonEmpty, s"$root has no partition directories")
-    parts.sorted.map { p =>
-      p -> compact(spark, root.toString, p, targetBytes, shuffle)
+      shuffle: Boolean = false): CompactReport = {
+    require(Versioned.latestVersion(baseDir, name).nonEmpty,
+      s"$baseDir/$name has no committed version to compact")
+    def sizeFor(bytes: Long): Int =
+      math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+    def sized(df: DataFrame, n: Int): DataFrame =
+      if (shuffle) df.repartition(n) else df.coalesce(n)
+    Versioned.withFamilyLease(baseDir, Seq(name)) {
+      val t = Versioned.tableDir(baseDir, name)
+      // resolved under the lease: a version resolved before it could be
+      // superseded by a publish that this compaction would then undo
+      val v = Versioned.latestVersion(baseDir, name).get
+      Versioned.manifest(baseDir, name, v) match {
+        case None =>
+          val before = parquetFiles(Versioned.vdir(t, v))
+          require(before.nonEmpty,
+            s"version $v of $baseDir/$name has no parquet files to compact")
+          val total = before.map(_.getLen).sum
+          val nOut = sizeFor(total)
+          val next = Versioned.publish(
+            sized(Versioned.read(spark, baseDir, name, Some(v)), nOut),
+            baseDir, name)
+          CompactReport(before.size,
+            parquetFiles(Versioned.vdir(t, next)).size, total, nOut)
+        case Some(m) =>
+          def files(entries: Seq[(String, String)]) =
+            entries.map(e => e -> parquetFiles(new Path(t, e._2)))
+          val before = files(m.entries)
+          val target =
+            before.map { case (e, fs) => e -> sizeFor(fs.map(_.getLen).sum) }.toMap
+          val (rewrite, link) =
+            before.partition { case (e, fs) => fs.size > target(e) }
+          val after =
+            if (rewrite.isEmpty) before
+            else {
+              // one read per rewritten partition, so each is sized alone
+              val delta = rewrite.map { case (e, _) => sized(
+                Versioned.readPartitions(spark, baseDir, name, m, Seq(e)),
+                target(e))
+              }.reduce(_.unionByName(_))
+              val next = Versioned.publishDelta(delta, baseDir, name,
+                m.partCol, reuse = link.map(_._1))
+              files(Versioned.manifest(baseDir, name, next).get.entries)
+            }
+          CompactReport(before.map(_._2.size).sum, after.map(_._2.size).sum,
+            before.flatMap(_._2).map(_.getLen).sum,
+            before.map { case (e, fs) => math.min(fs.size, target(e)) }.sum)
+      }
     }
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Thin helpers over `org.apache.hadoop.fs.FileSystem` — the storage
   * abstraction the publishing/maintenance utilities ([[Versioned]],
-  * [[Runner.AtomicParquetSink]], [[Compaction]]) run on, so the same code
+  * [[Compaction]], [[Runner]]'s gates and markers) run on, so the same code
   * executes against local disk, HDFS, or any object-store connector
   * (s3a://, gs://, abfs://) resolved from the scheme of the path. This
   * replaces the earlier `java.nio.file` implementation, which could only
@@ -34,9 +34,9 @@ import org.apache.spark.sql.SparkSession
   *    publishes) as the load-bearing defense; the marker then only has
   *    to make a committed version VISIBLE atomically, which a PUT is.
   *  - `rename` is atomic on HDFS and single-volume local disk; on S3A it
-  *    is copy+delete (NOT atomic) — rename-based protocols
-  *    ([[Runner.AtomicParquetSink]]) document this and the marker-commit
-  *    protocol ([[Versioned]]) avoids rename entirely.
+  *    is copy+delete (NOT atomic) — so the commit protocol
+  *    ([[Versioned]]) never renames; the one caller is the ANN admission
+  *    ledger's stage-then-rename of a small sidecar file.
   *
   * The Hadoop `Configuration` comes from the active Spark session (so
   * per-session `fs.<scheme>.impl` registrations and credentials apply);

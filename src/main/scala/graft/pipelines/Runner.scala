@@ -25,7 +25,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    (the reference computed it at import time — stale across midnight)
   *
   * All filesystem access goes through the Hadoop `FileSystem` API
-  * ([[Fs]]) so gates, markers, and the atomic sink run identically on
+  * ([[Fs]]) so gates, markers, and the versioned sink run identically on
   * local disk, HDFS, and object-store connectors.
   */
 object Runner {
@@ -53,159 +53,11 @@ object Runner {
         .option("header", "true").csv(s"$baseDir/$name")
   }
 
-  /** Atomic-publish parquet sink (the Delta-style upgrade of the
-    * reference's marker files, SURVEY §1.4): writes into a staging dir,
-    * then renames it over the target and drops a `_COMMIT` manifest (run
-    * tag + part list). A crashed job leaves only an ignorable staging dir
-    * (plus, in the worst case, the `.old-` aside — see the window note
-    * below); a reader that finds `_COMMIT` has a complete version.
-    *
-    * The swap is rename-based: atomic on HDFS and single-volume local
-    * disk. On S3A, `rename` is copy+delete — NOT atomic — so for object
-    * stores use [[Versioned]] (whose commit is a conditional-PUT marker
-    * and which never renames) instead of this sink.
-    *
-    * SINGLE-WRITER ENFORCED (r14): the whole heal → stage → swap span
-    * runs under a writer lease at `<baseDir>/_LEASE_<name>` (a SIBLING
-    * of the target, because the swap renames the target dir itself
-    * away), shared with [[Compaction.compact]] — a concurrent producer
-    * and compaction on the same dataset now refuse each other
-    * ([[Versioned.ConcurrentWriterException]]) instead of silently
-    * dropping whichever files landed between the rewrite's listing and
-    * its swap. */
-  final case class AtomicParquetSink(baseDir: String, runTag: String) extends Sink {
-    def write(df: DataFrame, name: String): Unit =
-      Versioned.withLeases(Seq(new Path(s"$baseDir/_LEASE_$name"))) {
-        writeLeased(df, name)
-      }
-
-    private def writeLeased(df: DataFrame, name: String): Unit = {
-      val target = new Path(s"$baseDir/$name")
-      // SELF-HEAL crash debris from PREVIOUS runs before doing anything:
-      // a process kill between the two renames below leaves `target`
-      // missing and the previous version stranded under
-      // `.old-<name>-<oldTag>` — since every later run uses a fresh
-      // runTag, nothing would ever look there again and "readers treat
-      // a missing dir as retry" would mean retrying forever. Restore
-      // the newest committed aside (it carries the _COMMIT of its own
-      // original publish), then sweep remaining asides and stale
-      // staging dirs (a crash after the rename-in but before the
-      // delete leaks a full old copy; a crash mid-write leaks staging).
-      val base = new Path(baseDir)
-      if (Fs.exists(base)) {
-        // an aside/staging dir BELONGS to this mart only if its _COMMIT
-        // records this mart's name (line 2) — prefix matching alone
-        // would cross-wire marts whose names are dash-prefixes of one
-        // another (mart 't' restoring mart 't-x'.s aside over its own
-        // target, or sweeping it). Debris without a name line (a
-        // pre-name-format target crashed mid-swap, or a staging dir
-        // whose _COMMIT never landed) is left alone for this-mart
-        // restores and only swept when it unambiguously matches.
-        def ownedByThisMart(p: Path): Boolean =
-          Fs.exists(new Path(p, "_COMMIT")) &&
-            Fs.readString(new Path(p, "_COMMIT")).split("\n")
-              .lift(1).contains(name)
-        val entries = Fs.list(base).map(_.getPath)
-        val asides = entries
-          .filter(_.getName.startsWith(s".old-$name-"))
-          .filter(ownedByThisMart)
-          .sortBy(p => Fs.of(p).getFileStatus(p).getModificationTime)
-        if (!Fs.exists(target) && asides.nonEmpty)
-          Fs.rename(asides.last, target)
-        // PRE-NAME-FORMAT debris (ADVICE r13): an aside whose _COMMIT
-        // predates the name line (line 2 is a parquet part filename, or
-        // absent) can never pass ownedByThisMart, so a crash in the
-        // swap window over an old-format target would strand it forever
-        // while the mart dir stays missing. NOTE the recorded run tag
-        // (commit line 1) is the WRITING run's, while the aside's dir
-        // name carries the RENAMING (crashed) run's tag — they never
-        // match on genuine debris, so the dir name is the ONLY parse
-        // material, and `.old-<name>-<tag>` is unambiguous exactly when
-        // the part after `.old-` contains a SINGLE dash: then there is
-        // precisely one (name, tag) split, and this mart must be its
-        // name. Anything with more dashes admits several owners
-        // (`.old-t-k9-x` could be mart `t` tag `k9-x` or mart `t-k9`
-        // tag `x`, and no filesystem state can prove which — the
-        // plausible-looking "does the sibling's target dir exist?"
-        // probe is INVERTED in the case that matters, since crash
-        // debris implies the true owner's target is missing too) — so
-        // multi-dash debris stays manual-vacuum territory: restoring on
-        // a guess could cross-wire marts, and wrong data is worse than
-        // a missing dir a reader treats as "retry".
-        def oldFormatUnambiguous(p: Path): Boolean = {
-          val commit = new Path(p, "_COMMIT")
-          p.getName.stripPrefix(".old-").count(_ == '-') == 1 &&
-            p.getName.startsWith(s".old-$name-") &&
-            Fs.exists(commit) && {
-              val l1 = Fs.readString(commit).split("\n").lift(1)
-              l1.isEmpty || l1.exists(_.endsWith(".parquet"))
-            }
-        }
-        if (!Fs.exists(target)) {
-          val legacy = entries
-            .filter(_.getName.startsWith(s".old-$name-"))
-            .filter(oldFormatUnambiguous)
-            .sortBy(p => Fs.of(p).getFileStatus(p).getModificationTime)
-          if (legacy.nonEmpty) Fs.rename(legacy.last, target)
-        }
-        // sweep: this mart's asides are deletable once a target exists
-        // (a restored aside's OLD path no longer exists — the Fs.exists
-        // re-check below is what protects it, since `entries` predates
-        // the restore); this mart's staging dirs from OTHER run tags
-        // (exact tag compare, not endsWith — tag '1' must not spare
-        // '.staging-t-r21') are crashed-run debris. Staging that died
-        // BEFORE its _COMMIT landed is unattributable (it could be
-        // another dash-prefix-sharing mart's LIVE mid-write dir) and is
-        // deliberately left for manual vacuum — the conservative side
-        // of the ownership rule.
-        entries.filter { p =>
-          (p.getName.startsWith(s".old-$name-") && Fs.exists(target) &&
-            // old-format asides sweep under the same unambiguous-parse
-            // rule the restore above uses (ADVICE r13's "stranded on
-            // disk forever"); ambiguous ones stay for manual vacuum
-            (ownedByThisMart(p) || oldFormatUnambiguous(p))) ||
-            (p.getName.startsWith(s".staging-$name-") &&
-              p.getName.stripPrefix(s".staging-$name-") != runTag &&
-              ownedByThisMart(p))
-        }.foreach(p => if (Fs.exists(p)) Fs.deleteRecursive(p))
-      }
-      val staging = new Path(s"$baseDir/.staging-$name-$runTag")
-      df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val parts = Fs.list(staging).map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).sorted.mkString("\n")
-      // line 2 records the mart name — the ownership witness the debris
-      // heal/sweep above keys on
-      Fs.writeString(new Path(staging, "_COMMIT"), s"$runTag\n$name\n$parts\n")
-      // Swap: old version renamed aside, staging renamed in. Hadoop has
-      // no two-dir exchange rename, so there IS an instant between the
-      // two renames with no `target`; an in-process failure is rolled
-      // back below, a process CRASH in the window is healed by the next
-      // run's debris sweep above, and readers are expected to treat a
-      // missing dir as "retry", not "empty". (Debris ownership is keyed
-      // on the _COMMIT's recorded mart name, not the dir-name prefix —
-      // mart names that are dash-prefixes of one another would
-      // otherwise share a namespace.)
-      val old = new Path(s"$baseDir/.old-$name-$runTag")
-      // abort loudly if our dataset lease was stale-reclaimed while the
-      // staging write ran — swapping anyway would silently discard
-      // whatever the reclaiming writer published meanwhile
-      Versioned.verifyLeasesHeld()
-      if (Fs.exists(target)) Fs.rename(target, old)
-      try Fs.rename(staging, target)
-      catch { case e: Throwable =>
-        if (Fs.exists(old) && !Fs.exists(target))
-          Fs.rename(old, target) // restore previous version
-        throw e
-      }
-      if (Fs.exists(old)) Fs.deleteRecursive(old)
-    }
-  }
-
   /** Versioned-publish sink: every run lands as a NEW immutable version
     * of `<name>` with time travel and rollback ([[Versioned]]) — the
-    * object-store-safe member of the family (no renames anywhere; the
-    * commit is an exclusive marker create = conditional PUT). Use this
-    * instead of [[AtomicParquetSink]] when baseDir is s3a:///gs://. */
+    * atomic member of the family, safe on object stores too (no renames
+    * anywhere; the commit is an exclusive marker create = conditional
+    * PUT). */
   final case class VersionedSink(baseDir: String, keep: Int = 3) extends Sink {
     def write(df: DataFrame, name: String): Unit = {
       Versioned.publish(df, baseDir, name, keep); ()

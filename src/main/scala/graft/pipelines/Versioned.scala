@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * `_COMMIT` marker inside it. Readers resolve "latest" as the highest
   * version with a marker, so they always see a complete version;
   * concurrent publishes never touch a directory a reader might be
-  * scanning (contrast AtomicParquetSink, which renames over the current
-  * path). Old versions stay readable for time travel / rollback until
+  * scanning. Old versions stay readable for time travel / rollback until
   * pruned past `keep`.
   *
   * Runs on any Hadoop `FileSystem` ([[Fs]]): local disk, HDFS, or an
@@ -49,8 +48,9 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object Versioned {
 
-  private def tableDir(baseDir: String, name: String) = new Path(s"$baseDir/$name")
-  private def vdir(t: Path, v: Long) = new Path(t, s"_v$v")
+  private[pipelines] def tableDir(baseDir: String, name: String) =
+    new Path(s"$baseDir/$name")
+  private[pipelines] def vdir(t: Path, v: Long) = new Path(t, s"_v$v")
   private def commitPath(t: Path, v: Long) = new Path(vdir(t, v), "_COMMIT")
 
   /** Per-INCARNATION stamp of a committed version: if a table directory
@@ -235,8 +235,8 @@ object Versioned {
   // finally in [[withLeases]]. Cross-process writers can't be waited on
   // (no notification channel), so they get the loud refusal instead.
   // Bounded: [[maybeEvictLocks]] drops idle entries past a high-water
-  // mark (a compactPartitioned over 10⁵ Hive partitions would otherwise
-  // grow this monotonically for the JVM's lifetime); eviction is safe
+  // mark (a process leasing 10⁵ distinct tables would otherwise grow
+  // this monotonically for the JVM's lifetime); eviction is safe
   // because [[liveGens]] is the real in-JVM ownership witness — a
   // thread racing through a freshly re-created lock instance still
   // waits on the file protocol below.
@@ -508,8 +508,7 @@ object Versioned {
     * sorted path order (one global order = no in-JVM deadlock between
     * writers taking overlapping sets), released in reverse, re-entrant
     * per thread. The building block under every mutating operation
-    * here, [[Compaction.compact]], and
-    * [[Runner.AtomicParquetSink]]. */
+    * here and [[Compaction.compact]]. */
   private[pipelines] def withLeases[A](leaseFiles: Seq[Path])(body: => A): A = {
     val ordered = leaseFiles.map(_.toString).distinct.sorted
       .map(new Path(_))
@@ -643,16 +642,49 @@ object Versioned {
     * next id steps past every on-disk directory, committed or orphaned,
     * so a crashed publish can never block or collide with the next one. */
   def publish(df: DataFrame, baseDir: String, name: String,
-      keep: Int = 3): Long = {
+      keep: Int = 3): Long =
+    publishStaged(baseDir, name, keep)(stage(_, df))
+
+  /** Under the table's lease: `write` stages the next version (through
+    * [[stage]], plus any sidecar that must land before the marker), then
+    * commit it and prune. The single-table publish shape — one lease,
+    * no journal. */
+  private def publishStaged(baseDir: String, name: String, keep: Int)(
+      write: Path => Long): Long = {
     require(keep >= 1, "keep must retain at least the current version")
     val t = tableDir(baseDir, name)
-    Fs.mkdirs(t)
     withLeases(Seq(leasePath(t))) {
-      val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
-      df.write.mode(SaveMode.ErrorIfExists).parquet(vdir(t, next).toString)
+      val next = write(t)
       commitAndPrune(t, next, keep)
       next
     }
+  }
+
+  /** Stage `df` as `t`'s next, still uncommitted version and return its
+    * id — the one data-writing step of every publish, single-table or
+    * group. The id steps past every on-disk directory, committed or
+    * orphaned, and the write is `ErrorIfExists`, so a crashed publish
+    * can never collide with this one. With `delta = (partCol, reuse)`
+    * the version is Hive-partitioned by `partCol` and its manifest
+    * lists the freshly written partitions plus every `reuse` entry they
+    * do not replace. Caller holds the table's lease. */
+  private def stage(t: Path, df: DataFrame,
+      delta: Option[(String, Seq[(String, String)])] = None): Long = {
+    Fs.mkdirs(t)
+    val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
+    val vd = vdir(t, next)
+    delta match {
+      case None => df.write.mode(SaveMode.ErrorIfExists).parquet(vd.toString)
+      case Some((partCol, reuse)) =>
+        df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
+          .parquet(vd.toString)
+        val fresh = partDirEntries(vd, s"_v$next", partCol)
+        val freshVals = fresh.map(_._1).toSet
+        writeManifest(t, next, Manifest(partCol,
+          df.schema(partCol).dataType.catalogString,
+          (fresh ++ reuse.filterNot(r => freshVals(r._1))).sortBy(_._1)))
+    }
+    next
   }
 
   // ---- group (multi-table) publish: WAL journal + roll-forward --------
@@ -740,24 +772,9 @@ object Versioned {
           s"linked version $v of $name is not committed")
         (name, v, false)
       case GroupFull(name, df) =>
-        val t = tableDir(baseDir, name)
-        Fs.mkdirs(t)
-        val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
-        df.write.mode(SaveMode.ErrorIfExists).parquet(vdir(t, next).toString)
-        (name, next, true)
+        (name, stage(tableDir(baseDir, name), df), true)
       case GroupDelta(name, df, partCol, reuse) =>
-        val t = tableDir(baseDir, name)
-        Fs.mkdirs(t)
-        val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
-        val vd = vdir(t, next)
-        df.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
-          .parquet(vd.toString)
-        val fresh = partDirEntries(vd, s"_v$next", partCol)
-        val freshVals = fresh.map(_._1).toSet
-        writeManifest(t, next, Manifest(partCol,
-          df.schema(partCol).dataType.catalogString,
-          (fresh ++ reuse.filterNot(r => freshVals(r._1))).sortBy(_._1)))
-        (name, next, true)
+        (name, stage(tableDir(baseDir, name), df, Some(partCol -> reuse)), true)
     }
     // trailing END sentinel: a journal truncated by a crash mid-write
     // must never be rolled forward as if it named the whole group.
@@ -842,8 +859,11 @@ object Versioned {
     * fresh/linked) is absent in pre-r13 journals, which also carry no
     * `#keep`, so recovery never prunes them and the default is moot. */
   private def readJournal(baseDir: String,
-      id: Long): (Map[String, JournalEntry], Option[Int]) = {
-    val lines = Fs.readString(stagedPath(baseDir, id)).split("\n")
+      id: Long): (Map[String, JournalEntry], Option[Int]) =
+    parseJournal(Fs.readString(stagedPath(baseDir, id)))
+
+  private def parseJournal(body: String): (Map[String, JournalEntry], Option[Int]) = {
+    val lines = body.split("\n")
       .filter(l => l.nonEmpty && l != "END").toSeq
     val entries = lines.map(_.split("\t")).collect {
       case Array(n, v) if v.toLongOption.isDefined =>
@@ -882,58 +902,68 @@ object Versioned {
     * OLDER than [[leaseTtlMs]] (a live writer seals within milliseconds
     * of writing; an unsealed journal that old is crash debris) —
     * deleting a live writer's staged journal would otherwise make its
-    * imminent seal marker point at nothing. Returns the journal ids
-    * actually rolled forward. */
+    * imminent seal marker point at nothing. A journal that vanishes
+    * between the listing and its read (a concurrent recovery deleted it
+    * as debris) is not pending. Returns the journal ids actually rolled
+    * forward. */
   def recoverGroups(baseDir: String): Seq[Long] = {
     val pending = txnIds(baseDir, ".staged")
       .filterNot(id => Fs.exists(committedPath(baseDir, id))).sorted
     pending.filter { id =>
-      val raw = Fs.readString(stagedPath(baseDir, id)).split("\n")
-        .filter(_.nonEmpty).toSeq
-      val sealed_ = raw.lastOption.contains("END")
-      val (entries, keepRec) = readJournal(baseDir, id)
-      val complete = sealed_ && entries.nonEmpty &&
-        entries.forall { case (n, e) =>
-          Fs.exists(vdir(tableDir(baseDir, n), e.version)) }
-      if (complete) {
-        try withFamilyLease(baseDir, entries.keys.toSeq) {
-          // the writer may have sealed while we acquired — re-check
-          // under the lease so a finished publish is never re-rolled
-          if (Fs.exists(committedPath(baseDir, id))) false
-          else {
-            entries.foreach { case (n, e) =>
-              val cp = commitPath(tableDir(baseDir, n), e.version)
-              if (!Fs.exists(cp)) Fs.createExclusive(cp, commitBody(e.version))
-            }
-            Fs.createExclusive(committedPath(baseDir, id), "recovered\n")
-            // prune exactly as the live path would have: STAGED members
-            // only — a linked member's version predates this transaction
-            // and pruning from it would delete versions a crash-free
-            // publish retains (e.g. the model tables an ANN delete links)
-            keepRec.foreach { k =>
-              entries.foreach { case (n, e) =>
-                if (e.fresh)
-                  pruneRetention(tableDir(baseDir, n), e.version, k) }
-            }
-            true
+      val body =
+        try Some(Fs.readString(stagedPath(baseDir, id)))
+        catch { case _: java.io.FileNotFoundException => None }
+      body.exists(rollForward(baseDir, id, _))
+    }
+  }
+
+  /** [[recoverGroups]] for one pending journal with content `body`:
+    * true when it was rolled forward. */
+  private def rollForward(baseDir: String, id: Long, body: String): Boolean = {
+    val sealed_ = body.split("\n").filter(_.nonEmpty).lastOption
+      .contains("END")
+    val (entries, keepRec) = parseJournal(body)
+    val complete = sealed_ && entries.nonEmpty &&
+      entries.forall { case (n, e) =>
+        Fs.exists(vdir(tableDir(baseDir, n), e.version)) }
+    if (complete) {
+      try withFamilyLease(baseDir, entries.keys.toSeq) {
+        // the writer may have sealed while we acquired — re-check
+        // under the lease so a finished publish is never re-rolled
+        if (Fs.exists(committedPath(baseDir, id))) false
+        else {
+          entries.foreach { case (n, e) =>
+            val cp = commitPath(tableDir(baseDir, n), e.version)
+            if (!Fs.exists(cp)) Fs.createExclusive(cp, commitBody(e.version))
           }
-        } catch {
-          // a member lease is held by a LIVE writer: this journal is an
-          // in-flight publish, not a crash — leave it alone
-          case _: ConcurrentWriterException => false
+          Fs.createExclusive(committedPath(baseDir, id), "recovered\n")
+          // prune exactly as the live path would have: STAGED members
+          // only — a linked member's version predates this transaction
+          // and pruning from it would delete versions a crash-free
+          // publish retains (e.g. the model tables an ANN delete links)
+          keepRec.foreach { k =>
+            entries.foreach { case (n, e) =>
+              if (e.fresh)
+                pruneRetention(tableDir(baseDir, n), e.version, k) }
+          }
+          true
         }
-      } else {
-        // incomplete: unsealed, empty, or missing staged data. Only
-        // abandon it once provably dead (older than the lease horizon)
-        // — a false-positive crash detection must not delete a journal
-        // its writer is about to seal.
-        val age =
-          try System.currentTimeMillis() - Fs.of(stagedPath(baseDir, id))
-            .getFileStatus(stagedPath(baseDir, id)).getModificationTime
-          catch { case _: java.io.IOException => Long.MinValue }
-        if (age > leaseTtlMs) Fs.deleteRecursive(stagedPath(baseDir, id))
-        false
+      } catch {
+        // a member lease is held by a LIVE writer: this journal is an
+        // in-flight publish, not a crash — leave it alone
+        case _: ConcurrentWriterException => false
       }
+    } else {
+      // incomplete: unsealed, empty, or missing staged data. Only
+      // abandon it once provably dead (older than the lease horizon)
+      // — a false-positive crash detection must not delete a journal
+      // its writer is about to seal.
+      val age =
+        try System.currentTimeMillis() - Fs.of(stagedPath(baseDir, id))
+          .getFileStatus(stagedPath(baseDir, id)).getModificationTime
+        catch { case _: java.io.IOException => Long.MinValue }
+      if (age > leaseTtlMs) Fs.deleteRecursive(stagedPath(baseDir, id))
+      false
     }
   }
 
@@ -1062,24 +1092,8 @@ object Versioned {
     * partition-scoped refresh a 100 TB table needs — an upsert touching
     * 1 of N partitions costs O(1/N) of a full rewrite. */
   def publishDelta(delta: DataFrame, baseDir: String, name: String,
-      partCol: String, reuse: Seq[(String, String)], keep: Int = 3): Long = {
-    require(keep >= 1, "keep must retain at least the current version")
-    val t = tableDir(baseDir, name)
-    Fs.mkdirs(t)
-    withLeases(Seq(leasePath(t))) {
-      val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
-      val vd = vdir(t, next)
-      delta.write.mode(SaveMode.ErrorIfExists).partitionBy(partCol)
-        .parquet(vd.toString)
-      val fresh = partDirEntries(vd, s"_v$next", partCol)
-      val freshVals = fresh.map(_._1).toSet
-      writeManifest(t, next, Manifest(partCol,
-        delta.schema(partCol).dataType.catalogString,
-        (fresh ++ reuse.filterNot(r => freshVals(r._1))).sortBy(_._1)))
-      commitAndPrune(t, next, keep)
-      next
-    }
-  }
+      partCol: String, reuse: Seq[(String, String)], keep: Int = 3): Long =
+    publishStaged(baseDir, name, keep)(stage(_, delta, Some(partCol -> reuse)))
 
   /** Read the manifest entries' data: entries are grouped by the version
     * directory that physically holds them and each group is ONE
@@ -1308,14 +1322,10 @@ object Versioned {
     * clustered layout ([[publishClustered]] or repartitionByRange) so
     * file ranges are disjoint and skipping actually bites. */
   def publishSkippable(df: DataFrame, baseDir: String, name: String,
-      statsCols: Seq[String], keep: Int = 3): Long = {
-    require(keep >= 1, "keep must retain at least the current version")
-    val t = tableDir(baseDir, name)
-    Fs.mkdirs(t)
-    withLeases(Seq(leasePath(t))) {
-      val next = versionsOnDisk(t).maxOption.getOrElse(-1L) + 1L
+      statsCols: Seq[String], keep: Int = 3): Long =
+    publishStaged(baseDir, name, keep) { t =>
+      val next = stage(t, df)
       val vd = vdir(t, next)
-      df.write.mode(SaveMode.ErrorIfExists).parquet(vd.toString)
       val wanted = statsCols.toSet
       val lines = Fs.list(vd)
         .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
@@ -1330,10 +1340,8 @@ object Versioned {
           }
         }
       Fs.writeString(fileStatsPath(t, next), lines.mkString("", "\n", "\n"))
-      commitAndPrune(t, next, keep)
       next
     }
-  }
 
   /** Range read through the skipping manifest: returns only rows with
     * `lo ≤ colName ≤ hi`, reading ONLY the files whose footer min/max

@@ -410,19 +410,19 @@ object Streams {
       watermarkDelay: String = "10 seconds"): DataFrame =
     viewPurchaseJoin(events, windowMinutes, watermarkDelay, "left_outer")
 
-  /** Publish a streaming aggregation's complete-mode snapshots through
-    * the batch sink family: every micro-batch atomically swaps in a new
-    * committed version of `name` (AtomicParquetSink → staging write +
-    * ATOMIC_MOVE + `_COMMIT` manifest). Readers always see a whole
-    * snapshot; a crash mid-batch leaves the previous version in place.
-    * This is the streaming face of the reference's marker-file protocol
-    * (SURVEY §2.2 K5) — commit metadata instead of `_SUCCESS` probes. */
+  /** Publish a streaming aggregation's complete-mode snapshots as
+    * [[graft.pipelines.Versioned]] versions: every micro-batch is one
+    * [[graft.pipelines.Versioned.publish]] of `name` (default retention),
+    * committed by its `_COMMIT` marker. Readers (`Versioned.read`)
+    * always see a whole snapshot; a crash mid-batch leaves the previous
+    * version latest. This is the streaming face of the reference's
+    * marker-file protocol (SURVEY §2.2 K5) — commit metadata instead of
+    * `_SUCCESS` probes. */
   def publishSnapshots(agg: DataFrame, baseDir: String, name: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     agg.writeStream.outputMode("complete")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.pipelines.Runner.AtomicParquetSink(baseDir, s"b$id")
-          .write(batch.toDF(), name)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+        graft.pipelines.Versioned.publish(batch.toDF(), baseDir, name); ()
       }
 
   /** Publish complete-mode snapshots to a JDBC table with per-epoch

@@ -282,6 +282,9 @@ class LeaseStressSpec extends AnyFunSuite {
     // any vacuum of the whole run ever reclaims
     Fs.mkdirs(new Path(s"$base/$table/_v999999"))
     Fs.writeString(new Path(s"$base/$table/_v999999/part-junk"), "debris")
+    // boot the reader's own session first: started lazily by its first
+    // probe, it would spend the workers' whole 12 s window booting
+    spark.range(1).collect()
     val workers = Seq(("m1", "mix"), ("m2", "mix"), ("c1", "maint"))
       .map { case (w, mode) =>
         val out = new java.io.File(dir, s"$w.out")
@@ -290,13 +293,15 @@ class LeaseStressSpec extends AnyFunSuite {
           "12000", "600000", log.getPath))
       }
     // READER while they run — the "snapshot always readable mid-compact"
-    // contract, probed live: the latest COMMITTED version must read as
-    // exactly its writer's one-row payload at every instant; the flat
-    // sink may be momentarily missing during its atomic swap (the
-    // documented reader-retries state) but a read that SUCCEEDS must be
-    // one complete payload, never a torn or mixed directory
+    // contract, probed live: the latest COMMITTED version of either
+    // table must read as exactly one writer's one-row payload at every
+    // instant. Nothing renames, so there is no missing-directory window.
+    // The one read allowed to fail is of a `flat` version that retention
+    // pruned mid-read (compaction keeps the default 3 versions — the
+    // size-keep-above-your-longest-query contract), and such a version
+    // is gone from disk.
     import spark.implicits._
-    var vReads = 0; var fReads = 0
+    var vReads = 0; var fReads = 0; var fPruned = 0
     // probe until the workers EXIT (their 12 s clocks start after their
     // ~15 s Spark boot, so a fixed wall deadline here would spend itself
     // entirely inside the boot phase and read nothing), with a hard cap
@@ -311,17 +316,18 @@ class LeaseStressSpec extends AnyFunSuite {
         assert(rows.length == 1, s"torn versioned snapshot at _v$v: $rows")
         vReads += 1
       }
-      // flat probes are rationed 1-in-4: a probe that catches the swap
-      // window burns seconds in task retries (listing raced the rename),
-      // which would starve the versioned probes above of wall time
-      if (probes % 4 == 0) try {
-        val rows = spark.read.parquet(s"$base/flat")
-          .as[(String, Int)].collect().toSeq
-        assert(rows.length == 1, s"torn flat snapshot: $rows")
-        fReads += 1
-      } catch {
-        case e: org.scalatest.exceptions.TestFailedException => throw e
-        case _: Throwable => () // the swap's missing-dir window: retry
+      Versioned.latestVersion(base, "flat").foreach { v =>
+        try {
+          val rows = Versioned.read(spark, base, "flat", Some(v))
+            .as[(String, Int)].collect().toSeq
+          assert(rows.length == 1, s"torn flat snapshot at _v$v: $rows")
+          fReads += 1
+        } catch {
+          case e: org.scalatest.exceptions.TestFailedException => throw e
+          case e: Throwable =>
+            if (Fs.exists(new Path(s"$base/flat/_v$v/_COMMIT"))) throw e
+            fPruned += 1
+        }
       }
       Thread.sleep(40)
     }
@@ -366,28 +372,38 @@ class LeaseStressSpec extends AnyFunSuite {
     val compacts = """"compacts":(\d+)""".r.findFirstMatchIn(logs("c1"))
       .map(_.group(1).toLong)
     assert(compacts.exists(_ >= 1), s"no successful compact:\n${logs("c1")}")
-    // flat end state: one complete committed payload that some producer
-    // actually wrote (compaction preserved bytes, the swap lost nothing)
-    val sinkWrites = logs.values.flatMap(
-      """(?m)^sink (\S+) (\d+)$""".r.findAllMatchIn(_)
-        .map(m => (m.group(1), m.group(2).toInt))).toSet
-    assert(sinkWrites.nonEmpty, "no producer ever wrote the flat dataset")
-    val flat = spark.read.parquet(s"$base/flat")
+    // flat: producer claims are disjoint versions, every one still on
+    // disk reads as exactly its payload, and the latest version
+    // (possibly a compaction of one) is a payload some producer wrote
+    val flatClaims = logs.values.flatMap(
+      """(?m)^sink (\d+) (\S+) (\d+)$""".r.findAllMatchIn(_)
+        .map(m => m.group(1).toLong -> (m.group(2), m.group(3).toInt))).toSeq
+    assert(flatClaims.nonEmpty, "no producer ever wrote the flat table")
+    assert(flatClaims.map(_._1).distinct.size == flatClaims.size,
+      s"duplicate flat version claims: $flatClaims")
+    flatClaims.foreach { case (v, payload) =>
+      if (Fs.exists(new Path(s"$base/flat/_v$v/_COMMIT")))
+        assert(Versioned.read(spark, base, "flat", Some(v))
+          .as[(String, Int)].collect().toSeq == Seq(payload),
+          s"flat _v$v does not read as its producer's payload $payload")
+    }
+    val flat = Versioned.read(spark, base, "flat")
       .as[(String, Int)].collect().toSeq
-    assert(flat.length == 1 && sinkWrites(flat.head),
+    assert(flat.length == 1 && flatClaims.map(_._2).contains(flat.head),
       s"flat end state $flat is not a producer's payload")
-    assert(Fs.exists(new Path(s"$base/flat/_COMMIT")), "flat uncommitted")
-    // the reader made real progress (each probe is a Spark job, ~1 s+
-    // on a host also running three worker JVMs — a 12 s overlap window
-    // yields 5-15 probes; 3 is a liveness floor, not a throughput bar;
-    // mid-run flat probes are opportunistic — the end-state read below
-    // is the guaranteed one, and every in-loop success already asserted
+    // the reader made real progress on both tables (each read is a
+    // Spark job on a host also running three worker JVMs — a 12 s
+    // overlap window yields 5-10 of each; these are liveness floors, not
+    // throughput bars, and every in-loop read already asserted
     // completeness)
-    assert(vReads >= 3, s"only $vReads versioned reads ($fReads flat)")
-    // nothing stranded
-    val leftovers = Fs.list(t).map(_.getPath.getName)
-    assert(!leftovers.contains("_LEASE"), s"stranded lease: $leftovers")
-    assert(!leftovers.exists(_.contains(".reclaim.")),
-      s"leftover reclaim marker: $leftovers")
+    assert(vReads >= 3 && fReads >= 1,
+      s"only $vReads versioned and $fReads flat reads ($fPruned pruned)")
+    // nothing stranded on either table
+    Seq(t, new Path(s"$base/flat")).foreach { d =>
+      val leftovers = Fs.list(d).map(_.getPath.getName)
+      assert(!leftovers.contains("_LEASE"), s"stranded lease: $leftovers")
+      assert(!leftovers.exists(_.contains(".reclaim.")),
+        s"leftover reclaim marker: $leftovers")
+    }
   }
 }

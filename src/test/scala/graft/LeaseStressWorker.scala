@@ -163,9 +163,9 @@ object LeaseStressWorker {
   }
 
   /** Mixed producer for the maintenance leg: versioned publishes on
-    * `table` (mostly) interleaved with atomic flat-sink replaces of the
-    * sibling `flat` dataset — the two write surfaces the maintenance
-    * worker's vacuum and compactor respectively race against. */
+    * `table` (mostly) interleaved with publishes of the second table
+    * `flat` — the two tables the maintenance worker's vacuum and
+    * compactor respectively race against. */
   private def mixHammer(base: String, table: String, worker: String,
       durationMs: Long, log: java.io.PrintWriter): Unit = {
     val spark = bootSpark(worker)
@@ -177,9 +177,10 @@ object LeaseStressWorker {
       iter += 1
       try {
         if (iter % 4 == 0) {
-          graft.pipelines.Runner.AtomicParquetSink(base, s"$worker-$iter")
-            .write(Seq((worker, iter)).toDF("worker", "iter"), "flat")
-          log.println(s"sink $worker $iter")
+          val v = Versioned.publish(
+            Seq((worker, iter)).toDF("worker", "iter"),
+            base, "flat", keep = 10000)
+          log.println(s"sink $v $worker $iter")
         } else {
           val v = Versioned.publish(
             Seq((worker, iter)).toDF("worker", "iter"),
@@ -203,7 +204,7 @@ object LeaseStressWorker {
 
   /** The maintenance side of that leg: Versioned.vacuum on the table
     * (orphan reclaim — alternating the includeInflight variant) and
-    * Compaction.compact on the flat dataset (the quiesce lease), both
+    * Compaction.compact on the `flat` table (under its lease), both
     * racing the two live mix producers from a separate JVM. In a
     * crash-free run vacuum must reclaim ONLY pre-seeded debris — a
     * single reclaimed live in-flight dir is the corruption this leg
@@ -221,7 +222,7 @@ object LeaseStressWorker {
           val dead = Versioned.vacuum(base, table,
             includeInflight = iter % 4 == 0)
           log.println(s"vacuum $worker ${dead.size}")
-        } else if (Fs.exists(new Path(s"$base/flat"))) {
+        } else if (Versioned.latestVersion(base, "flat").nonEmpty) {
           val r = graft.pipelines.Compaction.compact(spark, base, "flat",
             targetBytes = 1L << 30)
           compacts += 1

@@ -35,14 +35,16 @@ class PublishSpec extends AnyFunSuite {
     // time travel still reaches v0
     assert(Versioned.read(spark, base, "t", Some(0L))
       .as[(Int, String)].collect().toSet == Set((1, "a"), (2, "b")))
-    // the atomic rename-based sink also runs on the scheme
-    Runner.AtomicParquetSink(base, "g1").write(v0, "atomic")
-    assert(Fs.exists(new Path(s"$base/atomic/_COMMIT")))
-    assert(spark.read.parquet(s"$base/atomic").count() == 2)
+    // the atomic (versioned) member of the sink family runs on the scheme
+    Runner.VersionedSink(base).write(v0.repartition(2), "atomic")
+    assert(Fs.exists(new Path(s"$base/atomic/_v0/_COMMIT")))
+    assert(Versioned.read(spark, base, "atomic").count() == 2)
     // and compaction (list/size/publish through the FileSystem API)
     val r = Compaction.compact(spark, base, "atomic", targetBytes = 1L << 30)
-    assert(r.outputFiles == 1 &&
-      spark.read.parquet(s"$base/atomic").count() == 2)
+    assert(r.filesBefore == 2 && r.outputFiles == 1 && r.filesAfter == 1)
+    assert(Versioned.latestVersion(base, "atomic").contains(1L))
+    assert(Versioned.read(spark, base, "atomic").as[(Int, String)]
+      .collect().toSet == Set((1, "a"), (2, "b")))
   }
 
   private def partParquetBytes(dir: String): Long = {
@@ -372,20 +374,18 @@ class PublishSpec extends AnyFunSuite {
     intercept[Versioned.ConcurrentWriterException] { Versioned.vacuum(base, "t") }
     Fs.deleteRecursive(new Path(s"$base/t/_LEASE"))
     assert(Versioned.vacuum(base, "t").isEmpty)
-    // flat-dataset compaction shares its lease with AtomicParquetSink
-    Seq((1, "a"), (2, "b")).toDF("k", "v").write.parquet(s"$base/flat")
-    foreignLease(s"$base/_LEASE_flat")
+    // compaction takes the same <table>/_LEASE every publish takes
+    foreignLease(s"$base/t/_LEASE")
     intercept[Versioned.ConcurrentWriterException] {
-      Compaction.compact(spark, base, "flat")
+      Compaction.compact(spark, base, "t")
     }
-    intercept[Versioned.ConcurrentWriterException] {
-      Runner.AtomicParquetSink(base, "r1")
-        .write(Seq((3, "c")).toDF("k", "v"), "flat")
-    }
-    Fs.deleteRecursive(new Path(s"$base/_LEASE_flat"))
-    val r = Compaction.compact(spark, base, "flat", targetBytes = 1L << 30)
+    assert(Versioned.latestVersion(base, "t").contains(0L),
+      "a refused compaction publishes nothing")
+    Fs.deleteRecursive(new Path(s"$base/t/_LEASE"))
+    val r = Compaction.compact(spark, base, "t", targetBytes = 1L << 30)
     assert(r.outputFiles == 1)
-    assert(!Fs.exists(new Path(s"$base/_LEASE_flat")), "released after compact")
+    assert(Versioned.latestVersion(base, "t").contains(1L))
+    assert(!Fs.exists(new Path(s"$base/t/_LEASE")), "released after compact")
   }
 
   test("stale-lease reclaim is serialized on a generation-keyed marker: " +
@@ -461,6 +461,37 @@ class PublishSpec extends AnyFunSuite {
     assert(versions == Set(0L, 1L), s"lost update: $versions")
     assert(Versioned.latestVersion(base, "t").contains(1L))
     assert(!Fs.exists(new Path(s"$base/t/_LEASE")))
+  }
+
+  test("racing recoverGroups over an aged unsealed journal: the journal " +
+    "another recovery deletes between listing and read is not pending, " +
+    "and no racer throws") {
+    val base = tmp("recover-race")
+    Versioned.publishGroup(Seq("alpha" -> Seq((1, "a")).toDF("k", "v")), base)
+    val prevTtl = Versioned.leaseTtlMs
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      Versioned.leaseTtlMs = 50L
+      (1 to 40).foreach { round =>
+        val journal = new Path(s"$base/_txn/${100 + round}.staged")
+        Fs.writeString(journal, "alpha\t0\n") // no END: unsealed
+        Thread.sleep(80) // aged past the TTL: crash debris
+        val start = new java.util.concurrent.CountDownLatch(1)
+        val racers = (1 to 8).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[Seq[Long]] {
+            def call(): Seq[Long] = { start.await(); Versioned.recoverGroups(base) }
+          })
+        }
+        start.countDown()
+        // Future.get rethrows a racer's exception
+        racers.foreach(f => assert(f.get().isEmpty))
+        assert(!Fs.exists(journal), s"round $round: debris survived")
+      }
+    } finally {
+      Versioned.leaseTtlMs = prevTtl
+      pool.shutdown()
+    }
+    assert(Versioned.latestGroupVersions(base) == Map("alpha" -> 0L))
   }
 
   test("recoverGroups SKIPS a sealed journal whose member leases are " +

@@ -218,117 +218,6 @@ class RunnerSpec extends AnyFunSuite {
     assert(strict.isLeft && strict.left.toOption.get.size == 2)
   }
 
-  test("atomic sink: commit manifest present, old version fully replaced") {
-    val out = java.nio.file.Files.createTempDirectory("runner-atomic").toString
-    val sink = Runner.AtomicParquetSink(out, "r1")
-    val r1 = Runner.run(spark, dir, sink)
-    assert(r1.statuses.values.forall(_.isRight))
-    val commit = java.nio.file.Paths.get(s"$out/attack/_COMMIT")
-    assert(java.nio.file.Files.readString(commit).startsWith("r1\n"))
-    val n1 = spark.read.parquet(s"$out/attack").count()
-    // second publish replaces atomically; no staging/old dirs remain
-    val r2 = Runner.run(spark, dir, Runner.AtomicParquetSink(out, "r2"))
-    assert(r2.statuses.values.forall(_.isRight))
-    assert(java.nio.file.Files.readString(commit).startsWith("r2\n"))
-    assert(spark.read.parquet(s"$out/attack").count() == n1)
-    val stray = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-      .filter(p => p.getFileName.toString.startsWith(".staging") ||
-        p.getFileName.toString.startsWith(".old"))
-    assert(stray.count() == 0)
-  }
-
-  test("atomic sink self-heals a crash between the two swap renames: the " +
-    "stranded .old aside is restored/replaced on the next run and all " +
-    "debris is swept") {
-    import graft.pipelines.Fs
-    import org.apache.hadoop.fs.Path
-    val out = java.nio.file.Files.createTempDirectory("runner-heal").toString
-    val sink1 = Runner.AtomicParquetSink(out, "r1")
-    val df1 = spark.range(5).toDF("v")
-    sink1.write(df1, "t")
-    // simulate the crash window: target renamed aside, process dies
-    // before the staging rename-in (plus a stale COMMITTED staging dir
-    // from the same doomed run — commit-less staging is unattributable
-    // and deliberately left alone)
-    Fs.rename(new Path(s"$out/t"), new Path(s"$out/.old-t-rX"))
-    Fs.mkdirs(new Path(s"$out/.staging-t-rX"))
-    Fs.writeString(new Path(s"$out/.staging-t-rX/_COMMIT"), "rX\nt\n")
-    assert(!Fs.exists(new Path(s"$out/t")))
-    // next run heals first (previous version restored), then publishes
-    val sink2 = Runner.AtomicParquetSink(out, "r2")
-    sink2.write(spark.range(9).toDF("v"), "t")
-    assert(spark.read.parquet(s"$out/t").count() == 9L)
-    val stray = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-      .filter(p => p.getFileName.toString.startsWith(".staging") ||
-        p.getFileName.toString.startsWith(".old"))
-    assert(stray.count() == 0, "crash debris must be swept by the next run")
-    // heal-only path: crash again, then verify a reader-visible restore
-    // happens even when the next run writes the SAME data
-    Fs.rename(new Path(s"$out/t"), new Path(s"$out/.old-t-rY"))
-    Runner.AtomicParquetSink(out, "r3").write(spark.range(3).toDF("v"), "t")
-    assert(spark.read.parquet(s"$out/t").count() == 3L)
-  }
-
-  test("PRE-NAME-FORMAT asides (commit line 2 is a parquet part, not a " +
-    "mart name) heal when the dir-name parse is provably this mart's " +
-    "(dashless tag, no dash-prefix sibling); the rest is manual vacuum") {
-    import graft.pipelines.Fs
-    import org.apache.hadoop.fs.Path
-    val out = java.nio.file.Files.createTempDirectory("runner-legacy").toString
-    Runner.AtomicParquetSink(out, "r1").write(spark.range(5).toDF("v"), "t")
-    // age the commit to the pre-r13 format: no name line — exactly the
-    // debris ADVICE r13 flagged as stranded forever. NOTE the recorded
-    // tag (the WRITING run's, r1) differs from the aside's dir tag (the
-    // RENAMING run's, r2) — the genuine-debris shape.
-    val parts = Fs.list(new Path(s"$out/t")).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted.mkString("\n")
-    Fs.writeString(new Path(s"$out/t/_COMMIT"), s"r1\n$parts\n")
-    // crash window: run r2 renamed the target aside, process died
-    Fs.rename(new Path(s"$out/t"), new Path(s"$out/.old-t-r2"))
-    assert(!Fs.exists(new Path(s"$out/t")))
-    // next run HEALS first — observe the restore itself by making the
-    // new publish fail after the heal
-    intercept[Throwable] {
-      Runner.AtomicParquetSink(out, "r3").write(
-        spark.range(1).selectExpr("raise_error('boom') as v"), "t")
-    }
-    assert(Fs.exists(new Path(s"$out/t")),
-      "an unambiguous old-format aside must be restored, not stranded")
-    assert(spark.read.parquet(s"$out/t").count() == 5L)
-    // ...and once a target exists, the same rule lets the sweep take
-    // old-format debris
-    Fs.mkdirs(new Path(s"$out/.old-t-r5"))
-    Fs.writeString(new Path(s"$out/.old-t-r5/_COMMIT"), "rW\npart.parquet\n")
-    Runner.AtomicParquetSink(out, "r6").write(spark.range(9).toDF("v"), "t")
-    assert(!Fs.exists(new Path(s"$out/.old-t-r5")), "unambiguous → swept")
-    // DASHED dir tag ('.old-t-r7-x' could be mart t tag r7-x or a mart
-    // t-r7 tag x — and the old format records no witness): never
-    // restored, never swept — manual vacuum
-    Fs.mkdirs(new Path(s"$out/.old-t-r7-x"))
-    Fs.writeString(new Path(s"$out/.old-t-r7-x/_COMMIT"), "rZ\npart.parquet\n")
-    Fs.deleteRecursive(new Path(s"$out/t"))
-    intercept[Throwable] {
-      Runner.AtomicParquetSink(out, "r8").write(
-        spark.range(1).selectExpr("raise_error('boom') as v"), "t")
-    }
-    assert(!Fs.exists(new Path(s"$out/t")),
-      "a dashed-tag old-format aside must not be restored on a guess")
-    // CROSS-WIRE guard: mart 't-k9' sees '.old-t-k9-x' — a multi-dash
-    // dir name admits several (name, tag) parses (mart t tag k9-x, or
-    // mart t-k9 tag x) and no filesystem state can prove which, so NO
-    // mart may claim it, even the one whose own parse looks dashless
-    Runner.AtomicParquetSink(out, "r9").write(spark.range(2).toDF("v"), "t")
-    Fs.mkdirs(new Path(s"$out/.old-t-k9-x"))
-    Fs.writeString(new Path(s"$out/.old-t-k9-x/_COMMIT"), "rY\npart.parquet\n")
-    intercept[Throwable] {
-      Runner.AtomicParquetSink(out, "r10").write(
-        spark.range(1).selectExpr("raise_error('boom') as v"), "t-k9")
-    }
-    assert(!Fs.exists(new Path(s"$out/t-k9")),
-      "a multi-dash old-format aside must never be claimed by any mart")
-    assert(Fs.exists(new Path(s"$out/.old-t-k9-x")))
-  }
-
   test("a failed run retracts a stale transform_SUCCESS from an earlier " +
     "run (the mirror of the per-mart error retraction)") {
     val out = java.nio.file.Files.createTempDirectory("runner-stale").toString

@@ -164,39 +164,68 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compaction: fragmented dataset collapses to sized files, rows intact") {
+    import graft.pipelines.Versioned
     val base = java.nio.file.Files.createTempDirectory("compact").toString
     val docs = Catalog.load(spark, dir, "documents")
-    docs.repartition(32).write.parquet(s"$base/docs")
+    Versioned.publish(docs.repartition(32), base, "docs")
     val before = Compaction.compact(spark, base, "docs",
       targetBytes = 1L << 30) // everything fits one file
     assert(before.filesBefore >= 32)
-    assert(before.outputFiles == 1)
-    // atomic publish leaves a complete, commit-marked, readable version
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$base/docs/_COMMIT")))
-    val back = spark.read.parquet(s"$base/docs")
-    assert(back.count() == docs.count())
-    assert(parquetCount(s"$base/docs") == 1)
+    assert(before.outputFiles == 1 && before.filesAfter == 1)
+    // the compaction is the next committed version; the fragmented one
+    // stays readable for time travel
+    assert(Versioned.latestVersion(base, "docs").contains(1L))
+    assert(parquetCount(s"$base/docs/_v1") == 1)
+    assert(Versioned.read(spark, base, "docs").count() == docs.count())
+    assert(Versioned.read(spark, base, "docs", Some(0L)).count() == docs.count())
     // shuffle=true balanced variant also round-trips
-    docs.repartition(16).write.mode("overwrite").parquet(s"$base/docs2")
+    Versioned.publish(docs.repartition(16), base, "docs2")
     val r2 = Compaction.compact(spark, base, "docs2",
       targetBytes = 1L << 30, shuffle = true)
     assert(r2.outputFiles == 1 &&
-      spark.read.parquet(s"$base/docs2").count() == docs.count())
-    // a Hive-partitioned dataset is refused, not silently flattened
-    docs.withColumn("p", col("doc_id") % 2)
-      .repartition(8).write.partitionBy("p").parquet(s"$base/parted")
+      Versioned.read(spark, base, "docs2").count() == docs.count())
+    // nothing committed to compact: refused, and no table dir appears
     assertThrows[IllegalArgumentException] {
-      Compaction.compact(spark, base, "parted")
+      Compaction.compact(spark, base, "missing")
     }
-    // ...and the partition-wise loop compacts each dir, layout intact
-    val reports = Compaction.compactPartitioned(spark, base, "parted",
-      targetBytes = 1L << 30)
-    assert(reports.map(_._1) == Seq("p=0", "p=1"))
-    assert(reports.forall(_._2.outputFiles == 1))
-    val parted = spark.read.parquet(s"$base/parted")
-    assert(parted.count() == docs.count())
-    assert(parted.select("p").distinct().count() == 2) // layout preserved
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/missing")))
+    // partitioned: p=0 fragmented over 8 files, p=1 already one file —
+    // one delta publish rewrites p=0 and links p=1 unchanged
+    val parted = docs.withColumn("p", col("doc_id") % 2)
+    Versioned.publishPartitioned(
+      parted.filter(col("p") === 0).repartition(8)
+        .union(parted.filter(col("p") === 1).repartition(1)),
+      base, "parted", "p")
+    val m0 = Versioned.manifest(base, "parted", 0L).get
+    def contents(rel: String): Map[String, Seq[Byte]] = {
+      val l = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/parted/$rel"))
+      try l.toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".parquet"))
+        .map(f => f.getFileName.toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally l.close()
+    }
+    val untouched = contents(m0.entries.toMap.apply("1"))
+    val r3 = Compaction.compact(spark, base, "parted", targetBytes = 1L << 30)
+    assert(r3.filesBefore == 9 && r3.filesAfter == 2 && r3.outputFiles == 2)
+    assert(Versioned.latestVersion(base, "parted").contains(1L))
+    val m1 = Versioned.manifest(base, "parted", 1L).get
+    // layout preserved: same partition column, type and values
+    assert(m1.partCol == "p" && m1.partType == m0.partType)
+    assert(m1.entries.map(_._1) == Seq("0", "1"))
+    // p=0 rewritten into this version as one file; p=1 still linked to
+    // the original files, byte-identical
+    assert(m1.entries.toMap.apply("0").startsWith("_v1/"))
+    assert(parquetCount(s"$base/parted/${m1.entries.toMap.apply("0")}") == 1)
+    assert(m1.entries.toMap.apply("1") == m0.entries.toMap.apply("1"))
+    assert(contents(m1.entries.toMap.apply("1")) == untouched)
+    val back = Versioned.read(spark, base, "parted")
+    assert(back.count() == docs.count())
+    assert(back.select("p").distinct().count() == 2)
+    // already compact: nothing to rewrite, so no new version
+    val r4 = Compaction.compact(spark, base, "parted", targetBytes = 1L << 30)
+    assert(r4.filesBefore == 2 && r4.filesAfter == 2)
+    assert(Versioned.latestVersion(base, "parted").contains(1L))
   }
 
   test("versioned publish: time travel, retention pruning, rollback") {

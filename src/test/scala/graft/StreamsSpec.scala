@@ -861,18 +861,16 @@ class StreamsSpec extends AnyFunSuite {
         out, "tumbling")
       .start()
     q.processAllAvailable(); q.stop()
-    // committed version present, manifest intact, content == batch form
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$out/tumbling/_COMMIT")))
-    val published = spark.read.parquet(s"$out/tumbling")
+    // a committed version is the latest, its content == the batch form
+    assert(graft.pipelines.Versioned.latestVersion(out, "tumbling").nonEmpty)
+    val published = graft.pipelines.Versioned.read(spark, out, "tumbling")
       .as[(Long, String, Long, Double)].collect().toSet
     val batch = EventQueries.tumbling(spark, dir)
       .as[(Long, String, Long, Double)].collect().toSet
     assert(published == batch)
-    // no leftover staging or old-version dirs
-    val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(out))
-      .map[String](_.getFileName.toString).toArray.map(_.toString)
-      .filter(n => n.startsWith(".staging-") || n.startsWith(".old-"))
-    assert(leftovers.isEmpty)
+    // every micro-batch released the table's writer lease
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$out/tumbling/_LEASE")))
   }
 
   test("stateful sessionizer == session_window batch semantics") {
