@@ -24,7 +24,7 @@ import graft.ops.Pin._
   * The serving-lifecycle operations a 100 TB ANN tier actually runs:
   *
   *   - [[build]]: train once over the corpus (the only full-scan job),
-  *     publish model + batch-0 codes atomically.
+  *     publish model + codes atomically.
   *   - [[serveTopK]]: resolve ONE group snapshot, probe/rank ONLY — no
   *     training, no full-corpus pass. The (model tables → versions)
   *     part of the snapshot keys a driver-side model cache, so repeated
@@ -88,88 +88,38 @@ object AnnIndex {
   final case class Params(nCells: Int = 16, m: Int = 8, pqK: Int = 16,
       dim: Int = 64)
 
-  // ---- batch-admission ledger (high-water mark) -----------------------
-  // The codes manifest doubles as the idempotence ledger for micro-batch
-  // replays — but compact/build collapse the manifest to batch=0, which
-  // would forget every admitted id and re-admit a failure-replay of an
-  // epoch that landed just before the rewrite (duplicating its vectors).
-  // The sidecar high-water mark survives those rewrites: batch ids are
-  // monotone for the lifetime of the index DIRECTORY (the Delta-sink
-  // txnVersion contract — ingestStream's durable checkpoint guarantees
-  // it for streamed epochs), so `batchId <= hwm` means "already admitted
-  // at some point", whether or not the manifest still remembers it.
-
-  private def hwmPath(indexDir: String) = new Path(s"$indexDir/_batch_hwm")
-
-  private def readHwm(indexDir: String): Long = {
-    val p = hwmPath(indexDir)
-    if (!Fs.exists(p)) -1L
-    else {
-      val raw = Fs.readString(p).trim
-      // a missing ledger means "nothing admitted yet" — but an
-      // UNPARSEABLE one must never be treated as missing or low: a
-      // silently-lowered high-water mark would re-admit replayed
-      // pre-compaction batches, exactly the duplication the ledger
-      // exists to prevent. Fail loud with the recovery recipe.
-      raw.toLongOption.getOrElse(throw new IllegalStateException(
-        s"corrupt ANN admission ledger $p (content: '${raw.take(32)}') — " +
-          "refusing to guess a high-water mark. Recover by writing the " +
-          "highest batch id ever admitted to this index directory " +
-          "(at least the max batch= value in the current codes manifest) " +
-          "followed by a newline."))
-    }
-  }
-
-  /** Atomic ledger write: stage to a temp sibling, then rename over the
-    * live path — a crash mid-write can no longer leave an empty or
-    * truncated ledger (the failure ADVICE r10 flagged: '' wedges every
-    * subsequent append, '4' from '42' silently re-admits replays). */
-  private def writeHwm(indexDir: String, value: Long): Unit = {
-    val p = hwmPath(indexDir)
-    val tmp = new Path(s"$indexDir/_batch_hwm.tmp")
-    Fs.writeString(tmp, s"$value\n")
-    try Fs.rename(tmp, p)
-    catch {
-      case _: java.io.IOException if Fs.exists(p) =>
-        // some filesystems refuse rename-over-existing; delete + retry.
-        // A crash between the two leaves NO ledger, which both callers
-        // tolerate: advanceHwm runs BEFORE a manifest-collapsing
-        // publish (ids still manifested) and append's ledger write runs
-        // AFTER its commit (id already manifested) — missing is safe,
-        // truncated is not, and staging makes truncation impossible.
-        Fs.deleteRecursive(p)
-        Fs.rename(tmp, p)
-    }
-  }
-
-  /** Raise the ledger to cover `atLeast` and every batch id the CURRENT
-    * codes manifest names. Called BEFORE a manifest-collapsing rewrite
-    * (compact/rebuild) so a crash between ledger write and publish still
-    * leaves every admitted id covered by manifest ∪ ledger. */
-  private def advanceHwm(indexDir: String, atLeast: Long): Long = {
-    val manifestMax = Versioned.latestVersion(indexDir, CodesTable)
-      .flatMap(v => Versioned.manifest(indexDir, CodesTable, v))
-      .map(_.entries.flatMap(_._1.toLongOption)
-        .foldLeft(-1L)(math.max))
-      .getOrElse(-1L)
-    val next = math.max(math.max(readHwm(indexDir), manifestMax), atLeast)
-    writeHwm(indexDir, next)
-    next
-  }
+  // ---- batch admission ---------------------------------------------------
+  // The codes manifest of the latest committed group snapshot is the one
+  // idempotence ledger for micro-batch replays: its `batch=` values are
+  // the admitted batch ids. Batch ids are monotone for the lifetime of
+  // the index DIRECTORY (the Delta-sink txnVersion contract —
+  // ingestStream's durable checkpoint guarantees it for streamed
+  // epochs), so `batchId <= max batch=` means "already admitted at some
+  // point". Every publish that writes all code rows as ONE partition
+  // (compact, build, buildOrAppend's bootstrap) labels it with the
+  // highest id the directory has admitted, so the maximum survives the
+  // rewrite; and since the label commits with the data in the same group
+  // transaction, no crash can leave the ledger and the codes disagreeing.
 
   /** Train the IVF-PQ model over `emb`, encode the full corpus, and
     * publish all three tables as one atomic group transaction. Returns
     * the published (table → version) map. The ONLY operation that scans
-    * the whole corpus; everything after serves from the index. A rebuild
-    * into an existing directory carries the admission ledger forward
-    * (see the high-water notes above): batch ids stay monotone across
-    * index generations, so a replay of a pre-rebuild epoch can never be
-    * re-admitted as fresh data. Any pending tombstones are CLEARED (the
-    * new journal omits the table): the caller retrains over the
-    * current, already-erased corpus, so the erase is physical in the
-    * new generation. */
+    * the whole corpus; everything after serves from the index. The codes
+    * land in one partition labelled with the highest batch id this
+    * directory has admitted ([[admittedHwm]]; 0 in a fresh directory),
+    * so batch ids stay monotone across index generations and a replay of
+    * a pre-rebuild epoch can never be re-admitted as fresh data. Any
+    * pending tombstones are CLEARED (the new journal omits the table):
+    * the caller retrains over the current, already-erased corpus, so the
+    * erase is physical in the new generation. */
   def build(emb: DataFrame, indexDir: String, p: Params = Params(),
       keep: Int = 3): Map[String, Long] = asIndexWriter(indexDir) {
+    buildLabelled(emb, indexDir, p, keep, math.max(admittedHwm(indexDir), 0L))
+  }
+
+  /** [[build]] with its codes partition labelled `batch`. */
+  private def buildLabelled(emb: DataFrame, indexDir: String, p: Params,
+      keep: Int, batch: Long): Map[String, Long] = {
     val spark = emb.sparkSession
     import spark.implicits._
     val coarse = VectorOps.kmeansCentroids(emb, p.nCells)
@@ -183,14 +133,12 @@ object AnnIndex {
     // filter skips unprobed cells' bytes (the IVF layout contract).
     // Encode is a zero-join projection over the checkpointed residuals.
     val codes = VectorOps.encodeResiduals(residuals, books, p.dim)
-      .withColumn("batch", lit(0L))
+      .withColumn("batch", lit(batch))
       .sortWithinPartitions(col("cell"), col("vec_id"))
     val centroidsDf = coarse.toDF("cell", "centroid")
     val booksDf = books.zipWithIndex
       .flatMap { case (book, s) => book.map { case (c, v) => (s, c, v) } }
       .toDF("subspace", "code", "centroid")
-    // ledger BEFORE the manifest-collapsing publish (crash-safe order)
-    advanceHwm(indexDir, 0L)
     Versioned.publishGroupMembers(Seq(
       Versioned.GroupFull(CentroidsTable, centroidsDf),
       Versioned.GroupFull(CodebooksTable, booksDf),
@@ -302,7 +250,7 @@ object AnnIndex {
   /** Row-level DELETE from the published index — the GDPR-erasure path.
     * Victims (`vec_id` rows; extra columns ignored) are staged as one
     * new tombstone batch partition carrying a batch CUTOFF (the highest
-    * code batch admitted at delete time: manifest ∪ ledger); codes and
+    * code batch admitted at delete time, [[admittedHwm]]); codes and
     * model tables are LINKED unchanged, so the transaction stages
     * O(victims) bytes and zero corpus data. Every subsequent
     * [[serveTopK]] / [[serveTopKFiltered]] anti-joins the snapshot's
@@ -346,9 +294,7 @@ object AnnIndex {
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val dedup = victims.select(col("vec_id")).distinct()
     if (dedup.isEmpty) return snapshot
-    // scope: erase only batches admitted up to NOW (manifest ∪ ledger —
-    // the ledger covers ids a compact's manifest collapse forgot, the
-    // manifest covers a crash before append's ledger write)
+    // scope: erase only batches admitted up to NOW
     val cutoff = admittedHwm(indexDir)
     val fresh = dedup.withColumn("cutoff", lit(cutoff))
     val (reuse, nextBatch, stage) = snapshot.get(TombstonesTable) match {
@@ -411,23 +357,21 @@ object AnnIndex {
   }
 
   /** The highest batch id ever ADMITTED to this index directory (−1
-    * before any admission): ledger ∪ current codes manifest — the same
-    * two-source union [[delete]] uses for its cutoff and [[append]]
-    * uses for replay detection, because each source alone has a crash
-    * window (the ledger is written AFTER append's commit, so a crash
-    * between the two leaves a manifest-admitted batch the ledger
-    * doesn't know; the manifest collapses at compact, which only the
-    * ledger survives). Exposed so the streaming composition
+    * before any admission): the largest `batch=` value in the codes
+    * manifest of the latest committed group snapshot — the admission
+    * ledger (see "batch admission" above). [[delete]] takes its cutoff
+    * from it and [[append]] its replay check. Reading the snapshot, not
+    * the codes table's own latest version, keeps it in step with what
+    * serves and appends link: an append torn between its codes commit
+    * and its journal seal is not admitted, so its replay lands. Exposed
+    * so the streaming composition
     * ([[graft.streaming.Streams.ingestDedupedIndexed]]) can recognize
     * an engine-level epoch REPLAY before its index leg runs and scope
     * the corpus leg accordingly (the replay-after-erase note there). */
-  def admittedHwm(indexDir: String): Long = {
-    val manifestMax = Versioned.latestVersion(indexDir, CodesTable)
-      .flatMap(v => Versioned.manifest(indexDir, CodesTable, v))
-      .map(_.entries.flatMap(_._1.toLongOption).foldLeft(-1L)(math.max))
-      .getOrElse(-1L)
-    math.max(readHwm(indexDir), manifestMax)
-  }
+  def admittedHwm(indexDir: String): Long =
+    Versioned.latestGroupVersionsFor(indexDir, CodesTable)
+      .flatMap(vs => Versioned.manifest(indexDir, CodesTable, vs(CodesTable)))
+      .fold(-1L)(_.entries.flatMap(_._1.toLongOption).foldLeft(-1L)(math.max))
 
   /** The vec_ids currently SERVABLE from the latest snapshot: codes
     * minus scoped tombstones, id-projected (one O(codes) id scan, no
@@ -484,11 +428,20 @@ object AnnIndex {
     * the pushdown, pruned ≡ unpruned results, and the zero-model-read
     * repeat serve. */
   def serveTopK(spark: SparkSession, indexDir: String, queries: DataFrame,
-      k: Int, nProbe: Int = 6): DataFrame = {
+      k: Int, nProbe: Int = 6): DataFrame =
+    serveProbed(spark, indexDir, queries, k, nProbe)(identity)
+
+  /** The serve both [[serveTopK]] and [[serveTopKFiltered]] run: one
+    * group snapshot, its model, the codes scan pruned to the queries'
+    * probe cells (pushed into parquet as `In(cell, …)`) with the
+    * snapshot's tombstones anti-joined out, then `restrict`, then the
+    * ADC rank. */
+  private def serveProbed(spark: SparkSession, indexDir: String,
+      queries: DataFrame, k: Int, nProbe: Int)(
+      restrict: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val (coarse, books) = loadModelAt(spark, indexDir, snapshot)
-    val dim = coarse.head._2.length
     val probeCells = queries.select(
         explode(graft.functions.NearestCentroids.nearestCells(
           col("qv"), coarse, nProbe)).as("cell"))
@@ -499,7 +452,8 @@ object AnnIndex {
       if (probeCells.isEmpty) all.filter(lit(false)) // no queries → no scan
       else antiTombstones(spark, indexDir, snapshot,
         all.filter(col("cell").isInCollection(probeCells.toSeq)))
-    VectorOps.ivfPqRank(codes, queries, k, coarse, books, nProbe, dim)
+    VectorOps.ivfPqRank(restrict(codes), queries, k, coarse, books, nProbe,
+      coarse.head._2.length)
   }
 
   /** FILTERED serve — "top-k WHERE metadata predicate", the most common
@@ -521,25 +475,10 @@ object AnnIndex {
     * selective filter vs brute-force-with-filter, and the pushdown. */
   def serveTopKFiltered(spark: SparkSession, indexDir: String,
       queries: DataFrame, allowed: DataFrame, k: Int,
-      nProbe: Int = 6): DataFrame = {
-    import spark.implicits._
-    val snapshot = Versioned.latestGroupVersions(indexDir)
-    val (coarse, books) = loadModelAt(spark, indexDir, snapshot)
-    val dim = coarse.head._2.length
-    val probeCells = queries.select(
-        explode(graft.functions.NearestCentroids.nearestCells(
-          col("qv"), coarse, nProbe)).as("cell"))
-      .distinct().as[Int].collect().sorted
-    val all = Versioned.read(spark, indexDir, CodesTable,
-      Some(snapshot(CodesTable)))
-    val codes =
-      if (probeCells.isEmpty) all.filter(lit(false))
-      else antiTombstones(spark, indexDir, snapshot,
-        all.filter(col("cell").isInCollection(probeCells.toSeq)))
-        .join(allowed.select(col("vec_id")).distinct(), Seq("vec_id"),
-          "left_semi")
-    VectorOps.ivfPqRank(codes, queries, k, coarse, books, nProbe, dim)
-  }
+      nProbe: Int = 6): DataFrame =
+    serveProbed(spark, indexDir, queries, k, nProbe)(
+      _.join(allowed.select(col("vec_id")).distinct(), Seq("vec_id"),
+        "left_semi"))
 
   /** Append a new vector batch to the published index: encode the batch
     * against the FROZEN model ([[VectorOps.ivfPqEncodeWith]] — one
@@ -550,8 +489,8 @@ object AnnIndex {
     * scanned are O(batch); the existing corpus is never read. Returns
     * the new (table → version) map; an empty batch is a no-op returning
     * the current versions. Batch ids must be MONOTONE per index
-    * directory (ingestStream's epoch ids are): the manifest plus the
-    * compaction-surviving high-water ledger together decide replays. */
+    * directory (ingestStream's epoch ids are): an id at or below the
+    * snapshot's highest manifested batch ([[admittedHwm]]) is a replay. */
   def append(batch: DataFrame, indexDir: String, batchId: Long,
       keep: Int = 3, skipIfExists: Boolean = false): Map[String, Long] =
       asIndexWriter(indexDir) {
@@ -567,14 +506,11 @@ object AnnIndex {
         s"$CodesTable v${snapshot(CodesTable)} has no partition manifest — " +
           "not an AnnIndex build?"))
       .entries
-    // the manifest is the primary idempotence ledger; the high-water
-    // mark covers ids the manifest forgot at the last compact/rebuild.
-    // Either way: a batch id that already landed is a caller bug (fail)
-    // or a micro-batch REPLAY after a failure (skip) — `skipIfExists`
-    // is how [[ingestStream]] gets exactly-once admission from
-    // at-least-once delivery, the same move as streaming-sink epoch dedup
-    if (reuse.exists(_._1 == batchId.toString) ||
-        batchId <= readHwm(indexDir)) {
+    // a batch id that already landed is a caller bug (fail) or a
+    // micro-batch REPLAY after a failure (skip) — `skipIfExists` is how
+    // [[ingestStream]] gets exactly-once admission from at-least-once
+    // delivery, the same move as streaming-sink epoch dedup
+    if (batchId <= admittedHwm(indexDir)) {
       if (skipIfExists) return current
       throw new IllegalArgumentException(
         s"batch $batchId already admitted to the index " +
@@ -586,34 +522,27 @@ object AnnIndex {
     // tombstones (if any) ride along at their current version — an
     // append must never resurrect erased ids by dropping the tombstone
     // member from the snapshot
-    val published = Versioned.publishGroupMembers(Seq(
+    Versioned.publishGroupMembers(Seq(
       Versioned.GroupLink(CentroidsTable, snapshot(CentroidsTable)),
       Versioned.GroupLink(CodebooksTable, snapshot(CodebooksTable)),
       Versioned.GroupDelta(CodesTable, codes, "batch", reuse)) ++
       snapshot.get(TombstonesTable)
         .map(v => Versioned.GroupLink(TombstonesTable, v)).toSeq,
       indexDir, keep)
-    // ledger AFTER the commit: an id is only "admitted" once its data is
-    // readable (a crash before this line is re-caught by the manifest)
-    advanceHwm(indexDir, batchId)
-    published
   }
 
   /** Bootstrap-or-grow admission for streamed corpora
     * ([[graft.streaming.Streams.ingestDedupedIndexed]]): the FIRST call
-    * trains and publishes the index over its batch ([[build]]) and then
-    * raises the admission ledger to `batchId`, so a failure-replay of
-    * the bootstrap epoch is recognized and skipped like any other
-    * replay (without the raise, the bootstrap's vectors would re-append
-    * under the replay's fresh batch id — duplication); later calls are
-    * plain frozen-model [[append]]s with `skipIfExists` — exactly-once
-    * admission over at-least-once delivery. An empty batch is a no-op
-    * (and never trains). The ledger raise happens BEFORE the build's
-    * publish: a crash between the two leaves no committed codes, so
-    * the replay bootstraps again (idempotent — the orphan staging dir
-    * ages out via vacuum/retention); the reverse order would let a
-    * crash after the publish replay the bootstrap vectors as a fresh
-    * batch id, duplicating every one of them. */
+    * trains and publishes the index over its batch ([[build]]) with the
+    * codes labelled `batchId`, so a failure-replay of the bootstrap
+    * epoch is recognized and skipped like any other replay (under a 0
+    * label the bootstrap's vectors would re-append under the replay's
+    * batch id — duplication); later calls are plain frozen-model
+    * [[append]]s with `skipIfExists` — exactly-once admission over
+    * at-least-once delivery. An empty batch is a no-op (and never
+    * trains). A crash before the bootstrap's group commit leaves no
+    * committed codes, so the replay bootstraps again (the orphan staging
+    * dir ages out via vacuum/retention). */
   def buildOrAppend(batch: DataFrame, indexDir: String, batchId: Long,
       p: Params = Params(), keep: Int = 3): Map[String, Long] =
     asIndexWriter(indexDir) {
@@ -622,11 +551,7 @@ object AnnIndex {
       // race two bootstraps into one directory
       if (Versioned.latestVersion(indexDir, CodesTable).isEmpty) {
         if (batch.isEmpty) Map.empty
-        else {
-          Fs.mkdirs(new Path(indexDir))
-          advanceHwm(indexDir, batchId)
-          build(batch, indexDir, p, keep)
-        }
+        else buildLabelled(batch, indexDir, p, keep, batchId)
       } else append(batch, indexDir, batchId, keep, skipIfExists = true)
     }
 
@@ -638,7 +563,7 @@ object AnnIndex {
     * checkpoint, restart epochs at 0, and `skipIfExists` would silently
     * drop genuinely-new batches that collide with already-landed ids.
     * foreachBatch replays after a failure re-deliver an epoch —
-    * `skipIfExists` turns manifest + high-water ledger into an
+    * `skipIfExists` turns the codes manifest's admitted batch ids into an
     * idempotence check, giving exactly-once index admission over
     * at-least-once delivery without any extra state. Every appended
     * batch is immediately visible to [[serveTopK]]'s next snapshot. */
@@ -655,18 +580,19 @@ object AnnIndex {
       }
       .start()
 
-  /** Rewrite all code batches into one `batch=0` partition (model tables
-    * linked unchanged, one group transaction). Run when many small
-    * appends have fragmented the codes table — the LSM/OPTIMIZE trade:
-    * an O(corpus-codes) rewrite now buys back per-scan planning and
+  /** Rewrite all code batches into one partition labelled with the
+    * highest admitted batch id ([[admittedHwm]]; model tables linked
+    * unchanged, one group transaction). Run when many small appends have
+    * fragmented the codes table — the LSM/OPTIMIZE trade: an
+    * O(corpus-codes) rewrite now buys back per-scan planning and
     * open-file costs forever after. Compacting the COMPRESSED codes is
     * cheap relative to the corpus: m small ints + 2 ids per vector. A
     * post-compaction [[serveTopK]] returns exactly what it did before
-    * (AnnIndexSpec). The manifest's batch-id entries collapse with the
-    * data, but the admission ledger does NOT: the high-water mark is
-    * advanced over every currently-manifested id BEFORE the rewrite, so
-    * a failure-replay of a pre-compaction epoch is still recognized and
-    * skipped (AnnIndexSpec pins this). */
+    * (AnnIndexSpec). The label keeps the admission ledger's maximum, so a
+    * failure-replay of a pre-compaction epoch is still recognized and
+    * skipped (AnnIndexSpec pins this); tombstone scoping (`batch <=
+    * cutoff`) is unchanged, since any later [[delete]]'s cutoff is at
+    * least the label. */
   def compact(spark: SparkSession, indexDir: String,
       keep: Int = 3): Map[String, Long] = asIndexWriter(indexDir) {
     val snapshot = Versioned.latestGroupVersions(indexDir)
@@ -678,12 +604,8 @@ object AnnIndex {
         Versioned.read(spark, indexDir, CodesTable,
           Some(snapshot(CodesTable))))
       .select(col("vec_id"), col("cell"), col("codes"),
-        lit(0L).as("batch"))
+        lit(admittedHwm(indexDir)).as("batch"))
       .sortWithinPartitions(col("cell"), col("vec_id")) // restore IVF layout
-    // ledger BEFORE the manifest-collapsing publish (crash-safe order:
-    // until the new version commits, the old manifest still names every
-    // id; after it commits, the ledger does)
-    advanceHwm(indexDir, -1L)
     val published = Versioned.publishGroupMembers(Seq(
       Versioned.GroupLink(CentroidsTable, snapshot(CentroidsTable)),
       Versioned.GroupLink(CodebooksTable, snapshot(CodebooksTable)),
@@ -760,7 +682,7 @@ object AnnIndex {
     * and, when it has drifted below `minRecall` — or when DELETION
     * PRESSURE (tombstoned ids / live codes, see [[deletionPressure]])
     * reaches `maxDeletedFrac` — retrain over `corpus` ([[build]] — new
-    * model generation, ledger carried forward, tombstones cleared) and
+    * model generation, admitted batch ids kept, tombstones cleared) and
     * re-audit. Deletions count toward drift because the quantizer was
     * trained on a distribution that erased rows no longer represent,
     * and every serve pays the anti-join until a rewrite folds them in.

@@ -330,8 +330,8 @@ object CorpusPublisher {
     * `batch` partition values preserved, so the admitted-batch ledger
     * [[appendBatch]]'s freshness check reads keeps its history (a batch
     * erased to zero rows does drop out of the manifest; reusing such an
-    * id afterwards is on the caller, same caveat as a folded ANN
-    * manifest) — and recomputes the budget manifest from the survivors.
+    * id afterwards is on the caller) — and recomputes the budget
+    * manifest from the survivors.
     * With the default erasure retention (`keep = 1`) the pre-erase
     * versions are pruned once the journal commits, so time travel to
     * the erased rows dies with the erase. (A crash between the

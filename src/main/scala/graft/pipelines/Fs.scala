@@ -33,10 +33,9 @@ import org.apache.spark.sql.SparkSession
   *    deployment contract (one scheduler slot owns each table's
   *    publishes) as the load-bearing defense; the marker then only has
   *    to make a committed version VISIBLE atomically, which a PUT is.
-  *  - `rename` is atomic on HDFS and single-volume local disk; on S3A it
-  *    is copy+delete (NOT atomic) — so the commit protocol
-  *    ([[Versioned]]) never renames; the one caller is the ANN admission
-  *    ledger's stage-then-rename of a small sidecar file.
+  *  - No `rename` helper: a rename is atomic on HDFS and single-volume
+  *    local disk but copy+delete (NOT atomic) on S3A, so no publish in
+  *    the engine renames.
   *
   * The Hadoop `Configuration` comes from the active Spark session (so
   * per-session `fs.<scheme>.impl` registrations and credentials apply);
@@ -135,14 +134,6 @@ object Fs {
       val out = fs.create(p, false)
       try out.write(s.getBytes("UTF-8"))
       finally out.close()
-  }
-
-  /** Checked rename: Hadoop's `FileSystem.rename` reports failure by
-    * returning false; turn that into a loud error so a failed swap can
-    * never be mistaken for success. */
-  def rename(src: Path, dst: Path): Unit = {
-    if (!of(src).rename(src, dst))
-      throw new java.io.IOException(s"rename $src -> $dst failed")
   }
 
   def deleteRecursive(p: Path): Unit = { of(p).delete(p, true); () }

@@ -666,26 +666,33 @@ object Streams {
     docs.writeStream.outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val corpus = graft.pipelines.Versioned
-            .latestVersion(baseDir, name) match {
-            case Some(_) => graft.pipelines.Versioned.read(spark, baseDir, name)
-            case None => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              batch.schema)
-          }
-          val verdicts = graft.ops.DedupOps.incrementalDedup(
-            corpus, batch.toDF(), n, threshold)
-          val admitted = batch.toDF().join(
-            verdicts.filter(col("status") === "admitted").select("doc_id"),
-            Seq("doc_id"), "left_semi")
+          val admitted = dedupAdmitted(batch.toDF(), baseDir, name, n,
+            threshold)
           if (!admitted.isEmpty) {
-            graft.pipelines.Incremental.publishUpsert(
-              spark, baseDir, name, admitted, Seq("doc_id"), keep)
+            graft.pipelines.Incremental.publishUpsert(batch.sparkSession,
+              baseDir, name, admitted, Seq("doc_id"), keep)
             ()
           }
         }
       }
+
+  /** The rows of `batch` that [[graft.ops.DedupOps.incrementalDedup]]
+    * admits against the latest published `name` (an empty corpus before
+    * the first publish) — the vet both dedup ingest writers run. */
+  private def dedupAdmitted(batch: DataFrame, baseDir: String, name: String,
+      n: Int, threshold: Double): DataFrame = {
+    val spark = batch.sparkSession
+    val corpus = graft.pipelines.Versioned.latestVersion(baseDir, name) match {
+      case Some(_) => graft.pipelines.Versioned.read(spark, baseDir, name)
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+    }
+    val verdicts = graft.ops.DedupOps.incrementalDedup(
+      corpus, batch, n, threshold)
+    batch.join(
+      verdicts.filter(col("status") === "admitted").select("doc_id"),
+      Seq("doc_id"), "left_semi")
+  }
 
   /** [[ingestDeduped]] composed with ANN-INDEX admission — the streaming
     * front door of a SEARCHABLE corpus, which is what a training-data
@@ -701,18 +708,20 @@ object Streams {
     * BOTH legs: logical duplicates are rejected by the dedup vet
     * (already-published docs read `exact_dup`/`near_dup` → nothing to
     * upsert or index), and engine-level epoch replays are skipped by
-    * the index admission ledger (batchId = epoch + 1, monotone) and
-    * key-replaced by the corpus upsert. Every admitted document is
-    * servable from the NEXT serve's snapshot; corpus and index versions
-    * advance together, one group transaction each.
+    * the index's admission check (batchId = epoch + 1, monotone, against
+    * the batch ids its codes manifest holds —
+    * [[graft.ops.AnnIndex.admittedHwm]]) and key-replaced by the corpus
+    * upsert. Every admitted document is servable from the NEXT serve's
+    * snapshot; corpus and index versions advance together, one group
+    * transaction each.
     *
     * REPLAY vs ERASURE: an engine-level replay of an epoch that fully
     * landed once, arriving AFTER an [[graft.pipelines.Erasure]] call
     * erased some of its documents, would re-admit those docs corpus-side
-    * (the vet no longer sees them) while the admission ledger rightly
-    * refuses their vectors — permanent corpus/index divergence. The
-    * corpus leg therefore excludes, on replayed epochs only (batch id at
-    * or below the admission high-water mark), any doc whose delivered
+    * (the vet no longer sees them) while the index rightly refuses their
+    * vectors — permanent corpus/index divergence. The corpus leg
+    * therefore excludes, on replayed epochs only (batch id at or below
+    * [[graft.ops.AnnIndex.admittedHwm]]), any doc whose delivered
     * vector is not servable from the index — erased docs stay erased
     * under replay, while a crash between the index leg and the corpus
     * publish is still completed by the replay (those vectors ARE
@@ -726,8 +735,8 @@ object Streams {
     * on MONOTONE epoch ids (batchId = epoch + 1 with skipIfExists), so a
     * restart on a fresh temporary checkpoint replays epochs from 0 and
     * every post-restart epoch colliding with an already-admitted id is
-    * treated as an engine-level REPLAY — its new vectors are
-    * ledger-skipped and the replay-after-erase guard below then drops
+    * treated as an engine-level REPLAY — its new vectors are skipped
+    * as already admitted and the replay-after-erase guard then drops
     * its docs from the corpus publish too (they are not index-backed):
     * genuinely-new data silently vanishes from BOTH stores, epoch after
     * epoch. The guard logs a loud per-epoch warning whenever a replay
@@ -744,31 +753,22 @@ object Streams {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val corpus = graft.pipelines.Versioned
-            .latestVersion(baseDir, name) match {
-            case Some(_) => graft.pipelines.Versioned.read(spark, baseDir, name)
-            case None => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              batch.schema)
-          }
-          val verdicts = graft.ops.DedupOps.incrementalDedup(
-            corpus, batch.toDF(), n, threshold)
-          val admitted = batch.toDF().join(
-            verdicts.filter(col("status") === "admitted").select("doc_id"),
-            Seq("doc_id"), "left_semi")
+          val admitted = dedupAdmitted(batch.toDF(), baseDir, name, n,
+              threshold)
             .pinLazy // feeds the upsert AND the embed leg
           if (!admitted.isEmpty) {
             // Engine-level REPLAY detection, read BEFORE the index leg
-            // can advance the ledger: a batch id at or below the
-            // high-water mark was already admitted once, so this
-            // delivery is an at-least-once redelivery, not new data.
+            // can admit this batch: a batch id at or below the highest
+            // one in the index's codes manifest was already admitted
+            // once, so this delivery is an at-least-once redelivery,
+            // not new data.
             val isReplay =
               graft.ops.AnnIndex.admittedHwm(indexDir) >= epoch + 1L
             // INDEX leg FIRST, corpus publish second — the crash-safe
             // order. A crash between the two legs replays the epoch:
             // with this order the docs are still absent from the
             // corpus, so the dedup vet re-admits them, the index
-            // admission ledger skips the already-landed batch id, and
+            // admission skips the already-landed batch id, and
             // the corpus publish completes — nothing is lost. The
             // reverse order would strand admitted docs forever
             // unindexed (the replay's vet reads them as exact_dup and
@@ -806,14 +806,10 @@ object Streams {
             // non-durable checkpoint every post-restart epoch reads as
             // a replay and this guard would silently discard
             // genuinely-new data (the docstring's durability warning).
+            // (a replay implies a committed index: `isReplay` read its
+            // codes manifest)
             val toPublish =
               if (!isReplay) admitted
-              // replay of a crashed bootstrap whose vectors vanished
-              // from the embedding source since: no committed index to
-              // prove anything against — nothing publishable
-              else if (graft.pipelines.Versioned
-                  .latestVersion(indexDir, graft.ops.AnnIndex.CodesTable)
-                  .isEmpty) admitted.filter(lit(false))
               else admitted.join(
                 graft.ops.AnnIndex.servableIds(spark, indexDir)
                   .select(col("vec_id").as("doc_id")),

@@ -263,7 +263,8 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
-  test("compact rewrites all batches into batch=0; serve is unchanged") {
+  test("compact rewrites all batches into one partition labelled with " +
+    "the highest admitted id; serve is unchanged") {
     val idx = tmp()
     AnnIndex.build(emb.filter(col("vec_id") < 250), idx)
     AnnIndex.append(emb.filter(col("vec_id") >= 250 && col("vec_id") < 400),
@@ -276,11 +277,15 @@ class AnnIndexSpec extends AnyFunSuite {
     val m = Versioned.manifest(idx,
       AnnIndex.CodesTable,
       Versioned.latestVersion(idx, AnnIndex.CodesTable).get).get
-    assert(m.entries.map(_._1) == Seq("0")) // one partition again
+    assert(m.entries.map(_._1) == Seq("2")) // one partition again
     assert(Versioned.readGroup(spark, idx)(AnnIndex.CodesTable).count() ==
       emb.count())
     val servedAfter = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
     assert(servedAfter == servedBefore)
+    // a rebuild into the same directory keeps the label too
+    val rebuilt = AnnIndex.build(emb, idx)
+    assert(Versioned.manifest(idx, AnnIndex.CodesTable,
+      rebuilt(AnnIndex.CodesTable)).get.entries.map(_._1) == Seq("2"))
   }
 
   test("append crash between journal and commit rolls FORWARD: the torn " +
@@ -350,18 +355,18 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(collectTopK(served).nonEmpty)
   }
 
-  test("a replay of a batch that landed BEFORE compaction is still " +
-    "recognized and skipped: the admission ledger survives the " +
-    "manifest collapse") {
+  test("a replay of a batch that landed BEFORE compaction or a rebuild " +
+    "is still recognized and skipped: the collapsed partition keeps the " +
+    "highest admitted id") {
     val idx = tmp()
     AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
     val b1 = emb.filter(col("vec_id") >= 300 && col("vec_id") < 400)
     AnnIndex.append(b1, idx, batchId = 1L)
     AnnIndex.compact(spark, idx)
     val n = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable).count()
-    // failure-replay of epoch 1 after the compact: manifest no longer
-    // names batch 1, but the high-water ledger does — skipped, not
-    // duplicated
+    // failure-replay of epoch 1 after the compact: the one remaining
+    // partition carries the highest admitted id, so batch 1 reads as
+    // admitted — skipped, not duplicated
     val before = Versioned.latestVersion(idx, AnnIndex.CodesTable)
     AnnIndex.append(b1, idx, batchId = 1L, skipIfExists = true)
     assert(Versioned.latestVersion(idx, AnnIndex.CodesTable) == before)
@@ -371,9 +376,23 @@ class AnnIndexSpec extends AnyFunSuite {
       AnnIndex.append(b1, idx, batchId = 1L)
     }
     // fresh monotone ids still admit normally after the compact
-    AnnIndex.append(emb.filter(col("vec_id") >= 400), idx, batchId = 2L)
+    val b2 = emb.filter(col("vec_id") >= 400)
+    AnnIndex.append(b2, idx, batchId = 2L)
     assert(Versioned.readGroup(spark, idx)(AnnIndex.CodesTable).count() ==
       emb.count())
+    // a full rebuild into the same directory: replays of both earlier
+    // batches are still skipped under skipIfExists and refused without it
+    AnnIndex.build(emb, idx)
+    val rebuilt = Versioned.latestVersion(idx, AnnIndex.CodesTable)
+    for ((b, id) <- Seq(b1 -> 1L, b2 -> 2L)) {
+      AnnIndex.append(b, idx, batchId = id, skipIfExists = true)
+      assert(Versioned.latestVersion(idx, AnnIndex.CodesTable) == rebuilt)
+      assert(Versioned.readGroup(spark, idx)(AnnIndex.CodesTable).count() ==
+        emb.count())
+      intercept[IllegalArgumentException] {
+        AnnIndex.append(b, idx, batchId = id)
+      }
+    }
   }
 
   test("ingestStream checkpoints durably under the index directory (epoch " +
@@ -576,7 +595,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5)) == before)
   }
 
-  test("buildOrAppend: bootstrap raises the ledger to its epoch id, so " +
+  test("buildOrAppend: bootstrap labels its codes with its epoch id, so " +
     "a replayed bootstrap batch is skipped, not re-appended; later ids " +
     "append normally") {
     val idx = tmp()
@@ -676,6 +695,9 @@ class AnnIndexSpec extends AnyFunSuite {
     // a SECOND delete's cutoff covers the recycled generation too
     AnnIndex.delete(only7, idx)
     assert(!servable7(), "re-delete must erase the recycled id")
+    // and an append after that cutoff is servable again
+    AnnIndex.append(seven, idx, batchId = 2L)
+    assert(servable7(), "append above the second cutoff hidden")
   }
 
   test("delete auto-compacts when the folded tombstone set crosses the " +

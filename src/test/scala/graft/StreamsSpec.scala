@@ -261,6 +261,13 @@ class StreamsSpec extends AnyFunSuite {
         .read(spark, idx, graft.ops.AnnIndex.CodesTable)
         .select($"vec_id").as[Long].collect().toSet
       assert(indexed() == Set(1L, 2L))
+      // the bootstrap's codes partition carries its batch id (epoch
+      // 0 + 1), so the codes manifest alone records that epoch as admitted
+      val codesV = graft.pipelines.Versioned
+        .latestVersion(idx, graft.ops.AnnIndex.CodesTable).get
+      assert(graft.pipelines.Versioned.manifest(idx,
+        graft.ops.AnnIndex.CodesTable, codesV).get.entries.map(_._1) ==
+        Seq("1"))
       // epoch 1: an exact dup, a near dup, one clean doc → only the
       // clean doc reaches the corpus AND the index (frozen-model append)
       in.addData((10L, a), (11L, b.replace("b8", "zz")),
