@@ -416,43 +416,44 @@ object AnnIndex {
     * ONLY the probe/rank stages ([[VectorOps.ivfPqRank]]). `queries` is
     * `(query_id, qv)` — external query vectors or a corpus slice; a
     * query also present in the corpus never matches itself. No training,
-    * no full-corpus scan: the probe CELL SET (bounded by nCells no
-    * matter how many queries — one tiny distinct over the small side) is
-    * collected and pushed into the codes scan as an `In(cell, …)`
+    * no full-corpus scan: the queries are collected to the driver once,
+    * their probe CELL SET (bounded by nCells no matter how many queries)
+    * is computed there and pushed into the codes scan as an `In(cell, …)`
     * parquet filter, so with the cell-sorted layout [[build]]/[[append]]
     * write, row-group min/max statistics skip every unprobed cell's
     * bytes — the scan reads O(probed cells), not O(corpus), which is
-    * the entire point of an inverted file. Model and codes both come
-    * from the SAME journaled transaction: a rebuild committing between
-    * any two reads here can never mix generations. AnnIndexSpec pins
-    * the pushdown, pruned ≡ unpruned results, and the zero-model-read
-    * repeat serve. */
+    * the entire point of an inverted file. The rank keeps a bounded
+    * top-k per query inside each codes partition, so the rank adds no
+    * window and one exchange, which carries at most partitions ×
+    * queries × k rows. A `vec_id` held by two code rows (an id reused
+    * by a later [[append]]) ranks once, at its better score. Model and
+    * codes both come from the SAME journaled transaction: a rebuild
+    * committing between any two reads here can never mix generations.
+    * AnnIndexSpec pins the pushdown, pruned ≡ unpruned results, the
+    * plan shape, and the zero-model-read repeat serve. */
   def serveTopK(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int, nProbe: Int = 6): DataFrame =
     serveProbed(spark, indexDir, queries, k, nProbe)(identity)
 
   /** The serve both [[serveTopK]] and [[serveTopKFiltered]] run: one
-    * group snapshot, its model, the codes scan pruned to the queries'
-    * probe cells (pushed into parquet as `In(cell, …)`) with the
-    * snapshot's tombstones anti-joined out, then `restrict`, then the
-    * ADC rank. */
+    * group snapshot, its model, the queries' probe cells computed on the
+    * driver, the codes scan pruned to those cells (pushed into parquet
+    * as `In(cell, …)`) with the snapshot's tombstones anti-joined out,
+    * then `restrict`, then the ADC rank. */
   private def serveProbed(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nProbe: Int)(
       restrict: DataFrame => DataFrame): DataFrame = {
-    import spark.implicits._
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val (coarse, books) = loadModelAt(spark, indexDir, snapshot)
-    val probeCells = queries.select(
-        explode(graft.functions.NearestCentroids.nearestCells(
-          col("qv"), coarse, nProbe)).as("cell"))
-      .distinct().as[Int].collect().sorted
+    val probed = VectorOps.probeQueries(queries, coarse, nProbe)
+    val probeCells = probed.cellSet
     val all = Versioned.read(spark, indexDir, CodesTable,
       Some(snapshot(CodesTable)))
     val codes =
       if (probeCells.isEmpty) all.filter(lit(false)) // no queries → no scan
       else antiTombstones(spark, indexDir, snapshot,
         all.filter(col("cell").isInCollection(probeCells.toSeq)))
-    VectorOps.ivfPqRank(restrict(codes), queries, k, coarse, books, nProbe,
+    VectorOps.rankProbed(restrict(codes), probed, k, coarse, books,
       coarse.head._2.length)
   }
 

@@ -17,10 +17,14 @@ import graft.ops.Pin._
   * order-independent and engine-independent; only the final
   * divide-by-sqrt runs in (deterministic, single-operation) IEEE double.
   *
-  * Scale notes: top-k for a query batch broadcasts the queries and
-  * computes partial top-k per partition before the final window — no
-  * all-pairs shuffle. LSH reduces candidates to same-bucket vectors
-  * (multiprobe widens recall); at 100 TB you shard buckets over
+  * Scale notes: exact top-k for a query batch broadcasts the queries;
+  * the `row_number` window over the scored pairs is planned by Spark as
+  * a partial `WindowGroupLimit` per partition before the window's hash
+  * exchange, so at most k rows per query leave each partition
+  * (PlanSpec pins this for [[cosineTopK]] and [[hardNegatives]]).
+  * [[ivfPqRank]] keeps its bounded top-k inside one `mapPartitions`
+  * and needs no window at all. LSH reduces candidates to same-bucket
+  * vectors (multiprobe widens recall); at 100 TB you shard buckets over
   * executors and the per-bucket rerank stays local.
   */
 object VectorOps {
@@ -56,8 +60,8 @@ object VectorOps {
     * that actually teach an embedding model (random negatives are too
     * easy; these sit right at the decision boundary). Same plan shape
     * and scaled-int determinism contract as [[cosineTopK]]: queries
-    * broadcast, fused codegen similarity, partial top-k per partition
-    * before the final window. */
+    * broadcast, fused codegen similarity, Spark's partial
+    * `WindowGroupLimit` per partition before the window's exchange. */
   def hardNegatives(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
     val base = emb.select(col("vec_id"), col("embedding"), col("label"))
     val queries = base.filter(queryPred)
@@ -287,15 +291,6 @@ object VectorOps {
         "neighbor_id")
       .as[(Long, Double, Array[Float])].collect()
       .sortBy { case (id, rel, _) => (-rel, id) }
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      val d = math.sqrt(na) * math.sqrt(nb)
-      if (d == 0.0) 0.0 else dot / d
-    }
     val selectedVecs = scala.collection.mutable.ArrayBuffer[Array[Float]]()
     val selected = scala.collection.mutable.ArrayBuffer[(Long, Double, Double)]()
     val pool = scala.collection.mutable.ArrayBuffer(cand: _*)
@@ -306,7 +301,7 @@ object VectorOps {
         val (id, rel, v) = pool(i)
         val pen =
           if (selectedVecs.isEmpty) 0.0
-          else selectedVecs.map(s => cos(v, s)).max
+          else selectedVecs.map(s => cosine(v, s)).max
         val score = lambda * rel - (1 - lambda) * pen
         if (score > bestScore || (score == bestScore && id < bestId)) {
           bestScore = score; bestIdx = i; bestId = id
@@ -591,49 +586,165 @@ object VectorOps {
   /** Rank probed-cell candidates for `queries` `(query_id, qv)` against
     * a compressed corpus `(vec_id, cell, codes)` under a frozen model:
     * recon = centroid(cell) + decode(codes), cosine(qv, recon),
-    * deterministic (cos desc, id asc) top-k. The rank join touches
-    * probed cells only; queries keep their original (asymmetric)
-    * vectors. Bit-identical between the one-shot and published-index
-    * paths because recon depends only on (cell, codes, model) — all of
-    * which round-trip parquet exactly. */
+    * deterministic (cos desc, id asc) top-k; a query never matches its
+    * own id, and a neighbor id held by two code rows ranks once, at its
+    * better score. Queries keep their original (asymmetric) vectors.
+    *
+    * Plan: the queries and their probe cells are computed on the driver
+    * ([[probeQueries]]; no job for a driver-built query frame), one
+    * `mapPartitions` over the codes scores each row only against the
+    * queries probing its cell and keeps a bounded top-k per query, and
+    * one single-partition exchange carries those ≤ partitions × queries
+    * × k rows to the merge that assigns `rn`. No join, no window, no
+    * shuffle of the scored candidates. Bit-identical between the one-shot
+    * and published-index paths because recon depends only on (cell,
+    * codes, model) — all of which round-trip parquet exactly — and the
+    * cosine is [[graft.functions.CosineSimilarity]]'s arithmetic. */
   def ivfPqRank(codes: DataFrame, queries: DataFrame, k: Int,
       coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
-      nProbe: Int = 6, dim: Int = 64): DataFrame = {
+      nProbe: Int = 6, dim: Int = 64): DataFrame =
+    rankProbed(codes, probeQueries(queries, coarse, nProbe), k, coarse, books,
+      dim)
+
+  /** Queries collected to the driver with each one's `nProbe` nearest
+    * cells, by the same fused search [[graft.functions.NearestCentroids]]
+    * runs in a plan. Rows with a null id or vector probe nothing. */
+  private[ops] final case class ProbedQueries(ids: Array[Long],
+      vecs: Array[Array[Float]], cells: Array[Array[Int]]) {
+    /** Every cell some query probes, ascending. */
+    def cellSet: Array[Int] = cells.flatten.distinct.sorted
+  }
+
+  private[ops] def probeQueries(queries: DataFrame,
+      coarse: Seq[(Int, Array[Float])], nProbe: Int): ProbedQueries = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val rows = queries.select(col("query_id").cast("long"), col("qv"))
+      .as[(Option[Long], Array[Float])].collect()
+      .collect { case (Some(id), v) if v != null => (id, v) }
+    val cellIds = coarse.map(_._1).toArray
+    val centroids = coarse.map(_._2).toArray
+    ProbedQueries(rows.map(_._1), rows.map(_._2), rows.map { case (_, v) =>
+      graft.functions.NearestCentroids.topCells(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(v), cellIds, centroids, nProbe).toIntArray()
+    })
+  }
+
+  private[ops] def rankProbed(codes: DataFrame, q: ProbedQueries, k: Int,
+      coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
+      dim: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
+    if (k <= 0 || q.ids.isEmpty) return emptyTopKFrame(spark)
     val m = books.size
     val sub = dim / m
     val coarseMap = coarse.toMap
     val lookup: Array[Map[Int, Array[Float]]] = books.map(_.toMap).toArray
-    val recon = codes
-      .select(col("vec_id"), col("cell"), col("codes"))
+    val (ids, vecs) = (q.ids, q.vecs)
+    val probing: Map[Int, Array[Int]] = q.cells.zipWithIndex
+      .flatMap { case (cs, qi) => cs.map(_ -> qi) }
+      .groupMap(_._1)(_._2)
+    codes.select(col("vec_id"), col("cell"), col("codes"))
       .as[(Long, Int, Array[Int])]
-      .mapPartitions(_.map { case (id, cell, cs) =>
-        val out = coarseMap(cell).clone()
-        var s = 0
-        while (s < m) {
-          val cv = lookup(s)(cs(s))
-          var i = 0
-          while (i < sub) { out(s * sub + i) += cv(i); i += 1 }
-          s += 1
+      .mapPartitions { rows =>
+        val tops = Array.fill(ids.length)(new BoundedTopK(k))
+        rows.foreach { case (id, cell, cs) =>
+          probing.get(cell).foreach { qis =>
+            val recon = coarseMap(cell).clone()
+            var s = 0
+            while (s < m) {
+              val cv = lookup(s)(cs(s))
+              var i = 0
+              while (i < sub) { recon(s * sub + i) += cv(i); i += 1 }
+              s += 1
+            }
+            qis.foreach { qi =>
+              if (ids(qi) != id) tops(qi).offer(id, cosine(vecs(qi), recon))
+            }
+          }
         }
-        (id, cell, out)
-      }).toDF("vec_id", "cell", "recon")
-    val queryProbes = queries.select(col("query_id"), col("qv"),
-      explode(graft.functions.NearestCentroids.nearestCells(
-        col("qv"), coarse, nProbe)).as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id"))
-    recon.join(broadcast(queryProbes),
-        recon("cell") === queryProbes("cell") &&
-          recon("vec_id") =!= queryProbes("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosineSim(col("qv"), col("recon")).as("cos_sim"))
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos_sim"))
+        ids.indices.iterator.flatMap { qi =>
+          tops(qi).ranked.map { case (n, sim) => (ids(qi), n, sim) }
+        }
+      }
+      .repartition(1)
+      .mapPartitions { rows =>
+        val tops = scala.collection.mutable.HashMap.empty[Long, BoundedTopK]
+        rows.foreach { case (qid, n, sim) =>
+          tops.getOrElseUpdate(qid, new BoundedTopK(k)).offer(n, sim)
+        }
+        tops.toSeq.sortBy(_._1).iterator.flatMap { case (qid, top) =>
+          top.ranked.zipWithIndex.map { case ((n, sim), r) =>
+            (qid, r + 1L, n, sim)
+          }
+        }
+      }
+      .toDF("query_id", "rn", "neighbor_id", "cos_sim")
+  }
+
+  /** cosine(x, y) with [[graft.functions.CosineSimilarity]]'s arithmetic:
+    * float→double terms accumulated in index order over the shorter
+    * length, 0.0 when either norm is zero — so scores are bit-identical
+    * to the expression's. */
+  private def cosine(x: Array[Float], y: Array[Float]): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
+    while (i < n) {
+      val xi = x(i).toDouble
+      val yi = y(i).toDouble
+      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
+    }
+    val denom = math.sqrt(nx) * math.sqrt(ny)
+    if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  /** The best `k > 0` of a stream of (id, score) offers, one entry per
+    * id at its best score, in the `orderBy(score.desc, id)` order a
+    * window would give: scores compare as Spark SQL orders doubles (NaN
+    * above everything, 0.0 == -0.0), ties go to the lower id. The order
+    * is total, so the result does not depend on offer order — the same
+    * entries come out of any partitioning. Offers below a full list's
+    * last entry cost one comparison; the rest scan the ≤ k entries. */
+  private final class BoundedTopK(k: Int) {
+    private var ids = new Array[Long](math.min(k, 16))
+    private var sims = new Array[Double](math.min(k, 16))
+    private var n = 0
+
+    /** (sa, ia) ranks strictly before (sb, ib); for one id, the better
+      * of two SQL-equal scores is the larger by `Double.compare`. */
+    private def before(sa: Double, ia: Long, sb: Double, ib: Long): Boolean = {
+      val c = if (sa == sb) 0 else java.lang.Double.compare(sa, sb)
+      c > 0 || (c == 0 &&
+        (ia < ib || (ia == ib && java.lang.Double.compare(sa, sb) > 0)))
+    }
+
+    def offer(id: Long, sim: Double): Unit =
+      if (n < k || before(sim, id, sims(n - 1), ids(n - 1))) {
+        var at = 0
+        while (at < n && ids(at) != id) at += 1
+        if (at == n || before(sim, id, sims(at), id)) {
+          if (at == n && n == k) at = n - 1 // evict the last entry
+          else if (at == n) {
+            if (n == ids.length) {
+              val cap = math.min(k.toLong, 2L * n).toInt
+              ids = java.util.Arrays.copyOf(ids, cap)
+              sims = java.util.Arrays.copyOf(sims, cap)
+            }
+            n += 1
+          }
+          // entries before `at` that rank after the offer shift down
+          var j = at
+          while (j > 0 && before(sim, id, sims(j - 1), ids(j - 1))) {
+            ids(j) = ids(j - 1); sims(j) = sims(j - 1); j -= 1
+          }
+          ids(j) = id; sims(j) = sim
+        }
+      }
+
+    /** The kept entries, best first. */
+    def ranked: Iterator[(Long, Double)] =
+      Iterator.range(0, n).map(j => (ids(j), sims(j)))
   }
 
   /** IVF-PQ search — the composed production ANN layout: a coarse
@@ -678,9 +789,9 @@ object VectorOps {
     * query by cosine(query_original, reconstruction(corpus_codes)) —
     * the search the compressed serving tier actually runs. Implemented
     * by substituting reconstructions for corpus embeddings and reusing
-    * the exact [[cosineTopK]] machinery (broadcast queries, partial
-    * per-partition top-k); queries keep their ORIGINAL vectors, which
-    * is the "asymmetric" in ADC. */
+    * the exact [[cosineTopK]] machinery (broadcast queries, Spark's
+    * partial `WindowGroupLimit` before the window's exchange); queries
+    * keep their ORIGINAL vectors, which is the "asymmetric" in ADC. */
   def pqTopK(emb: DataFrame, queryPred: Column, k: Int,
       books: Seq[Seq[(Int, Array[Float])]], dim: Int = 64): DataFrame = {
     val spark = emb.sparkSession

@@ -846,4 +846,173 @@ class AnnIndexSpec extends AnyFunSuite {
       .select(col("rebuilt")).as[Boolean].head()
     assert(!noop)
   }
+
+  test("rank edge cases: k <= 0 and an empty query frame give the empty " +
+    "four-column frame; a query whose probed cells hold only its own id " +
+    "gets no rows") {
+    val idx = tmp()
+    AnnIndex.build(emb, idx)
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val columns = Seq("query_id", "rn", "neighbor_id", "cos_sim")
+    for (k <- Seq(0, -1)) {
+      val out = AnnIndex.serveTopK(spark, idx, queries, k)
+      assert(out.columns.toSeq == columns && out.isEmpty, s"k = $k")
+    }
+    val none = AnnIndex.serveTopK(spark, idx, queries.filter(lit(false)), 5)
+    assert(none.columns.toSeq == columns && none.isEmpty)
+    // a one-vector index: every probed cell holds only the query's own id
+    val solo = tmp()
+    AnnIndex.build(emb.filter(col("vec_id") === 0), solo)
+    val v0 = emb.filter(col("vec_id") === 0)
+    assert(AnnIndex.serveTopK(spark, solo,
+      v0.select(col("vec_id").as("query_id"), col("embedding").as("qv")), 5)
+      .isEmpty)
+    // the same vector under another query id does find it
+    assert(collectTopK(AnnIndex.serveTopK(spark, solo,
+      v0.select(lit(999L).as("query_id"), col("embedding").as("qv")), 5))
+      .map(r => (r._2, r._3)) == Seq((1L, 0L)))
+  }
+
+  test("a vec_id reused by a later append ranks once per query, at the " +
+    "larger of its two scores, on every run and shuffle width") {
+    val idx = tmp()
+    AnnIndex.build(emb, idx)
+    val codes0 = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+      .select("vec_id", "cell", "codes").as[(Long, Int, Array[Int])]
+      .collect()
+    val (_, cell5, codes5) = codes0.find(_._1 == 5L).get
+    // id 5 comes back with the vector of an id x in its cell whose codes
+    // differ: both rows of id 5 sit in one probed cell, scored apart
+    val x = codes0.filter(r => r._2 == cell5 && r._1 != 5L &&
+      !r._3.sameElements(codes5)).map(_._1).min
+    AnnIndex.append(emb.filter(col("vec_id") === x)
+      .select(lit(5L).as("vec_id"), col("embedding")), idx, batchId = 1L)
+    def vec(id: Long) = emb.filter(col("vec_id") === id).select("embedding")
+      .as[Array[Float]].head()
+    // 998 ranks id 5's first row higher, 999 its second
+    val probes = Seq(998L -> vec(5L), 999L -> vec(x))
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      .unionByName(probes.toDF("query_id", "qv"))
+    // the two code rows of id 5, scored by the cosine expression itself
+    val (coarse, books) = AnnIndex.loadModel(spark, idx)
+    val sub = coarse.head._2.length / books.size
+    val recons = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+      .filter(col("vec_id") === 5).select("cell", "codes")
+      .as[(Int, Array[Int])].collect().map { case (cell, cs) =>
+        val out = coarse.toMap.apply(cell).clone()
+        for (s <- books.indices; i <- 0 until sub)
+          out(s * sub + i) += books(s).toMap.apply(cs(s))(i)
+        out
+      }
+    assert(recons.length == 2)
+    val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10))
+    assert(served.groupBy(r => (r._1, r._3)).forall(_._2.size == 1),
+      "a neighbor ranked twice for one query")
+    for ((qid, qv) <- probes) {
+      val scores = recons.toSeq.toDF("recon")
+        .select(graft.functions.CosineSimilarity.cosineSim(
+          typedLit(qv), col("recon")))
+        .as[Double].collect()
+      assert(scores(0) != scores(1))
+      assert(served.filter(r => r._1 == qid && r._3 == 5L).map(_._4) ==
+        Seq(scores.max), s"query $qid")
+    }
+    assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) == served)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (n <- Seq("1", "8")) {
+        spark.conf.set("spark.sql.shuffle.partitions", n)
+        assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) ==
+          served, s"shuffle.partitions = $n")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  test("ivfPqRank == the relational rank (broadcast probe join, " +
+    "row_number window) over the same codes, bit for bit") {
+    val idx = tmp()
+    AnnIndex.build(emb, idx)
+    val (coarse, books) = AnnIndex.loadModel(spark, idx)
+    val dim = coarse.head._2.length
+    val sub = dim / books.size
+    val codes = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+      .select("vec_id", "cell", "codes")
+    val queries = emb.filter(col("vec_id") < 12)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val coarseMap = coarse.toMap
+    val lookup = books.map(_.toMap).toArray
+    val recon = codes.as[(Long, Int, Array[Int])].map { case (id, cell, cs) =>
+      val out = coarseMap(cell).clone()
+      for (s <- lookup.indices; i <- 0 until sub)
+        out(s * sub + i) += lookup(s)(cs(s))(i)
+      (id, cell, out)
+    }.toDF("vec_id", "cell", "recon")
+    val probes = queries.select(col("query_id"), col("qv"),
+      explode(graft.functions.NearestCentroids.nearestCells(
+        col("qv"), coarse, 6)).as("cell"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("neighbor_id"))
+    val scored = recon.join(broadcast(probes),
+        recon("cell") === probes("cell") &&
+          recon("vec_id") =!= probes("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        graft.functions.CosineSimilarity.cosineSim(col("qv"), col("recon"))
+          .as("cos_sim"))
+      .withColumn("rn", row_number().over(w).cast("long"))
+    for (k <- Seq(1, 5, 50)) {
+      val expected = collectTopK(scored.filter(col("rn") <= k))
+      assert(expected.nonEmpty)
+      assert(collectTopK(VectorOps.ivfPqRank(codes, queries, k, coarse, books,
+        nProbe = 6, dim = dim)) == expected, s"k = $k")
+    }
+  }
+
+  test("serve plan: no window and at most one exchange; probe cells of a " +
+    "driver-built query frame start no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val idx = tmp()
+    AnnIndex.build(emb, idx)
+    val local = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "qv")
+    val plan = AnnIndex.serveTopK(spark, idx, local, 5)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Window"), plan)
+    assert("Exchange".r.findAllMatchIn(plan).size <= 1, plan)
+    val (coarse, books) = AnnIndex.loadModel(spark, idx)
+    val codes = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+      .select("vec_id", "cell", "codes")
+    // jobs carry the submitting thread's local properties; the listener
+    // bus delivers in order, so once the marker job is seen every job
+    // started inside the window before it has been seen too
+    val key = "graft.spec.window"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(started.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "probe")
+      val ranked = try VectorOps.ivfPqRank(codes, local, 5, coarse, books,
+          nProbe = 6, dim = coarse.head._2.length)
+        finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains("marker")) {
+        assert(System.nanoTime() < deadline, "marker job never reported")
+        Thread.sleep(10)
+      }
+      assert(!started.contains("probe"),
+        "computing probe cells for a driver-built query frame ran a job")
+      assert(collectTopK(ranked).size == 4 * 5)
+    } finally sc.removeSparkListener(listener)
+  }
 }
