@@ -128,9 +128,9 @@ object AnnIndex {
     val residuals = VectorOps.ivfResiduals(emb, coarse)
       .pinLazy // feeds pqTrain (m passes) + encode
     val books = VectorOps.pqTrain(residuals, p.m, p.pqK, p.dim)
-    // cell-sorted within files: parquet row-group min/max on `cell`
-    // become tight disjoint ranges, so serveTopK's pushed In(cell, …)
-    // filter skips unprobed cells' bytes (the IVF layout contract).
+    // cell-sorted within files. A codes file is written as one parquet
+    // row group spanning all its cells, so serveTopK's pushed In(cell, …)
+    // filter prunes no bytes yet; it drops unprobed rows after the scan.
     // Encode is a zero-join projection over the checkpointed residuals.
     val codes = VectorOps.encodeResiduals(residuals, books, p.dim)
       .withColumn("batch", lit(batch))
@@ -156,8 +156,8 @@ object AnnIndex {
   // rebuild publishes new model versions. The commit-marker stamp
   // ([[Versioned.commitStamp]]) guards the delete-and-rebuild-same-path
   // hazard ADVICE r10 flagged: a fresh incarnation restarts versions at
-  // 0, but its markers carry new mtimes, so a stale model from the
-  // previous incarnation can never serve against the new codes.
+  // 0, but its markers carry new incarnation tokens, so a stale model
+  // from the previous incarnation can never serve against the new codes.
   // Model-sized values (nCells + m·pqK vectors).
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), Model]()
@@ -230,12 +230,12 @@ object AnnIndex {
   /** Anti-join the snapshot's tombstones (if the snapshot carries any)
     * out of a codes frame, scoped to each victim's admission cutoff
     * ([[tombstoneScope]]). Applied AFTER the probed-cell filter so the
-    * `In(cell, …)` parquet pushdown is untouched. The tombstone side is
-    * one id-sized aggregate: Catalyst broadcasts it while it fits the
-    * broadcast budget and falls back to a shuffle anti-join beyond that
-    * — correct either way, and [[delete]]'s `compactAbove` bound forces
-    * a physical fold before the set can grow without limit (AnnIndexSpec
-    * pins both regimes). Indexes published before any [[delete]] have no
+    * `In(cell, …)` filter still reaches the parquet scan. The tombstone
+    * side is one id-sized aggregate: Catalyst broadcasts it while it
+    * fits the broadcast budget and falls back to a shuffle anti-join
+    * beyond that — correct either way, and [[delete]]'s `compactAbove`
+    * bound forces a physical fold before the set can grow without limit
+    * (AnnIndexSpec pins both regimes). Indexes published before any [[delete]] have no
     * tombstone member in their snapshot and skip the join entirely. */
   private def antiTombstones(spark: SparkSession, indexDir: String,
       snapshot: Map[String, Long], codes: DataFrame): DataFrame =
@@ -419,27 +419,29 @@ object AnnIndex {
     * no full-corpus scan: the queries are collected to the driver once,
     * their probe CELL SET (bounded by nCells no matter how many queries)
     * is computed there and pushed into the codes scan as an `In(cell, …)`
-    * parquet filter, so with the cell-sorted layout [[build]]/[[append]]
-    * write, row-group min/max statistics skip every unprobed cell's
-    * bytes — the scan reads O(probed cells), not O(corpus), which is
-    * the entire point of an inverted file. The rank keeps a bounded
+    * parquet filter. That filter prunes no bytes today: each codes file
+    * is one row group spanning every cell in it, so the scan reads every
+    * code row of the snapshot and drops the unprobed ones before the
+    * rank. Reading only the probed cells' files needs a per-file cell
+    * range, which nothing records yet. The rank keeps a bounded
     * top-k per query inside each codes partition, so the rank adds no
     * window and one exchange, which carries at most partitions ×
     * queries × k rows. A `vec_id` held by two code rows (an id reused
     * by a later [[append]]) ranks once, at its better score. Model and
     * codes both come from the SAME journaled transaction: a rebuild
     * committing between any two reads here can never mix generations.
-    * AnnIndexSpec pins the pushdown, pruned ≡ unpruned results, the
-    * plan shape, and the zero-model-read repeat serve. */
+    * AnnIndexSpec pins the pushed filter, filtered ≡ unfiltered results,
+    * the plan shape, and the zero-model-read repeat serve. */
   def serveTopK(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int, nProbe: Int = 6): DataFrame =
     serveProbed(spark, indexDir, queries, k, nProbe)(identity)
 
   /** The serve both [[serveTopK]] and [[serveTopKFiltered]] run: one
     * group snapshot, its model, the queries' probe cells computed on the
-    * driver, the codes scan pruned to those cells (pushed into parquet
-    * as `In(cell, …)`) with the snapshot's tombstones anti-joined out,
-    * then `restrict`, then the ADC rank. */
+    * driver, the codes scan filtered to those cells (the `In(cell, …)`
+    * filter is pushed into parquet but skips no row group today) with
+    * the snapshot's tombstones anti-joined out, then `restrict`, then
+    * the ADC rank. */
   private def serveProbed(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nProbe: Int)(
       restrict: DataFrame => DataFrame): DataFrame = {
@@ -466,14 +468,14 @@ object AnnIndex {
     * disallowed) loses recall under selective filters: a filter keeping
     * 1% of the corpus leaves ~k'/100 usable results.
     *
-    * Plan shape: the probed-cell `In(cell, …)` parquet pushdown prunes
-    * the codes scan exactly as [[serveTopK]] does, then a LEFT SEMI join
-    * on vec_id admits survivors (Catalyst broadcasts a small key set,
-    * shuffles a large one — both scale-safe), and only those are ADC-
-    * ranked. Model/codes come from one journaled snapshot, same as the
+    * Plan shape: the codes scan carries the probed-cell `In(cell, …)`
+    * filter exactly as [[serveTopK]]'s does (pushed, no bytes pruned
+    * today), then a LEFT SEMI join on vec_id admits survivors (Catalyst
+    * broadcasts a small key set, shuffles a large one — both
+    * scale-safe), and only those are ADC-ranked. Model/codes come from one journaled snapshot, same as the
     * unfiltered path. AnnIndexSpec pins: filtered serve ≡ one-shot
     * IVF-PQ over the filtered corpus (bit-identical), recall@k under a
-    * selective filter vs brute-force-with-filter, and the pushdown. */
+    * selective filter vs brute-force-with-filter, and the pushed filter. */
   def serveTopKFiltered(spark: SparkSession, indexDir: String,
       queries: DataFrame, allowed: DataFrame, k: Int,
       nProbe: Int = 6): DataFrame =
@@ -519,7 +521,7 @@ object AnnIndex {
     }
     val codes = VectorOps.ivfPqEncodeWith(batch, coarse, books, dim)
       .withColumn("batch", lit(batchId))
-      .sortWithinPartitions(col("cell"), col("vec_id")) // IVF layout, as in build
+      .sortWithinPartitions(col("cell"), col("vec_id")) // cell-sorted, as in build
     // tombstones (if any) ride along at their current version — an
     // append must never resurrect erased ids by dropping the tombstone
     // member from the snapshot
@@ -606,7 +608,7 @@ object AnnIndex {
           Some(snapshot(CodesTable))))
       .select(col("vec_id"), col("cell"), col("codes"),
         lit(admittedHwm(indexDir)).as("batch"))
-      .sortWithinPartitions(col("cell"), col("vec_id")) // restore IVF layout
+      .sortWithinPartitions(col("cell"), col("vec_id")) // cell-sorted, as in build
     val published = Versioned.publishGroupMembers(Seq(
       Versioned.GroupLink(CentroidsTable, snapshot(CentroidsTable)),
       Versioned.GroupLink(CodebooksTable, snapshot(CodebooksTable)),

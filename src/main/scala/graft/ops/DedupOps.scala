@@ -250,22 +250,6 @@ object DedupOps {
       }.toDF("doc_id", "sh_h")
   }
 
-  /** MinHash signatures: the shingle string is hashed ONCE (xxhash64);
-    * the k "permutations" re-hash that 8-byte value with the permutation
-    * index — k fixed-width hashes instead of k full string hashes.
-    * (An affine h·aᵢ+bᵢ mix would be cheaper still, but Spark 4 runs
-    * ANSI mode by default and a wrapping long multiply throws
-    * ARITHMETIC_OVERFLOW.) Signature i = min over the doc's shingles.
-    * One shuffle. Relational formulation kept for the API surface; the
-    * hot path is [[minhashDocs]] (row-local, no shuffle). */
-  def minhashSignatures(sh: DataFrame, k: Int = 64): DataFrame = {
-    val hashed =
-      if (sh.columns.contains("sh_h")) sh
-      else sh.withColumn("sh_h", xxhash64(col("shingle")))
-    val mins = (0 until k).map(i => min(xxhash64(col("sh_h"), lit(i))).as(s"mh_$i"))
-    hashed.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
-  }
-
   /** splitmix64-style avalanche of a shingle hash with a permutation
     * index — the JVM-side minhash family (wrapping arithmetic is fine in
     * compiled code; the SQL surface can't wrap under ANSI mode). */
@@ -280,10 +264,8 @@ object DedupOps {
     * partition-local pass: (doc_id, mins: array<long>[k], shs: sorted
     * distinct shingle hashes). A document's signature depends only on its
     * own text, so there is NO shuffle here at all — each row is complete
-    * when the scan task finishes. The relational form ([[minhashSignatures]])
-    * shuffles every (doc, shingle) pair and evaluates k interpreted
-    * hash expressions per pair; this loop is the same math at
-    * k·|shingles| compiled ops, the shape a 100 TB corpus needs. */
+    * when the scan task finishes: k·|shingles| compiled ops per
+    * document. It is the engine's only MinHash signature path. */
   def minhashDocs(docs: DataFrame, n: Int = 5, k: Int = 64): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -328,17 +310,6 @@ object DedupOps {
           }
         }
       }.toDF("doc_id", "mins", "shs")
-  }
-
-  /** LSH banding: k minhashes → bands of r rows; band signature =
-    * xxhash64 of the band's minhashes. Output (doc_id, band_id, band_hash). */
-  def lshBands(sig: DataFrame, k: Int = 64, r: Int = 4): DataFrame = {
-    val bands = (0 until k / r).map { b =>
-      struct(lit(b).as("band_id"),
-        xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*).as("band_hash"))
-    }
-    sig.select(col("doc_id"), explode(array(bands: _*)).as("band"))
-      .select(col("doc_id"), col("band.band_id"), col("band.band_hash"))
   }
 
   /** MinHash-LSH near-dup pairs, exact-verified: candidates collide in ≥1
@@ -728,9 +699,12 @@ object DedupOps {
     * an already-deduplicated corpus, and within itself, WITHOUT ever
     * forming a corpus×corpus pair: candidate pairs are (batch×corpus) ∪
     * (batch×batch) only, keyed on df-capped hashed-shingle postings, so
-    * a daily batch costs O(batch-side postings), not a corpus re-pair.
-    * This is the production shape of dedup at 100 TB — the corpus was
-    * cleaned once; every refresh only admits newcomers.
+    * the candidate join grows with the batch's postings, not with a
+    * corpus re-pair. The corpus side is NOT O(batch): every call re-reads
+    * and re-shingles the whole `corpus` frame ([[incrementalJaccardPairs]])
+    * to build its postings, so a call costs one full corpus scan on top
+    * of the batch-sized join. The corpus was cleaned once; every refresh
+    * only admits newcomers.
     *
     * Verdicts per batch document (precedence order):
     * `exact_dup` (same text as a corpus doc, or as a smaller-id batch
@@ -766,8 +740,10 @@ object DedupOps {
     * where `other` ranges over the corpus AND smaller-id batch docs —
     * the (batch×corpus) ∪ (batch×batch) candidate join of the admission
     * pattern (never corpus×corpus), df-capped postings, full exact
-    * verify. Keeping the SCORE (instead of collapsing to a status) is
-    * what lets one machinery run serve two thresholds downstream — the
+    * verify. The corpus's shingle sets are recomputed from its text on
+    * every call ([[minhashDocs]] over all of `corpus`). Keeping the
+    * SCORE (instead of collapsing to a status) is what lets one
+    * machinery run serve two thresholds downstream — the
     * [[graft.pipelines.CorpusPublisher]] two-threshold discipline
     * (dedup at the high cut, split/contamination scope at the loose
     * one) — exactly like the jaccardPairsHashed reuse in the full

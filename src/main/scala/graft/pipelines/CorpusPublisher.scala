@@ -30,11 +30,13 @@ import graft.ops.Pin._
   *      exactly like any other group.
   *
   * The corpus tables are Hive-partitioned by ingest `batch` (the full
-  * publish is batch 0), which is what makes [[appendBatch]] an O(batch)
-  * transaction: a new document batch stages ONE new partition per
+  * publish is batch 0), which is what makes [[appendBatch]] stage
+  * O(batch) bytes: a new document batch stages ONE new partition per
   * table and links every prior batch through the manifest — the
   * admission move [[graft.ops.AnnIndex.append]] makes against its
-  * frozen model, applied to the published corpus family.
+  * frozen model, applied to the published corpus family. Vetting the
+  * batch is not O(batch): it re-reads and re-shingles the whole
+  * published corpus on every append.
   *
   * Scale: every stage is the already-audited operator (hashed-shingle
   * joins under the df cap, no all-pairs stage); the publish itself adds
@@ -135,15 +137,18 @@ object CorpusPublisher {
   }
 
   /** Admit a NEW document batch into the published corpus family as one
-    * O(batch) group transaction — the corpus-side analogue of
-    * [[graft.ops.AnnIndex.append]] against its frozen model: the batch
-    * is vetted against the PUBLISHED corpus (the admission pattern —
-    * (batch×corpus) ∪ (batch×batch) shingle joins via
+    * group transaction that stages O(batch) bytes — the corpus-side
+    * analogue of [[graft.ops.AnnIndex.append]] against its frozen
+    * model: the batch is vetted against the PUBLISHED corpus (the
+    * admission pattern — (batch×corpus) ∪ (batch×batch) shingle joins via
     * [[DedupOps.incrementalJaccardPairs]], never corpus×corpus), each
     * split table stages only its new `batch=<batchId>` partition with
     * every prior batch linked through the manifest, and the budget
     * manifest is updated from the OLD manifest + the batch's deltas
-    * (exact long sums — no corpus re-aggregation). Batch `doc_id`s must
+    * (exact long sums — no corpus re-aggregation). The vetting join is
+    * batch-sized, but building its corpus-side postings reads every
+    * published split table and re-shingles every published document, so
+    * an append's cost still grows with the corpus. Batch `doc_id`s must
     * exceed every published id (the monotone-id contract), and batch
     * ids must be fresh — a reused batch id fails loudly against the
     * partition ledger.
@@ -180,8 +185,8 @@ object CorpusPublisher {
     * pure-function quality gate, but a near-dup of a dropped
     * low-quality doc can be admitted where a from-scratch republish
     * containing the old doc would drop it. That asymmetry is inherent
-    * to O(batch) admission (the rejected doc is not in the published
-    * state) and is the same trade [[graft.ops.AnnIndex.append]] makes
+    * to admission against the published state (the rejected doc is not
+    * in it) and is the same trade [[graft.ops.AnnIndex.append]] makes
     * by encoding against the frozen model.
     *
     * @return (table → version) of the new group snapshot. */

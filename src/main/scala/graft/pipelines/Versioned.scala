@@ -44,7 +44,10 @@ import org.apache.spark.sql.functions.{col, lit}
   * incremental refresh rewrites only the partitions it touches and links
   * the rest (the Iceberg-manifest idea reduced to its load-bearing core).
   * Pruning never deletes a version directory still referenced by a
-  * retained manifest.
+  * retained manifest. The manifest is also the only skipping structure
+  * this layer keeps: a reader skips whole partitions through it, and
+  * within the files it opens, parquet's own row-group statistics do
+  * the rest. Reads write nothing ([[commitStamp]] included).
   */
 object Versioned {
 
@@ -60,132 +63,19 @@ object Versioned {
     * previous incarnation of the path can never serve
     * ([[graft.ops.AnnIndex]]'s model cache). Derived from the marker's
     * CONTENT — every publish writes a unique incarnation token into
-    * `_COMMIT` — combined with its mtime: an mtime alone is not enough
-    * (a delete-and-rebuild completing within one coarse-granularity
-    * (1 s) filesystem tick reproduces the identical stamp — the exact
-    * hazard this exists to close, ADVICE r11), and the mtime fold keeps
-    * markers written before the token existed distinguishable. */
-  // (path, mtime) → stamp memo for the hot serve path (AnnIndex's
-  // per-serve model-cache key pays one getFileStatus, not a content GET,
-  // per call). CACHE-SAFETY: an entry is stored ONLY once the marker's
-  // mtime tick has safely closed (mtime at least 2 s in the past) — a
-  // delete-and-rebuild landing its new marker inside the SAME coarse
-  // (1 s) mtime tick is exactly the incarnation hazard the content hash
-  // exists to disambiguate, and a (path, mtime)-keyed hit taken during
-  // that window would return the OLD incarnation's stamp. Outside the
-  // window the clock has moved on, so any future marker at this path
-  // carries a different mtime and can never alias a cached key.
-  private val stampCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Long]()
-
-  /** The filesystem's OWN clock, read by statting a just-created probe
-    * file next to `near` — the admission guard below must compare the
-    * marker's mtime against the clock that STAMPED it, not the driver's
-    * (on object stores / remote HDFS the two can skew by seconds either
-    * way: negative skew would admit a memo entry while the marker's
-    * coarse mtime tick is still open — re-opening the same-tick
-    * delete-and-rebuild alias the guard exists to close — and positive
-    * skew would silently disable the memo on the hot serve path,
-    * ADVICE r12). Costs one create+stat+delete, paid only on the
-    * UNmemoized path (the first ~2 s of a marker's life), and the
-    * measured fs-vs-local clock SKEW is itself memoized per directory
-    * for [[SkewTtlMs]] ([[fsNowCached]] — ADVICE r13: without that, a
-    * burst of readers right after a publish each paid the
-    * create+stat+delete on an object store's read path); the fully
-    * memoized hot path stays one getFileStatus.
-    *
-    * READ-ONLY SAFE: a reader without write permission on the table
-    * dir (serve-only IAM role, read-only mount — precisely the remote
-    * deployments whose clock skew motivates this) gets `Long.MinValue`
-    * back, which simply fails the admission guard: the stamp is still
-    * computed and returned, the memo just never warms — correctness
-    * over memoization, readers keep their no-coordination contract.
-    * A crash between the probe's create and delete leaves one orphan;
-    * each successful probe sweeps siblings older than a minute, so
-    * debris is bounded by the crash count since the last clean probe. */
-  private def fsNow(near: Path): Long =
-    try {
-      val probe = new Path(near,
-        s"_clock_probe_${java.util.UUID.randomUUID().toString.take(13)}")
-      Fs.writeString(probe, "t")
-      val now =
-        try Fs.of(probe).getFileStatus(probe).getModificationTime
-        finally Fs.deleteRecursive(probe)
-      try
-        Fs.list(near)
-          .filter(f => f.getPath.getName.startsWith("_clock_probe_") &&
-            now - f.getModificationTime > 60000L)
-          .foreach(f => Fs.deleteRecursive(f.getPath))
-      catch { case _: Throwable => () } // sweep is best-effort
-      now
-    } catch { case _: Throwable => Long.MinValue }
-
-  // dir → (fs-minus-local clock skew ms, local sample time ms); skew ==
-  // Long.MinValue records a FAILED probe (read-only mount) so repeated
-  // reads inside the TTL don't re-attempt the create either
-  private val skewCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-  private val SkewTtlMs = 15000L
-
-  /** [[fsNow]] through a short-TTL clock-skew memo per directory: one
-    * probe measures `fsClock - localClock`; for [[SkewTtlMs]] afterwards
-    * the fs clock is ESTIMATED as `localNow + skew` with zero fs
-    * requests. Both clocks advance in real time, so the estimate's error
-    * over 15 s is drift noise (≪ the 2 s admission margin it feeds).
-    * This is what keeps a burst of readers right after a publish from
-    * multiplying mutating probe requests on the read path (ADVICE r13). */
-  private def fsNowCached(near: Path): Long = {
-    val key = near.toString
-    val local = System.currentTimeMillis()
-    val hit = skewCache.get(key)
-    if (hit != null && local - hit._2 <= SkewTtlMs) {
-      if (hit._1 == Long.MinValue) Long.MinValue else local + hit._1
-    } else {
-      val fs = fsNow(near)
-      val after = System.currentTimeMillis()
-      // sentinel BEFORE arithmetic (MinValue wraps — the r13 lesson)
-      val skew = if (fs == Long.MinValue) Long.MinValue else fs - after
-      if (skewCache.size > 1024) skewCache.clear()
-      skewCache.put(key, (skew, after))
-      fs
-    }
-  }
-
+    * `_COMMIT` — folded with its mtime: an mtime alone is not enough (a
+    * delete-and-rebuild completing within one coarse (1 s) filesystem
+    * tick reproduces the identical mtime), and the mtime fold keeps
+    * markers written before the token existed distinguishable. Costs
+    * one getFileStatus and one small read; writes nothing, so a reader
+    * needs no write permission on the table. A version resolved through
+    * a sealed group journal always reads its full token: the journal
+    * seals only after every member's marker is written. */
   def commitStamp(baseDir: String, name: String, version: Long): Long = {
     val p = commitPath(tableDir(baseDir, name), version)
     val mtime = Fs.of(p).getFileStatus(p).getModificationTime
-    val key = (p.toString, mtime)
-    val hit = stampCache.get(key)
-    if (hit != 0L) return hit
-    // a freshly-created marker can be visible before its content lands
-    // (create-then-write); an empty read must not be cached or a racer
-    // pins the empty-content stamp for the incarnation's lifetime
-    val content = Fs.readString(p)
-    val stamp =
-      scala.util.hashing.MurmurHash3.stringHash(content).toLong *
-        1000003L ^ mtime
-    // fsNow probes the TABLE dir (same filesystem + same parent as the
-    // marker's version dir; version dirs stay probe-free). Fast path:
-    // a marker more than a minute old by the LOCAL clock is admitted
-    // without the probe — 60 s dwarfs any plausible clock skew plus
-    // the mtime tick, so the only calls that pay the probe write are
-    // reads of freshly published markers (cold reads of old versions,
-    // e.g. the first serve after a JVM restart, stay metadata-only)
-    // the probe's failure sentinel must be checked BEFORE the
-    // subtraction: Long.MinValue - mtime wraps positive, which would
-    // turn a failed probe into a memo admission inside the open tick —
-    // the exact alias the guard exists to block
-    def probedTickClosed(): Boolean = {
-      val now = fsNowCached(tableDir(baseDir, name))
-      now != Long.MinValue && now - mtime > 2000L
-    }
-    if (content.nonEmpty &&
-        (System.currentTimeMillis() - mtime > 60000L ||
-          probedTickClosed())) {
-      if (stampCache.size > 1024) stampCache.clear()
-      stampCache.put(key, if (stamp == 0L) 1L else stamp)
-    }
-    if (stamp == 0L) 1L else stamp
+    scala.util.hashing.MurmurHash3.stringHash(Fs.readString(p)).toLong *
+      1000003L ^ mtime
   }
 
   /** Commit-marker content: the version plus a UUID incarnation token
@@ -1229,200 +1119,4 @@ object Versioned {
   def rollback(spark: SparkSession, baseDir: String, name: String,
       toVersion: Long, keep: Int = 3): Long =
     publish(read(spark, baseDir, name, Some(toVersion)), baseDir, name, keep)
-
-  /** Publish with a z-ordered layout: range-partition the rows by the
-    * Morton key of (`colA`, `colB`) and sort each output file by it, so
-    * every parquet file covers a tight rectangle in BOTH dimensions and
-    * min/max row-group statistics prune scans on either column — the
-    * one-call form of the layout win ScaleSpec proves for
-    * [[graft.functions.ZOrderKey]] (Delta's OPTIMIZE ZORDER as a publish
-    * mode). Columns must be non-negative integers ≤ 2³². */
-  def publishClustered(df: DataFrame, baseDir: String, name: String,
-      colA: String, colB: String, numFiles: Int = 8, keep: Int = 3): Long = {
-    val keyed = df.withColumn("__zkey",
-        graft.functions.ZOrderKey.zorderKey(col(colA), col(colB)))
-      .repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zkey")
-    publish(keyed, baseDir, name, keep)
-  }
-
-  // ---- file skipping: footer min/max manifest ---------------------------
-
-  private def fileStatsPath(t: Path, v: Long) = new Path(vdir(t, v), "_FILESTATS")
-
-  /** Per-file min/max of one column, harvested from the PARQUET FOOTER —
-    * no data pages are ever read. `None` = the footer carried no usable
-    * statistics for the column (the file can never be skipped). */
-  private def footerMinMax(p: Path,
-      colsWanted: Set[String]): Map[String, (String, String, String)] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(p, Fs.conf))
-    try {
-      // (tag, min, max) per column, folded across row groups; a column
-      // drops out entirely if ANY row group lacks stats (pruning on a
-      // partial picture would be wrong, not just suboptimal)
-      var acc = Map.empty[String, (String, Any, Any)]
-      var dead = Set.empty[String]
-      rd.getFooter.getBlocks.forEach { b =>
-        b.getColumns.forEach { cc =>
-          val name = cc.getPath.toDotString
-          if (colsWanted(name) && !dead(name)) {
-            val st = cc.getStatistics
-            if (st == null || !st.hasNonNullValue) {
-              dead += name; acc -= name
-            } else (st.genericGetMin, st.genericGetMax) match {
-              case (mn: java.lang.Number, mx: java.lang.Number)
-                  if !mn.isInstanceOf[java.lang.Double] &&
-                    !mn.isInstanceOf[java.lang.Float] =>
-                val (l, h) = (mn.longValue(), mx.longValue())
-                acc += name -> (acc.get(name) match {
-                  case Some(("long", pl: Long, ph: Long)) =>
-                    ("long", math.min(pl, l), math.max(ph, h))
-                  case _ => ("long", l, h)
-                })
-              case (mn: java.lang.Number, mx: java.lang.Number) =>
-                val (l, h) = (mn.doubleValue(), mx.doubleValue())
-                acc += name -> (acc.get(name) match {
-                  case Some(("double", pl: Double, ph: Double)) =>
-                    ("double", math.min(pl, l), math.max(ph, h))
-                  case _ => ("double", l, h)
-                })
-              case (mn: org.apache.parquet.io.api.Binary,
-                    mx: org.apache.parquet.io.api.Binary) =>
-                val (l, h) = (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
-                acc += name -> (acc.get(name) match {
-                  case Some(("string", pl: String, ph: String)) =>
-                    ("string", if (pl < l) pl else l, if (ph > h) ph else h)
-                  case _ => ("string", l, h)
-                })
-              case _ => dead += name; acc -= name // boolean/int96/etc.
-            }
-          }
-        }
-      }
-      acc.map { case (c, (tag, mn, mx)) => c -> (tag, mn.toString, mx.toString) }
-    } finally rd.close()
-  }
-
-  private def enc(s: String) =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String) =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** Publish `df` with a `_FILESTATS` manifest: per output file, the
-    * footer min/max of each `statsCols` column — written BEFORE the
-    * `_COMMIT` marker, so the stats are part of the atomic publish (a
-    * version either has its skipping manifest or does not exist).
-    * This is the Delta/Iceberg data-skipping core reduced to its
-    * load-bearing move: at 10⁶ files, a [[readSkipping]] range query
-    * consults one small manifest instead of opening 10⁶ footers — the
-    * planner never even LISTS the non-matching files. Pair with a
-    * clustered layout ([[publishClustered]] or repartitionByRange) so
-    * file ranges are disjoint and skipping actually bites. */
-  def publishSkippable(df: DataFrame, baseDir: String, name: String,
-      statsCols: Seq[String], keep: Int = 3): Long =
-    publishStaged(baseDir, name, keep) { t =>
-      val next = stage(t, df)
-      val vd = vdir(t, next)
-      val wanted = statsCols.toSet
-      val lines = Fs.list(vd)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map(_.getPath).sortBy(_.getName)
-        .flatMap { p =>
-          val st = footerMinMax(p, wanted)
-          // every file appears at least once (col "-") so readers know the
-          // full file set; stat-less columns simply never prune it
-          val head = s"${enc(p.getName)}\t-\t-\t-\t-"
-          head +: st.toSeq.sorted.map { case (c, (tag, mn, mx)) =>
-            s"${enc(p.getName)}\t${enc(c)}\t$tag\t${enc(mn)}\t${enc(mx)}"
-          }
-        }
-      Fs.writeString(fileStatsPath(t, next), lines.mkString("", "\n", "\n"))
-      next
-    }
-
-  /** Range read through the skipping manifest: returns only rows with
-    * `lo ≤ colName ≤ hi`, reading ONLY the files whose footer min/max
-    * overlaps the range (files without stats for the column are always
-    * read — correctness never depends on the manifest being complete).
-    * The residual filter still applies inside surviving files, and
-    * parquet row-group pruning stacks beneath it. `lo`/`hi` must be
-    * Int/Long for long-stats columns, numbers for double columns, or
-    * Strings for string columns. */
-  def readSkipping(spark: SparkSession, baseDir: String, name: String,
-      colName: String, lo: Any, hi: Any,
-      version: Option[Long] = None): DataFrame = {
-    val t = tableDir(baseDir, name)
-    val v = version.orElse(latestVersion(baseDir, name))
-      .getOrElse(throw new IllegalStateException(s"no committed version of $name"))
-    require(Fs.exists(commitPath(t, v)), s"version $v of $name is not committed")
-    val vd = vdir(t, v)
-    val statsFile = fileStatsPath(t, v)
-    require(Fs.exists(statsFile),
-      s"version $v of $name has no _FILESTATS (published without publishSkippable?)")
-    val rows = Fs.readString(statsFile).split("\n").filter(_.nonEmpty)
-      .map(_.split("\t", -1))
-    val allFiles = rows.map(r => dec(r(0))).distinct.toSeq
-    val statted = rows.filter(r => dec(r(1)) == colName)
-      .map(r => dec(r(0)) -> (r(2), dec(r(3)), dec(r(4)))).toMap
-    def overlaps(tag: String, mn: String, mx: String): Boolean = tag match {
-      case "long" =>
-        val (l, h) = (toLong(lo), toLong(hi))
-        mn.toLong <= h && mx.toLong >= l
-      case "double" =>
-        val (l, h) = (toDouble(lo), toDouble(hi))
-        mn.toDouble <= h && mx.toDouble >= l
-      case "string" =>
-        // compare in unsigned UTF-8 BYTE order — the order the parquet
-        // footer min/max were computed in (and Spark's own UTF8String
-        // order). Java String '<=' compares UTF-16 code units, which
-        // disagrees for supplementary-plane characters (U+10000+ sort
-        // above U+E000..U+FFFF in UTF-8 but below in UTF-16) — a file
-        // holding matching rows could be wrongly skipped.
-        utf8Cmp(mn, hi.toString) <= 0 && utf8Cmp(mx, lo.toString) >= 0
-      case _ => true
-    }
-    val survivors = allFiles.filter(f => statted.get(f) match {
-      case Some((tag, mn, mx)) => overlaps(tag, mn, mx)
-      case None => true // no stats → cannot skip
-    })
-    val residual = col(colName) >= lit(lo) && col(colName) <= lit(hi)
-    if (survivors.isEmpty)
-      spark.read.parquet(vd.toString).where(lit(false))
-    else
-      spark.read.parquet(survivors.map(f => new Path(vd, f).toString): _*)
-        .filter(residual)
-  }
-
-  /** Unsigned lexicographic UTF-8 byte comparison (parquet's BYTE_ARRAY
-    * stats order; also UTF8String's). */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  private def toLong(x: Any): Long = x match {
-    case i: Int => i.toLong
-    case l: Long => l
-    case s: Short => s.toLong
-    case o => throw new IllegalArgumentException(
-      s"long-stats column needs an integral bound, got $o")
-  }
-  private def toDouble(x: Any): Double = x match {
-    case d: Double => d
-    case f: Float => f.toDouble
-    case n: java.lang.Number => n.doubleValue()
-    case o => throw new IllegalArgumentException(
-      s"double-stats column needs a numeric bound, got $o")
-  }
 }

@@ -45,9 +45,10 @@ class AnnIndexSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val served = AnnIndex.serveTopK(spark, idx, queries, 5)
-    // the bounded probe-cell set reaches the parquet scan as In(cell, …):
-    // with the cell-sorted file layout, row-group stats skip every
-    // unprobed cell — the scan is O(probed cells), not O(corpus)
+    // the bounded probe-cell set reaches the parquet scan as In(cell, …).
+    // Each codes file is one row group spanning all its cells, so the
+    // filter skips no bytes yet: the scan reads every code row and the
+    // filter drops the unprobed ones
     val plan = served.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("In(cell"), plan)
     val (coarse, books) = AnnIndex.loadModel(spark, idx)
@@ -337,6 +338,54 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.build(emb, idx)
     AnnIndex.serveTopK(spark, idx, queries, 5).count()
     assert(AnnIndex.modelLoads == l0 + 2)
+  }
+
+  test("serves change nothing on disk: three serves right after a build " +
+    "make zero mutating filesystem calls") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val idx = s"graftfs://${tmp()}"
+    AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    // every path under the index with its mtime: also catches writes
+    // that bypass the FileSystem (Fs.createExclusive uses java.nio on a
+    // local filesystem), since a directory's mtime moves when an entry
+    // is created or deleted in it
+    def tree(p: Path): Seq[String] = Fs.list(p).flatMap { st =>
+      s"${st.getPath} ${st.getModificationTime}" +:
+        (if (st.isDirectory) tree(st.getPath) else Nil)
+    }
+    val treeBefore = tree(new Path(idx))
+    // the serves start at once, while the build's commit markers are
+    // seconds old: a read path must not write even for a fresh marker
+    val before = GraftTestFs.mutations.size
+    for (_ <- 1 to 3)
+      assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5)).nonEmpty)
+    val writes = GraftTestFs.mutations.drop(before)
+    assert(writes.isEmpty, writes.mkString("serves mutated storage:\n", "\n", ""))
+    assert(tree(new Path(idx)) == treeBefore)
+  }
+
+  test("an index deleted and rebuilt at the same path serves the new " +
+    "model: versions restart at 0, and the next serve loads it once") {
+    val idx = tmp()
+    // k-means seeds its cells from the lowest ids, so both corpora keep
+    // ids 0..15; otherwise they are disjoint
+    AnnIndex.build(emb.filter(col("vec_id") < 16 || col("vec_id") >= 250), idx)
+    val queries = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    AnnIndex.serveTopK(spark, idx, queries, 5).count() // caches the old model
+    Fs.deleteRecursive(new Path(idx))
+    // different vectors, same path, same (table, version) names
+    val fresh = emb.filter(col("vec_id") < 250)
+    assert(AnnIndex.build(fresh, idx) == Map(AnnIndex.CentroidsTable -> 0L,
+      AnnIndex.CodebooksTable -> 0L, AnnIndex.CodesTable -> 0L))
+    val l0 = AnnIndex.modelLoads
+    val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
+    assert(AnnIndex.modelLoads == l0 + 1)
+    assert(served ==
+      collectTopK(VectorOps.ivfPqTopK(fresh, col("vec_id") < 4, 5)))
   }
 
   test("serve resolves model AND codes from one journaled snapshot (no " +

@@ -6,9 +6,8 @@ import graft.pipelines.{Compaction, Fs, Incremental, Runner, Versioned}
 import org.apache.hadoop.fs.Path
 
 /** The publishing layer on the Hadoop `FileSystem` API: a non-`file:`
-  * scheme end-to-end (the production object-store shape), partition-
-  * scoped incremental refresh (manifest-linked untouched partitions),
-  * and z-ordered publishing.
+  * scheme end-to-end (the production object-store shape) and partition-
+  * scoped incremental refresh (manifest-linked untouched partitions).
   */
 class PublishSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -531,19 +530,6 @@ class PublishSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("NULL"))
   }
 
-  test("readSkipping compares string bounds in UTF-8 byte order (parquet's " +
-    "stats order): supplementary-plane rows are never wrongly skipped") {
-    val base = tmp("skip-utf8")
-    // U+10000 sorts ABOVE U+FFFF in UTF-8 bytes but BELOW it in Java's
-    // UTF-16 ordering — a UTF-16 compare would skip the file
-    val hi = new String(Character.toChars(0x10000))
-    val df = Seq(("\uFFFF", 1L), (hi, 2L)).toDF("s", "v")
-    Versioned.publishSkippable(df, base, "t", Seq("s"))
-    val got = Versioned.readSkipping(spark, base, "t", "s", hi, hi)
-      .select(col("v")).as[Long].collect().toSeq
-    assert(got == Seq(2L), s"supplementary-plane row lost: $got")
-  }
-
   test("maintainJoin: view == one-shot join at every version; earlier " +
     "epochs' files are manifest-linked, never rewritten") {
     val base = tmp("ivm")
@@ -745,94 +731,6 @@ class PublishSpec extends AnyFunSuite {
       // yesterday's mart still served by version 0
       assert(Versioned.read(spark, base, m, Some(0L))
         .select("run_date").distinct().as[String].head() == "2026-08-11")
-    }
-  }
-
-  test("publishClustered: a published z-ordered version prunes a 2-D " +
-    "selective scan below half the rows of a random layout") {
-    val base = tmp("clustered")
-    val li = graft.catalog.Catalog.load(spark, "/root/testdata/sf0.01", "lineitem")
-    Versioned.publishClustered(li, base, "li", "l_partkey", "l_suppkey",
-      numFiles = 16)
-    li.repartition(16).write.parquet(s"$base/random")
-    def scanRows(df: org.apache.spark.sql.DataFrame): Long = {
-      val q = df.filter(col("l_partkey") < 100 && col("l_suppkey") < 5)
-      q.collect()
-      q.queryExecution.executedPlan.collectLeaves()
-        .collectFirst {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-            s.metrics("numOutputRows").value
-        }.get
-    }
-    val clustered = scanRows(Versioned.read(spark, base, "li"))
-    val random = scanRows(spark.read.parquet(s"$base/random"))
-    assert(clustered < random / 2,
-      s"clustered=$clustered random=$random — published layout should prune")
-  }
-
-  test("publishSkippable + readSkipping: a range query opens ONLY the " +
-    "overlapping files; result equals the full-scan filter") {
-    val base = tmp("skipping")
-    val docs = graft.catalog.Catalog.load(spark, "/root/testdata/sf0.01",
-      "documents")
-    // range-clustered layout: 8 files with disjoint doc_id spans
-    Versioned.publishSkippable(
-      docs.repartitionByRange(8, col("doc_id"))
-        .sortWithinPartitions("doc_id"),
-      base, "docs", statsCols = Seq("doc_id", "lang"))
-    val full = Versioned.read(spark, base, "docs")
-    val nFiles = full.inputFiles.length
-    assert(nFiles >= 4, s"expected a multi-file layout, got $nFiles")
-    // long-stats pruning on the clustered column
-    val pruned = Versioned.readSkipping(spark, base, "docs", "doc_id", 100L, 140L)
-    val expect = full.filter(col("doc_id").between(100, 140))
-      .collect().map(_.toSeq).toSet
-    assert(pruned.collect().map(_.toSeq).toSet == expect)
-    assert(pruned.inputFiles.length < nFiles / 2,
-      s"${pruned.inputFiles.length} of $nFiles files read — skipping did not bite")
-    // string-stats bounds on an UNclustered column: every file matched
-    // ('lang' spans the whole alphabet in each file) → no pruning, same rows
-    val byLang = Versioned.readSkipping(spark, base, "docs", "lang", "de", "en")
-    assert(byLang.collect().map(_.toSeq).toSet ==
-      full.filter(col("lang") >= "de" && col("lang") <= "en")
-        .collect().map(_.toSeq).toSet)
-    // a range outside every file's span reads NOTHING, schema intact
-    val none = Versioned.readSkipping(spark, base, "docs", "doc_id",
-      10000000L, 20000000L)
-    assert(none.count() == 0 && none.columns.sameElements(full.columns))
-    // stats ride the atomic commit: _FILESTATS lives inside the version dir
-    assert(Fs.exists(new Path(s"$base/docs/_v0/_FILESTATS")))
-  }
-
-  test("Bucketed: co-bucketed tables join AND aggregate with zero shuffle " +
-    "exchanges, result equal to the plain join") {
-    import graft.pipelines.Bucketed
-    val dir = "/root/testdata/sf0.001"
-    val li = graft.catalog.Catalog.load(spark, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_quantity"))
-    val o = graft.catalog.Catalog.load(spark, dir, "orders")
-      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
-    Bucketed.publish(li, "b_li", "l_orderkey", nBuckets = 8)
-    Bucketed.publish(o, "b_o", "l_orderkey", nBuckets = 8)
-    try {
-      // force the sort-merge path: broadcast would hide the layout win
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = Bucketed.join(spark, "b_li", "b_o", Seq("l_orderkey"))
-      assert(j.count() == li.join(o, Seq("l_orderkey")).count())
-      val jp = j.queryExecution.executedPlan.toString
-      assert(!jp.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$jp")
-      // aggregation on the bucket column rides the same layout
-      val a = Bucketed.read(spark, "b_li").groupBy(col("l_orderkey"))
-        .agg(sum(col("l_quantity")).as("q"))
-      a.collect()
-      val ap = a.queryExecution.executedPlan.toString
-      assert(!ap.contains("Exchange hashpartitioning"),
-        s"bucketed aggregate must not shuffle:\n$ap")
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS b_li")
-      spark.sql("DROP TABLE IF EXISTS b_o")
     }
   }
 }
