@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * to 4 chars of common prefix, scale 0.1). Spark ships `levenshtein`
   * but nothing rank-based for name matching; a Scala UDF here would
   * serialize both UTF8Strings per row and break whole-stage codegen in
-  * the middle of the blocked-pair scorer, so this follows the MatVec
+  * the middle of the blocked-pair scorer, so this follows the NearestCentroids
   * shape: one compiled kernel shared by eval and a static-call
   * `doGenCode` that fuses into the surrounding stage.
   *

@@ -71,7 +71,7 @@ object NearestCentroids {
     var c = 0
     while (c < k) {
       val cv = centroids(c)
-      // fail loudly on shape mismatch (same contract as MatVec/ZOrderKey):
+      // fail loudly on shape mismatch (same contract as ZOrderKey):
       // a truncated dot product silently mis-ranks cells
       if (v.numElements() != cv.length)
         throw new IllegalArgumentException(

@@ -92,14 +92,15 @@ object AnnIndex {
   // The codes manifest of the latest committed group snapshot is the one
   // idempotence ledger for micro-batch replays: its `batch=` values are
   // the admitted batch ids. Batch ids are monotone for the lifetime of
-  // the index DIRECTORY (the Delta-sink txnVersion contract —
-  // ingestStream's durable checkpoint guarantees it for streamed
-  // epochs), so `batchId <= max batch=` means "already admitted at some
-  // point". Every publish that writes all code rows as ONE partition
-  // (compact, build, buildOrAppend's bootstrap) labels it with the
-  // highest id the directory has admitted, so the maximum survives the
-  // rewrite; and since the label commits with the data in the same group
-  // transaction, no crash can leave the ledger and the codes disagreeing.
+  // the index DIRECTORY (the Delta-sink txnVersion contract — the
+  // durable checkpoint of [[graft.streaming.Streams.ingestDedupedIndexed]]
+  // guarantees it for streamed epochs), so `batchId <= max batch=` means
+  // "already admitted at some point". Every publish that writes all code
+  // rows as ONE partition (compact, build, buildOrAppend's bootstrap)
+  // labels it with the highest id the directory has admitted, so the
+  // maximum survives the rewrite; and since the label commits with the
+  // data in the same group transaction, no crash can leave the ledger
+  // and the codes disagreeing.
 
   /** Train the IVF-PQ model over `emb`, encode the full corpus, and
     * publish all three tables as one atomic group transaction. Returns
@@ -168,8 +169,8 @@ object AnnIndex {
     * against an unchanged model reads no model files. */
   def modelLoads: Long = modelLoadCount.get
 
-  /** Test/maintenance hook: drop every cached model. */
-  def invalidateModelCache(): Unit = modelCache.clear()
+  /** Test hook: drop every cached model. */
+  private[graft] def invalidateModelCache(): Unit = modelCache.clear()
 
   /** The frozen model from the last committed group snapshot: coarse
     * centroids + per-subspace codebooks, reconstructed in the exact
@@ -178,7 +179,7 @@ object AnnIndex {
     * driver collect — nCells + m·pqK small vectors, never the corpus —
     * and memoized by published version, so it runs at most once per
     * (directory, model generation) per JVM. */
-  def loadModel(spark: SparkSession, indexDir: String): Model =
+  private[graft] def loadModel(spark: SparkSession, indexDir: String): Model =
     loadModelAt(spark, indexDir, Versioned.latestGroupVersions(indexDir))
 
   private def loadModelAt(spark: SparkSession, indexDir: String,
@@ -492,7 +493,7 @@ object AnnIndex {
     * scanned are O(batch); the existing corpus is never read. Returns
     * the new (table → version) map; an empty batch is a no-op returning
     * the current versions. Batch ids must be MONOTONE per index
-    * directory (ingestStream's epoch ids are): an id at or below the
+    * directory (streamed epoch ids are): an id at or below the
     * snapshot's highest manifested batch ([[admittedHwm]]) is a replay. */
   def append(batch: DataFrame, indexDir: String, batchId: Long,
       keep: Int = 3, skipIfExists: Boolean = false): Map[String, Long] =
@@ -511,7 +512,7 @@ object AnnIndex {
       .entries
     // a batch id that already landed is a caller bug (fail) or a
     // micro-batch REPLAY after a failure (skip) — `skipIfExists` is how
-    // [[ingestStream]] gets exactly-once admission from at-least-once
+    // [[buildOrAppend]] gets exactly-once admission from at-least-once
     // delivery, the same move as streaming-sink epoch dedup
     if (batchId <= admittedHwm(indexDir)) {
       if (skipIfExists) return current
@@ -557,31 +558,6 @@ object AnnIndex {
         else buildLabelled(batch, indexDir, p, keep, batchId)
       } else append(batch, indexDir, batchId, keep, skipIfExists = true)
     }
-
-  /** Continuous micro-batch admission: each streamed embedding
-    * micro-batch becomes one [[append]] (batch id = epoch + 1, so batch
-    * 0 stays the build). The checkpoint location is DURABLE (defaulting
-    * to `<indexDir>/_stream_checkpoint`), so epoch ids keep increasing
-    * across stream restarts — without it Spark would use a temporary
-    * checkpoint, restart epochs at 0, and `skipIfExists` would silently
-    * drop genuinely-new batches that collide with already-landed ids.
-    * foreachBatch replays after a failure re-deliver an epoch —
-    * `skipIfExists` turns the codes manifest's admitted batch ids into an
-    * idempotence check, giving exactly-once index admission over
-    * at-least-once delivery without any extra state. Every appended
-    * batch is immediately visible to [[serveTopK]]'s next snapshot. */
-  def ingestStream(embStream: DataFrame, indexDir: String,
-      checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    embStream.writeStream
-      .option("checkpointLocation",
-        checkpointDir.getOrElse(s"$indexDir/_stream_checkpoint"))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          epoch: Long) =>
-        append(b, indexDir, batchId = epoch + 1L, skipIfExists = true)
-        ()
-      }
-      .start()
 
   /** Rewrite all code batches into one partition labelled with the
     * highest admitted batch id ([[admittedHwm]]; model tables linked

@@ -68,31 +68,18 @@ object GraphOps {
     pr.select(col("n"), (col("r").cast("double") / 1000000.0).as("r"))
   }
 
-  /** Personalized PageRank (random walk with restart): identical
-    * fixed-point recurrence to [[pageRank]], but the 15% restart mass
-    * returns ONLY to the `sources` set instead of every node —
+  /** Personalized PageRank (random walk with restart) over pre-built
+    * loop-invariant frames (see [[pageRankOn]]): identical fixed-point
+    * recurrence to [[pageRank]], but the 15% restart mass returns ONLY
+    * to the `sources` set instead of every node —
     * `pr_{t+1}(v) = (150000 if v ∈ S else 0) + 85% · Σ contributions` —
     * so ranks measure proximity TO THE SOURCES (the recommendation /
-    * similar-entity primitive), not global centrality. Same scale
-    * posture: the source flag is one broadcast `isin` on the node frame,
-    * every round stays a distributed join + aggregate in exact 64-bit
-    * micro-units, nothing collects. Sources absent from the graph
-    * contribute nothing (flag never matches), mirroring the oracle's
-    * `CASE n IN (...)`. */
-  def personalizedPageRank(edges: DataFrame, sources: Seq[Long],
-      iters: Int = 5): DataFrame = {
-    val e = edges.select(col("u"), col("v")).distinct().pinLazy
-    val nodes = e.select(col("u").as("n"))
-      .union(e.select(col("v").as("n"))).distinct()
-      .pinLazy
-    val ed = e.join(e.groupBy(col("u")).agg(count(lit(1)).as("d")), "u")
-      .pinLazy
-    personalizedPageRankOn(ed, nodes, sources, iters)
-  }
-
-  /** [[personalizedPageRank]] over pre-built loop-invariant frames (see
-    * [[pageRankOn]]): the restart flag is a cheap projection over the
-    * shared node frame, never re-derived from the edges. */
+    * similar-entity primitive), not global centrality. The source flag
+    * is a cheap projection over the shared node frame, never re-derived
+    * from the edges; every round stays a distributed join + aggregate in
+    * exact 64-bit micro-units, nothing collects. Sources absent from the
+    * graph contribute nothing (flag never matches), mirroring the
+    * oracle's `CASE n IN (...)`. */
   def personalizedPageRankOn(ed: DataFrame, nodes0: DataFrame,
       sources: Seq[Long], iters: Int): DataFrame = {
     val nodes = nodes0.withColumn("b",

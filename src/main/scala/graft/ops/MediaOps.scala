@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.ops.Pin._
 
@@ -55,21 +55,6 @@ object MediaOps {
       element_at(array(lit("image"), lit("audio"), lit("video")),
         (col("doc_id") % 3 + 1).cast("int")).as("media_type"),
       col("text").cast("binary").as("payload"))
-
-  /** Raw-file ingestion via Spark's `binaryFile` source — how a real
-    * multimodal corpus enters the engine (image/audio/video files on
-    * object storage → one row per file, content as an opaque binary
-    * column, no decoding on read). media_id is a stable hash of the
-    * path; media_type comes from the file extension. The source
-    * parallelizes over files, so a 100 TB media lake scans exactly like
-    * any other table. */
-  def fromBinaryFiles(spark: SparkSession, dir: String): DataFrame =
-    spark.read.format("binaryFile").load(dir)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        lower(element_at(split(col("path"), "\\."), -1)).as("media_type"),
-        col("content").as("payload"),
-        col("path"), col("length"))
 
   /** ---- STUB ---- deterministic fake decode for payloads no available
     * codec understands (audio/video in this build): metadata is a pure
@@ -204,46 +189,6 @@ object MediaOps {
           Resized(m.media_id, w, h, nw, nh, nw.toLong * nh * 3)
       }
     })
-  }
-
-  /** Per-image luminance histogram row: bucket (0-15) and pixel count. */
-  case class LumaBucket(media_id: Long, bucket: Int, n_pixels: Long)
-
-  /** 16-bin luminance histogram from DECODED pixels (integer Rec.601
-    * luma: (77R + 150G + 29B) >> 8, buckets of 16) — the exposure/
-    * contrast profile an image-dedup or quality gate reads. Payloads
-    * without a decodable image are skipped (the stub has no pixels to
-    * histogram honestly). Partition-local flatMap; pixels never leave
-    * the task. */
-  def lumaHistogram(media: DataFrame): Dataset[LumaBucket] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { it =>
-      it.flatMap { m =>
-        decodeImage(m.payload) match {
-          case Some(img) =>
-            val counts = new Array[Long](16)
-            val w = img.getWidth; val h = img.getHeight
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val rgb = img.getRGB(x, y)
-                val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff
-                val b = rgb & 0xff
-                val luma = (77 * r + 150 * g + 29 * b) >> 8
-                counts(luma >> 4) += 1
-                x += 1
-              }
-              y += 1
-            }
-            (0 until 16).iterator
-              .filter(counts(_) > 0)
-              .map(i => LumaBucket(m.media_id, i, counts(i)))
-          case None => Iterator.empty
-        }
-      }
-    }
   }
 
   /** One sampled frame: position, size, content digest. */

@@ -127,7 +127,7 @@ object StatsOps {
     * the standard two-pass heavy-hitters recipe). */
   class HeavyHittersAgg(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[String, MgBuf, Map[String, Long]] {
-    def zero: MgBuf = MgBuf(Map.empty)
+    override def zero: MgBuf = MgBuf(Map.empty)
 
     private def offer(m: Map[String, Long], item: String, w: Long): Map[String, Long] = {
       if (m.contains(item)) m.updated(item, m(item) + w)
@@ -141,15 +141,15 @@ object StatsOps {
       }
     }
 
-    def reduce(b: MgBuf, item: String): MgBuf = MgBuf(offer(b.counts, item, 1L))
-    def merge(x: MgBuf, y: MgBuf): MgBuf =
+    override def reduce(b: MgBuf, item: String): MgBuf = MgBuf(offer(b.counts, item, 1L))
+    override def merge(x: MgBuf, y: MgBuf): MgBuf =
       MgBuf(y.counts.toSeq.sortBy(_._1).foldLeft(x.counts) {
         case (m, (item, w)) => offer(m, item, w)
       })
-    def finish(r: MgBuf): Map[String, Long] = r.counts
-    def bufferEncoder: org.apache.spark.sql.Encoder[MgBuf] =
+    override def finish(r: MgBuf): Map[String, Long] = r.counts
+    override def bufferEncoder: org.apache.spark.sql.Encoder[MgBuf] =
       org.apache.spark.sql.Encoders.product[MgBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[Map[String, Long]] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[Map[String, Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[String, Long]]()
   }
 
@@ -170,7 +170,7 @@ object StatsOps {
     * safe to keep per key at any corpus size. */
   class CountMinAgg(depth: Int = 4, width: Int = 256)
       extends org.apache.spark.sql.expressions.Aggregator[String, CmBuf, Array[Long]] {
-    def zero: CmBuf = CmBuf(new Array[Long](depth * width))
+    override def zero: CmBuf = CmBuf(new Array[Long](depth * width))
 
     private def cell(r: Int, item: String): Int = {
       val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
@@ -179,7 +179,7 @@ object StatsOps {
       r * width + java.lang.Math.floorMod(h, width.toLong).toInt
     }
 
-    def reduce(b: CmBuf, item: String): CmBuf = {
+    override def reduce(b: CmBuf, item: String): CmBuf = {
       if (item != null) {
         var r = 0
         while (r < depth) { b.counts(cell(r, item)) += 1L; r += 1 }
@@ -187,16 +187,16 @@ object StatsOps {
       b
     }
 
-    def merge(x: CmBuf, y: CmBuf): CmBuf = {
+    override def merge(x: CmBuf, y: CmBuf): CmBuf = {
       var i = 0
       while (i < x.counts.length) { x.counts(i) += y.counts(i); i += 1 }
       x
     }
 
-    def finish(r: CmBuf): Array[Long] = r.counts
-    def bufferEncoder: org.apache.spark.sql.Encoder[CmBuf] =
+    override def finish(r: CmBuf): Array[Long] = r.counts
+    override def bufferEncoder: org.apache.spark.sql.Encoder[CmBuf] =
       org.apache.spark.sql.Encoders.product[CmBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
 
     /** Point frequency estimate from a finished sketch (min over rows). */
@@ -274,7 +274,7 @@ object StatsOps {
   class KmvAgg(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[Long, KmvBuf, Array[Long]] {
     require(k > 1, "need k > 1")
-    def zero: KmvBuf = KmvBuf(Array.emptyLongArray)
+    override def zero: KmvBuf = KmvBuf(Array.emptyLongArray)
 
     private def insert(a: Array[Long], h: Long): Array[Long] = {
       val i = java.util.Arrays.binarySearch(a, h)
@@ -297,13 +297,13 @@ object StatsOps {
       }
     }
 
-    def reduce(b: KmvBuf, h: Long): KmvBuf = KmvBuf(insert(b.hs, h))
-    def merge(x: KmvBuf, y: KmvBuf): KmvBuf =
+    override def reduce(b: KmvBuf, h: Long): KmvBuf = KmvBuf(insert(b.hs, h))
+    override def merge(x: KmvBuf, y: KmvBuf): KmvBuf =
       KmvBuf(y.hs.foldLeft(x.hs)(insert))
-    def finish(r: KmvBuf): Array[Long] = r.hs
-    def bufferEncoder: org.apache.spark.sql.Encoder[KmvBuf] =
+    override def finish(r: KmvBuf): Array[Long] = r.hs
+    override def bufferEncoder: org.apache.spark.sql.Encoder[KmvBuf] =
       org.apache.spark.sql.Encoders.product[KmvBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
@@ -326,7 +326,7 @@ object StatsOps {
   class BottomKAgg(k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[(Long, Double), BkBuf, BkBuf] {
     require(k > 1, "need k > 1")
-    def zero: BkBuf = BkBuf(Array.emptyLongArray, Array.emptyDoubleArray)
+    override def zero: BkBuf = BkBuf(Array.emptyLongArray, Array.emptyDoubleArray)
 
     private def lt(h1: Long, v1: Double, h2: Long, v2: Double): Boolean =
       h1 < h2 || (h1 == h2 && v1 < v2)
@@ -350,17 +350,17 @@ object StatsOps {
       BkBuf(hs, vs)
     }
 
-    def reduce(b: BkBuf, a: (Long, Double)): BkBuf = insert(b, a._1, a._2)
-    def merge(x: BkBuf, y: BkBuf): BkBuf = {
+    override def reduce(b: BkBuf, a: (Long, Double)): BkBuf = insert(b, a._1, a._2)
+    override def merge(x: BkBuf, y: BkBuf): BkBuf = {
       var out = x
       var i = 0
       while (i < y.hs.length) { out = insert(out, y.hs(i), y.vs(i)); i += 1 }
       out
     }
-    def finish(r: BkBuf): BkBuf = r
-    def bufferEncoder: org.apache.spark.sql.Encoder[BkBuf] =
+    override def finish(r: BkBuf): BkBuf = r
+    override def bufferEncoder: org.apache.spark.sql.Encoder[BkBuf] =
       org.apache.spark.sql.Encoders.product[BkBuf]
-    def outputEncoder: org.apache.spark.sql.Encoder[BkBuf] =
+    override def outputEncoder: org.apache.spark.sql.Encoder[BkBuf] =
       org.apache.spark.sql.Encoders.product[BkBuf]
   }
 

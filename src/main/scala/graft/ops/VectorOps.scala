@@ -81,33 +81,6 @@ object VectorOps {
         col("neighbor_id"), col("neg_label"), col("cos_sim"))
   }
 
-  /** Seeded Gaussian Johnson–Lindenstrauss matrix (outDim × inDim),
-    * scaled 1/√outDim so expected inner products are preserved. */
-  def jlMatrix(outDim: Int, inDim: Int, seed: Long = 42L): Array[Array[Float]] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(outDim)(Array.fill(inDim)(
-      (rnd.nextGaussian() / math.sqrt(outDim)).toFloat))
-  }
-
-  /** Random projection (Johnson–Lindenstrauss): map embeddings to
-    * `outDim` dimensions through a seeded Gaussian matrix — the cheap
-    * scale lever for ANN over high-dimensional embeddings: pairwise
-    * angles are approximately preserved (distortion ~1/√outDim, bounded
-    * in the spec) while every downstream bucket/rerank touches
-    * outDim/inDim of the bytes. LIMIT, honestly: top-k rankings survive
-    * only when neighbor margins exceed that noise floor — on
-    * near-orthogonal corpora (like the synthetic fixture) 2× compression
-    * blurs fine rankings, so use it for coarse candidate generation with
-    * full-dimension rerank, not as the final scorer. Map-only: the
-    * matrix rides as a codegen reference object
-    * ([[graft.functions.MatVec]]), no shuffle, no row inflation;
-    * deterministic for a fixed seed on any cluster layout. */
-  def randomProject(emb: DataFrame, outDim: Int, inDim: Int = 64,
-      seed: Long = 42L): DataFrame =
-    emb.withColumn("embedding",
-      graft.functions.MatVec.matVec(col("embedding"),
-        jlMatrix(outDim, inDim, seed)))
-
   /** Deterministic pseudo-random hyperplanes (fixed seed). */
   def hyperplanes(nPlanes: Int, dim: Int, seed: Long = 42L): Seq[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
@@ -324,19 +297,19 @@ object VectorOps {
     * with an order-independent (exact integer) merge, so the result is
     * reproducible under any partitioning. */
   class CentroidAgg(dim: Int) extends Aggregator[Array[Long], CentroidBuf, Array[Double]] {
-    def zero: CentroidBuf = CentroidBuf(Array.fill(dim)(0L), 0L)
-    def reduce(b: CentroidBuf, a: Array[Long]): CentroidBuf = {
+    override def zero: CentroidBuf = CentroidBuf(Array.fill(dim)(0L), 0L)
+    override def reduce(b: CentroidBuf, a: Array[Long]): CentroidBuf = {
       var i = 0; while (i < dim && i < a.length) { b.sums(i) += a(i); i += 1 }
       CentroidBuf(b.sums, b.n + 1)
     }
-    def merge(x: CentroidBuf, y: CentroidBuf): CentroidBuf = {
+    override def merge(x: CentroidBuf, y: CentroidBuf): CentroidBuf = {
       var i = 0; while (i < dim) { x.sums(i) += y.sums(i); i += 1 }
       CentroidBuf(x.sums, x.n + y.n)
     }
-    def finish(r: CentroidBuf): Array[Double] =
+    override def finish(r: CentroidBuf): Array[Double] =
       r.sums.map(s => s.toDouble / r.n / 1000000.0)
-    def bufferEncoder: Encoder[CentroidBuf] = Encoders.product[CentroidBuf]
-    def outputEncoder: Encoder[Array[Double]] =
+    override def bufferEncoder: Encoder[CentroidBuf] = Encoders.product[CentroidBuf]
+    override def outputEncoder: Encoder[Array[Double]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
@@ -785,39 +758,6 @@ object VectorOps {
     ivfPqRank(codes, queries, k, coarse, books, nProbe, dim)
   }
 
-  /** PQ asymmetric-distance top-k (ADC): rank corpus vectors for each
-    * query by cosine(query_original, reconstruction(corpus_codes)) —
-    * the search the compressed serving tier actually runs. Implemented
-    * by substituting reconstructions for corpus embeddings and reusing
-    * the exact [[cosineTopK]] machinery (broadcast queries, Spark's
-    * partial `WindowGroupLimit` before the window's exchange); queries
-    * keep their ORIGINAL vectors, which is the "asymmetric" in ADC. */
-  def pqTopK(emb: DataFrame, queryPred: Column, k: Int,
-      books: Seq[Seq[(Int, Array[Float])]], dim: Int = 64): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val m = books.size
-    val sub = dim / m
-    val lookup: Array[Map[Int, Array[Float]]] = books.map(_.toMap).toArray
-    val recon = emb.select(col("vec_id"), col("embedding"))
-      .join(pqEncode(emb, books, dim), "vec_id")
-      .as[(Long, Array[Float], Array[Int])]
-      .mapPartitions(_.map { case (id, _, codes) =>
-        val out = new Array[Float](dim)
-        var s = 0
-        while (s < m) {
-          System.arraycopy(lookup(s)(codes(s)), 0, out, s * sub, sub)
-          s += 1
-        }
-        (id, out)
-      }).toDF("vec_id", "recon")
-    val substituted = emb.join(recon, "vec_id")
-      .select(col("vec_id"),
-        when(queryPred, col("embedding")).otherwise(col("recon"))
-          .as("embedding"))
-    cosineTopK(substituted, queryPred, k)
-  }
-
   /** Greedy k-center (farthest-first / Gonzalez) coreset selection — the
     * diversity-sampling pass that picks k maximally-spread exemplars
     * (2-approx to the optimal cover radius): seed with the smallest
@@ -905,8 +845,8 @@ object VectorOps {
   class GramAgg(dim: Int, scale: Double)
       extends Aggregator[Array[Float], Array[Long], Array[Long]] {
     private val len = dim * (dim + 1) / 2
-    def zero: Array[Long] = new Array[Long](len)
-    def reduce(b: Array[Long], v: Array[Float]): Array[Long] = {
+    override def zero: Array[Long] = new Array[Long](len)
+    override def reduce(b: Array[Long], v: Array[Float]): Array[Long] = {
       val s = new Array[Long](dim)
       var i = 0
       while (i < dim) { s(i) = math.floor(v(i) * scale).toLong; i += 1 }
@@ -918,13 +858,13 @@ object VectorOps {
       }
       b
     }
-    def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
       var k = 0; while (k < len) { x(k) += y(k); k += 1 }; x
     }
-    def finish(r: Array[Long]): Array[Long] = r
-    def bufferEncoder: Encoder[Array[Long]] =
+    override def finish(r: Array[Long]): Array[Long] = r
+    override def bufferEncoder: Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-    def outputEncoder: Encoder[Array[Long]] =
+    override def outputEncoder: Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 

@@ -101,14 +101,15 @@ object Fs {
     * forked JVMs inside one lease's critical section), and the
     * checksummed wrapper can additionally throw after the data file
     * already landed, stranding a half-created marker. `CREATE_NEW` is a
-    * single atomic syscall, so neither failure mode exists. Non-local
-    * connectors keep the Hadoop call: HDFS enforces the exclusive
-    * create at the namenode; object stores without atomic
-    * conditional-create rely on the documented single-writer deployment
-    * contract (header above). */
+    * single atomic syscall, so neither failure mode exists. Only the
+    * `file:` scheme takes this path; every other scheme keeps the
+    * Hadoop call, including a local-disk FileSystem registered under
+    * its own scheme, so that connector sees (and must make atomic) its
+    * own exclusive creates. HDFS enforces the exclusive create at the
+    * namenode; object stores without atomic conditional-create rely on
+    * the documented single-writer deployment contract (header above). */
   def createExclusive(p: Path, s: String): Unit = of(p) match {
-    case local @ (_: org.apache.hadoop.fs.LocalFileSystem |
-                  _: org.apache.hadoop.fs.RawLocalFileSystem) =>
+    case local if local.getUri.getScheme == "file" =>
       val f = java.nio.file.Paths.get(
         local.makeQualified(p).toUri.getPath)
       val parent = f.getParent

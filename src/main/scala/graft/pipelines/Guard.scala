@@ -72,19 +72,19 @@ object Guard {
       .agg(count(lit(1)).as("violations"))
 
   /** Declarative expectation set for [[expectations]]: not-null columns,
-    * accepted-value domains, numeric [lo, hi] ranges, and a row-count
-    * floor. Everything here folds into ONE aggregate pass. (Uniqueness
-    * and referential integrity need their own shuffle/join by nature —
-    * use [[uniqueViolations]] / [[refIntegrityViolations]] alongside.) */
+    * accepted-value domains and numeric [lo, hi] ranges. Everything here
+    * folds into ONE aggregate pass. (Uniqueness and referential
+    * integrity need their own shuffle/join by nature — use
+    * [[uniqueViolations]] / [[refIntegrityViolations]] alongside.) */
   final case class Expectations(
       notNull: Seq[String] = Nil,
       accepted: Map[String, Seq[String]] = Map.empty,
-      ranges: Map[String, (Double, Double)] = Map.empty,
-      minRows: Long = 0L)
+      ranges: Map[String, (Double, Double)] = Map.empty)
 
   /** Compile the whole expectation set into ONE aggregate returning a
     * single report row: `rows` plus one violation count per rule
-    * (`null_<col>`, `domain_<col>`, `range_<col>`). One scan, one
+    * (`null_<col>`, `domain_<col>`, `range_<col>`); a row floor is a
+    * comparison against `rows`. One scan, one
     * map-side-combinable aggregate, no matter how many rules — the
     * Deequ-style analyzer shape that stays a single pass at 100 TB,
     * where every per-rule `df.filter(...).count()` loop would be a full
@@ -99,19 +99,6 @@ object Guard {
       e.ranges.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
         count(when(col(c) < lo || col(c) > hi, 1)).as(s"range_$c") })
     df.agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** [[expectations]] as a gate: one pass, then throws with every failed
-    * rule listed (rows floor included). */
-  def requireExpectations(df: DataFrame, e: Expectations): Unit = {
-    val row = expectations(df, e).collect()(0)
-    val rows = row.getAs[Long]("rows")
-    val violated = row.schema.fieldNames.filter(_ != "rows")
-      .collect { case f if row.getAs[Long](f) > 0 =>
-        s"$f: ${row.getAs[Long](f)} violations" }
-    val all = (if (rows < e.minRows)
-      Seq(s"rows=$rows below minRows=${e.minRows}") else Nil) ++ violated
-    require(all.isEmpty, s"expectations failed:\n  ${all.mkString("\n  ")}")
   }
 
   /** Schema contract check — the fail-loud answer to the reference's
@@ -142,13 +129,6 @@ object Guard {
       }
     }
     missing ++ extra ++ changed
-  }
-
-  /** [[schemaDrift]] as a gate: throws with every violation listed. */
-  def requireSchema(df: org.apache.spark.sql.DataFrame,
-      expected: org.apache.spark.sql.types.StructType): Unit = {
-    val drift = schemaDrift(df, expected)
-    require(drift.isEmpty, s"schema drift:\n  ${drift.mkString("\n  ")}")
   }
 
   /** Validate collected metrics; Left = human-readable violations. Call

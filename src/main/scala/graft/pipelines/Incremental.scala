@@ -1,7 +1,7 @@
 package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, sum}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Keyed incremental refresh without a table format — the MERGE INTO
   * core as plain relational algebra: incoming rows replace existing
@@ -13,13 +13,10 @@ import org.apache.spark.sql.functions.{col, lit, sum}
   * back by republishing the previous version instead of by
   * restore-from-backup.
   *
-  * [[publishUpsert]] merges against the WHOLE table — correct anywhere,
-  * but at 100 TB a daily 0.1% batch would cost a full-table rewrite.
-  * [[publishUpsertPartitioned]] is the scale form: it merges and rewrites
-  * ONLY the partitions the incoming batch touches and links every other
-  * partition's existing files unchanged into the new version's manifest
-  * ([[Versioned.publishDelta]]), so refresh cost is proportional to the
-  * touched data, not the table. */
+  * [[publishUpsert]] and [[publishDelete]] merge against the WHOLE
+  * table. A partition-scoped refresh that rewrites only the partitions
+  * a batch touches is a [[Versioned.GroupDelta]] publish, as
+  * [[graft.ops.AnnIndex]] and [[CorpusPublisher]] do it. */
 object Incremental {
 
   /** Pure upsert: `incoming` wins on key collision. Schemas must match
@@ -49,75 +46,6 @@ object Incremental {
       }
       Versioned.publish(merged, baseDir, name, keep)
     }
-
-  /** Slowly-changing-dimension Type 2 merge: `history` carries full row
-    * versioning — (`keys`, attributes, `valid_from`, `valid_to`) with
-    * `valid_to` NULL marking current rows; `incoming` is a (`keys`,
-    * attributes) snapshot stamped `batchTs`. Current rows whose
-    * attributes changed are CLOSED (`valid_to = batchTs`) and the new
-    * attribute versions appended (`valid_from = batchTs`); unchanged and
-    * absent keys pass through untouched; new keys insert. Attribute
-    * comparison is null-safe (`<=>`). One key-shuffle full-outer join of
-    * the CURRENT slice against the snapshot — closed history never
-    * reshuffles, so the merge cost tracks the dimension's live size, not
-    * its accumulated history. Composes with [[Versioned]] the same way
-    * [[publishUpsert]] does. */
-  def scd2Merge(history: DataFrame, incoming: DataFrame, keys: Seq[String],
-      batchTs: Long): DataFrame = {
-    val attrs = history.columns
-      .filterNot(c => keys.contains(c) || c == "valid_from" || c == "valid_to")
-      .toSeq
-    require(incoming.columns.toSet == (keys ++ attrs).toSet,
-      s"incoming must carry exactly keys+attributes: ${keys ++ attrs}")
-    val outCols = (keys ++ attrs :+ "valid_from" :+ "valid_to").map(col)
-    val closed = history.filter(col("valid_to").isNotNull)
-    val current = history.filter(col("valid_to").isNull)
-      .withColumn("__c", lit(1))
-    val inc = incoming.select((keys ++ attrs).map(col): _*)
-      .withColumn("__i", lit(1))
-    val j = current.as("c").join(inc.as("i"), keys, "full_outer")
-    val changed = attrs.map(a => !(col(s"c.$a") <=> col(s"i.$a")))
-      .reduce(_ || _)
-    val kept = j.filter(col("c.__c").isNotNull &&
-        (col("i.__i").isNull || !changed))
-      .select((keys.map(col) ++ attrs.map(a => col(s"c.$a")) :+
-        col("c.valid_from") :+ col("c.valid_to")): _*)
-    val closedNow = j.filter(col("c.__c").isNotNull &&
-        col("i.__i").isNotNull && changed)
-      .select((keys.map(col) ++ attrs.map(a => col(s"c.$a")) :+
-        col("c.valid_from") :+ lit(batchTs).as("valid_to")): _*)
-    val inserted = j.filter(col("i.__i").isNotNull &&
-        (col("c.__c").isNull || changed))
-      .select((keys.map(col) ++ attrs.map(a => col(s"i.$a")) :+
-        lit(batchTs).as("valid_from") :+
-        lit(null).cast("long").as("valid_to")): _*)
-    // all four legs share the canonical (keys, attrs, valid_from,
-    // valid_to) names — unionByName aligns them regardless of the
-    // caller's history column order
-    closed.select(outCols: _*)
-      .unionByName(kept)
-      .unionByName(closedNow)
-      .unionByName(inserted)
-  }
-
-  /** Schema-evolving upsert: like [[upsert]], but `incoming` may carry
-    * NEW columns (backfilled as NULL for existing rows) and may omit
-    * existing non-key columns (NULL for incoming rows). Output column
-    * order: existing's columns, then genuinely new ones — so downstream
-    * position-based readers see a stable prefix. Key columns must be
-    * present on both sides. The relational form of ADD COLUMN without a
-    * table rewrite: compose with [[Versioned]] and only this version's
-    * files carry the new column. */
-  def upsertEvolve(existing: DataFrame, incoming: DataFrame,
-      keys: Seq[String]): DataFrame = {
-    require(keys.forall(incoming.columns.contains),
-      s"incoming must carry key columns $keys")
-    val newCols = incoming.columns.filterNot(existing.columns.contains).toSeq
-    existing.join(incoming.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .select(existing.columns.toIndexedSeq.map(col): _*)
-      .unionByName(incoming, allowMissingColumns = true)
-      .select((existing.columns.toIndexedSeq ++ newCols).map(col): _*)
-  }
 
   /** Row-level delete on a versioned table (the GDPR/right-to-erasure
     * primitive): anti-join the latest version against the delete-key set
@@ -161,72 +89,6 @@ object Incremental {
       .select((keys ++ valueCols).map(col): _*)
   }
 
-  /** Partition-scoped upsert: merge `incoming` only against the
-    * partitions (by `partCol` value) it actually contains, rewrite those,
-    * and reuse every untouched partition's files by manifest link. An
-    * upsert touching 1 of N partitions reads and writes O(1/N) bytes.
-    * `partCol` must be one of the table's columns with non-null values;
-    * the distinct touched values are collected to the driver (bounded by
-    * the partition count — the same cardinality contract Hive-style
-    * partitioning itself imposes). A previous flat version is migrated by
-    * one full partitioned rewrite; afterwards every refresh is scoped. */
-  def publishUpsertPartitioned(spark: SparkSession, baseDir: String,
-      name: String, incoming: DataFrame, keys: Seq[String], partCol: String,
-      keep: Int = 3): Long = {
-    // The non-null contract is ENFORCED, not just documented: a NULL
-    // partition value would land as Hive's __HIVE_DEFAULT_PARTITION__
-    // dir, which the typed manifest matching below cannot address — a
-    // later batch that also carried NULLs would stage a fresh default
-    // dir whose manifest entry SHADOWS the old one without its rows
-    // ever being read into the merge: silent loss of every previously
-    // published NULL-partition row. Fail loudly instead (batch-sized
-    // scan of the increment only).
-    require(incoming.filter(col(partCol).isNull).isEmpty,
-      s"publishUpsertPartitioned($name): partition column $partCol " +
-        "contains NULLs — null partition values cannot be upserted " +
-        "partition-scoped (map them to a sentinel value first)")
-    Versioned.withFamilyLease(baseDir, Seq(name)) { // one writer txn (r14)
-    val prevManifest = Versioned.latestVersion(baseDir, name)
-      .flatMap(v => Versioned.manifest(baseDir, name, v))
-    prevManifest match {
-      case None if Versioned.latestVersion(baseDir, name).isEmpty =>
-        Versioned.publishPartitioned(incoming, baseDir, name, partCol, keep)
-      case None => // flat predecessor: migrate layout with one full rewrite
-        Versioned.publishPartitioned(
-          upsert(Versioned.read(spark, baseDir, name), incoming, keys),
-          baseDir, name, partCol, keep)
-      case Some(m) =>
-        require(m.partCol == partCol,
-          s"table $name is partitioned by ${m.partCol}, not $partCol")
-        // Match manifest entries to the batch on TYPED values: the
-        // manifest stores the Hive-dir rendering (e.g. timestamp
-        // '…00:00:00'), which differs from JVM toString ('…00:00:00.0')
-        // for some types — a string compare would silently miss the
-        // merge and drop existing rows. Casting both sides through the
-        // manifest's declared partType makes the comparison
-        // rendering-independent.
-        val incVals = incoming.select(col(partCol).cast(m.partType))
-          .na.drop().distinct().collect().map(_.get(0)).toSet
-        val touched = spark.createDataset(m.entries.map(_._1))(
-            org.apache.spark.sql.Encoders.STRING)
-          .select(col("value").cast(m.partType).as("__tv"), col("value"))
-          .collect()
-          .collect { case r if !r.isNullAt(0) && incVals(r.get(0)) =>
-            r.getString(1) }
-          .toSet
-        val (touchedEntries, untouched) =
-          m.entries.partition { case (value, _) => touched(value) }
-        val existing =
-          if (touchedEntries.isEmpty) None
-          else Some(Versioned.readPartitions(spark, baseDir, name, m,
-            touchedEntries))
-        val merged = existing.map(e => upsert(e, incoming, keys))
-          .getOrElse(incoming)
-        Versioned.publishDelta(merged, baseDir, name, partCol, untouched, keep)
-    }
-    }
-  }
-
   /** Apply an ordered change-data-capture log to a keyed snapshot — the
     * Debezium-shaped half of MERGE INTO: `log` carries the snapshot's
     * columns plus an op column ('I'nsert / 'U'pdate / 'D'elete) and a
@@ -257,92 +119,4 @@ object Incremental {
       .unionByName(latest.filter(col(opCol) =!= "D")
         .select(payload.map(col): _*))
   }
-
-  /** Incremental JOIN view maintenance — the delta rule
-    * ΔJ = (ΔA ⨝ B) ∪ (A ⨝ ΔB) ∪ (ΔA ⨝ ΔB) for insert-only feeds.
-    * Maintains three epoch-partitioned versioned tables under `name`:
-    * the A and B snapshots and the join view `name` itself; each refresh
-    * joins only the DELTAS against the opposite snapshot and appends one
-    * new epoch partition per table (the delta links all earlier
-    * epochs' files untouched), so refresh cost is O(|ΔA|+|ΔB|+|ΔJ|) —
-    * the accumulated snapshots are read but never rewritten, and at
-    * scale the delta side of each join is batch-sized and broadcasts.
-    * The maintained view equals the one-shot join of everything ever
-    * fed, at every version (spec-asserted); key columns must be the only
-    * shared names between the two schemas (standard using-join
-    * contract). Deletes/updates need keyed tombstones on top — this is
-    * the insert-only core every event/log pipeline runs.
-    *
-    * The three tables advance in ONE group transaction
-    * ([[Versioned.publishGroupMembers]]): three independent publishes
-    * would make a crash between them unrecoverable under replay — the
-    * A snapshot would already contain ΔA, so re-running the refresh
-    * would append ΔA a second time AND double-count ΔA⨝ΔB in the view,
-    * silently and forever. With the journal, a crash anywhere is rolled
-    * forward by [[Versioned.recoverGroups]] and the caller retries
-    * nothing; [[Versioned.readGroup]] additionally serves (A, B, view)
-    * as one consistent snapshot. For at-least-once feeders, pass the
-    * batch's `epochId`: a refresh whose epoch already landed is
-    * recognized and skipped (exactly-once over redelivery — the
-    * foreachBatch recipe); the default −1 auto-numbers for
-    * exactly-once callers. Returns the epoch that holds the deltas. */
-  def maintainJoin(spark: SparkSession, baseDir: String, name: String,
-      deltaA: DataFrame, deltaB: DataFrame, keys: Seq[String],
-      keep: Int = 3, epochId: Long = -1L): Long =
-      // snapshot-read → replay-check → group-publish as ONE writer span
-      // (r14): two concurrent refreshes would both pass the replay check
-      // and both join against pre-refresh snapshots — double-counted
-      // matches in whichever journal lands last
-      Versioned.withFamilyLease(baseDir,
-        Seq(s"${name}_A", s"${name}_B", name)) {
-    def snapshot(n: String): Option[DataFrame] =
-      Versioned.latestVersion(baseDir, n)
-        .map(_ => Versioned.read(spark, baseDir, n).drop("epoch"))
-    def reuseOf(n: String): Seq[(String, String)] =
-      Versioned.latestVersion(baseDir, n)
-        .flatMap(v => Versioned.manifest(baseDir, n, v))
-        .map(_.entries).getOrElse(Nil)
-    val reuseA = reuseOf(s"${name}_A")
-    val reuseB = reuseOf(s"${name}_B")
-    val reuseView = reuseOf(name)
-    val epoch =
-      if (epochId >= 0) epochId
-      else (reuseA ++ reuseB ++ reuseView)
-        .flatMap(_._1.toLongOption).maxOption.getOrElse(-1L) + 1L
-    // replay check against ALL THREE manifests: an EMPTY delta stages no
-    // partition dir, so its table's manifest records nothing for the
-    // epoch — presence in ANY member means the transaction landed (the
-    // group journal commits all three together and recoverGroups
-    // completes a torn commit, so partial presence across members can
-    // only come from empty deltas, never from tearing). An epoch whose
-    // three frames were ALL empty records nothing anywhere and replays
-    // as a no-content re-publish — idempotent in content.
-    if (Seq(reuseA, reuseB, reuseView)
-        .exists(_.exists(_._1 == epoch.toString))) return epoch
-    val aOld = snapshot(s"${name}_A")
-    val bOld = snapshot(s"${name}_B")
-    val newMatches = Seq(
-      bOld.map(b => deltaA.join(b, keys)),
-      aOld.map(a => a.join(deltaB, keys)))
-      .flatten.foldLeft(deltaA.join(deltaB, keys))(_.unionByName(_))
-    // an EMPTY frame with nothing to link cannot be a partitioned
-    // version (the manifest must name at least one directory) — publish
-    // it as a plain empty version instead, exactly like
-    // CorpusPublisher's sideMember: without this, a FIRST refresh whose
-    // view delta is empty (no key overlap yet) would throw mid-staging
-    // and wedge an at-least-once feeder on epoch 0 forever (the epoch
-    // never lands in any manifest, so the replay check can't skip it)
-    def member(t: String, frame: DataFrame,
-        reuse: Seq[(String, String)]): Versioned.GroupMember = {
-      val withEpoch = frame.withColumn("epoch", lit(epoch))
-      if (reuse.isEmpty && frame.isEmpty) Versioned.GroupFull(t, withEpoch)
-      else Versioned.GroupDelta(t, withEpoch, "epoch", reuse)
-    }
-    Versioned.publishGroupMembers(Seq(
-      member(s"${name}_A", deltaA, reuseA),
-      member(s"${name}_B", deltaB, reuseB),
-      member(name, newMatches, reuseView)),
-      baseDir, keep)
-    epoch
-    }
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions.{col, lit}
   * create (local disk, HDFS, S3 conditional writes) the contract is
   * now an invariant.
   *
-  * Partitioned versions (see [[publishPartitioned]] / [[publishDelta]])
+  * Partitioned versions (see [[publishDelta]] / [[GroupDelta]])
   * additionally carry a `_MANIFEST` mapping each partition value to the
   * directory holding its data — possibly inside an OLDER version, so an
   * incremental refresh rewrites only the partitions it touches and links
@@ -437,8 +437,10 @@ object Versioned {
 
   /** Partition manifest of one version: the partition column, its DDL
     * type, and (value, dir-relative-to-table) per partition. Values are
-    * the Hive directory strings; partition values containing tabs,
-    * newlines, or characters Hive percent-escapes are not supported. */
+    * the Hive directory strings with Hive's %XX escapes undone (so a
+    * value with a space, colon or percent round-trips); values
+    * containing tabs or newlines are not supported (the manifest is a
+    * tab- and newline-delimited file). */
   final case class Manifest(partCol: String, partType: String,
       entries: Seq[(String, String)])
 
@@ -966,14 +968,6 @@ object Versioned {
       .filter(_.startsWith(partCol + "=")).sorted
       .map(dn => (unescapePart(dn.stripPrefix(partCol + "=")), s"$vRel/$dn"))
 
-  /** Publish `df` Hive-partitioned by `partCol` as the next version.
-    * Readers get the same rows as [[publish]]; the payoff is
-    * [[publishDelta]]: later refreshes can rewrite single partitions.
-    * Partition values must be non-null. */
-  def publishPartitioned(df: DataFrame, baseDir: String, name: String,
-      partCol: String, keep: Int = 3): Long =
-    publishDelta(df, baseDir, name, partCol, reuse = Nil, keep = keep)
-
   /** Publish `delta` (rows of the partitions being REWRITTEN) as the next
     * version, linking every `reuse` entry — (value, relDir) rows from the
     * previous version's manifest — unchanged into the new manifest. The
@@ -1112,11 +1106,4 @@ object Versioned {
   private def diffFrames(before: DataFrame, after: DataFrame): DataFrame =
     after.exceptAll(before).withColumn("change", lit("added"))
       .unionByName(before.exceptAll(after).withColumn("change", lit("removed")))
-
-  /** Roll back: republish an old version's content as the NEW latest
-    * (history stays linear — the bad version remains on disk for
-    * forensics until pruned). */
-  def rollback(spark: SparkSession, baseDir: String, name: String,
-      toVersion: Long, keep: Int = 3): Long =
-    publish(read(spark, baseDir, name, Some(toVersion)), baseDir, name, keep)
 }

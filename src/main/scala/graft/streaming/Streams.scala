@@ -8,8 +8,11 @@ import graft.ops.Pin._
 
 /** Structured Streaming surface (SURVEY §2.7 / north-star): the event
   * queries re-expressed as streams — identical plan shapes as the batch
-  * forms in EventQueries, plus a custom-state sessionizer via
-  * flatMapGroupsWithState.
+  * forms in EventQueries. Custom-state twins (sessionizer, funnel,
+  * attribution, forward-fill) run on flatMapGroupsWithState with
+  * event-time timeouts; the per-user running state of spend totals,
+  * growth accounting and type counts runs on the v2 state API
+  * (transformWithState). Each twin has exactly one streaming form.
   *
   * The reference has no streaming (daily Airflow batch); this is the
   * engine's forward path: the same `groupBy(window(...))` plan runs in
@@ -730,8 +733,7 @@ object Streams {
     *
     * The checkpoint location defaults to `<indexDir>/_stream_checkpoint`
     * (override with `.option("checkpointLocation", …)` on the returned
-    * writer) and MUST stay durable across restarts, exactly as
-    * [[graft.ops.AnnIndex.ingestStream]]'s does: index admission depends
+    * writer) and MUST stay durable across restarts: index admission depends
     * on MONOTONE epoch ids (batchId = epoch + 1 with skipIfExists), so a
     * restart on a fresh temporary checkpoint replays epochs from 0 and
     * every post-restart epoch colliding with an already-admitted id is
@@ -845,45 +847,33 @@ object Streams {
     * accumulation exact in any within-batch arrival order, so the final
     * emission per user equals the batch aggregate bit-for-bit. Requires
     * the RocksDB state store provider (the only provider the v2 state
-    * API supports). */
-  def spendTotalsStream(events: DataFrame)
-      : Dataset[SpendTotal] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    events.filter(col("event_type") === "purchase")
-      .select(col("user_id"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .as[SpendRow]
-      .groupByKey(_.user_id)
-      .transformWithState(new SpendProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** Spend totals warm-started from a BATCH backfill — the production
-    * bootstrap pattern: the historical aggregate seeds per-key state via
+    * API supports).
+    *
+    * The totals are warm-started from the BATCH `backfill` (pass an empty
+    * frame for a cold start) — the production bootstrap pattern: the
+    * historical aggregate seeds per-key state via
     * StatefulProcessorWithInitialState.handleInitialState, then the
     * stream continues accumulating on top. Final totals equal the
     * aggregate over backfill+stream as if it had all streamed — the
     * cutover invariant a backfilled pipeline must satisfy. */
-  def spendTotalsStreamWithInit(events: DataFrame,
+  def spendTotalsStream(events: DataFrame,
       backfill: DataFrame): Dataset[SpendTotal] = {
     val spark = events.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val init = backfill.filter(col("event_type") === "purchase")
+    def purchases(df: DataFrame) = df.filter(col("event_type") === "purchase")
+      .select(col("user_id"),
+        expr("cast(round(value * 100) as long)").as("cents"))
+    val init = purchases(backfill)
       .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"),
-        sum(expr("cast(round(value * 100) as long)")).cast("long").as("s"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).cast("long").as("s"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
       .mapValues(r => (r._2, r._3))
-    events.filter(col("event_type") === "purchase")
-      .select(col("user_id"),
-        expr("cast(round(value * 100) as long)").as("cents"))
+    purchases(events)
       .as[SpendRow]
       .groupByKey(_.user_id)
-      .transformWithState(new SpendProcessorWithInit, TimeMode.None(),
+      .transformWithState(new SpendProcessor, TimeMode.None(),
         OutputMode.Update(), init)
   }
 
@@ -951,9 +941,9 @@ object Streams {
 
   case class TypeCount(user_id: Long, event_type: String, n: Long)
 
-  /** Per-user event-type histogram on v2 MapState — the third state
-    * shape next to ValueState (spend totals) and ListState+timers
-    * (sessionizer): MapState[event_type → count] per user, each
+  /** Per-user event-type histogram on v2 MapState — the state shape
+    * next to ValueState (spend totals, growth accounting):
+    * MapState[event_type → count] per user, each
     * micro-batch emitting the updated count for every type it touched
     * (update-mode). Keys are stored individually in the state store, so
     * a single hot user with many types never deserializes one giant
@@ -966,26 +956,6 @@ object Streams {
       .groupByKey(_.user_id)
       .transformWithState(new TypeCountProcessor, TimeMode.None(),
         OutputMode.Update())
-  }
-
-  /** The 5-minute-gap sessionizer re-expressed on the v2 state API with
-    * EVENT-TIME TIMERS: events buffer in ListState; one pending timer per
-    * user at (last event + gap), re-registered as later events arrive;
-    * when the watermark passes it, every buffered session is closed —
-    * the timer fires once, the flush emits all sessions via the SAME
-    * [[splitSessions]] kernel as the flatMapGroupsWithState form, so the
-    * two implementations are spec-comparable session for session. */
-  def sessionizeStreamV2(events: DataFrame,
-      watermarkDelay: String = "10 seconds"): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    events.select(col("user_id"), col("ts"), col("value"))
-      .withWatermark("ts", watermarkDelay)
-      .as[EvT]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessorV2, TimeMode.EventTime(),
-        OutputMode.Append())
   }
 
   /** Pure gap-split (shared by the stateful op and its spec oracle). */
@@ -1009,34 +979,12 @@ object Streams {
 }
 
 /** The StatefulProcessor behind [[Streams.spendTotalsStream]]: one
-  * ValueState[(count, cents)] per user key. State reads/writes go through
-  * the v2 typed-state handle, so the same processor runs unchanged on the
-  * RocksDB provider with changelog checkpointing at scale. */
-class SpendProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-    Long, Streams.SpendRow, Streams.SpendTotal] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
-
-  @transient private var totals: ValueState[(Long, Long)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    totals = getHandle.getValueState[(Long, Long)]("totals",
-      org.apache.spark.sql.Encoders.product[(Long, Long)], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Streams.SpendRow],
-      timerValues: TimerValues): Iterator[Streams.SpendTotal] = {
-    val (c0, s0) = if (totals.exists()) totals.get() else (0L, 0L)
-    var c = c0
-    var s = s0
-    rows.foreach { r => c += 1; s += r.cents }
-    totals.update((c, s))
-    Iterator.single(Streams.SpendTotal(key, c, s))
-  }
-}
-
-/** [[SpendProcessor]]'s warm-start twin: identical accumulation, plus
-  * handleInitialState seeds the ValueState from the batch backfill
-  * aggregate before the first micro-batch touches the key. */
-class SpendProcessorWithInit
+  * ValueState[(count, cents)] per user key, seeded by handleInitialState
+  * from the batch backfill aggregate before the first micro-batch touches
+  * the key. State reads/writes go through the v2 typed-state handle, so
+  * the same processor runs unchanged on the RocksDB provider with
+  * changelog checkpointing at scale. */
+class SpendProcessor
     extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
       Long, Streams.SpendRow, Streams.SpendTotal, (Long, Long)] {
   import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -1119,48 +1067,5 @@ class TypeCountProcessor extends org.apache.spark.sql.streaming.StatefulProcesso
     }
     touched.toList
       .map(t => Streams.TypeCount(key, t, counts.getValue(t))).iterator
-  }
-}
-
-/** The event-time-timer StatefulProcessor behind
-  * [[Streams.sessionizeStreamV2]]: ListState buffers (ts_us, value) per
-  * user; exactly one pending timer per key tracks the open tail's close
-  * time; the expired-timer path flushes every buffered session through
-  * the shared [[Streams.splitSessions]] kernel and clears state — each
-  * session emitted exactly once. */
-class SessionProcessorV2 extends org.apache.spark.sql.streaming.StatefulProcessor[
-    Long, Streams.EvT, Streams.Session] {
-  import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, TimeMode, TimerValues, TTLConfig}
-
-  @transient private var buf: ListState[(Long, Double)] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    buf = getHandle.getListState[(Long, Double)]("events",
-      org.apache.spark.sql.Encoders.product[(Long, Double)], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[Streams.EvT],
-      timerValues: TimerValues): Iterator[Streams.Session] = {
-    var maxUs = Long.MinValue
-    rows.foreach { e =>
-      val inst = e.ts.toInstant
-      val us = inst.getEpochSecond * 1000000L + inst.getNano / 1000L
-      buf.appendValue((us, e.value))
-      if (us > maxUs) maxUs = us
-    }
-    if (maxUs != Long.MinValue) {
-      // keep a single pending flush timer at the newest close time; +1ms
-      // keeps it strictly past the µs→ms-truncated watermark
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
-      getHandle.registerTimer(maxUs / 1000L + Streams.GapUs / 1000L + 1L)
-    }
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expiredTimerInfo: ExpiredTimerInfo): Iterator[Streams.Session] = {
-    val all = buf.get().toSeq.sortBy(_._1)
-    buf.clear()
-    if (all.isEmpty) Iterator.empty
-    else Streams.splitSessions(key, all).iterator
   }
 }

@@ -173,6 +173,22 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(served == collectTopK(AnnIndex.serveTopK(spark, local, queries, 5)))
   }
 
+  test("a graftfs:// build creates its commit markers, group journal and " +
+    "writer leases through the FileSystem") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftfs.impl", classOf[GraftTestFs].getName)
+    val dir = tmp()
+    val idx = s"graftfs://$dir"
+    val before = GraftTestFs.mutations.size
+    AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
+    val creates = GraftTestFs.mutations.drop(before)
+      .filter(m => m.startsWith("create ") && m.contains(s"$dir/"))
+    def created(what: String) = creates.exists(_.contains(what))
+    assert(created("/_COMMIT"), creates.mkString("\n"))
+    assert(created("/_txn/"), creates.mkString("\n"))
+    assert(created("/_LEASE"), creates.mkString("\n"))
+  }
+
   test("randomized append sequences (seeded): row conservation, manifest " +
     "ledger exactness, and serve == frozen-model rank after every step") {
     val rnd = new scala.util.Random(4242L)
@@ -222,46 +238,6 @@ class AnnIndexSpec extends AnyFunSuite {
     val after = AnnIndex.append(emb.filter(lit(false)), idx, batchId = 2L)
     assert(Versioned.latestVersion(idx, AnnIndex.CodesTable) == before)
     assert(after(AnnIndex.CodesTable) == before.get)
-  }
-
-  test("streaming micro-batch ingestion: epoch-keyed appends, idempotent " +
-    "under replay semantics, immediately servable") {
-    val idx = tmp()
-    AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
-    val (coarse, books) = AnnIndex.loadModel(spark, idx)
-    implicit val sq = spark.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val stream = ms.toDF().toDF("vec_id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    val rows = emb.filter(col("vec_id") >= 300)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    val q = AnnIndex.ingestStream(stream, idx)
-    try {
-      ms.addData(rows.take(100).toSeq)
-      q.processAllAvailable()
-      ms.addData(rows.drop(100).toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val codes = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
-    assert(codes.count() == emb.count())
-    assert(codes.select("batch").distinct().as[Long].collect().toSet ==
-      Set(0L, 1L, 2L))
-    // replaying an already-landed epoch is a no-op (skipIfExists):
-    // exactly-once admission over at-least-once delivery
-    val before = Versioned.latestVersion(idx, AnnIndex.CodesTable)
-    AnnIndex.append(emb.filter(col("vec_id") >= 300).limit(100)
-      .select(col("vec_id"), col("embedding")), idx, batchId = 1L,
-      skipIfExists = true)
-    assert(Versioned.latestVersion(idx, AnnIndex.CodesTable) == before)
-    // every streamed vector is encoded exactly as the frozen model would
-    val expect = VectorOps.ivfPqEncodeWith(emb, coarse, books,
-        coarse.head._2.length)
-      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
-    val got = codes.select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Int, Seq[Int])].collect().sortBy(_._1).toSeq
-    assert(got == expect)
   }
 
   test("compact rewrites all batches into one partition labelled with " +
@@ -348,10 +324,9 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    // every path under the index with its mtime: also catches writes
-    // that bypass the FileSystem (Fs.createExclusive uses java.nio on a
-    // local filesystem), since a directory's mtime moves when an entry
-    // is created or deleted in it
+    // every path under the index with its mtime: also catches a write
+    // that bypasses the FileSystem, since a directory's mtime moves when
+    // an entry is created or deleted in it
     def tree(p: Path): Seq[String] = Fs.list(p).flatMap { st =>
       s"${st.getPath} ${st.getModificationTime}" +:
         (if (st.isDirectory) tree(st.getPath) else Nil)
@@ -442,24 +417,6 @@ class AnnIndexSpec extends AnyFunSuite {
         AnnIndex.append(b, idx, batchId = id)
       }
     }
-  }
-
-  test("ingestStream checkpoints durably under the index directory (epoch " +
-    "ids survive restarts instead of resetting to 0 and colliding)") {
-    val idx = tmp()
-    AnnIndex.build(emb.filter(col("vec_id") < 300), idx)
-    implicit val sq = spark.sqlContext
-    val ms = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Seq[Float])]
-    val stream = ms.toDF().toDF("vec_id", "embedding")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-    val rows = emb.filter(col("vec_id") >= 300 && col("vec_id") < 350)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq
-    val q = AnnIndex.ingestStream(stream, idx)
-    try { ms.addData(rows); q.processAllAvailable() } finally q.stop()
-    // the durable default location, inside the index family directory
-    assert(Fs.exists(new Path(s"$idx/_stream_checkpoint/offsets")))
   }
 
   test("recall drift is measurable per published version, and " +

@@ -14,11 +14,14 @@ import org.apache.hadoop.util.Progressable
   *
   * Every mutating call (create, mkdirs, delete, rename) is recorded in
   * [[GraftTestFs.mutations]], so a test can assert that an operation
-  * changes nothing on disk. A call the base class makes from inside
-  * another mutating call (create making its parent directory) is part
-  * of the outer call and is not recorded again. `Fs.createExclusive`
-  * on a local filesystem writes through java.nio, not this class, so
-  * its creates are not seen here. */
+  * changes nothing on disk, or which files it creates. A call the base
+  * class makes from inside another mutating call (create making its
+  * parent directory) is part of the outer call and is not recorded
+  * again. `Fs.createExclusive` reaches this class through
+  * `create(overwrite = false)`, so commit markers, journals and leases
+  * are recorded too; that create is atomic here (an O_EXCL claim of the
+  * path before the base class opens it), so exclusivity holds on this
+  * scheme as it does on `file:`. */
 class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   import GraftTestFs.mutating
 
@@ -28,14 +31,32 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def create(f: Path, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    mutating("create", f)(
-      super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+    mutating("create", f) {
+      claim(f, overwrite)
+      super.create(f, true, bufferSize, replication, blockSize, progress)
+    }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
-    mutating("create", f)(super.create(f, permission, overwrite, bufferSize,
-      replication, blockSize, progress))
+    mutating("create", f) {
+      claim(f, overwrite)
+      super.create(f, permission, true, bufferSize, replication, blockSize,
+        progress)
+    }
+
+  /** The base class's `overwrite = false` create checks for the file and
+    * then opens it, so two racing creators can both win. Without
+    * `overwrite`, claim the path first with an atomic create-new; the
+    * base class then opens the file this caller owns. */
+  private def claim(f: Path, overwrite: Boolean): Unit =
+    if (!overwrite) {
+      mkdirs(f.getParent)
+      try { java.nio.file.Files.createFile(pathToFile(f).toPath); () }
+      catch { case _: java.nio.file.FileAlreadyExistsException =>
+        throw new org.apache.hadoop.fs.FileAlreadyExistsException(
+          s"File already exists: $f") }
+    }
 
   override def createNonRecursive(f: Path, permission: FsPermission,
       flags: EnumSet[CreateFlag], bufferSize: Int, replication: Short,

@@ -273,32 +273,6 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("scd2Merge invariants: one open row per live key, history never " +
-    "shrinks, re-merge is a no-op") {
-    import graft.pipelines.Incremental.scd2Merge
-    val gen = Gen.listOfN(6, Gen.zip(Gen.chooseNum(1L, 4L), Gen.oneOf("x", "y", "z")))
-    for ((snap1, snap2) <- samples(Gen.zip(gen, gen), 8)) {
-      val s1 = snap1.distinctBy(_._1).toDF("k", "attr")
-      val s2 = snap2.distinctBy(_._1).toDF("k", "attr")
-      val h0 = s1.withColumn("valid_from", lit(100L))
-        .withColumn("valid_to", lit(null).cast("long"))
-      val h1 = scd2Merge(h0, s2, Seq("k"), batchTs = 200L)
-      val rows = h1.as[(Long, String, Long, Option[Long])].collect()
-      // exactly one open row per key
-      val open = rows.filter(_._4.isEmpty)
-      assert(open.map(_._1).distinct.length == open.length)
-      // history monotone: every h0 key still has rows
-      assert(s1.as[(Long, String)].collect().map(_._1).toSet
-        .subsetOf(rows.map(_._1).toSet))
-      // idempotence at a later ts
-      val h2 = scd2Merge(
-        rows.toSeq.toDF("k", "attr", "valid_from", "valid_to"),
-        s2, Seq("k"), batchTs = 300L)
-      assert(h2.as[(Long, String, Long, Option[Long])].collect().toSet ==
-        rows.toSet)
-    }
-  }
-
   test("mergeAggregates: incremental refresh over any batch split == " +
     "one-shot aggregate") {
     import graft.pipelines.Incremental.mergeAggregates

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipelines.{Compaction, Fs, Incremental, Runner, Versioned}
 import org.apache.hadoop.fs.Path
@@ -55,20 +56,49 @@ class PublishSpec extends AnyFunSuite {
     walk(new Path(dir))
   }
 
+  /** Publish `df` as table `name`, partitioned by `partCol` and linking
+    * `reuse`, in one group transaction — the path AnnIndex and
+    * CorpusPublisher publish through. */
+  private def publishParts(base: String, name: String, df: DataFrame,
+      partCol: String, reuse: Seq[(String, String)] = Nil,
+      keep: Int = 3): Long =
+    Versioned.publishGroupMembers(
+      Seq(Versioned.GroupDelta(name, df, partCol, reuse)), base, keep)(name)
+
+  /** A partition-scoped upsert on that path: the partitions `incoming`
+    * touches (matched on typed values through the manifest's declared
+    * type) are merged on key `k` and restaged, every other partition is
+    * linked unchanged. */
+  private def upsertParts(base: String, name: String, incoming: DataFrame,
+      partCol: String, keep: Int = 3): Long = {
+    val m = Versioned.manifest(base, name,
+      Versioned.latestVersion(base, name).get).get
+    val incVals = incoming.select(col(partCol).cast(m.partType)).distinct()
+      .collect().map(_.get(0)).toSet
+    val typed = m.entries.map(_._1).toDF("value")
+      .select(col("value").cast(m.partType)).collect().map(_.get(0))
+    val (touched, untouched) = m.entries.zip(typed)
+      .partition { case (_, tv) => incVals(tv) }
+    val merged =
+      if (touched.isEmpty) incoming
+      else Incremental.upsert(Versioned.readPartitions(spark, base, name, m,
+        touched.map(_._1)), incoming, Seq("k"))
+    publishParts(base, name, merged, partCol, untouched.map(_._1), keep)
+  }
+
   test("partition-scoped upsert: only touched partitions rewritten, " +
     "untouched files linked byte-identical, O(1/N) bytes written") {
     val base = tmp("part-upsert")
     val v0 = (0 until 300).map(i => (i.toLong, s"val$i", i % 3))
       .toDF("k", "v", "p")
-    assert(Versioned.publishPartitioned(v0, base, "t", "p") == 0L)
+    assert(publishParts(base, "t", v0, "p") == 0L)
     val m0 = Versioned.manifest(base, "t", 0L).get
     assert(m0.entries.map(_._1).sorted == Seq("0", "1", "2"))
     assert(m0.entries.forall(_._2.startsWith("_v0/")))
 
     // batch touches ONLY partition p=1: update k=1, insert k=1000
     val delta = Seq((1L, "UPDATED", 1), (1000L, "NEW", 1)).toDF("k", "v", "p")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", delta, Seq("k"), "p") == 1L)
+    assert(upsertParts(base, "t", delta, "p") == 1L)
 
     // new version dir holds ONLY the rewritten partition
     val v1dirs = Fs.list(new Path(s"$base/t/_v1"))
@@ -116,13 +146,11 @@ class PublishSpec extends AnyFunSuite {
         (2L, "b", ts("2024-01-01 00:00:00")),
         (3L, "c", ts("2024-01-01 01:00:00")))
       .toDF("k", "v", "h")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", v0, Seq("k"), "h") == 0L)
+    assert(publishParts(base, "t", v0, "h") == 0L)
     val delta = Seq((2L, "B", ts("2024-01-01 00:00:00")),
         (9L, "new", ts("2024-01-01 00:00:00")))
       .toDF("k", "v", "h")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", delta, Seq("k"), "h") == 1L)
+    assert(upsertParts(base, "t", delta, "h") == 1L)
     val latest = Versioned.read(spark, base, "t")
       .select(col("k"), col("v")).as[(Long, String)].collect().toSet
     // k=1 must SURVIVE the partition rewrite; k=2 updated; k=9 inserted
@@ -142,12 +170,10 @@ class PublishSpec extends AnyFunSuite {
     val weird = Seq("a b:c", "100%", "plain")
     val v0 = weird.zipWithIndex.map { case (p, i) => (i.toLong, s"v$i", p) }
       .toDF("k", "v", "p")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", v0, Seq("k"), "p") == 0L)
+    assert(publishParts(base, "t", v0, "p") == 0L)
     val delta = Seq((0L, "UPD", "a b:c"), (9L, "NEW", "a b:c"))
       .toDF("k", "v", "p")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", delta, Seq("k"), "p") == 1L)
+    assert(upsertParts(base, "t", delta, "p") == 1L)
     val latest = Versioned.read(spark, base, "t")
       .as[(Long, String, String)].collect().toSet
     assert(latest == Set((0L, "UPD", "a b:c"), (9L, "NEW", "a b:c"),
@@ -200,11 +226,10 @@ class PublishSpec extends AnyFunSuite {
     val base = tmp("vdiff-manifest")
     val v0 = (0 until 300).map(i => (i.toLong, s"val$i", i % 3))
       .toDF("k", "v", "p")
-    assert(Versioned.publishPartitioned(v0, base, "t", "p") == 0L)
+    assert(publishParts(base, "t", v0, "p") == 0L)
     // delta touches ONLY p=1 (one update, one insert)
     val delta = Seq((1L, "UPDATED", 1), (1000L, "NEW", 1)).toDF("k", "v", "p")
-    assert(Incremental.publishUpsertPartitioned(
-      spark, base, "t", delta, Seq("k"), "p") == 1L)
+    assert(upsertParts(base, "t", delta, "p") == 1L)
     val d = Versioned.diff(spark, base, "t", 0L, 1L)
     // the plan reads only files under the touched partition's two version
     // dirs — never the linked p=0 / p=2 bytes (at 100 TB that is the
@@ -226,52 +251,37 @@ class PublishSpec extends AnyFunSuite {
     assert(Versioned.diff(spark, base, "t", 1L, 1L).inputFiles.isEmpty)
   }
 
-  test("maintainJoin with an explicit epochId is exactly-once over " +
-    "redelivery: a replayed refresh is skipped, the three tables advance " +
-    "as ONE group transaction") {
-    val base = tmp("ivm-replay")
-    def a(rows: (Int, String)*) = rows.toSeq.toDF("k", "av")
-    def b(rows: (Int, Long)*) = rows.toSeq.toDF("k", "bv")
-    def viewCount = Versioned.read(spark, base, "j").count()
-    Incremental.maintainJoin(spark, base, "j",
-      a(1 -> "x"), b(1 -> 10L), Seq("k"), epochId = 7L)
-    assert(viewCount == 1L)
-    // at-least-once redelivery of the SAME epoch: recognized, skipped
-    val replayed = Incremental.maintainJoin(spark, base, "j",
-      a(1 -> "x"), b(1 -> 10L), Seq("k"), epochId = 7L)
-    assert(replayed == 7L)
-    assert(viewCount == 1L, "a replayed epoch must not double-append")
-    assert(Versioned.read(spark, base, "j_A").count() == 1L)
-    // the three tables are journaled together: readGroup resolves a
-    // consistent (A, B, view) snapshot
-    val group = Versioned.latestGroupVersions(base)
-    assert(group.keySet == Set("j", "j_A", "j_B"))
-    // a fresh epoch still appends
-    Incremental.maintainJoin(spark, base, "j",
-      a(2 -> "y"), b(2 -> 20L), Seq("k"), epochId = 8L)
-    assert(viewCount == 2L)
-  }
-
-  test("maintainJoin: an epoch whose view delta is EMPTY still replays as " +
-    "a skip (the ledger reads all three manifests, not just the view's)") {
-    val base = tmp("ivm-empty")
-    def a(rows: (Int, String)*) = rows.toSeq.toDF("k", "av")
-    def b(rows: (Int, Long)*) = rows.toSeq.toDF("k", "bv")
-    Incremental.maintainJoin(spark, base, "j",
-      a(1 -> "x"), b(1 -> 10L), Seq("k"), epochId = 7L)
-    // epoch 8: disjoint keys → zero matches → the view's manifest gains
-    // NO entry for 8 (an empty delta stages no partition dir)
-    Incremental.maintainJoin(spark, base, "j",
-      a(2 -> "y"), b(3 -> 30L), Seq("k"), epochId = 8L)
-    val aCount = Versioned.read(spark, base, "j_A").count()
-    assert(Versioned.read(spark, base, "j").count() == 1L)
-    // redelivery of epoch 8 must SKIP (epoch present in j_A/j_B), not
-    // wedge on a torn-state error or double-append
-    val replayed = Incremental.maintainJoin(spark, base, "j",
-      a(2 -> "y"), b(3 -> 30L), Seq("k"), epochId = 8L)
-    assert(replayed == 8L)
-    assert(Versioned.read(spark, base, "j_A").count() == aCount)
-    assert(Versioned.read(spark, base, "j").count() == 1L)
+  test("group delta: an EMPTY member frame stages no partition, links " +
+    "every prior one, and commits with the rest of the group") {
+    val base = tmp("group-empty-delta")
+    def epoch(e: Int, rows: (Int, String)*) =
+      rows.toSeq.toDF("k", "v").withColumn("epoch", lit(e))
+    def member(n: String, df: DataFrame) =
+      Versioned.GroupDelta(n, df, "epoch", Versioned.latestVersion(base, n)
+        .flatMap(Versioned.manifest(base, n, _)).map(_.entries).getOrElse(Nil))
+    Versioned.publishGroupMembers(Seq(
+      member("a", epoch(7, 1 -> "x")), member("j", epoch(7, 1 -> "x"))), base)
+    val j0 = Versioned.manifest(base, "j", 0L).get
+    // epoch 8: `a` gains a partition, `j`'s frame is empty
+    val v = Versioned.publishGroupMembers(Seq(
+      member("a", epoch(8, 2 -> "y")), member("j", epoch(8))), base)
+    assert(v == Map("a" -> 1L, "j" -> 1L))
+    assert(Fs.list(new Path(s"$base/j/_v1")).forall(!_.isDirectory))
+    assert(Versioned.manifest(base, "j", 1L).get.entries == j0.entries)
+    // the epoch is recorded by the member that staged it, and the journal
+    // names both members at their new versions
+    assert(Versioned.manifest(base, "a", 1L).get.entries.map(_._1) ==
+      Seq("7", "8"))
+    assert(Versioned.latestGroupVersions(base) == v)
+    val g = Versioned.readGroup(spark, base)
+    assert(g("a").count() == 2L && g("j").count() == 1L)
+    // with nothing to link, an empty partitioned version is refused
+    // before the journal is written: the family's snapshot is unchanged
+    intercept[IllegalArgumentException] {
+      Versioned.publishGroupMembers(Seq(
+        member("a", epoch(9, 3 -> "z")), member("fresh", epoch(9))), base)
+    }
+    assert(Versioned.latestGroupVersions(base) == v)
   }
 
   test("latestGroupVersionsFor resolves the right FAMILY when several " +
@@ -517,72 +527,21 @@ class PublishSpec extends AnyFunSuite {
     assert(Versioned.recoverGroups(base).isEmpty)
   }
 
-  test("publishUpsertPartitioned rejects NULL partition values loudly " +
-    "instead of silently losing previously published NULL-partition rows") {
-    val base = tmp("upsert-null")
-    Incremental.publishUpsertPartitioned(spark, base, "t",
-      Seq((1, "a", 10)).toDF("k", "v", "p"), Seq("k"), "p")
-    val ex = intercept[IllegalArgumentException] {
-      Incremental.publishUpsertPartitioned(spark, base, "t",
-        Seq((2, "b", null.asInstanceOf[Integer])).toDF("k", "v", "p"),
-        Seq("k"), "p")
-    }
-    assert(ex.getMessage.contains("NULL"))
-  }
-
-  test("maintainJoin: view == one-shot join at every version; earlier " +
-    "epochs' files are manifest-linked, never rewritten") {
-    val base = tmp("ivm")
-    def a(rows: (Int, String)*) = rows.toSeq.toDF("k", "av")
-    def b(rows: (Int, Long)*) = rows.toSeq.toDF("k", "bv")
-    def view = Versioned.read(spark, base, "j").drop("epoch")
-      .as[(Int, String, Long)].collect().toSet
-    // epoch 0
-    Incremental.maintainJoin(spark, base, "j",
-      a(1 -> "x", 2 -> "y"), b(1 -> 10L, 3 -> 30L), Seq("k"))
-    assert(view == Set((1, "x", 10L)))
-    // epoch 1: new A row matches old B; new B rows match old and new A
-    Incremental.maintainJoin(spark, base, "j",
-      a(3 -> "z"), b(2 -> 20L, 3 -> 31L), Seq("k"))
-    assert(view == Set((1, "x", 10L), (2, "y", 20L),
-      (3, "z", 30L), (3, "z", 31L)))
-    // epoch 2: empty B delta — only the dA x B leg contributes
-    Incremental.maintainJoin(spark, base, "j",
-      a(1 -> "x2"), b(), Seq("k"))
-    assert(view == Set((1, "x", 10L), (1, "x2", 10L), (2, "y", 20L),
-      (3, "z", 30L), (3, "z", 31L)))
-    // matches the one-shot join of everything ever fed
-    val oneShot = a(1 -> "x", 2 -> "y", 3 -> "z", 1 -> "x2")
-      .join(b(1 -> 10L, 3 -> 30L, 2 -> 20L, 3 -> 31L), Seq("k"))
-      .as[(Int, String, Long)].collect().toSet
-    assert(view == oneShot)
-    // earlier epochs reused in place: the latest manifest's epoch-0
-    // entry still points into the ORIGINAL version directory
-    val v = Versioned.latestVersion(base, "j").get
-    val m = Versioned.manifest(base, "j", v).get
-    assert(m.entries.find(_._1 == "0").get._2.startsWith("_v0/"),
-      m.entries.mkString(","))
-    // time travel to the first refresh still answers
-    assert(Versioned.read(spark, base, "j", Some(0L)).drop("epoch")
-      .as[(Int, String, Long)].collect().toSet == Set((1, "x", 10L)))
-  }
-
   test("pruning keeps version dirs still referenced by retained manifests") {
     val base = tmp("part-prune")
     val v0 = (0 until 90).map(i => (i.toLong, s"v$i", i % 3)).toDF("k", "v", "p")
-    Versioned.publishPartitioned(v0, base, "t", "p", keep = 2)
+    publishParts(base, "t", v0, "p", keep = 2)
     def touchP1(tag: String) =
       Seq((1L, tag, 1)).toDF("k", "v", "p")
     // three scoped upserts: _v0 leaves the keep=2 window but stays
     // referenced by every retained manifest (p=0, p=2 data live there)
     for (i <- 1 to 3)
-      Incremental.publishUpsertPartitioned(
-        spark, base, "t", touchP1(s"u$i"), Seq("k"), "p", keep = 2)
+      upsertParts(base, "t", touchP1(s"u$i"), "p", keep = 2)
     assert(Fs.exists(new Path(s"$base/t/_v0")), "_v0 referenced, must survive")
     assert(Versioned.read(spark, base, "t").count() == 90)
     // two FULL rewrites drop every reference to _v0 → it is pruned
     for (_ <- 1 to 2)
-      Versioned.publishPartitioned(v0, base, "t", "p", keep = 2)
+      publishParts(base, "t", v0, "p", keep = 2)
     assert(!Fs.exists(new Path(s"$base/t/_v0")), "_v0 unreferenced, pruned")
     assert(Versioned.read(spark, base, "t").count() == 90)
   }
@@ -632,22 +591,6 @@ class PublishSpec extends AnyFunSuite {
       "an unsealed journal older than the lease horizon is crash debris")
   }
 
-  test("upsertEvolve: incoming adds a column (NULL backfill) and may " +
-    "omit non-key columns") {
-    import graft.pipelines.Incremental.upsertEvolve
-    val existing = Seq((1L, "a", 10), (2L, "b", 20)).toDF("k", "v", "x")
-    // incoming: updates k=2, inserts k=3; adds column w; omits x
-    val incoming = Seq((2L, "B", "w2"), (3L, "c", "w3")).toDF("k", "v", "w")
-    val out = upsertEvolve(existing, incoming, Seq("k"))
-    assert(out.columns.toSeq == Seq("k", "v", "x", "w")) // stable prefix
-    val got = out.as[(Long, String, Option[Int], Option[String])]
-      .collect().toSet
-    assert(got == Set(
-      (1L, "a", Some(10), None),      // untouched, new col NULL
-      (2L, "B", None, Some("w2")),    // replaced; omitted col NULL
-      (3L, "c", None, Some("w3"))))   // inserted
-  }
-
   test("applyCdc: highest-seq op wins per key; D removes, I/U upsert, " +
     "untouched keys pass through; schema contract enforced") {
     import graft.pipelines.Incremental.applyCdc
@@ -683,36 +626,6 @@ class PublishSpec extends AnyFunSuite {
     assert(now == (1L to 10L).toSet -- Set(3L, 7L))
     // pre-delete version still serves until retention prunes it
     assert(Versioned.read(spark, base, "t", Some(0L)).count() == 10)
-  }
-
-  test("scd2Merge: changed rows close+reopen, unchanged/new/absent keys " +
-    "handled, closed history untouched") {
-    import graft.pipelines.Incremental.scd2Merge
-    // history at t=100: k1 already has a closed older version; k1/k2/k3
-    // current
-    val history = Seq(
-      (1L, "a-old", 50L, Some(100L)),
-      (1L, "a", 100L, None), (2L, "b", 100L, None), (3L, "c", 100L, None))
-      .toDF("k", "attr", "valid_from", "valid_to")
-      .select(col("k"), col("attr"), col("valid_from"),
-        col("valid_to").cast("long"))
-    // t=200 snapshot: k1 changed, k2 unchanged, k3 absent, k4 new
-    val snap = Seq((1L, "a2"), (2L, "b"), (4L, "d")).toDF("k", "attr")
-    val merged = scd2Merge(history, snap, Seq("k"), batchTs = 200L)
-      .as[(Long, String, Long, Option[Long])].collect().toSet
-    assert(merged == Set(
-      (1L, "a-old", 50L, Some(100L)), // closed history untouched
-      (1L, "a", 100L, Some(200L)),    // changed: closed at batch ts
-      (1L, "a2", 200L, None),         // ...and reopened with new attrs
-      (2L, "b", 100L, None),          // unchanged: passes through
-      (3L, "c", 100L, None),          // absent from snapshot: stays open
-      (4L, "d", 200L, None)))         // new key: inserted
-    // idempotence: re-merging the same snapshot changes nothing
-    val again = scd2Merge(
-      merged.toSeq.toDF("k", "attr", "valid_from", "valid_to"),
-      snap, Seq("k"), batchTs = 300L)
-      .as[(Long, String, Long, Option[Long])].collect().toSet
-    assert(again == merged)
   }
 
   test("VersionedSink: each mart run publishes a new version with time travel") {

@@ -6,7 +6,7 @@ import graft.catalog.Catalog
 import graft.ops.MediaOps
 import graft.pipelines.Compaction
 
-/** Round-trip coverage for the non-CSV sources (JSON lines, binaryFile)
+/** Round-trip coverage for the non-CSV sources (JSON lines, ORC)
   * and the small-file compaction maintenance operator.
   */
 class SourcesSpec extends AnyFunSuite {
@@ -43,26 +43,6 @@ class SourcesSpec extends AnyFunSuite {
     val a = li.agg(sum(col("l_quantity").cast("decimal(38,6)"))).collect()(0)
     val b = back.agg(sum(col("l_quantity").cast("decimal(38,6)"))).collect()(0)
     assert(a == b)
-  }
-
-  test("binaryFile source: one row per file, bytes intact, parallel scan") {
-    val d = java.nio.file.Files.createTempDirectory("binsrc")
-    val payloads = Map("a.jpg" -> "fake-jpeg-bytes", "b.wav" -> "fake-wav",
-      "c.mp4" -> "fake-video-payload")
-    payloads.foreach { case (n, s) =>
-      java.nio.file.Files.write(d.resolve(n), s.getBytes("UTF-8"))
-    }
-    val media = MediaOps.fromBinaryFiles(spark, d.toString)
-    val rows = media.select(col("media_type"), col("payload"), col("length"))
-      .as[(String, Array[Byte], Long)].collect()
-    assert(rows.length == 3)
-    assert(rows.map(_._1).sorted.toSeq == Seq("jpg", "mp4", "wav"))
-    assert(rows.forall { case (_, p, len) => p.length.toLong == len })
-    assert(rows.map(r => new String(r._2, "UTF-8")).toSet == payloads.values.toSet)
-    // ingested rows flow straight into the decode/featurize pipeline
-    val feats = MediaOps.decodeAndFeaturize(
-      media.select(col("media_id"), col("media_type"), col("payload")))
-    assert(feats.count() == 3)
   }
 
   test("image decode is REAL (javax.imageio): a generated PNG yields pixel " +
@@ -109,20 +89,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(frames.count(_.media_id == 1L) == 1)
     assert(frames.count(_.media_id == 2L) ==
       (stubLen + 31) / 32) // stub: 32-byte slices
-    // luminance histogram: real pixels only — counts must sum to the
-    // raster size and match a direct recomputation; no rows for the
-    // undecodable payload
-    val hist = MediaOps.lumaHistogram(media).collect()
-    assert(hist.forall(_.media_id == 1L))
-    assert(hist.map(_.n_pixels).sum == 20L * 12)
-    val expected = new Array[Long](16)
-    for (y <- 0 until 12; x <- 0 until 20) {
-      val rgb = (x * 41 + y * 101) & 0xffffff
-      val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff; val b = rgb & 0xff
-      expected(((77 * r + 150 * g + 29 * b) >> 8) >> 4) += 1
-    }
-    hist.foreach(hb => assert(hb.n_pixels == expected(hb.bucket),
-      s"bucket ${hb.bucket}"))
   }
 
   test("aHash near-dup: container-invariant on the REAL image path, " +
@@ -192,10 +158,10 @@ class SourcesSpec extends AnyFunSuite {
     // partitioned: p=0 fragmented over 8 files, p=1 already one file —
     // one delta publish rewrites p=0 and links p=1 unchanged
     val parted = docs.withColumn("p", col("doc_id") % 2)
-    Versioned.publishPartitioned(
+    Versioned.publishDelta(
       parted.filter(col("p") === 0).repartition(8)
         .union(parted.filter(col("p") === 1).repartition(1)),
-      base, "parted", "p")
+      base, "parted", "p", reuse = Nil)
     val m0 = Versioned.manifest(base, "parted", 0L).get
     def contents(rel: String): Map[String, Seq[Byte]] = {
       val l = java.nio.file.Files.list(java.nio.file.Paths.get(s"$base/parted/$rel"))
@@ -247,7 +213,8 @@ class SourcesSpec extends AnyFunSuite {
       Versioned.read(spark, base, "t", Some(0L))
     }
     // rollback republishes v1's content as v3; history stays linear
-    val v3 = Versioned.rollback(spark, base, "t", toVersion = 1L, keep = 2)
+    val v3 = Versioned.publish(Versioned.read(spark, base, "t", Some(1L)),
+      base, "t", keep = 2)
     assert(v3 == 3L)
     assert(Versioned.read(spark, base, "t")
       .select(max(col("v_tag"))).as[Int].collect()(0) == 1)

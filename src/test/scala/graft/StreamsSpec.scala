@@ -468,7 +468,7 @@ class StreamsSpec extends AnyFunSuite {
       val staged = java.nio.file.Files.createTempDirectory("events-twsinit")
       all.filter(unix_micros($"ts") >= cutUs)
         .write.mode("overwrite").parquet(staged.toString)
-      val q = Streams.spendTotalsStreamWithInit(
+      val q = Streams.spendTotalsStream(
           Streams.eventStream(spark, staged.toString), backfill)
         .toDF().writeStream.format("memory").queryName("twsinit")
         .outputMode("update").start()
@@ -533,42 +533,6 @@ class StreamsSpec extends AnyFunSuite {
     }
   }
 
-  test("sessionizer on transformWithState event-time timers == batch " +
-    "sessions, exactly once") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val staged = java.nio.file.Files.createTempDirectory("events-sess-v2")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      val q = Streams
-        .sessionizeStreamV2(Streams.eventStream(spark, staged.toString))
-        .toDF().writeStream.format("memory").queryName("sessv2")
-        .outputMode("append").start()
-      q.processAllAvailable()
-      // sentinel pushes the watermark past every real session's close
-      // time → every pending per-user timer fires and flushes
-      stageSentinel(staged, maxTsUs + Streams.GapUs + 100L * 1000000L)
-      q.processAllAvailable(); q.stop()
-      val emitted = spark.table("sessv2").filter($"user_id" >= 0)
-        .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-        .as[(Long, Long, Long, Long)].collect().toSeq
-      assert(emitted.size == emitted.toSet.size) // exactly once
-      val batch = EventQueries.sessions(spark, dir)
-        .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-        .as[(Long, Long, Long, Long)].collect().toSet
-      assert(emitted.toSet == batch)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   test("transformWithState (state API v2): running spend totals equal " +
     "the batch aggregate, RocksDB-backed") {
     val key = "spark.sql.streaming.stateStore.providerClass"
@@ -581,7 +545,8 @@ class StreamsSpec extends AnyFunSuite {
         java.nio.file.Paths.get(s"$dir/events.parquet"),
         staged.resolve("events.parquet"))
       val q = Streams
-        .spendTotalsStream(Streams.eventStream(spark, staged.toString))
+        .spendTotalsStream(Streams.eventStream(spark, staged.toString),
+          backfill = graft.catalog.Catalog.load(spark, dir, "events").limit(0))
         .toDF().writeStream.format("memory").queryName("tws")
         .outputMode("update").start()
       q.processAllAvailable(); q.stop()
@@ -667,16 +632,26 @@ class StreamsSpec extends AnyFunSuite {
       val q = Streams.sessionizeStreamFromRaw(Streams.eventStream(spark, staged.toString))
         .toDF().writeStream.format("memory").queryName("sess_rocks")
         .outputMode("append").start()
-      q.processAllAvailable(); q.stop()
-      val emitted = spark.table("sess_rocks")
+      def emitted = spark.table("sess_rocks").filter($"user_id" >= 0)
         .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-        .as[(Long, Long, Long, Long)].collect().toSet
+        .as[(Long, Long, Long, Long)].collect().toSeq
       val batch = EventQueries.sessions(spark, dir)
         .select("user_id", "sess_start_us", "sess_end_us", "n_events")
         .as[(Long, Long, Long, Long)].collect().toSet
-      // single batch, no sentinel: watermark-closed sessions only — must
-      // be a nonempty exact subset of the batch session set
-      assert(emitted.nonEmpty && emitted.subsetOf(batch))
+      try {
+        q.processAllAvailable()
+        // fixture only, no sentinel: watermark-closed sessions only —
+        // must be a nonempty exact subset of the batch session set
+        val early = emitted.toSet
+        assert(early.nonEmpty && early.subsetOf(batch))
+        // the sentinel pushes the watermark past every real session's
+        // close time, so the state store must flush the rest
+        stageSentinel(staged, maxTsUs + Streams.GapUs + 100L * 1000000L)
+        q.processAllAvailable()
+      } finally q.stop()
+      val all = emitted
+      assert(all.size == all.toSet.size) // exactly once
+      assert(all.toSet == batch)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)

@@ -76,48 +76,6 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(batch2.select(countDistinct(col("query_id"))).as[Long].collect()(0) == 4L)
   }
 
-  test("randomProject: JL distortion bounded, deterministic, exact top-k " +
-    "on projected vectors keeps most true neighbors") {
-    val proj = VectorOps.randomProject(emb, outDim = 32)
-    // pairwise cosine distortion over a fixed probe set
-    val origV = emb.filter(col("vec_id") < 40).orderBy("vec_id")
-      .select("embedding").as[Array[Float]].collect()
-    val projV = proj.filter(col("vec_id") < 40).orderBy("vec_id")
-      .select("embedding").as[Array[Float]].collect()
-    assert(projV.forall(_.length == 32))
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < math.min(a.length, b.length)) {
-        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-        nb += b(i).toDouble * b(i); i += 1
-      }
-      if (na == 0 || nb == 0) 0.0 else d / math.sqrt(na) / math.sqrt(nb)
-    }
-    val dists = for (i <- 0 until 40; j <- i + 1 until 40)
-      yield math.abs(cos(origV(i), origV(j)) - cos(projV(i), projV(j)))
-    info(f"JL 64->32 distortion: mean=${dists.sum / dists.size}%.4f max=${dists.max}%.4f")
-    // 2× compression is aggressive for cosine: ~0.15 mean on this corpus
-    assert(dists.sum / dists.size < 0.25, "mean cosine distortion too high")
-    assert(dists.max < 0.8, "worst-pair cosine distortion too high")
-    // deterministic across runs / layouts
-    val again = VectorOps.randomProject(emb.repartition(13), outDim = 32)
-      .filter(col("vec_id") < 40).orderBy("vec_id")
-      .select("embedding").as[Array[Float]].collect()
-    assert(projV.zip(again).forall { case (a, b) => a.sameElements(b) })
-    // Neighbor preservation is data-dependent: this synthetic corpus is
-    // near-orthogonal, so top-5 margins sit BELOW the ~1/sqrt(32) JL
-    // noise floor and fine ranking is not preserved at 2x compression
-    // (the op's docstring states this limit). Assert well above the
-    // ~0.003 random baseline, not a tuned-to-pass recall.
-    val exact = VectorOps.cosineTopK(emb, col("vec_id") < 8, 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val projected = VectorOps.cosineTopK(proj, col("vec_id") < 8, 5)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val recall = (exact & projected).size.toDouble / exact.size
-    info(f"top-5 recall after 2x projection: $recall%.2f (random ~ 0.003)")
-    assert(recall >= 0.05)
-  }
-
   test("hardNegatives: never the query's own label, top-k of exactly the " +
     "other-label candidates") {
     val labels = emb.select(col("vec_id"), col("label"))
@@ -189,7 +147,7 @@ class VectorOpsSpec extends AnyFunSuite {
   }
 
   test("PQ: deterministic codebooks, codes in range, reconstruction " +
-    "beats the global-centroid baseline, ADC recall@10 vs exact") {
+    "beats the global-centroid baseline") {
     import graft.ops.VectorOps
     val books = VectorOps.pqTrain(emb)
     assert(books.size == 8 && books.forall(_.nonEmpty))
@@ -217,20 +175,6 @@ class VectorOpsSpec extends AnyFunSuite {
     val meanBase = base.sum / base.length
     assert(meanCos > meanBase + 0.05,
       s"PQ mean cos $meanCos vs global-centroid baseline $meanBase")
-    // ADC search: top-10 by reconstructed similarity overlaps exact
-    val k = 10
-    val exact = VectorOps.cosineTopK(emb, col("vec_id") < 8, k)
-      .select(col("query_id"), col("neighbor_id"))
-      .as[(Long, Long)].collect().groupBy(_._1).view
-      .mapValues(_.map(_._2).toSet).toMap
-    val adc = VectorOps.pqTopK(emb, col("vec_id") < 8, k, books)
-      .select(col("query_id"), col("neighbor_id"))
-      .as[(Long, Long)].collect().groupBy(_._1).view
-      .mapValues(_.map(_._2).toSet).toMap
-    val recalls = exact.keys.toSeq.map(q =>
-      (exact(q) & adc.getOrElse(q, Set.empty)).size.toDouble / exact(q).size)
-    val meanRecall = recalls.sum / recalls.size
-    assert(meanRecall >= 0.3, s"ADC mean recall@10 $meanRecall")
   }
 
   test("IVF-PQ: recall vs brute force with 6/16 cells probed and " +
@@ -283,22 +227,16 @@ class VectorOpsSpec extends AnyFunSuite {
       s"MMR ${meanPairSim(mmr)} vs top-k ${meanPairSim(top5)}")
   }
 
-  test("MatVec and nearestCells fail loudly on dimension mismatch " +
+  test("nearestCells fails loudly on dimension mismatch " +
     "(no silent truncation)") {
-    // embeddings are 64-dim; a 3-column matrix / 3-dim centroid must throw
+    // embeddings are 64-dim; a 3-dim centroid must throw
     def msgs(t: Throwable): Seq[String] = Iterator.iterate(t)(_.getCause)
       .takeWhile(_ != null).take(10).map(m => String.valueOf(m.getMessage)).toSeq
-    val badM = Array(Array(1f, 2f, 3f))
-    val e1 = intercept[Throwable] {
-      emb.select(graft.functions.MatVec.matVec(col("embedding"), badM))
-        .collect()
-    }
-    assert(msgs(e1).exists(_.contains("mat_vec")), msgs(e1).mkString(" | "))
     val badModel = Seq((0, Array(1f, 0f, 0f)))
-    val e2 = intercept[Throwable] {
+    val e = intercept[Throwable] {
       emb.select(graft.functions.NearestCentroids.nearestCells(
         col("embedding"), badModel, 1)).collect()
     }
-    assert(msgs(e2).exists(_.contains("nearest_cells")), msgs(e2).mkString(" | "))
+    assert(msgs(e).exists(_.contains("nearest_cells")), msgs(e).mkString(" | "))
   }
 }

@@ -2,6 +2,7 @@
 """Count the references to each public def.
 
     python3 tools/callers.py <dir>...
+    python3 tools/callers.py --orphans <dir>...
 
 For each public, non-override `def` declared at member level of an object,
 class or trait in the `.scala` files under the given directories (or
@@ -19,6 +20,12 @@ one count and an unrelated member with the same name adds to it: a count is
 an upper bound. A zero in `main` and `bench` therefore means no caller
 outside the tests, except for calls that never spell the name (`apply`
 through `X(...)`, implicit conversions, reflection).
+
+With `--orphans`, only the defs with a zero in both `main` and `bench`
+are printed, each with its reason from `tools/callers_keep.tsv` of the
+same checkout (one `<qualified def>\t<reason>` per line; `#` starts a
+comment). The exit status is 1 when an orphan has no line there, so the
+check fails until each new orphan is deleted, used, or given a reason.
 """
 import collections
 import os
@@ -164,19 +171,48 @@ def counts(root, scope_dir):
     return idents, decls
 
 
+def keep_list(root):
+    """qualified def -> reason, from the checkout's `tools/callers_keep.tsv`."""
+    path = os.path.join(root, "tools", "callers_keep.tsv")
+    if not os.path.exists(path):
+        return {}
+    keep = {}
+    for raw in open(path, encoding="utf-8"):
+        line = raw.rstrip("\n")
+        if line.strip() and not line.lstrip().startswith("#"):
+            qual, _, reason = line.partition("\t")
+            keep[qual.strip()] = reason.strip()
+    return keep
+
+
 def main(argv):
     signal.signal(signal.SIGPIPE, signal.SIG_DFL)  # quiet under `| head`
-    if not argv:
+    orphans = argv[:1] == ["--orphans"]
+    paths = argv[1:] if orphans else argv
+    if not paths:
         sys.exit(__doc__.strip().split("\n\n")[1])
-    root = checkout_of(argv[0])
+    root = checkout_of(paths[0])
     scopes = [counts(root, d) for _, d in SCOPES]
-    print("main\tbench\ttest\tdef\tat")
-    for path in argv:
+    keep = keep_list(root) if orphans else {}
+    unlisted = []
+    print("main\tbench\ttest\tdef\tat" + ("\treason" if orphans else ""))
+    for path in paths:
         for f in scala_files(path):
             rel = os.path.relpath(os.path.abspath(f), root)
             for qual, name, line in public_defs(f):
                 refs = [idents[name] - decls[name] for idents, decls in scopes]
-                print("\t".join(map(str, refs)) + f"\t{qual}\t{rel}:{line}")
+                row = "\t".join(map(str, refs)) + f"\t{qual}\t{rel}:{line}"
+                if not orphans:
+                    print(row)
+                elif refs[0] == 0 and refs[1] == 0:
+                    if qual not in keep:
+                        unlisted.append(qual)
+                    print(row + "\t" + keep.get(qual, "NOT IN tools/callers_keep.tsv"))
+    if unlisted:
+        print(f"{len(unlisted)} def(s) with no caller outside the tests and "
+              "no reason in tools/callers_keep.tsv: " + ", ".join(unlisted),
+              file=sys.stderr)
+        sys.exit(1)
 
 
 if __name__ == "__main__":
