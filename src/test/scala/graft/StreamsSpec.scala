@@ -632,26 +632,54 @@ class StreamsSpec extends AnyFunSuite {
       val q = Streams.sessionizeStreamFromRaw(Streams.eventStream(spark, staged.toString))
         .toDF().writeStream.format("memory").queryName("sess_rocks")
         .outputMode("append").start()
-      def emitted = spark.table("sess_rocks").filter($"user_id" >= 0)
+      q.processAllAvailable(); q.stop()
+      val emitted = spark.table("sess_rocks")
         .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-        .as[(Long, Long, Long, Long)].collect().toSeq
+        .as[(Long, Long, Long, Long)].collect().toSet
       val batch = EventQueries.sessions(spark, dir)
         .select("user_id", "sess_start_us", "sess_end_us", "n_events")
         .as[(Long, Long, Long, Long)].collect().toSet
+      // single batch, no sentinel: watermark-closed sessions only — must
+      // be a nonempty exact subset of the batch session set
+      assert(emitted.nonEmpty && emitted.subsetOf(batch))
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
+  test("sessionizer on RocksDB-backed event-time timeouts == batch " +
+    "sessions, exactly once") {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val staged = java.nio.file.Files.createTempDirectory("events-sess-rocks")
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$dir/events.parquet"),
+        staged.resolve("events.parquet"))
+      val q = Streams
+        .sessionizeStreamFromRaw(Streams.eventStream(spark, staged.toString))
+        .toDF().writeStream.format("memory").queryName("sess_rocks_all")
+        .outputMode("append").start()
       try {
         q.processAllAvailable()
-        // fixture only, no sentinel: watermark-closed sessions only —
-        // must be a nonempty exact subset of the batch session set
-        val early = emitted.toSet
-        assert(early.nonEmpty && early.subsetOf(batch))
-        // the sentinel pushes the watermark past every real session's
-        // close time, so the state store must flush the rest
+        // sentinel pushes the watermark past every real session's close
+        // time → every pending per-user timeout fires and flushes
         stageSentinel(staged, maxTsUs + Streams.GapUs + 100L * 1000000L)
         q.processAllAvailable()
       } finally q.stop()
-      val all = emitted
-      assert(all.size == all.toSet.size) // exactly once
-      assert(all.toSet == batch)
+      val emitted = spark.table("sess_rocks_all").filter($"user_id" >= 0)
+        .select("user_id", "sess_start_us", "sess_end_us", "n_events")
+        .as[(Long, Long, Long, Long)].collect().toSeq
+      assert(emitted.size == emitted.toSet.size) // exactly once
+      val batch = EventQueries.sessions(spark, dir)
+        .select("user_id", "sess_start_us", "sess_end_us", "n_events")
+        .as[(Long, Long, Long, Long)].collect().toSet
+      assert(emitted.toSet == batch)
     } finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
