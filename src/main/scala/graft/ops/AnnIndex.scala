@@ -103,7 +103,11 @@ object AnnIndex {
   // and the codes disagreeing.
 
   /** Train the IVF-PQ model over `emb`, encode the full corpus, and
-    * publish all three tables as one atomic group transaction. Returns
+    * publish all three tables as one atomic group transaction. Training
+    * collects the first 4096 vectors in vec_id order to the driver in
+    * one job and runs every Lloyd round there
+    * ([[VectorOps.kmeansCentroids]], [[VectorOps.pqTrain]]); encoding is
+    * one map-only pass ([[VectorOps.ivfPqEncodeWith]]). Returns
     * the published (table → version) map. The ONLY operation that scans
     * the whole corpus; everything after serves from the index. The codes
     * land in one partition labelled with the highest batch id this
@@ -123,17 +127,14 @@ object AnnIndex {
       keep: Int, batch: Long): Map[String, Long] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val coarse = VectorOps.kmeansCentroids(emb, p.nCells)
+    val (coarse, books) = VectorOps.trainIvfPq(emb, p.nCells, p.m, p.pqK, p.dim)
     require(coarse.nonEmpty,
       "cannot build an ANN index over an empty corpus (no quantizer to train)")
-    val residuals = VectorOps.ivfResiduals(emb, coarse)
-      .pinLazy // feeds pqTrain (m passes) + encode
-    val books = VectorOps.pqTrain(residuals, p.m, p.pqK, p.dim)
     // cell-sorted within files. A codes file is written as one parquet
     // row group spanning all its cells, so serveTopK's pushed In(cell, …)
     // filter prunes no bytes yet; it drops unprobed rows after the scan.
-    // Encode is a zero-join projection over the checkpointed residuals.
-    val codes = VectorOps.encodeResiduals(residuals, books, p.dim)
+    // Encode is one map-only pass over the corpus, as in append.
+    val codes = VectorOps.ivfPqEncodeWith(emb, coarse, books, p.dim)
       .withColumn("batch", lit(batch))
       .sortWithinPartitions(col("cell"), col("vec_id"))
     val centroidsDf = coarse.toDF("cell", "centroid")

@@ -10,7 +10,13 @@ import graft.ops.Pin._
 /** Similarity-search operators over `array<float>` embedding columns
   * (north-star extensions): exact brute-force cosine top-k (the oracle
   * baseline), random-hyperplane LSH with multiprobe (the scale path),
-  * per-label centroids via a typed Aggregator UDAF.
+  * IVF and IVF-PQ search, per-label centroids via a typed Aggregator
+  * UDAF.
+  *
+  * Quantizer training (the IVF coarse cells and the PQ codebooks) reads
+  * a bounded prefix of the corpus, collected to the driver in one job,
+  * and runs every Lloyd round there ([[kmeansCentroids]]); encoding
+  * and search are Spark plans over the trained model.
   *
   * Determinism: the oracle-checked path scales floats to exact integers
   * (floor(x·10⁶)) so dot products and norms are exact BIGINT sums —
@@ -142,43 +148,69 @@ object VectorOps {
         col("neighbor_id"), col("cos_sim"))
   }
 
-  /** Deterministic k-means (Lloyd's) coarse-quantizer training: init from
-    * the first k corpus vectors, then `iters` rounds of assign (broadcast
-    * centroids, codegen cosine) + recompute (exact scaled-int means, like
-    * labelCentroids). Training reads only a bounded deterministic prefix
-    * of the corpus (`trainCap` vectors) — standard IVF practice: the
-    * coarse quantizer needs a representative sample, never the full
-    * 100 TB corpus. Only the k tiny centroid vectors ever reach the
-    * driver — the model, not the data — so the loop is cluster-safe. */
-  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 2,
-      trainCap: Int = 4096): Seq[(Int, Array[Float])] = {
+  /** The default Lloyd rounds and training-prefix size of every trainer. */
+  private val TrainIters = 2
+  private val TrainCap = 4096
+
+  /** Deterministic k-means (Lloyd's) coarse-quantizer training over a
+    * bounded prefix of the corpus: the first `trainCap` vectors in
+    * vec_id order, collected to the driver in one job, then `iters`
+    * rounds of [[lloyd]] on the driver, starting from the first k of
+    * them. Standard IVF practice: the coarse quantizer needs a
+    * representative sample, never the full corpus. The driver holds the
+    * prefix, about `trainCap × dim × 4` bytes (1 MB at the defaults and
+    * 64 dimensions); training far more cells needs far more points and
+    * a distributed trainer. */
+  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = TrainIters,
+      trainCap: Int = TrainCap): Seq[(Int, Array[Float])] =
+    lloyd(trainingPrefix(emb, trainCap), k, iters)
+
+  /** The first `trainCap` vectors of `emb` in vec_id order (rows with a
+    * null id or vector skipped), by one top-k collect: a single Spark
+    * job when `emb`'s plan has no exchange. */
+  private def trainingPrefix(emb: DataFrame,
+      trainCap: Int): Array[Array[Float]] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val train = emb.filter(col("vec_id") < trainCap)
-    var centroids: Seq[(Int, Array[Float])] = train.filter(col("vec_id") < k)
-      .orderBy("vec_id").select("embedding").as[Array[Float]]
-      .collect().toSeq.zipWithIndex.map(_.swap)
-    // an empty corpus has no quantizer to train — return the empty model
-    // (ivfTopKWith degrades to an empty search result)
-    if (centroids.isEmpty) return Nil
-    for (_ <- 0 until iters) {
-      // fused argmin assignment: one compiled pass over the broadcast
-      // centroid array per vector — no k× crossJoin inflation, no window
-      // exchange (bit-identical assignments to the relational form,
-      // asserted in VectorOpsSpec)
-      val assigned = train.select(
-        element_at(graft.functions.NearestCentroids.nearestCells(
-          col("embedding"), centroids, 1), 1).as("label"),
-        col("embedding"))
-      centroids = labelCentroids(assigned)
-        .groupBy(col("label")).agg(
-          sort_array(collect_list(struct(col("i"), col("c")))).as("cs"))
-        .select(col("label"),
-          transform(col("cs"), s => s.getField("c").cast("float")).as("cv"))
-        .as[(Int, Array[Float])].collect().toSeq.sortBy(_._1)
-    }
-    centroids
+    emb.filter(col("vec_id").isNotNull && col("embedding").isNotNull)
+      .orderBy("vec_id").limit(trainCap)
+      .select("embedding").as[Array[Float]].collect()
   }
+
+  /** Lloyd's k-means on the driver, with the arithmetic of the Spark
+    * form it replaced (VectorOpsSpec asserts element-wise equality):
+    * init from the first k vectors as cells 0..k−1; each round assigns
+    * every vector to its nearest cell ([[nearestCells]], the search
+    * [[graft.functions.NearestCentroids]] runs in a plan) and replaces
+    * each centroid by its members' exact mean — floor(x·10⁶) longs
+    * summed exactly, then `sum / n / 10⁶` in double, then float. A cell
+    * left without members is dropped and its id is not reused. An empty
+    * training set gives the empty model. */
+  private def lloyd(train: Array[Array[Float]], k: Int,
+      iters: Int): Seq[(Int, Array[Float])] = {
+    var model: Seq[(Int, Array[Float])] =
+      train.take(k).toSeq.zipWithIndex.map(_.swap)
+    for (_ <- 0 until iters if model.nonEmpty) {
+      val (ids, centroids) = (model.map(_._1).toArray, model.map(_._2).toArray)
+      model = train.groupBy(v => nearestCells(v, ids, centroids, 1)(0))
+        .toSeq.sortBy(_._1).map { case (cell, members) =>
+          (cell, Array.tabulate(members.head.length) { i =>
+            var sum = 0L
+            members.foreach(v => sum += math.floor(v(i).toDouble * 1000000).toLong)
+            (sum.toDouble / members.length / 1000000.0).toFloat
+          })
+        }
+    }
+    model
+  }
+
+  /** `v`'s `n` nearest cells on the driver, by the same search
+    * [[graft.functions.NearestCentroids]] runs in a plan. */
+  private def nearestCells(v: Array[Float], cellIds: Array[Int],
+      centroids: Array[Array[Float]], n: Int): Array[Int] =
+    graft.functions.NearestCentroids.topCells(
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(v), cellIds, centroids, n).toIntArray()
 
   /** IVF (inverted-file) approximate top-k: the second ANN scale path
     * next to LSH. Coarse quantizer = k-means-trained centroids
@@ -189,7 +221,8 @@ object VectorOps {
     * partitioning key: each executor owns whole cells and the rerank
     * never leaves the node. */
   def ivfTopK(emb: DataFrame, queryPred: Column, k: Int,
-      nCells: Int = 16, nProbe: Int = 6, trainIters: Int = 2): DataFrame =
+      nCells: Int = 16, nProbe: Int = 6,
+      trainIters: Int = TrainIters): DataFrame =
     ivfTopKWith(emb, queryPred, k, kmeansCentroids(emb, nCells, trainIters),
       nProbe)
 
@@ -204,18 +237,7 @@ object VectorOps {
     // an empty corpus trains an empty quantizer: the search result is
     // the empty top-k frame, not a crash (zero-row inputs are routine —
     // a pruned partition, a quiet ingest day)
-    if (model.isEmpty)
-      return emb.sparkSession.createDataFrame(
-        emb.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("query_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("rn",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("neighbor_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("cos_sim",
-            org.apache.spark.sql.types.DoubleType))))
+    if (model.isEmpty) return emptyTopKFrame(emb.sparkSession)
     // fused cell search ([[graft.functions.NearestCentroids]]): the
     // corpus-side assignment is ONE compiled pass per vector over the
     // reference-object centroid array — the previous
@@ -337,85 +359,44 @@ object VectorOps {
   }
 
   /** Product-quantization codebooks: split the `dim`-dim embedding into
-    * `m` contiguous subspaces and train an independent [[kmeansCentroids]]
-    * codebook per subspace (same bounded deterministic training prefix,
-    * same fused-argmin assignment). m·k tiny centroid slices — the
-    * model — are all that reaches the driver. PQ is how a 100 TB corpus
-    * fits serving memory: d floats become m small codes (d=64, m=8,
-    * k=16 → 8 nibbles ≈ 64× compression), and IVF-PQ is the standard
-    * production ANN layout (coarse cells from [[kmeansCentroids]],
-    * residual codes from here). */
+    * `m` contiguous subspaces and train an independent codebook per
+    * subspace by [[lloyd]] over the same bounded training prefix as
+    * [[kmeansCentroids]] (one collect, then every round on the driver).
+    * PQ is how a 100 TB corpus fits serving memory: d floats become m
+    * small codes (d=64, m=8, k=16 → 8 nibbles ≈ 64× compression), and
+    * IVF-PQ is the standard production ANN layout (coarse cells from
+    * [[kmeansCentroids]], residual codes from here). */
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 16, dim: Int = 64,
-      iters: Int = 2, trainCap: Int = 4096): Seq[Seq[(Int, Array[Float])]] = {
+      iters: Int = TrainIters,
+      trainCap: Int = TrainCap): Seq[Seq[(Int, Array[Float])]] =
+    pqBooks(trainingPrefix(emb, trainCap), m, k, dim, iters)
+
+  /** One [[lloyd]] codebook per subspace slice of `train`. */
+  private def pqBooks(train: Array[Array[Float]], m: Int, k: Int, dim: Int,
+      iters: Int): Seq[Seq[(Int, Array[Float])]] = {
     require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
-    val spark = emb.sparkSession
-    import spark.implicits._
     val sub = dim / m
-    // ALL m subspace codebooks train JOINTLY: one checkpoint of the
-    // bounded training prefix, one init collect, and ONE assignment +
-    // moment job per Lloyd round for every subspace together — versus
-    // the per-subspace form's m independent loops (m checkpoints,
-    // m·(iters+1) driver actions of fixed scheduling overhead each;
-    // measured ~1.5-2.5 s of pure job latency per IVF-PQ build at any
-    // scale, since the prefix is trainCap rows). Arithmetic is
-    // bit-identical to per-subspace [[kmeansCentroids]] — same init
-    // (first k prefix rows), same fused-argmin assignment against the
-    // same float centroids, same scaled-integer exact means — asserted
-    // element-wise in VectorOpsSpec.
-    val train = emb.filter(col("vec_id") < trainCap)
-      .select(col("vec_id"), col("embedding"))
-      .pinLazy
-    val first = train.filter(col("vec_id") < k).orderBy("vec_id")
-      .select("embedding").as[Array[Float]].collect()
-    if (first.isEmpty) return Seq.fill(m)(Nil)
-    var books: IndexedSeq[Seq[(Int, Array[Float])]] = (0 until m).map { s =>
-      first.zipWithIndex
-        .map { case (v, i) => (i, v.slice(s * sub, (s + 1) * sub)) }.toSeq
-    }
-    for (_ <- 0 until iters) {
-      // (subspace, label, i, xi) in one projection: per subspace the
-      // fused-argmin label against the current codebook plus the
-      // scaled-integer slice — then one grouped exact-mean job
-      val perSub = array((0 until m).map { s =>
-        val sl = slice(col("embedding"), s * sub + 1, sub)
-        struct(lit(s).as("s"),
-          element_at(graft.functions.NearestCentroids.nearestCells(
-            sl, books(s), 1), 1).as("label"),
-          scaled(sl).as("sv"))
-      }: _*)
-      val moments = train.select(explode(perSub).as("a"))
-        .select(col("a.s").as("s"), col("a.label").as("label"),
-          posexplode(col("a.sv")).as(Seq("i", "xi")))
-        .groupBy(col("s"), col("label"), col("i"))
-        .agg((sum(col("xi")).cast("double") / count(lit(1)) / 1000000.0)
-          .as("c"))
-        .as[(Int, Int, Int, Double)].collect()
-      books = (0 until m).map { s =>
-        moments.filter(_._1 == s).groupBy(_._2).toSeq.sortBy(_._1)
-          .map { case (label, rows) =>
-            (label, rows.sortBy(_._3).map(_._4.toFloat).toArray)
-          }
-      }
-    }
-    books.map(_.toSeq)
+    (0 until m).map(s =>
+      lloyd(train.map(_.slice(s * sub, (s + 1) * sub)), k, iters))
   }
 
-  /** The round-8 per-subspace training loop, kept verbatim as the
-    * equality oracle for the joint [[pqTrain]] (VectorOpsSpec asserts
-    * element-wise identical codebooks). */
-  private[graft] def pqTrainPerSubspace(emb: DataFrame, m: Int = 8,
-      k: Int = 16, dim: Int = 64, iters: Int = 2,
-      trainCap: Int = 4096): Seq[Seq[(Int, Array[Float])]] = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into m=$m subspaces")
-    val sub = dim / m
-    (0 until m).map { s =>
-      kmeansCentroids(
-        emb.filter(col("vec_id") < trainCap)
-          .select(col("vec_id"),
-            slice(col("embedding"), s * sub + 1, sub).as("embedding"))
-          .pinLazy,
-        k, iters, trainCap)
-    }
+  /** The IVF-PQ model of [[ivfPqTopK]] and [[graft.ops.AnnIndex.build]]:
+    * the coarse quantizer ([[kmeansCentroids]]) and the codebooks of the
+    * prefix's residuals ([[pqTrain]] over [[ivfResiduals]]), both at
+    * their default `iters` and `trainCap`, from ONE collect of the
+    * training prefix — the residuals are computed on the driver with
+    * [[ivfResiduals]]' subtract. An empty corpus gives an empty coarse
+    * model. */
+  private[ops] def trainIvfPq(emb: DataFrame, nCells: Int, m: Int, pqK: Int,
+      dim: Int): (Seq[(Int, Array[Float])], Seq[Seq[(Int, Array[Float])]]) = {
+    val prefix = trainingPrefix(emb, TrainCap)
+    val coarse = lloyd(prefix, nCells, TrainIters)
+    if (coarse.isEmpty) return (Nil, Nil)
+    val (ids, centroids) = (coarse.map(_._1).toArray, coarse.map(_._2).toArray)
+    val coarseMap = coarse.toMap
+    val residuals = prefix.map(v =>
+      residual(v, coarseMap(nearestCells(v, ids, centroids, 1)(0))))
+    (coarse, pqBooks(residuals, m, pqK, dim, TrainIters))
   }
 
   /** Encode every vector as its m nearest-subcentroid codes — one fused
@@ -429,13 +410,7 @@ object VectorOps {
     if (books.isEmpty || books.exists(_.isEmpty))
       return emb.select(col("vec_id"),
         array().cast("array<int>").as("codes")).limit(0)
-    val m = books.size
-    val sub = dim / m
-    val codes = array((0 until m).map { s =>
-      element_at(graft.functions.NearestCentroids.nearestCells(
-        slice(col("embedding"), s * sub + 1, sub), books(s), 1), 1)
-    }: _*)
-    emb.select(col("vec_id"), codes.as("codes"))
+    emb.select(col("vec_id"), pqCodes(books, dim).as("codes"))
   }
 
   /** Reconstruction audit: decode each vector's codes back to the
@@ -495,9 +470,10 @@ object VectorOps {
 
   /** Residuals v − centroid(nearest cell) against a FROZEN coarse model:
     * `(vec_id, embedding = residual, cell)`. One fused-argmin pass +
-    * one partition-local subtract — no shuffle. Shared by the one-shot
-    * [[ivfPqTopK]] and the published-index build/append paths
-    * ([[graft.ops.AnnIndex]]), so both quantize identically. */
+    * one partition-local subtract — no shuffle. The encode stage of
+    * [[ivfPqEncodeWith]], so the one-shot [[ivfPqTopK]] and the
+    * published-index build/append paths ([[graft.ops.AnnIndex]])
+    * quantize identically. */
   def ivfResiduals(emb: DataFrame,
       coarse: Seq[(Int, Array[Float])]): DataFrame = {
     val spark = emb.sparkSession
@@ -508,20 +484,25 @@ object VectorOps {
           col("embedding"), coarse, 1), 1).as("cell"))
       .as[(Long, Array[Float], Int)]
       .mapPartitions(_.map { case (id, v, cell) =>
-        val c = coarseMap(cell)
-        val r = new Array[Float](v.length)
-        var i = 0
-        while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
-        (id, r, cell)
+        (id, residual(v, coarseMap(cell)), cell)
       }).toDF("vec_id", "embedding", "cell")
   }
 
-  /** The m-subspace PQ code array as ONE projection over a residual
-    * frame's `embedding` column — the same per-subspace fused-argmin
-    * expressions as [[pqEncode]], but composable into an existing
-    * select so encode rides the residual pass with NO vec_id join (the
-    * join form shuffles the corpus on vec_id just to glue `cell` back
-    * onto `codes` that were computed from the same rows). */
+  /** v − c, element by element in float. */
+  private def residual(v: Array[Float], c: Array[Float]): Array[Float] = {
+    val r = new Array[Float](v.length)
+    var i = 0
+    while (i < v.length) { r(i) = v(i) - c(i); i += 1 }
+    r
+  }
+
+  /** The m-subspace PQ code array of the `embedding` column as ONE
+    * projection: per subspace, the fused-argmin
+    * [[graft.functions.NearestCentroids]] search over its codebook.
+    * Composable into an existing select, so encode rides the residual
+    * pass with NO vec_id join (the join form shuffles the corpus on
+    * vec_id just to glue `cell` back onto `codes` that were computed
+    * from the same rows). */
   private def pqCodes(books: Seq[Seq[(Int, Array[Float])]],
       dim: Int): Column = {
     val m = books.size
@@ -536,20 +517,15 @@ object VectorOps {
     * compute residuals, PQ-encode them → `(vec_id, cell, codes)` — the
     * complete compressed representation the serving tier stores (~m
     * small codes + a cell id per vector instead of d floats). One
-    * map-only pass: cell assignment, residual subtract, and all m code
-    * lookups fuse into a single projection — no join, no shuffle. This
-    * is the O(batch) admission path: appending a new batch to a
-    * published index runs exactly this over the batch, never touching
-    * the existing corpus ([[graft.ops.AnnIndex.append]]). */
+    * map-only pass: cell assignment and residual subtract
+    * ([[ivfResiduals]]), then all m code lookups in one projection — no
+    * join, no shuffle. [[graft.ops.AnnIndex.build]] encodes its whole
+    * corpus with it, and it is the O(batch) admission path: appending a
+    * new batch to a published index runs exactly this over the batch,
+    * never touching the existing corpus ([[graft.ops.AnnIndex.append]]). */
   def ivfPqEncodeWith(emb: DataFrame, coarse: Seq[(Int, Array[Float])],
-      books: Seq[Seq[(Int, Array[Float])]], dim: Int = 64): DataFrame =
-    encodeResiduals(ivfResiduals(emb, coarse), books, dim)
-
-  /** `(vec_id, cell, codes)` over an ALREADY-COMPUTED residual frame —
-    * for callers holding a (checkpointed) [[ivfResiduals]] output, like
-    * [[graft.ops.AnnIndex.build]]. Same zero-join projection. */
-  def encodeResiduals(residuals: DataFrame,
       books: Seq[Seq[(Int, Array[Float])]], dim: Int = 64): DataFrame = {
+    val residuals = ivfResiduals(emb, coarse)
     if (books.isEmpty || books.exists(_.isEmpty))
       return residuals.select(col("vec_id"), lit(0).as("cell"),
         array().cast("array<int>").as("codes")).limit(0)
@@ -598,9 +574,7 @@ object VectorOps {
     val cellIds = coarse.map(_._1).toArray
     val centroids = coarse.map(_._2).toArray
     ProbedQueries(rows.map(_._1), rows.map(_._2), rows.map { case (_, v) =>
-      graft.functions.NearestCentroids.topCells(
-        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(v), cellIds, centroids, nProbe).toIntArray()
+      nearestCells(v, cellIds, centroids, nProbe)
     })
   }
 
@@ -735,24 +709,17 @@ object VectorOps {
     * This one-shot form trains, encodes, and searches in a single call;
     * the production decomposition — publish the trained model + codes
     * once, serve and append O(batch) forever after — is
-    * [[graft.ops.AnnIndex]], built from the same [[ivfResiduals]] /
-    * [[pqTrain]] / [[ivfPqEncodeWith]] / [[ivfPqRank]] stages, so the
-    * two paths return bit-identical rankings (AnnIndexSpec). */
+    * [[graft.ops.AnnIndex]], built from the same [[trainIvfPq]] /
+    * [[ivfPqEncodeWith]] / [[ivfPqRank]] stages, so the two paths return
+    * bit-identical rankings (AnnIndexSpec). */
   def ivfPqTopK(emb: DataFrame, queryPred: Column, k: Int,
       nCells: Int = 16, nProbe: Int = 6, m: Int = 8, pqK: Int = 16,
       dim: Int = 64): DataFrame = {
-    val coarse = kmeansCentroids(emb, nCells)
+    val (coarse, books) = trainIvfPq(emb, nCells, m, pqK, dim)
     if (coarse.isEmpty) return emptyTopKFrame(emb.sparkSession)
-    val residuals = ivfResiduals(emb, coarse)
-      .pinLazy // feeds pqTrain (m passes) + encode
-    val books = pqTrain(residuals, m, pqK, dim)
     // compressed representation: (vec_id, cell, codes) is ALL the
-    // serving tier keeps; recon = centroid(cell) + decode(codes).
-    // Codes are ONE projection over the checkpointed residuals — no
-    // vec_id self-join (the old form shuffled the corpus just to glue
-    // cell onto codes computed from the same rows)
-    val codes = residuals.select(col("vec_id"), col("cell"),
-      pqCodes(books, dim).as("codes"))
+    // serving tier keeps; recon = centroid(cell) + decode(codes)
+    val codes = ivfPqEncodeWith(emb, coarse, books, dim)
     val queries = emb.filter(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     ivfPqRank(codes, queries, k, coarse, books, nProbe, dim)

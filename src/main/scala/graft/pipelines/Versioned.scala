@@ -974,7 +974,13 @@ object Versioned {
     * untouched partitions' bytes are never read or written: the new
     * version references their existing files in place. This is the
     * partition-scoped refresh a 100 TB table needs — an upsert touching
-    * 1 of N partitions costs O(1/N) of a full rewrite. */
+    * 1 of N partitions costs O(1/N) of a full rewrite.
+    *
+    * The single-table form of [[GroupDelta]], kept for
+    * [[Compaction.compact]], which rewrites one table in a baseDir that
+    * group families may share: a one-member group journal would become
+    * the baseDir's latest committed group, and [[readGroup]] would then
+    * return only the compacted table. */
   def publishDelta(delta: DataFrame, baseDir: String, name: String,
       partCol: String, reuse: Seq[(String, String)], keep: Int = 3): Long =
     publishStaged(baseDir, name, keep)(stage(_, delta, Some(partCol -> reuse)))

@@ -49,33 +49,11 @@ object Streams {
       .select(unix_micros(col("window.start")).as("win_start_us"),
         col("event_type"), col("n"), col("sum_value"))
 
-  case class Ev(user_id: Long, ts_us: Long, value: Double)
   case class SessionState(events: List[(Long, Double)])
   case class Session(user_id: Long, sess_start_us: Long, sess_end_us: Long,
       n_events: Long, sum_value: Double)
 
   val GapUs: Long = 5 * 60 * 1000000L
-
-  /** Custom-state sessionizer, BATCH form: flatMapGroupsWithState in a
-    * batch query sees each user's complete history exactly once (state
-    * starts empty, timeouts never fire), so emitting every gap-split
-    * session of the group is the correct-and-complete batch semantics —
-    * same output as session_window in EventQueries.sessions.
-    *
-    * This form must NOT be used under a real stream (it would re-emit
-    * open sessions every micro-batch and hold all events in state);
-    * the streaming surface is [[sessionizeStream]]. */
-  def sessionize(events: Dataset[Ev]): Dataset[Session] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, it: Iterator[Ev], state: GroupState[SessionState]) =>
-          val all = it.map(e => (e.ts_us, e.value)).toList.sortBy(_._1)
-          splitSessions(uid, all).iterator
-      }
-  }
 
   /** Custom-state sessionizer, STREAMING form: EventTimeTimeout +
     * watermark. Each invocation merges the state's open tail with the
@@ -958,7 +936,7 @@ object Streams {
         OutputMode.Update())
   }
 
-  /** Pure gap-split (shared by the stateful op and its spec oracle). */
+  /** Pure gap-split: the session kernel of [[sessionizeStream]]. */
   def splitSessions(uid: Long, sorted: Seq[(Long, Double)]): Seq[Session] = {
     if (sorted.isEmpty) return Nil
     val out = scala.collection.mutable.ArrayBuffer.empty[Session]

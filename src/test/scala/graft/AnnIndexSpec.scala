@@ -978,7 +978,6 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("serve plan: no window and at most one exchange; probe cells of a " +
     "driver-built query frame start no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val idx = tmp()
     AnnIndex.build(emb, idx)
     val local = emb.filter(col("vec_id") < 4)
@@ -991,34 +990,48 @@ class AnnIndexSpec extends AnyFunSuite {
     val (coarse, books) = AnnIndex.loadModel(spark, idx)
     val codes = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
       .select("vec_id", "cell", "codes")
-    // jobs carry the submitting thread's local properties; the listener
-    // bus delivers in order, so once the marker job is seen every job
-    // started inside the window before it has been seen too
-    val key = "graft.spec.window"
-    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key)))
-          .foreach(started.add)
+    val (ranked, jobs) = SparkJobs.counted(spark) {
+      VectorOps.ivfPqRank(codes, local, 5, coarse, books, nProbe = 6,
+        dim = coarse.head._2.length)
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "probe")
-      val ranked = try VectorOps.ivfPqRank(codes, local, 5, coarse, books,
-          nProbe = 6, dim = coarse.head._2.length)
-        finally sc.setLocalProperty(key, null)
-      sc.setLocalProperty(key, "marker")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 30000000000L
-      while (!started.contains("marker")) {
-        assert(System.nanoTime() < deadline, "marker job never reported")
-        Thread.sleep(10)
-      }
-      assert(!started.contains("probe"),
-        "computing probe cells for a driver-built query frame ran a job")
-      assert(collectTopK(ranked).size == 4 * 5)
-    } finally sc.removeSparkListener(listener)
+    assert(jobs == 0,
+      "computing probe cells for a driver-built query frame ran a job")
+    assert(collectTopK(ranked).size == 4 * 5)
+  }
+
+  test("build trains from one collected prefix: at most 4 Spark jobs") {
+    val idx = tmp()
+    val (_, jobs) = SparkJobs.counted(spark)(AnnIndex.build(emb, idx))
+    info(s"AnnIndex.build started $jobs jobs")
+    assert(jobs <= 4, s"AnnIndex.build started $jobs jobs")
+  }
+
+  test("the training prefix is the first vectors in vec_id order: a " +
+    "corpus with every id shifted by 10,000 builds the same cells, codes " +
+    "and serves") {
+    val shift = 10000L
+    val shifted = emb.withColumn("vec_id", col("vec_id") + shift)
+    val (a, b) = (tmp(), tmp())
+    AnnIndex.build(emb, a)
+    AnnIndex.build(shifted, b)
+    val (coarseA, booksA) = AnnIndex.loadModel(spark, a)
+    val (coarseB, booksB) = AnnIndex.loadModel(spark, b)
+    def same(x: Seq[(Int, Array[Float])], y: Seq[(Int, Array[Float])]) =
+      x.map(_._1) == y.map(_._1) &&
+        x.zip(y).forall { case ((_, u), (_, v)) => u.sameElements(v) }
+    assert(same(coarseA, coarseB))
+    assert(booksA.size == booksB.size &&
+      booksA.zip(booksB).forall { case (x, y) => same(x, y) })
+    def codes(idx: String, d: Long) =
+      Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+        .select((col("vec_id") - d).as("vec_id"), col("cell"), col("codes"))
+        .as[(Long, Int, Array[Int])].collect()
+        .map { case (id, cell, cs) => (id, cell, cs.toSeq) }.sortBy(_._1).toSeq
+    assert(codes(a, 0L) == codes(b, shift))
+    def queries(d: Long) = emb.filter(col("vec_id") < 8)
+      .select((col("vec_id") + d).as("query_id"), col("embedding").as("qv"))
+    val servedB = collectTopK(AnnIndex.serveTopK(spark, b, queries(shift), 5))
+      .map { case (q, rn, n, sim) => (q - shift, rn, n - shift, sim) }
+    assert(collectTopK(AnnIndex.serveTopK(spark, a, queries(0L), 5)) == servedB)
   }
 }

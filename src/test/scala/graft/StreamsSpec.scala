@@ -882,17 +882,4 @@ class StreamsSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$out/tumbling/_LEASE")))
   }
-
-  test("stateful sessionizer == session_window batch semantics") {
-    val events = graft.catalog.Catalog.load(spark, dir, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Streams.Ev]
-    val sessions = Streams.sessionize(events)
-      .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val batch = EventQueries.sessions(spark, dir)
-      .select("user_id", "sess_start_us", "sess_end_us", "n_events")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(sessions == batch)
-  }
 }

@@ -136,14 +136,45 @@ class VectorOpsSpec extends AnyFunSuite {
 
   test("joint pqTrain == per-subspace training, element-wise (the round-9 " +
     "one-job-per-round rewrite must not move a single centroid bit)") {
-    import graft.ops.VectorOps
+    // the reference: per subspace, the Spark loop of one job per round
     val joint = VectorOps.pqTrain(emb)
-    val perSub = VectorOps.pqTrainPerSubspace(emb)
+    val perSub = SparkLloyd.pqTrain(emb)
     assert(joint.size == perSub.size)
-    assert(joint.zip(perSub).forall { case (a, b) =>
-      a.map(_._1) == b.map(_._1) &&
-        a.zip(b).forall { case ((_, x), (_, y)) => x.sameElements(y) }
-    })
+    assert(joint.zip(perSub).forall { case (a, b) => sameModel(a, b) })
+  }
+
+  private def sameModel(a: Seq[(Int, Array[Float])],
+      b: Seq[(Int, Array[Float])]): Boolean =
+    a.map(_._1) == b.map(_._1) &&
+      a.zip(b).forall { case ((_, x), (_, y)) => x.sameElements(y) }
+
+  test("driver-side kmeansCentroids == the job-per-round Spark loop, " +
+    "element-wise, at k = 1 and 16 and iters 0, 1, 2, an emptied cell " +
+    "included") {
+    // vector 1 copies vector 0: initial cells 0 and 1 coincide, every tie
+    // goes to the lower cell, so cell 1 empties in the first round
+    val v0 = emb.filter(col("vec_id") === 0).select("embedding")
+      .as[Array[Float]].head()
+    val twin = emb.withColumn("embedding",
+      when(col("vec_id") === 1, typedLit(v0)).otherwise(col("embedding")))
+    for (corpus <- Seq(emb, twin); k <- Seq(1, 16); iters <- 0 to 2) {
+      val driver = VectorOps.kmeansCentroids(corpus, k, iters)
+      assert(sameModel(driver, SparkLloyd.kmeansCentroids(corpus, k, iters)),
+        s"k = $k, iters = $iters")
+    }
+    val emptied = VectorOps.kmeansCentroids(twin, 16, 1).map(_._1)
+    assert(emptied.size == 15 && !emptied.contains(1), emptied)
+  }
+
+  test("kmeansCentroids and pqTrain each start exactly one Spark job, " +
+    "whatever iters is") {
+    for (iters <- Seq(0, 2, 5)) {
+      val (_, kmJobs) = SparkJobs.counted(spark)(
+        VectorOps.kmeansCentroids(emb, 16, iters))
+      val (_, pqJobs) = SparkJobs.counted(spark)(
+        VectorOps.pqTrain(emb, iters = iters))
+      assert((kmJobs, pqJobs) == ((1, 1)), s"iters = $iters")
+    }
   }
 
   test("PQ: deterministic codebooks, codes in range, reconstruction " +
