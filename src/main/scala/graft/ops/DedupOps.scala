@@ -97,6 +97,24 @@ object DedupOps {
       }.toDF("doc_id", "shingle")
   }
 
+  /** The exact verify step of every Jaccard pair join: match the
+    * candidate pairs (doc_a, doc_b, …) to both sides' FULL shingle sets
+    * `docsets` (doc_id, shs, n_sh), score
+    * jaccard = |∩| / (|A|+|B|−|∩|) with `array_intersect`, and keep the
+    * pairs at or above `threshold` as the candidate columns + jaccard. */
+  private def verifiedJaccard(cand: DataFrame, docsets: DataFrame,
+      threshold: Double): DataFrame =
+    cand
+      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
+      .withColumn("n_common",
+        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
+      .withColumn("jaccard",
+        col("n_common").cast("double") /
+          (col("a.n_sh") + col("b.n_sh") - col("n_common")))
+      .filter(col("jaccard") >= threshold)
+      .select(cand.columns.map(col) :+ col("jaccard"): _*)
+
   /** Exact n-gram Jaccard near-duplicate pairs via shingle equi-join:
     * candidates share ≥1 shingle with df ≤ maxDf ([[capHotKeys]] — the
     * cap bounds the self-join's quadratic hot-key blowup at corpus
@@ -119,16 +137,7 @@ object DedupOps {
         col("x.shingle") === col("y.shingle") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("a.n_sh") + col("b.n_sh") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedJaccard(cand, docsets, threshold)
   }
 
   /** Exact Jaccard pairs via PPJoin-style PREFIX FILTERING (Bayardo et
@@ -163,16 +172,7 @@ object DedupOps {
         col("x.sh_h") === col("y.sh_h") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("a.n_sh") + col("b.n_sh") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedJaccard(cand, docsets, threshold)
   }
 
   /** Containment near-dup pairs: |A∩B| / min(|A|,|B|) ≥ threshold.
@@ -351,16 +351,7 @@ object DedupOps {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("a.n_sh") + col("b.n_sh") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedJaccard(cand, docsets, threshold)
   }
 
   /** Winnowed document fingerprints (Schleimer/Wilkerson/Aiken): k-gram
@@ -436,16 +427,7 @@ object DedupOps {
         col("a.sh_h") === col("b.sh_h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    cand
-      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (col("a.n_sh") + col("b.n_sh") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    verifiedJaccard(cand, docsets, threshold)
   }
 
   /** Distributed min-label propagation over a symmetric (u, v) edge
@@ -569,7 +551,7 @@ object DedupOps {
     * `(doc_a, doc_b, …)` — the [[dedupClusters]] solver with candidate
     * generation factored out, for callers that need components at
     * SEVERAL thresholds from one shingle pass: the Jaccard threshold
-    * only enters [[jaccardPairsHashed]]'s final filter, so
+    * only enters the pair joins' final filter, so
     * `pairs(τ_hi) ≡ pairs(τ_lo).filter(jaccard ≥ τ_hi)` and the whole
     * candidate/verify machinery — the expensive part at corpus scale —
     * never reruns ([[graft.pipelines.CorpusPublisher]] clusters at both
@@ -746,8 +728,8 @@ object DedupOps {
     * machinery run serve two thresholds downstream — the
     * [[graft.pipelines.CorpusPublisher]] two-threshold discipline
     * (dedup at the high cut, split/contamination scope at the loose
-    * one) — exactly like the jaccardPairsHashed reuse in the full
-    * publish path.
+    * one), for an append and for a full publish (an empty `corpus`)
+    * alike.
     *
     * @return (doc_b, doc_a, other_side, jaccard): doc_b is always the
     *         batch doc; other_side is "c" (corpus) or "b" (smaller-id
@@ -773,15 +755,7 @@ object DedupOps {
       .distinct()
     val docsets = cmd.union(bmd).select(col("doc_id"), col("shs"),
       size(col("shs")).cast("long").as("n_sh"))
-    cand
-      .join(docsets.as("a"), col("doc_a") === col("a.doc_id"))
-      .join(docsets.as("b"), col("doc_b") === col("b.doc_id"))
-      .withColumn("n_common",
-        size(array_intersect(col("a.shs"), col("b.shs"))).cast("long"))
-      .withColumn("jaccard", col("n_common").cast("double") /
-        (col("a.n_sh") + col("b.n_sh") - col("n_common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_b"), col("doc_a"), col("other_side"), col("jaccard"))
+    verifiedJaccard(cand, docsets, threshold)
   }
 
   /** End-to-end corpus cleaning — the composed training-data pipeline:

@@ -11,18 +11,22 @@ import graft.ops.Pin._
   * atomic versioned publish a training job can actually consume.
   *
   * Stages (all existing, spec'd operators — this file only composes):
-  *   1. quality gate + exact-dup keeper + near-dup cluster
-  *      representative ([[DedupOps.corpusClean]], threshold
-  *      `dedupThreshold`);
-  *   2. leakage-safe split assignment ([[DedupOps.leakageSafeSplits]])
-  *      at a LOOSER `splitThreshold`: documents too dissimilar to
-  *      dedup away but similar enough to contaminate an eval set land
-  *      in the SAME split — the two-threshold discipline (dedup at
-  *      high similarity, contamination-guard at moderate similarity)
-  *      that a single-threshold pipeline gets wrong;
-  *   3. per-split budget manifest (docs, whitespace tokens, chars) —
+  *   1. admission ([[admit]]) of the offered documents against a
+  *      published snapshot: quality gate, exact-dup keeper, near-dup
+  *      cluster representative at `dedupThreshold`, and a cluster-keyed
+  *      split at a LOOSER `splitThreshold` — documents too dissimilar to
+  *      dedup away but similar enough to contaminate an eval set land in
+  *      the SAME split, the two-threshold discipline (dedup at high
+  *      similarity, contamination-guard at moderate similarity) that a
+  *      single-threshold pipeline gets wrong. [[appendBatch]] admits a
+  *      batch against the published corpus; [[publish]] admits the whole
+  *      corpus against an EMPTY snapshot, where every rule reduces to the
+  *      full-corpus one: the kept set is [[DedupOps.corpusClean]]'s and
+  *      the splits are [[DedupOps.leakageSafeSplits]]' at
+  *      `splitThreshold` (CorpusPublisherSpec pins both);
+  *   2. per-split budget manifest (docs, whitespace tokens, chars) —
   *      the numbers a mixture/curriculum planner reads;
-  *   4. ONE [[Versioned.publishGroupMembers]] transaction:
+  *   3. ONE [[Versioned.publishGroupMembers]] transaction:
   *      `corpus_train` / `corpus_val` / `corpus_test` (doc_id, lang,
   *      quality, token_count, text, batch) + `corpus_manifest` —
   *      readers snapshot all four consistently via
@@ -53,87 +57,145 @@ object CorpusPublisher {
   private val SplitTables =
     Seq(TrainTable -> "train", ValTable -> "val", TestTable -> "test")
 
-  /** The kept, split-assigned corpus rows (pre-publish view):
-    * (doc_id, lang, quality, token_count, text, split).
+  /** The admission rules, the ONE implementation behind [[publish]] and
+    * [[appendBatch]]: vet the batch `b` (doc_id, lang, text) against the
+    * `published` snapshot (doc_id, text, split), whose ids are all below
+    * the batch's (the monotone-id contract), and return the admitted
+    * rows (doc_id, lang, quality, token_count, text, split). The rules
+    * are listed on [[appendBatch]]. With an empty `published` (planned
+    * as an empty relation, so the corpus-side joins prune away) each
+    * rule reduces to the full-publish one: no batch doc is a corpus
+    * copy, no batch cluster touches the corpus or bridges splits, the
+    * near tier keeps each batch cluster's min-id representative and the
+    * split is [[DedupOps.splitOf]] of the batch cluster's rep.
     *
     * The shingle/candidate/verify machinery — the expensive stage at
     * corpus scale — runs ONCE: pairs are scored at the looser
-    * `splitThreshold` and the dedup components reuse the same frame
-    * filtered to `dedupThreshold` (the threshold only enters the final
-    * Jaccard cut, so the filtered set is exactly what scoring at the
-    * higher threshold would produce; CorpusPublisherSpec pins equality
-    * with the independently-computed [[DedupOps.corpusClean]]). */
-  def prepared(docs: DataFrame, qualityMin: Double = 0.38,
-      dedupThreshold: Double = 0.5, splitThreshold: Double = 0.3,
-      trainPct: Int = 80, valPct: Int = 10): DataFrame = {
+    * `splitThreshold` and the dedup cut is a filter over the same frame
+    * (the threshold only enters the final Jaccard cut, so the filtered
+    * set is exactly what scoring at the higher threshold would
+    * produce). */
+  private def admit(published: DataFrame, b: DataFrame, qualityMin: Double,
+      dedupThreshold: Double, splitThreshold: Double, trainPct: Int,
+      valPct: Int): DataFrame = {
     require(splitThreshold <= dedupThreshold,
       "the split scope must be at most as strict as the dedup cut")
-    val pairsLow = DedupOps.jaccardPairsHashed(docs,
-        threshold = splitThreshold)
-      .pinLazy // feeds both component solves below
-    val repsHigh = DedupOps.clustersFromPairs(docs,
-        pairsLow.filter(col("jaccard") >= dedupThreshold))
-      .filter(col("doc_id") === col("cluster_rep")).select(col("doc_id"))
-    val quality = TextOps.qualityScored(docs)
-      .select(col("doc_id"), col("quality"))
-    val keepers = DedupOps.exactGroups(docs)
+    // exact tier, batch side: the min-id keeper of each sha256 group
+    val exactKeepers = DedupOps.exactGroups(b)
       .select(col("keep_id").as("doc_id"))
-    val kept = docs.select(col("doc_id"), col("lang"))
+
+    // the scored admission pairs, ONCE at the looser threshold; both
+    // cuts below are filters over this one frame (two-threshold reuse)
+    val pairsLow = DedupOps.incrementalJaccardPairs(
+        published.select(col("doc_id"), col("text")), b,
+        threshold = splitThreshold)
+      .pinLazy
+
+    // near tier at the dedup cut: components over the batch's pairs on
+    // BOTH sides. Every published id is below every batch id, so a batch
+    // doc is its component's rep exactly when its batch cluster touches
+    // no published doc and it is that cluster's min id
+    val nearKept = DedupOps.clustersFromPairs(b,
+        pairsLow.filter(col("jaccard") >= dedupThreshold))
+      .filter(col("doc_id") === col("cluster_rep"))
+      .select(col("doc_id"))
+
+    // split tier at the loose cut: batch clusters + their published
+    // neighbors' splits → inherit / new-cluster rule / bridge drop
+    val lowClusters = DedupOps.clustersFromPairs(b,
+      pairsLow.filter(col("other_side") === "b"))
+    val neighborSplits = pairsLow.filter(col("other_side") === "c")
+      .join(published.select(col("doc_id").as("doc_a"), col("split")), "doc_a")
+      .join(lowClusters.select(col("doc_id").as("doc_b"),
+        col("cluster_rep")), "doc_b")
+      .groupBy(col("cluster_rep"))
+      .agg(countDistinct(col("split")).as("n_splits"),
+        min(col("split")).as("corpus_split"))
+    val assigned = lowClusters
+      .join(neighborSplits, Seq("cluster_rep"), "left")
+      .filter(coalesce(col("n_splits"), lit(1L)) === 1L) // bridges out
+      .select(col("doc_id"),
+        coalesce(col("corpus_split"),
+          DedupOps.splitOf(col("cluster_rep"), trainPct, valPct)).as("split"))
+
+    val quality = TextOps.qualityScored(b)
+      .select(col("doc_id"), col("quality"))
+    b.select(col("doc_id"), col("lang"))
       .join(quality, "doc_id")
       .filter(col("quality") >= qualityMin)
-      .join(repsHigh, Seq("doc_id"), "left_semi")
-      .join(keepers, Seq("doc_id"), "left_semi")
-    val splits = DedupOps.clustersFromPairs(docs, pairsLow)
-      .withColumn("split", splitOf(col("cluster_rep"), trainPct, valPct))
-      .select(col("doc_id"), col("split"))
-    kept
-      .join(docs.select(col("doc_id"), col("text")), "doc_id")
-      .join(splits, "doc_id")
+      .join(nearKept, Seq("doc_id"), "left_semi")
+      .join(exactKeepers, Seq("doc_id"), "left_semi")
+      .join(b.select(col("doc_id"), col("text")), "doc_id")
+      // exact tier, corpus side: nothing identical to a published doc
+      .join(published.select(sha2(col("text"), 256).as("h")),
+        sha2(col("text"), 256) === col("h"), "left_anti")
+      .join(assigned, "doc_id")
       .select(col("doc_id"), col("lang"), col("quality"),
         size(TextOps.tokens(col("text"))).cast("long").as("token_count"),
         col("text"), col("split"))
   }
 
-  /** The deterministic split rule, shared by the full publish and the
-    * standalone-cluster path of [[appendBatch]] (it must be the SAME
-    * function or batch admission diverges from a full republish). */
-  private def splitOf(clusterRep: org.apache.spark.sql.Column,
-      trainPct: Int, valPct: Int): org.apache.spark.sql.Column =
-    when(clusterRep % 100 < trainPct, "train")
-      .when(clusterRep % 100 < trainPct + valPct, "val")
-      .otherwise("test")
+  /** The per-split budget (n_docs, n_tokens, n_chars) of rows carrying
+    * (split, token_count, text); only non-empty splits get a row. */
+  private def budget(rows: DataFrame): DataFrame =
+    rows.groupBy(col("split"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("token_count")).as("n_tokens"),
+        sum(length(col("text")).cast("long")).as("n_chars"))
 
-  /** A split table's member for a group publish: normally one new
-    * `batch=` partition (GroupDelta) linking `reuse`; but a partitioned
-    * version may not be EMPTY (the manifest must name at least one
-    * partition directory), so an empty side with nothing to link is
-    * published as a plain empty version instead — same columns, and
-    * a later append over it simply starts its partition history then. */
-  private def sideMember(t: String, rows: DataFrame, batchId: Long,
-      reuse: Seq[(String, String)]): Versioned.GroupMember = {
-    val withBatch = rows.withColumn("batch", lit(batchId))
-    if (reuse.isEmpty && rows.isEmpty) Versioned.GroupFull(t, withBatch)
-    else Versioned.GroupDelta(t, withBatch, "batch", reuse)
-  }
+  /** A split table's member for a group publish: normally the `batch=`
+    * partitions of `rows` (GroupDelta) linking `reuse`; but a
+    * partitioned version may not be EMPTY (the manifest must name at
+    * least one partition directory), so an empty side with nothing to
+    * link is published as a plain empty version instead — same columns,
+    * and a later append over it simply starts its partition history
+    * then. */
+  private def sideMember(t: String, rows: DataFrame,
+      reuse: Seq[(String, String)]): Versioned.GroupMember =
+    if (reuse.isEmpty && rows.isEmpty) Versioned.GroupFull(t, rows)
+    else Versioned.GroupDelta(t, rows, "batch", reuse)
 
-  /** Publish the prepared corpus as one atomic versioned group (all
-    * rows land in `batch` partition 0); returns (table → version). */
+  /** ONE group transaction over the family: each split table stages its
+    * side of `rows` (which carry `split` and `batch`) linking its `reuse`
+    * entries, next to the budget `manifest`. */
+  private def publishSides(rows: DataFrame, manifest: DataFrame,
+      reuse: String => Seq[(String, String)], baseDir: String,
+      keep: Int): Map[String, Long] =
+    Versioned.publishGroupMembers(
+      SplitTables.map { case (t, s) =>
+        sideMember(t, rows.filter(col("split") === s).drop("split"), reuse(t))
+      } :+ Versioned.GroupFull(ManifestTable, manifest.orderBy(col("split"))),
+      baseDir, keep)
+
+  /** Run `body` on the family's latest group snapshot (table → version)
+    * under the family lease: the snapshot-read → rewrite → group-publish
+    * span is ONE writer transaction (r14) — an erase or append landing
+    * between the read and the commit would otherwise be silently rolled
+    * back when this journal becomes the family's latest. */
+  private def underFamilyLease[A](baseDir: String)(
+      body: Map[String, Long] => A): A =
+    Versioned.withFamilyLease(baseDir,
+      SplitTables.map(_._1) :+ ManifestTable) {
+      // family-aware snapshot: other group families may share the journal
+      body(Versioned.latestGroupVersionsFor(baseDir, TrainTable)
+        .getOrElse(throw new IllegalStateException(
+          s"no published corpus family under $baseDir")))
+    }
+
+  /** Publish `docs` as one atomic versioned group: the whole corpus is
+    * admitted against an empty snapshot and lands in `batch` partition
+    * 0; returns (table → version). */
   def publish(docs: DataFrame, baseDir: String, qualityMin: Double = 0.38,
       dedupThreshold: Double = 0.5, splitThreshold: Double = 0.3,
       trainPct: Int = 80, valPct: Int = 10, keep: Int = 3): Map[String, Long] = {
-    val prep = prepared(docs, qualityMin, dedupThreshold, splitThreshold,
-        trainPct, valPct)
+    // limit(0) plans as an empty LocalRelation: the corpus-side joins of
+    // the admission prune away instead of running over nothing
+    val noCorpus = docs.select(col("doc_id"), col("text"), lit("").as("split"))
+      .limit(0)
+    val admitted = admit(noCorpus, docs, qualityMin, dedupThreshold,
+        splitThreshold, trainPct, valPct)
       .pinLazy // three split filters + the manifest below
-    val manifest = prep.groupBy(col("split"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("token_count")).cast("long").as("n_tokens"),
-        sum(length(col("text")).cast("long")).cast("long").as("n_chars"))
-      .orderBy(col("split"))
-    def side(s: String) = prep.filter(col("split") === s).drop("split")
-    Versioned.publishGroupMembers(
-      SplitTables.map { case (t, s) =>
-        sideMember(t, side(s), batchId = 0L, reuse = Nil)
-      } :+ Versioned.GroupFull(ManifestTable, manifest), baseDir, keep)
+    publishSides(admitted.withColumn("batch", lit(0L)), budget(admitted),
+      _ => Nil, baseDir, keep)
   }
 
   /** Admit a NEW document batch into the published corpus family as one
@@ -153,9 +215,13 @@ object CorpusPublisher {
     * ids must be fresh — a reused batch id fails loudly against the
     * partition ledger.
     *
-    * Admission rules, chosen so that on a non-bridging batch the result
-    * EQUALS a full republish of (original docs ∪ batch)
-    * (CorpusPublisherSpec pins the equality):
+    * Admission rules ([[admit]], the same function [[publish]] runs
+    * against an empty snapshot). By construction, a batch whose clusters
+    * touch no published doc is admitted exactly as a full republish of
+    * (original docs ∪ batch) would admit it, and the rules for clusters
+    * that do touch the corpus are chosen so that on a non-bridging batch
+    * the result still EQUALS that republish (CorpusPublisherSpec checks
+    * the equality):
     *   - quality gate: same pure-function score, same floor;
     *   - exact tier: batch doc dropped if its sha256 matches any
     *     published doc (the published doc has the smaller id and stays
@@ -194,20 +260,9 @@ object CorpusPublisher {
       qualityMin: Double = 0.38, dedupThreshold: Double = 0.5,
       splitThreshold: Double = 0.3, trainPct: Int = 80, valPct: Int = 10,
       keep: Int = 3): Map[String, Long] = {
-    require(splitThreshold <= dedupThreshold,
-      "the split scope must be at most as strict as the dedup cut")
     val spark = batch.sparkSession
     import spark.implicits._
-    // the snapshot-read → vet → group-publish span is ONE writer
-    // transaction (r14): an erase or second append landing between this
-    // read and the commit would be silently rolled back when this
-    // journal becomes the family's latest
-    Versioned.withFamilyLease(baseDir,
-      SplitTables.map(_._1) :+ ManifestTable) {
-    // family-aware snapshot: other group families may share the journal
-    val vs = Versioned.latestGroupVersionsFor(baseDir, TrainTable)
-      .getOrElse(throw new IllegalStateException(
-        s"no published corpus family under $baseDir"))
+    underFamilyLease(baseDir) { vs =>
     // reuse entries per split table: a missing manifest is legal only
     // for a table published EMPTY (the sideMember fallback) — anything
     // else is an old-layout publish that must be redone first
@@ -234,94 +289,19 @@ object CorpusPublisher {
     require(b.filter(col("doc_id") <= maxPublished).isEmpty,
       "batch doc_ids must exceed every published id (monotone-id contract)")
 
-    // exact tier: keeper within the batch, nothing identical to corpus
-    val exactKeepers = DedupOps.exactGroups(b)
-      .select(col("keep_id").as("doc_id"))
-    val notCorpusCopy = b.select(col("doc_id"), sha2(col("text"), 256).as("h"))
-      .join(published.select(sha2(col("text"), 256).as("h")), Seq("h"),
-        "left_anti")
-      .select(col("doc_id"))
-
-    // the scored admission pairs, ONCE at the looser threshold; both
-    // cuts below are filters over this one frame (two-threshold reuse)
-    val pairsLow = DedupOps.incrementalJaccardPairs(
-        published.select(col("doc_id"), col("text")), b,
-        threshold = splitThreshold)
-      .pinLazy
-
-    // near tier at the dedup cut: batch clusters over batch×batch pairs;
-    // drop clusters touching the corpus, keep standalone reps
-    val pairsHighB = pairsLow.filter(col("other_side") === "b" &&
-      col("jaccard") >= dedupThreshold)
-    val highClusters = DedupOps.clustersFromPairs(b,
-      pairsHighB.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val corpusDupIds = pairsLow.filter(col("other_side") === "c" &&
-        col("jaccard") >= dedupThreshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val corpusDupClusters = highClusters
-      .join(corpusDupIds, Seq("doc_id"), "left_semi")
-      .select(col("cluster_rep")).distinct()
-    val nearKept = highClusters
-      .join(corpusDupClusters, Seq("cluster_rep"), "left_anti")
-      .filter(col("doc_id") === col("cluster_rep"))
-      .select(col("doc_id"))
-
-    // split tier at the loose cut: batch clusters + their published
-    // neighbors' splits → inherit / new-cluster rule / bridge drop
-    val lowClusters = DedupOps.clustersFromPairs(b,
-        pairsLow.filter(col("other_side") === "b")
-          .select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .pinLazy // joined twice below
-    val neighborSplits = pairsLow.filter(col("other_side") === "c")
-      .join(published.select(col("doc_id").as("doc_a"), col("split")), "doc_a")
-      .join(lowClusters.select(col("doc_id").as("doc_b"),
-        col("cluster_rep")), "doc_b")
-      .groupBy(col("cluster_rep"))
-      .agg(countDistinct(col("split")).as("n_splits"),
-        min(col("split")).as("corpus_split"))
-    val assigned = lowClusters
-      .join(neighborSplits, Seq("cluster_rep"), "left")
-      .filter(coalesce(col("n_splits"), lit(1L)) === 1L) // bridges out
-      .select(col("doc_id"),
-        coalesce(col("corpus_split"),
-          splitOf(col("cluster_rep"), trainPct, valPct)).as("split"))
-
-    val quality = TextOps.qualityScored(b)
-      .select(col("doc_id"), col("quality"))
-    val admitted = b.select(col("doc_id"), col("lang"), col("text"))
-      .join(quality, "doc_id")
-      .filter(col("quality") >= qualityMin)
-      .join(exactKeepers, Seq("doc_id"), "left_semi")
-      .join(notCorpusCopy, Seq("doc_id"), "left_semi")
-      .join(nearKept, Seq("doc_id"), "left_semi")
-      .join(assigned, "doc_id")
-      .select(col("doc_id"), col("lang"), col("quality"),
-        size(TextOps.tokens(col("text"))).cast("long").as("token_count"),
-        col("text"), col("split"))
+    val admitted = admit(published, b, qualityMin, dedupThreshold,
+        splitThreshold, trainPct, valPct)
       .pinLazy // three split filters + the delta rollup
-
     // budget manifest: OLD manifest + this batch's exact deltas — the
     // published corpus is never re-aggregated
-    val deltas = admitted.groupBy(col("split"))
-      .agg(count(lit(1)).as("d_docs"),
-        sum(col("token_count")).cast("long").as("d_tokens"),
-        sum(length(col("text")).cast("long")).cast("long").as("d_chars"))
     val manifest = Versioned.read(spark, baseDir, ManifestTable,
         Some(vs(ManifestTable)))
-      .join(deltas, Seq("split"), "full_outer")
-      .select(col("split"),
-        (coalesce(col("n_docs"), lit(0L)) +
-          coalesce(col("d_docs"), lit(0L))).as("n_docs"),
-        (coalesce(col("n_tokens"), lit(0L)) +
-          coalesce(col("d_tokens"), lit(0L))).as("n_tokens"),
-        (coalesce(col("n_chars"), lit(0L)) +
-          coalesce(col("d_chars"), lit(0L))).as("n_chars"))
-      .orderBy(col("split"))
-    def side(s: String) = admitted.filter(col("split") === s).drop("split")
-    Versioned.publishGroupMembers(
-      SplitTables.map { case (t, s) =>
-        sideMember(t, side(s), batchId, reuse = reuseOf(t))
-      } :+ Versioned.GroupFull(ManifestTable, manifest), baseDir, keep)
+      .unionByName(budget(admitted))
+      .groupBy(col("split"))
+      .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
+        sum(col("n_chars")).as("n_chars"))
+    publishSides(admitted.withColumn("batch", lit(batchId)), manifest,
+      reuseOf, baseDir, keep)
     }
   }
 
@@ -350,40 +330,19 @@ object CorpusPublisher {
     * delete (cheaper needs tombstoning the table too). Returns the new
     * (table → version) snapshot. */
   def erase(spark: SparkSession, baseDir: String, victims: DataFrame,
-      keep: Int = 1): Map[String, Long] = {
+      keep: Int = 1): Map[String, Long] =
     // one writer transaction across the whole family (r14): an append
     // committing between this snapshot read and the erase's journal
     // would be rolled back by the erase (resurrection in reverse — its
     // admitted docs silently vanish); the lease serializes them
-    Versioned.withFamilyLease(baseDir,
-      SplitTables.map(_._1) :+ ManifestTable) {
-    // family-aware snapshot: other group families may share the journal
-    val vs = Versioned.latestGroupVersionsFor(baseDir, TrainTable)
-      .getOrElse(throw new IllegalStateException(
-        s"no published corpus family under $baseDir"))
-    val vKeys = victims.select(col("doc_id")).distinct()
-    val sides = SplitTables.map { case (t, s) =>
-      val survivors = Versioned.read(spark, baseDir, t, Some(vs(t)))
-        .join(vKeys, Seq("doc_id"), "left_anti")
-        .pinLazy // feeds the member write AND the manifest
-      (t, s, survivors)
-    }
-    val manifest = sides.map { case (_, s, rows) =>
-        rows.agg(count(lit(1)).as("n_docs"),
-          sum(col("token_count")).cast("long").as("n_tokens"),
-          sum(length(col("text")).cast("long")).cast("long").as("n_chars"))
-          .select(lit(s).as("split"), col("n_docs"), col("n_tokens"),
-            col("n_chars"))
+    underFamilyLease(baseDir) { vs =>
+      val vKeys = victims.select(col("doc_id")).distinct()
+      val survivors = SplitTables.map { case (t, s) =>
+        Versioned.read(spark, baseDir, t, Some(vs(t)))
+          .join(vKeys, Seq("doc_id"), "left_anti")
+          .withColumn("split", lit(s))
       }.reduce(_ unionByName _)
-      .filter(col("n_docs") > 0) // publish() lists only non-empty splits
-      .orderBy(col("split"))
-    Versioned.publishGroupMembers(
-      sides.map { case (t, _, survivors) =>
-        // empty side: the sideMember fallback representation (a plain
-        // empty version — a partitioned version may not be empty)
-        if (survivors.isEmpty) Versioned.GroupFull(t, survivors)
-        else Versioned.GroupDelta(t, survivors, "batch", reuse = Nil)
-      } :+ Versioned.GroupFull(ManifestTable, manifest), baseDir, keep)
+        .pinLazy // feeds the member writes AND the manifest
+      publishSides(survivors, budget(survivors), _ => Nil, baseDir, keep)
     }
-  }
 }

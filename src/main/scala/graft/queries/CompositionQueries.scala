@@ -1659,7 +1659,7 @@ object CompositionQueries {
     * runs ONCE at the loosest threshold and is checkpointed; each
     * policy point is a FILTER of that frame plus one component solve
     * (the threshold only enters the final Jaccard cut, the same
-    * reuse-by-filter argument CorpusPublisher.prepared proves), so
+    * reuse-by-filter argument CorpusPublisher's admission relies on), so
     * sweeping four thresholds never re-pays the corpus scan. The oracle
     * replays all four chains (four recursive-CTE component solves over
     * one shared candidate prefix).

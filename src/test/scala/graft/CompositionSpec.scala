@@ -284,15 +284,22 @@ class CompositionSpec extends AnyFunSuite {
     assert(byGate("residual_exact_dup_ppm").getAs[Long]("v1_value") == 0L)
     assert(byGate("quality_below_bar_ppm").getAs[Long]("v1_value") == 0L)
     // independent recompute: admission ≡ republish (the q447 equality),
-    // so the admitted-count the rejection gate encodes must match
-    // CorpusPublisher.prepared over each doc subset
+    // so the admitted-count the rejection gate encodes must match the
+    // published rows of a full publish of each doc subset
     import org.apache.spark.sql.functions._
+    import graft.pipelines.{CorpusPublisher, Versioned}
     val d = graft.catalog.Catalog.load(spark, dir, "documents")
     val n = d.count()
     val cut = n * 4 / 5
-    val na = graft.pipelines.CorpusPublisher
-      .prepared(d.filter(col("doc_id") < cut)).count()
-    val nb = graft.pipelines.CorpusPublisher.prepared(d).count()
+    def publishedRows(docs: org.apache.spark.sql.DataFrame): Long = {
+      val base = java.nio.file.Files.createTempDirectory("q447_").toString
+      CorpusPublisher.publish(docs, base)
+      val snap = Versioned.readGroup(spark, base)
+      Seq(CorpusPublisher.TrainTable, CorpusPublisher.ValTable,
+        CorpusPublisher.TestTable).map(snap(_).count()).sum
+    }
+    val na = publishedRows(d.filter(col("doc_id") < cut))
+    val nb = publishedRows(d)
     val batch = n - cut
     assert(byGate("batch_rejection_ppm").getAs[Long]("v1_value") ==
       (batch - (nb - na)) * 1000000L / batch)

@@ -318,5 +318,12 @@ class CorpusPublisherSpec extends AnyFunSuite {
       .agg(countDistinct(col("split")).as("n_splits"))
       .filter(col("n_splits") > 1)
     assert(straddlers.count() == 0)
+    // the split LABEL itself: each published doc's split is the
+    // independent leakageSafeSplits decision at the split threshold
+    val published = withSplit.as[(Long, String)].collect().toMap
+    val reference = DedupOps.leakageSafeSplits(docs, threshold = 0.3)
+      .select(col("doc_id"), col("split")).as[(Long, String)].collect()
+      .toMap.filter { case (id, _) => published.contains(id) }
+    assert(published.nonEmpty && published == reference)
   }
 }
