@@ -4,6 +4,7 @@ import graft.pipelines.{Fs, Versioned}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.Pin._
 
 /** Published IVF-PQ index — the serving-layer decomposition of
@@ -26,16 +27,21 @@ import graft.ops.Pin._
   *   - [[build]]: train once over the corpus (the only full-scan job),
   *     publish model + codes atomically.
   *   - [[serveTopK]]: resolve ONE group snapshot, probe/rank ONLY — no
-  *     training, no full-corpus pass. The (model tables → versions)
-  *     part of the snapshot keys a driver-side model cache, so repeated
-  *     serves against an unchanged model read no model files at all
+  *     training, no full-corpus pass. A driver-side snapshot cache holds
+  *     one entry per index directory: the model, keyed by the (model
+  *     tables → versions) part of the snapshot, so repeated serves
+  *     against an unchanged model read no model files at all
   *     ([[modelLoads]] counts actual loads; AnnIndexSpec pins the second
-  *     serve at zero). Rankings are bit-identical to the one-shot path
-  *     (AnnIndexSpec) because recon depends only on (cell, codes,
-  *     model), all of which round-trip parquet exactly.
+  *     serve at zero), and — while the codes fit the session's broadcast
+  *     budget — the snapshot's live codes, so a warm serve ranks on the
+  *     driver and starts no Spark job; an append's serve reads only the
+  *     added partition. Rankings are bit-identical to the one-shot path
+  *     on both paths (AnnIndexSpec) because recon depends only on (cell,
+  *     codes, model), all of which round-trip parquet exactly.
   *   - [[delete]]: row-level erasure WITHOUT a retrain — victims land
   *     as a tombstone delta (`ann_tombstones`, the fourth family
-  *     member) and every serve anti-joins them out; [[compact]] folds
+  *     member) and every serve drops them (anti-joined out of the
+  *     codes scan, or applied to the cached codes); [[compact]] folds
   *     them into the codes rewrite and drops the table from the
   *     snapshot; [[build]] clears them (the caller retrains over the
   *     already-erased corpus). A GDPR erasure is one O(victims)
@@ -148,49 +154,133 @@ object AnnIndex {
       indexDir, keep)
   }
 
-  // ---- model loading (driver-sized, memoized per published version) ---
+  // ---- the snapshot cache (driver-sized, one entry per index directory) --
+  //
+  // One entry per index directory, replaced in place, never one per
+  // version: the model of the snapshot a serve or append last resolved
+  // and, once a serve has ranked on the driver, that snapshot's live
+  // codes. The entry is keyed by (centroids version, codebooks version,
+  // commit stamp): an append LINKS the model tables at their existing
+  // versions, so the model stays hot across appends and reloads exactly
+  // when a rebuild publishes new model versions. The commit-marker stamp
+  // ([[Versioned.commitStamp]]) guards the delete-and-rebuild-same-path
+  // hazard ADVICE r10 flagged: a fresh incarnation restarts versions at
+  // 0, but its markers carry new incarnation tokens, so a stale entry
+  // from the previous incarnation can never serve against the new codes.
+  //
+  // The codes are held only while their part files sum to at most the
+  // session's `spark.sql.autoBroadcastJoinThreshold` (the byte budget
+  // Spark already grants a driver-side table), grouped by partition and
+  // cell, ids and packed codes only: no reconstruction is cached. An
+  // append adds one `batch=` partition and links the rest, so the next
+  // serve reads only the added partitions' files; a new tombstone
+  // version re-applies the tombstones to the cached rows; a manifest
+  // that drops an entry (build, compact) reloads in full. Entries are
+  // immutable and swapped with compare-and-set, so concurrent serves
+  // never see a half-built one.
 
   private type Model = (Seq[(Int, Array[Float])], Seq[Seq[(Int, Array[Float])]])
 
-  // keyed by (indexDir, centroids version, codebooks version, commit
-  // stamp): an append LINKS the model tables at their existing versions,
-  // so the cache stays hot across appends and invalidates exactly when a
-  // rebuild publishes new model versions. The commit-marker stamp
-  // ([[Versioned.commitStamp]]) guards the delete-and-rebuild-same-path
-  // hazard ADVICE r10 flagged: a fresh incarnation restarts versions at
-  // 0, but its markers carry new incarnation tokens, so a stale model
-  // from the previous incarnation can never serve against the new codes.
-  // Model-sized values (nCells + m·pqK vectors).
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long, Long), Model]()
+  /** One cell's live rows in one codes partition: the ids and their m
+    * codes row-major, a byte each while every code id is below 256
+    * (pqK ≤ 256), an int each otherwise. */
+  private final class CellRows(val ids: Array[Long], narrow: Array[Byte],
+      wide: Array[Int], m: Int) {
+    def codes(r: Int): Array[Int] =
+      if (wide == null) Array.tabulate(m)(s => narrow(r * m + s) & 0xFF)
+      else java.util.Arrays.copyOfRange(wide, r * m, r * m + m)
+
+    def filterIds(keep: Long => Boolean): CellRows = {
+      val rs = ids.indices.filter(r => keep(ids(r)))
+      CellRows(rs.map(r => (ids(r), codes(r))), m, wide != null)
+    }
+  }
+
+  private object CellRows {
+    def apply(rows: Seq[(Long, Array[Int])], m: Int, wide: Boolean): CellRows = {
+      val flat = rows.iterator.flatMap(_._2).toArray
+      if (wide) new CellRows(rows.map(_._1).toArray, null, flat, m)
+      else new CellRows(rows.map(_._1).toArray, flat.map(_.toByte), null, m)
+    }
+  }
+
+  /** The live rows of one codes partition (`batch=` value), by cell. */
+  private final case class Segment(batch: Long, cells: Map[Int, CellRows])
+
+  /** The live codes of one snapshot: its codes version, manifest entries
+    * and tombstone version, the summed part-file bytes of those entries,
+    * and — while the bytes are within budget — the rows themselves with
+    * the tombstones applied. */
+  private final case class Codes(version: Long, entries: Seq[(String, String)],
+      tombstones: Option[Long], bytes: Long, rows: Option[Seq[Segment]])
+
+  /** The codes table's columns as build, append and compact write them,
+    * the `batch` partition column last. Reading under it skips the footer
+    * read Spark runs as a job to infer a schema. */
+  private val CodesSchema =
+    StructType.fromDDL("vec_id BIGINT, cell INT, codes ARRAY<INT>, batch BIGINT")
+
+  private final case class Entry(key: (Long, Long, Long), model: Model,
+      codes: Option[Codes])
+
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+  /** Directories whose entries the cache holds at once; the next new one
+    * clears it (bounds a long session that serves many indexes). */
+  private val MaxCachedDirs = 16
   private val modelLoadCount = new java.util.concurrent.atomic.AtomicLong(0)
+  private val codesRowCount = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Number of ACTUAL model-parquet loads since JVM start — the
     * observability hook AnnIndexSpec uses to prove that a repeated serve
     * against an unchanged model reads no model files. */
   def modelLoads: Long = modelLoadCount.get
 
-  /** Test hook: drop every cached model. */
-  private[graft] def invalidateModelCache(): Unit = modelCache.clear()
+  /** Code rows read into the cache since JVM start. */
+  private[graft] def codesRowsLoaded: Long = codesRowCount.get
+
+  /** Directories the cache holds an entry for. */
+  private[graft] def cachedDirs: Int = cache.size
+
+  /** Test hook: drop every cached entry. */
+  private[graft] def invalidateModelCache(): Unit = cache.clear()
+
+  /** Swap `from` (None: no entry) for `to` unless another thread swapped
+    * first; the loser's entry is just not kept. */
+  private def swap(indexDir: String, from: Option[Entry], to: Entry): Unit =
+    from match {
+      case Some(e) => cache.replace(indexDir, e, to)
+      case None =>
+        if (cache.size >= MaxCachedDirs) cache.clear()
+        cache.putIfAbsent(indexDir, to)
+    }
 
   /** The frozen model from the last committed group snapshot: coarse
     * centroids + per-subspace codebooks, reconstructed in the exact
     * `Seq` shapes [[VectorOps]] trains (floats round-trip parquet
-    * bit-exactly, so a served model IS the built model). Model-sized
-    * driver collect — nCells + m·pqK small vectors, never the corpus —
-    * and memoized by published version, so it runs at most once per
-    * (directory, model generation) per JVM. */
+    * bit-exactly, so a served model IS the built model). */
   private[graft] def loadModel(spark: SparkSession, indexDir: String): Model =
-    loadModelAt(spark, indexDir, Versioned.latestGroupVersions(indexDir))
+    cached(spark, indexDir, Versioned.latestGroupVersions(indexDir)).model
+
+  /** The cache entry for `snapshot`'s model: the cached one when its key
+    * matches, else a fresh entry with the model loaded and no codes.
+    * Model-sized driver collect — nCells + m·pqK small vectors, never
+    * the corpus — so it runs at most once per (directory, model
+    * generation) while the entry lives. */
+  private def cached(spark: SparkSession, indexDir: String,
+      snapshot: Map[String, Long]): Entry = {
+    val key = (snapshot(CentroidsTable), snapshot(CodebooksTable),
+      Versioned.commitStamp(indexDir, CentroidsTable, snapshot(CentroidsTable)))
+    val old = Option(cache.get(indexDir))
+    old.filter(_.key == key).getOrElse {
+      val fresh = Entry(key, loadModelAt(spark, indexDir, snapshot), None)
+      swap(indexDir, old, fresh)
+      fresh
+    }
+  }
 
   private def loadModelAt(spark: SparkSession, indexDir: String,
       versions: Map[String, Long]): Model = {
     import spark.implicits._
-    val key = (indexDir, versions(CentroidsTable), versions(CodebooksTable),
-      Versioned.commitStamp(indexDir, CentroidsTable,
-        versions(CentroidsTable)))
-    val hit = modelCache.get(key)
-    if (hit != null) return hit
     val coarse = Versioned.read(spark, indexDir, CentroidsTable,
         Some(versions(CentroidsTable)))
       .as[(Int, Array[Float])].collect().sortBy(_._1).toSeq
@@ -200,9 +290,115 @@ object AnnIndex {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(r => (r._2, r._3)).toSeq }
     modelLoadCount.incrementAndGet()
-    if (modelCache.size > 64) modelCache.clear() // bound a long session
-    modelCache.put(key, (coarse, books))
     (coarse, books)
+  }
+
+  /** `snapshot`'s live codes `(vec_id, cell, codes)` in `cells`, from the
+    * cache — brought up to date first (see the block comment above) — or
+    * None when the codes' bytes exceed `budget`. */
+  private def liveCodes(spark: SparkSession, indexDir: String,
+      snapshot: Map[String, Long], entry: Entry, budget: Long,
+      cells: Array[Int]): Option[Iterator[(Long, Int, Array[Int])]] = {
+    val codes = codesAt(spark, indexDir, snapshot, entry, budget)
+    if (!entry.codes.exists(_ eq codes))
+      swap(indexDir, Some(entry), entry.copy(codes = Some(codes)))
+    codes.rows.filter(_ => codes.bytes <= budget).map { segments =>
+      for (seg <- segments.iterator; c <- cells.iterator;
+           rows <- seg.cells.get(c).iterator; r <- rows.ids.indices.iterator)
+        yield (rows.ids(r), c, rows.codes(r))
+    }
+  }
+
+  private def codesAt(spark: SparkSession, indexDir: String,
+      snapshot: Map[String, Long], entry: Entry, budget: Long): Codes = {
+    val version = snapshot(CodesTable)
+    val tombstones = snapshot.get(TombstonesTable)
+    entry.codes match {
+      case Some(c) if c.version == version && c.tombstones == tombstones &&
+          (c.rows.nonEmpty || c.bytes > budget) => return c
+      case _ =>
+    }
+    val m = codesManifest(indexDir, version)
+    val now = m.entries.toSet
+    // an entry kept from the cached codes is still valid when the new
+    // manifest holds all of its partitions and still carries tombstones
+    // if it did (a tombstone set only grows until a compact or build,
+    // which rewrite the codes)
+    val kept = entry.codes.filter(c => c.entries.forall(now) &&
+      (c.tombstones.isEmpty || tombstones.nonEmpty))
+    val added = kept.fold(m.entries)(c => m.entries.filterNot(c.entries.toSet))
+    val bytes = kept.fold(0L)(_.bytes) + partBytes(indexDir, added)
+    val (nCodes, wide) =
+      (entry.model._2.size, entry.model._2.exists(_.exists(_._1 > 255)))
+    val rows =
+      if (bytes > budget) None
+      else kept.flatMap(_.rows) match {
+        case Some(segments) =>
+          val scoped =
+            if (kept.exists(_.tombstones == tombstones)) segments
+            else {
+              val dead = tombstoneMap(spark, indexDir, tombstones.get)
+              segments.map(seg => seg.copy(cells = seg.cells.map {
+                case (c, rs) => c -> rs.filterIds(id =>
+                  !dead.get(id).exists(seg.batch <= _))
+              }))
+            }
+          Some(scoped ++ (if (added.isEmpty) Nil else
+            readSegments(spark, indexDir, snapshot, m, added, nCodes, wide)))
+        case None =>
+          Some(readSegments(spark, indexDir, snapshot, m, m.entries, nCodes, wide))
+      }
+    Codes(version, m.entries, tombstones, bytes, rows)
+  }
+
+  /** The codes manifest of `version`. */
+  private def codesManifest(indexDir: String, version: Long): Versioned.Manifest =
+    Versioned.manifest(indexDir, CodesTable, version)
+      .getOrElse(throw new IllegalStateException(
+        s"$CodesTable v$version has no partition manifest — " +
+          "not an AnnIndex build?"))
+
+  /** Summed part-file sizes of the codes manifest `entries` (a listing
+    * per partition directory; no data read). */
+  private def partBytes(indexDir: String,
+      entries: Seq[(String, String)]): Long =
+    entries.iterator.map { case (_, rel) =>
+      Fs.list(new Path(s"$indexDir/$CodesTable/$rel"))
+        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+          !st.getPath.getName.startsWith("."))
+        .map(_.getLen).sum
+    }.sum
+
+  /** Read the codes partitions `entries` to the driver with `snapshot`'s
+    * tombstones anti-joined out: one job (plus the tombstone set's when
+    * the snapshot carries one). */
+  private def readSegments(spark: SparkSession, indexDir: String,
+      snapshot: Map[String, Long], m: Versioned.Manifest,
+      entries: Seq[(String, String)], nCodes: Int,
+      wide: Boolean): Seq[Segment] = {
+    import spark.implicits._
+    val rows = antiTombstones(spark, indexDir, snapshot,
+        Versioned.readPartitions(spark, indexDir, CodesTable, m, entries,
+          Some(CodesSchema)))
+      .select(col("vec_id"), col("cell"), col("codes"), col("batch"))
+      .as[(Long, Int, Array[Int], Long)].collect()
+    codesRowCount.addAndGet(rows.length)
+    val byBatch = rows.groupBy(_._4)
+    entries.map { case (value, _) =>
+      val batch = value.toLong
+      Segment(batch, byBatch.getOrElse(batch, Array.empty)
+        .groupBy(_._2).map { case (cell, rs) =>
+          cell -> CellRows(rs.toSeq.map(r => (r._1, r._3)), nCodes, wide)
+        })
+    }
+  }
+
+  /** `version`'s tombstones as vec_id → widest cutoff ([[tombstoneScope]]),
+    * on the driver. */
+  private def tombstoneMap(spark: SparkSession, indexDir: String,
+      version: Long): Map[Long, Long] = {
+    import spark.implicits._
+    tombstoneScope(spark, indexDir, version).as[(Long, Long)].collect().toMap
   }
 
   /** One row per tombstoned id with its widest batch CUTOFF — the scope
@@ -255,8 +451,10 @@ object AnnIndex {
     * code batch admitted at delete time, [[admittedHwm]]); codes and
     * model tables are LINKED unchanged, so the transaction stages
     * O(victims) bytes and zero corpus data. Every subsequent
-    * [[serveTopK]] / [[serveTopKFiltered]] anti-joins the snapshot's
-    * tombstones out of the probed candidates SCOPED to that cutoff
+    * [[serveTopK]] / [[serveTopKFiltered]] drops the snapshot's
+    * tombstones from the probed candidates (an anti-join on the
+    * distributed path, a filter over the cached codes on the driver
+    * path) SCOPED to that cutoff
     * (`batch <= cutoff`), so an erased vector can never be returned —
     * while a LATER [[append]] legitimately reusing the id (re-consent,
     * id recycling) lands above the cutoff and stays fully servable
@@ -362,7 +560,8 @@ object AnnIndex {
     * before any admission): the largest `batch=` value in the codes
     * manifest of the latest committed group snapshot — the admission
     * ledger (see "batch admission" above). [[delete]] takes its cutoff
-    * from it and [[append]] its replay check. Reading the snapshot, not
+    * from it; [[append]] reads the same ledger from the codes manifest
+    * it already holds for its reuse list. Reading the snapshot, not
     * the codes table's own latest version, keeps it in step with what
     * serves and appends link: an append torn between its codes commit
     * and its journal seal is not admitted, so its replay lands. Exposed
@@ -373,7 +572,12 @@ object AnnIndex {
   def admittedHwm(indexDir: String): Long =
     Versioned.latestGroupVersionsFor(indexDir, CodesTable)
       .flatMap(vs => Versioned.manifest(indexDir, CodesTable, vs(CodesTable)))
-      .fold(-1L)(_.entries.flatMap(_._1.toLongOption).foldLeft(-1L)(math.max))
+      .fold(-1L)(m => highestBatch(m.entries))
+
+  /** The largest `batch=` value among codes manifest entries (−1 for
+    * none). */
+  private def highestBatch(entries: Seq[(String, String)]): Long =
+    entries.flatMap(_._1.toLongOption).foldLeft(-1L)(math.max)
 
   /** The vec_ids currently SERVABLE from the latest snapshot: codes
     * minus scoped tombstones, id-projected (one O(codes) id scan, no
@@ -414,51 +618,75 @@ object AnnIndex {
   }
 
   /** Serve top-k from the published index: resolve ONE group snapshot,
-    * load its model (driver-sized, cached per model version), and run
-    * ONLY the probe/rank stages ([[VectorOps.ivfPqRank]]). `queries` is
-    * `(query_id, qv)` — external query vectors or a corpus slice; a
-    * query also present in the corpus never matches itself. No training,
-    * no full-corpus scan: the queries are collected to the driver once,
-    * their probe CELL SET (bounded by nCells no matter how many queries)
-    * is computed there and pushed into the codes scan as an `In(cell, …)`
-    * parquet filter. That filter prunes no bytes today: each codes file
-    * is one row group spanning every cell in it, so the scan reads every
-    * code row of the snapshot and drops the unprobed ones before the
-    * rank. Reading only the probed cells' files needs a per-file cell
-    * range, which nothing records yet. The rank keeps a bounded
-    * top-k per query inside each codes partition, so the rank adds no
-    * window and one exchange, which carries at most partitions ×
-    * queries × k rows. A `vec_id` held by two code rows (an id reused
-    * by a later [[append]]) ranks once, at its better score. Model and
-    * codes both come from the SAME journaled transaction: a rebuild
-    * committing between any two reads here can never mix generations.
-    * AnnIndexSpec pins the pushed filter, filtered ≡ unfiltered results,
-    * the plan shape, and the zero-model-read repeat serve. */
+    * take its model from the snapshot cache, and run ONLY the probe/rank
+    * stages. `queries` is `(query_id, qv)` — external query vectors or a
+    * corpus slice; a query also present in the corpus never matches
+    * itself. No training, no full-corpus scan: the queries are collected
+    * to the driver once (no job for a driver-built frame) and their probe
+    * CELL SET (bounded by nCells no matter how many queries) is computed
+    * there. Two paths rank them, with one kernel and bit-identical
+    * results ([[VectorOps.rankProbed]]):
+    *
+    *   - driver path, while the snapshot's codes — the summed part-file
+    *     sizes of its manifest partitions — are within the session's
+    *     `spark.sql.autoBroadcastJoinThreshold`: the live codes are held
+    *     in the snapshot cache and the probed cells are ranked on the
+    *     driver. The result is a local relation, so a warm serve starts
+    *     no Spark job; the first serve after an [[append]] reads only the
+    *     added partition (one small job), and one after a [[build]],
+    *     [[compact]] or [[delete]] reloads or re-scopes the cache.
+    *   - distributed path, above that budget or at a threshold ≤ 0: the
+    *     probe cells are pushed into the codes scan as an `In(cell, …)`
+    *     parquet filter (which prunes no bytes today: each codes file is
+    *     one row group spanning every cell in it, so the scan reads every
+    *     code row and drops the unprobed ones), the snapshot's tombstones
+    *     are anti-joined out, and each codes partition keeps a bounded
+    *     top-k per query, so the rank adds no window and one exchange of
+    *     at most partitions × queries × k rows.
+    *
+    * A `vec_id` held by two code rows (an id reused by a later [[append]])
+    * ranks once, at its better score. Model and codes both come from the
+    * SAME journaled transaction: a rebuild committing between any two
+    * reads here can never mix generations. AnnIndexSpec pins both paths
+    * against the one-shot [[VectorOps.ivfPqTopK]], the pushed filter, the
+    * plan shape, the zero-job warm serve and the zero-model-read repeat
+    * serve. */
   def serveTopK(spark: SparkSession, indexDir: String, queries: DataFrame,
       k: Int, nProbe: Int = 6): DataFrame =
-    serveProbed(spark, indexDir, queries, k, nProbe)(identity)
+    serveProbed(spark, indexDir, queries, k, nProbe, allowed = None)
 
   /** The serve both [[serveTopK]] and [[serveTopKFiltered]] run: one
-    * group snapshot, its model, the queries' probe cells computed on the
-    * driver, the codes scan filtered to those cells (the `In(cell, …)`
-    * filter is pushed into parquet but skips no row group today) with
-    * the snapshot's tombstones anti-joined out, then `restrict`, then
-    * the ADC rank. */
+    * group snapshot, its model from the cache, the queries' probe cells
+    * computed on the driver, then the rank — on the driver over the
+    * cached probed cells when the serve is unfiltered and the codes fit
+    * the budget, else over the codes scan filtered to those cells (the
+    * `In(cell, …)` filter is pushed into parquet but skips no row group
+    * today) with the snapshot's tombstones anti-joined out and the
+    * `allowed` semi join applied. */
   private def serveProbed(spark: SparkSession, indexDir: String,
-      queries: DataFrame, k: Int, nProbe: Int)(
-      restrict: DataFrame => DataFrame): DataFrame = {
+      queries: DataFrame, k: Int, nProbe: Int,
+      allowed: Option[DataFrame]): DataFrame = {
     val snapshot = Versioned.latestGroupVersions(indexDir)
-    val (coarse, books) = loadModelAt(spark, indexDir, snapshot)
+    val entry = cached(spark, indexDir, snapshot)
+    val (coarse, books) = entry.model
+    val dim = coarse.head._2.length
     val probed = VectorOps.probeQueries(queries, coarse, nProbe)
-    val probeCells = probed.cellSet
-    val all = Versioned.read(spark, indexDir, CodesTable,
-      Some(snapshot(CodesTable)))
-    val codes =
-      if (probeCells.isEmpty) all.filter(lit(false)) // no queries → no scan
-      else antiTombstones(spark, indexDir, snapshot,
-        all.filter(col("cell").isInCollection(probeCells.toSeq)))
-    VectorOps.rankProbed(restrict(codes), probed, k, coarse, books,
-      coarse.head._2.length)
+    val budget = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val local =
+      if (k <= 0 || probed.ids.isEmpty) Some(Iterator.empty)
+      else if (allowed.nonEmpty || budget <= 0) None
+      else liveCodes(spark, indexDir, snapshot, entry, budget, probed.cellSet)
+    local match {
+      case Some(rows) =>
+        VectorOps.rankProbedLocal(spark, rows, probed, k, coarse, books, dim)
+      case None =>
+        val codes = antiTombstones(spark, indexDir, snapshot,
+          Versioned.read(spark, indexDir, CodesTable, Some(snapshot(CodesTable)))
+            .filter(col("cell").isInCollection(probed.cellSet.toSeq)))
+        val admitted = allowed.fold(codes)(a => codes.join(
+          a.select(col("vec_id")).distinct(), Seq("vec_id"), "left_semi"))
+        VectorOps.rankProbed(admitted, probed, k, coarse, books, dim)
+    }
   }
 
   /** FILTERED serve — "top-k WHERE metadata predicate", the most common
@@ -470,20 +698,20 @@ object AnnIndex {
     * disallowed) loses recall under selective filters: a filter keeping
     * 1% of the corpus leaves ~k'/100 usable results.
     *
-    * Plan shape: the codes scan carries the probed-cell `In(cell, …)`
-    * filter exactly as [[serveTopK]]'s does (pushed, no bytes pruned
-    * today), then a LEFT SEMI join on vec_id admits survivors (Catalyst
-    * broadcasts a small key set, shuffles a large one — both
-    * scale-safe), and only those are ADC-ranked. Model/codes come from one journaled snapshot, same as the
-    * unfiltered path. AnnIndexSpec pins: filtered serve ≡ one-shot
-    * IVF-PQ over the filtered corpus (bit-identical), recall@k under a
-    * selective filter vs brute-force-with-filter, and the pushed filter. */
+    * Always the distributed path of [[serveTopK]], whatever the budget:
+    * it takes only the model from the snapshot cache. The codes scan
+    * carries the probed-cell `In(cell, …)` filter (pushed, no bytes
+    * pruned today), then a LEFT SEMI join on vec_id admits survivors
+    * (Catalyst broadcasts a small key set, shuffles a large one — both
+    * scale-safe), and only those are ADC-ranked. Model/codes come from
+    * one journaled snapshot, same as the unfiltered path. AnnIndexSpec
+    * pins: filtered serve ≡ one-shot IVF-PQ over the filtered corpus
+    * (bit-identical), recall@k under a selective filter vs
+    * brute-force-with-filter, and the pushed filter. */
   def serveTopKFiltered(spark: SparkSession, indexDir: String,
       queries: DataFrame, allowed: DataFrame, k: Int,
       nProbe: Int = 6): DataFrame =
-    serveProbed(spark, indexDir, queries, k, nProbe)(
-      _.join(allowed.select(col("vec_id")).distinct(), Seq("vec_id"),
-        "left_semi"))
+    serveProbed(spark, indexDir, queries, k, nProbe, Some(allowed))
 
   /** Append a new vector batch to the published index: encode the batch
     * against the FROZEN model ([[VectorOps.ivfPqEncodeWith]] — one
@@ -501,21 +729,17 @@ object AnnIndex {
       asIndexWriter(indexDir) {
     val spark = batch.sparkSession
     val snapshot = Versioned.latestGroupVersions(indexDir)
-    val (coarse, books) = loadModelAt(spark, indexDir, snapshot)
+    val (coarse, books) = cached(spark, indexDir, snapshot).model
     val dim = coarse.head._2.length
     val current = snapshot
     if (batch.isEmpty) return current
-    val reuse = Versioned.manifest(indexDir, CodesTable,
-        snapshot(CodesTable))
-      .getOrElse(throw new IllegalStateException(
-        s"$CodesTable v${snapshot(CodesTable)} has no partition manifest — " +
-          "not an AnnIndex build?"))
-      .entries
+    val reuse = codesManifest(indexDir, snapshot(CodesTable)).entries
     // a batch id that already landed is a caller bug (fail) or a
     // micro-batch REPLAY after a failure (skip) — `skipIfExists` is how
     // [[buildOrAppend]] gets exactly-once admission from at-least-once
-    // delivery, the same move as streaming-sink epoch dedup
-    if (batchId <= admittedHwm(indexDir)) {
+    // delivery, the same move as streaming-sink epoch dedup. Under the
+    // writer lease `reuse` is the ledger [[admittedHwm]] would read.
+    if (batchId <= highestBatch(reuse)) {
       if (skipIfExists) return current
       throw new IllegalArgumentException(
         s"batch $batchId already admitted to the index " +
@@ -665,7 +889,8 @@ object AnnIndex {
     * model generation, admitted batch ids kept, tombstones cleared) and
     * re-audit. Deletions count toward drift because the quantizer was
     * trained on a distribution that erased rows no longer represent,
-    * and every serve pays the anti-join until a rewrite folds them in.
+    * and every serve pays for the tombstones until a rewrite folds them
+    * in.
     * Returns one decision row either way, so a scheduler can log the
     * drift → rebuild loop per run. */
   def maybeRebuild(corpus: DataFrame, indexDir: String, minRecall: Double,

@@ -454,10 +454,11 @@ object VectorOps {
   }
 
   /** The empty `(query_id, rn, neighbor_id, cos_sim)` frame — what every
-    * ANN search returns over an empty corpus / empty model. */
+    * ANN search returns over an empty corpus / empty model. A local
+    * relation: collecting it starts no job. */
   private def emptyTopKFrame(spark: org.apache.spark.sql.SparkSession): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("query_id",
           org.apache.spark.sql.types.LongType),
@@ -540,15 +541,18 @@ object VectorOps {
     * better score. Queries keep their original (asymmetric) vectors.
     *
     * Plan: the queries and their probe cells are computed on the driver
-    * ([[probeQueries]]; no job for a driver-built query frame), one
-    * `mapPartitions` over the codes scores each row only against the
-    * queries probing its cell and keeps a bounded top-k per query, and
-    * one single-partition exchange carries those ≤ partitions × queries
-    * × k rows to the merge that assigns `rn`. No join, no window, no
-    * shuffle of the scored candidates. Bit-identical between the one-shot
-    * and published-index paths because recon depends only on (cell,
-    * codes, model) — all of which round-trip parquet exactly — and the
-    * cosine is [[graft.functions.CosineSimilarity]]'s arithmetic. */
+    * ([[probeQueries]]; no job for a driver-built query frame), then
+    * [[rankProbed]]: one `mapPartitions` over the codes scores each row
+    * only against the queries probing its cell and keeps a bounded top-k
+    * per query, and one single-partition exchange carries those ≤
+    * partitions × queries × k rows to the merge that assigns `rn`. No
+    * join, no window, no shuffle of the scored candidates. The same two
+    * kernels rank [[graft.ops.AnnIndex]]'s cached codes on the driver
+    * ([[rankProbedLocal]]), so there is one ranking implementation.
+    * Bit-identical between the one-shot and published-index paths
+    * because recon depends only on (cell, codes, model) — all of which
+    * round-trip parquet exactly — and the cosine is
+    * [[graft.functions.CosineSimilarity]]'s arithmetic. */
   def ivfPqRank(codes: DataFrame, queries: DataFrame, k: Int,
       coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
       nProbe: Int = 6, dim: Int = 64): DataFrame =
@@ -578,12 +582,45 @@ object VectorOps {
     })
   }
 
+  /** The rank of [[ivfPqRank]] over probed queries, as a Spark plan:
+    * [[partitionTopK]] in each codes partition, one single-partition
+    * exchange, then [[mergeTopK]]. The offer order never matters (the
+    * bounded top-k's order is total), so [[rankProbedLocal]] running the
+    * same two kernels over rows on the driver returns the same rows. */
   private[ops] def rankProbed(codes: DataFrame, q: ProbedQueries, k: Int,
       coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
       dim: Int): DataFrame = {
     val spark = codes.sparkSession
     import spark.implicits._
     if (k <= 0 || q.ids.isEmpty) return emptyTopKFrame(spark)
+    codes.select(col("vec_id"), col("cell"), col("codes"))
+      .as[(Long, Int, Array[Int])]
+      .mapPartitions(partitionTopK(q, k, coarse, books, dim))
+      .repartition(1)
+      .mapPartitions(mergeTopK(k))
+      .toDF("query_id", "rn", "neighbor_id", "cos_sim")
+  }
+
+  /** [[rankProbed]] over `(vec_id, cell, codes)` rows already on the
+    * driver: the same two kernels run over them as one partition, and
+    * the result is a local relation, so collecting it starts no job. */
+  private[ops] def rankProbedLocal(spark: org.apache.spark.sql.SparkSession,
+      rows: Iterator[(Long, Int, Array[Int])], q: ProbedQueries, k: Int,
+      coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
+      dim: Int): DataFrame = {
+    import spark.implicits._
+    if (k <= 0 || q.ids.isEmpty) return emptyTopKFrame(spark)
+    mergeTopK(k)(partitionTopK(q, k, coarse, books, dim)(rows)).toSeq
+      .toDF("query_id", "rn", "neighbor_id", "cos_sim")
+  }
+
+  /** The per-partition half of the rank: score each row only against the
+    * queries probing its cell (recon = centroid(cell) + decode(codes),
+    * [[cosine]]) and keep a bounded top-k per query, emitted as
+    * (query_id, neighbor_id, cos_sim). */
+  private def partitionTopK(q: ProbedQueries, k: Int,
+      coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
+      dim: Int): Iterator[(Long, Int, Array[Int])] => Iterator[(Long, Long, Double)] = {
     val m = books.size
     val sub = dim / m
     val coarseMap = coarse.toMap
@@ -592,43 +629,45 @@ object VectorOps {
     val probing: Map[Int, Array[Int]] = q.cells.zipWithIndex
       .flatMap { case (cs, qi) => cs.map(_ -> qi) }
       .groupMap(_._1)(_._2)
-    codes.select(col("vec_id"), col("cell"), col("codes"))
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions { rows =>
-        val tops = Array.fill(ids.length)(new BoundedTopK(k))
-        rows.foreach { case (id, cell, cs) =>
-          probing.get(cell).foreach { qis =>
-            val recon = coarseMap(cell).clone()
-            var s = 0
-            while (s < m) {
-              val cv = lookup(s)(cs(s))
-              var i = 0
-              while (i < sub) { recon(s * sub + i) += cv(i); i += 1 }
-              s += 1
-            }
-            qis.foreach { qi =>
-              if (ids(qi) != id) tops(qi).offer(id, cosine(vecs(qi), recon))
-            }
+    rows => {
+      val tops = Array.fill(ids.length)(new BoundedTopK(k))
+      rows.foreach { case (id, cell, cs) =>
+        probing.get(cell).foreach { qis =>
+          val recon = coarseMap(cell).clone()
+          var s = 0
+          while (s < m) {
+            val cv = lookup(s)(cs(s))
+            var i = 0
+            while (i < sub) { recon(s * sub + i) += cv(i); i += 1 }
+            s += 1
           }
-        }
-        ids.indices.iterator.flatMap { qi =>
-          tops(qi).ranked.map { case (n, sim) => (ids(qi), n, sim) }
-        }
-      }
-      .repartition(1)
-      .mapPartitions { rows =>
-        val tops = scala.collection.mutable.HashMap.empty[Long, BoundedTopK]
-        rows.foreach { case (qid, n, sim) =>
-          tops.getOrElseUpdate(qid, new BoundedTopK(k)).offer(n, sim)
-        }
-        tops.toSeq.sortBy(_._1).iterator.flatMap { case (qid, top) =>
-          top.ranked.zipWithIndex.map { case ((n, sim), r) =>
-            (qid, r + 1L, n, sim)
+          qis.foreach { qi =>
+            if (ids(qi) != id) tops(qi).offer(id, cosine(vecs(qi), recon))
           }
         }
       }
-      .toDF("query_id", "rn", "neighbor_id", "cos_sim")
+      ids.indices.iterator.flatMap { qi =>
+        tops(qi).ranked.map { case (n, sim) => (ids(qi), n, sim) }
+      }
+    }
   }
+
+  /** The merge half: fold every partition's (query_id, neighbor_id,
+    * cos_sim) candidates into one bounded top-k per query and number
+    * them, as (query_id, rn, neighbor_id, cos_sim) by query id. */
+  private def mergeTopK(k: Int)
+      : Iterator[(Long, Long, Double)] => Iterator[(Long, Long, Long, Double)] =
+    rows => {
+      val tops = scala.collection.mutable.HashMap.empty[Long, BoundedTopK]
+      rows.foreach { case (qid, n, sim) =>
+        tops.getOrElseUpdate(qid, new BoundedTopK(k)).offer(n, sim)
+      }
+      tops.toSeq.sortBy(_._1).iterator.flatMap { case (qid, top) =>
+        top.ranked.zipWithIndex.map { case ((n, sim), r) =>
+          (qid, r + 1L, n, sim)
+        }
+      }
+    }
 
   /** cosine(x, y) with [[graft.functions.CosineSimilarity]]'s arithmetic:
     * float→double terms accumulated in index order over the shorter

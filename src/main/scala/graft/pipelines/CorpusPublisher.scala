@@ -145,26 +145,40 @@ object CorpusPublisher {
   /** A split table's member for a group publish: normally the `batch=`
     * partitions of `rows` (GroupDelta) linking `reuse`; but a
     * partitioned version may not be EMPTY (the manifest must name at
-    * least one partition directory), so an empty side with nothing to
+    * least one partition directory), so an `empty` side with nothing to
     * link is published as a plain empty version instead — same columns,
     * and a later append over it simply starts its partition history
     * then. */
-  private def sideMember(t: String, rows: DataFrame,
+  private def sideMember(t: String, rows: DataFrame, empty: Boolean,
       reuse: Seq[(String, String)]): Versioned.GroupMember =
-    if (reuse.isEmpty && rows.isEmpty) Versioned.GroupFull(t, rows)
+    if (reuse.isEmpty && empty) Versioned.GroupFull(t, rows)
     else Versioned.GroupDelta(t, rows, "batch", reuse)
 
   /** ONE group transaction over the family: each split table stages its
     * side of `rows` (which carry `split` and `batch`) linking its `reuse`
-    * entries, next to the budget `manifest`. */
-  private def publishSides(rows: DataFrame, manifest: DataFrame,
+    * entries, next to the budget manifest that `manifest` derives from
+    * `delta`, the [[budget]] of `rows`. When some side has nothing to
+    * link, `delta` is collected once (one row per non-empty split): it
+    * tells which sides are empty, and it enters the manifest as a local
+    * relation instead of being aggregated again. */
+  private def publishSides(rows: DataFrame, delta: DataFrame,
+      manifest: DataFrame => DataFrame,
       reuse: String => Seq[(String, String)], baseDir: String,
-      keep: Int): Map[String, Long] =
+      keep: Int): Map[String, Long] = {
+    val collected =
+      if (SplitTables.forall { case (t, _) => reuse(t).nonEmpty }) None
+      else Some(delta.collect())
+    val budgetDf = collected.fold(delta)(rs => rows.sparkSession
+      .createDataFrame(java.util.Arrays.asList(rs: _*), delta.schema))
     Versioned.publishGroupMembers(
       SplitTables.map { case (t, s) =>
-        sideMember(t, rows.filter(col("split") === s).drop("split"), reuse(t))
-      } :+ Versioned.GroupFull(ManifestTable, manifest.orderBy(col("split"))),
+        sideMember(t, rows.filter(col("split") === s).drop("split"),
+          collected.exists(!_.exists(_.getAs[String]("split") == s)),
+          reuse(t))
+      } :+ Versioned.GroupFull(ManifestTable,
+        manifest(budgetDf).orderBy(col("split"))),
       baseDir, keep)
+  }
 
   /** Run `body` on the family's latest group snapshot (table → version)
     * under the family lease: the snapshot-read → rewrite → group-publish
@@ -195,7 +209,7 @@ object CorpusPublisher {
         splitThreshold, trainPct, valPct)
       .pinLazy // three split filters + the manifest below
     publishSides(admitted.withColumn("batch", lit(0L)), budget(admitted),
-      _ => Nil, baseDir, keep)
+      identity, _ => Nil, baseDir, keep)
   }
 
   /** Admit a NEW document batch into the published corpus family as one
@@ -294,14 +308,14 @@ object CorpusPublisher {
       .pinLazy // three split filters + the delta rollup
     // budget manifest: OLD manifest + this batch's exact deltas — the
     // published corpus is never re-aggregated
-    val manifest = Versioned.read(spark, baseDir, ManifestTable,
-        Some(vs(ManifestTable)))
-      .unionByName(budget(admitted))
+    def manifest(delta: DataFrame) = Versioned.read(spark, baseDir,
+        ManifestTable, Some(vs(ManifestTable)))
+      .unionByName(delta)
       .groupBy(col("split"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"))
-    publishSides(admitted.withColumn("batch", lit(batchId)), manifest,
-      reuseOf, baseDir, keep)
+    publishSides(admitted.withColumn("batch", lit(batchId)), budget(admitted),
+      manifest, reuseOf, baseDir, keep)
     }
   }
 
@@ -343,6 +357,7 @@ object CorpusPublisher {
           .withColumn("split", lit(s))
       }.reduce(_ unionByName _)
         .pinLazy // feeds the member writes AND the manifest
-      publishSides(survivors, budget(survivors), _ => Nil, baseDir, keep)
+      publishSides(survivors, budget(survivors), identity, _ => Nil,
+        baseDir, keep)
     }
 }

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.StructType
 
 /** Versioned parquet publishing — the Delta-lite upgrade of the sink
   * family (SURVEY §2.2): every publish writes a NEW immutable version
@@ -992,13 +993,17 @@ object Versioned {
     * matter how many partitions the table carries (a per-partition union
     * would blow up driver-side planning at 10⁴ partitions). The
     * partition column is cast to the manifest's declared type (directory
-    * inference alone would guess). */
+    * inference alone would guess). A given `schema` (a frame this
+    * method returned earlier, partition column included) skips the
+    * footer read Spark runs as a job to infer one. */
   private def readEntries(spark: SparkSession, t: Path, m: Manifest,
-      entries: Seq[(String, String)]): DataFrame = {
+      entries: Seq[(String, String)],
+      schema: Option[StructType] = None): DataFrame = {
     require(entries.nonEmpty, "no partitions to read")
     entries.groupBy(_._2.takeWhile(_ != '/')).toSeq.sortBy(_._1)
       .map { case (vRel, group) =>
-        spark.read.option("basePath", new Path(t, vRel).toString)
+        schema.fold(spark.read)(spark.read.schema)
+          .option("basePath", new Path(t, vRel).toString)
           .parquet(group.map { case (_, rel) => new Path(t, rel).toString }: _*)
       }
       .map(df => df.withColumn(m.partCol, col(m.partCol).cast(m.partType)))
@@ -1022,10 +1027,11 @@ object Versioned {
   }
 
   /** Read a subset of a manifest version's partitions (same grouped-read
-    * plan shape as [[read]]). */
+    * plan shape as [[read]]), under `schema` when given. */
   def readPartitions(spark: SparkSession, baseDir: String, name: String,
-      m: Manifest, entries: Seq[(String, String)]): DataFrame =
-    readEntries(spark, tableDir(baseDir, name), m, entries)
+      m: Manifest, entries: Seq[(String, String)],
+      schema: Option[StructType] = None): DataFrame =
+    readEntries(spark, tableDir(baseDir, name), m, entries, schema)
 
   /** Version history as a DataFrame — the operational observability
     * surface (Delta's DESCRIBE HISTORY reduced to what the protocol

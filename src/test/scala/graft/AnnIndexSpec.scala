@@ -22,20 +22,35 @@ class AnnIndexSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory("ann_idx_spec_").toString
   private def tmpRoot(): String = tmp()
 
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.get(key)
+    try { spark.conf.set(key, value); body } finally spark.conf.set(key, prev)
+  }
+
+  /** Serves take the distributed path when auto-broadcast is off. */
+  private def distributed[A](body: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body)
+
+  /** `body` on the driver path (the session's broadcast budget holds the
+    * test indexes' codes) and again on the distributed path. */
+  private def onBothPaths(body: => Unit): Unit = { body; distributed(body) }
+
   private def collectTopK(df: org.apache.spark.sql.DataFrame) =
     df.select(col("query_id"), col("rn"), col("neighbor_id"), col("cos_sim"))
       .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
 
   test("serve from the published index == one-shot ivfPqTopK (bit-identical)") {
-    val idx = tmp()
-    val versions = AnnIndex.build(emb, idx)
-    assert(versions == Map(AnnIndex.CentroidsTable -> 0L,
-      AnnIndex.CodebooksTable -> 0L, AnnIndex.CodesTable -> 0L))
-    val queries = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
-    val oneShot = collectTopK(VectorOps.ivfPqTopK(emb, col("vec_id") < 8, 5))
-    assert(served == oneShot) // exact, including every cos_sim bit
+    onBothPaths {
+      val idx = tmp()
+      val versions = AnnIndex.build(emb, idx)
+      assert(versions == Map(AnnIndex.CentroidsTable -> 0L,
+        AnnIndex.CodebooksTable -> 0L, AnnIndex.CodesTable -> 0L))
+      val queries = emb.filter(col("vec_id") < 8)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
+      val oneShot = collectTopK(VectorOps.ivfPqTopK(emb, col("vec_id") < 8, 5))
+      assert(served == oneShot) // exact, including every cos_sim bit
+    }
   }
 
   test("serve pushes the probe-cell set into the codes scan; pruning is " +
@@ -44,7 +59,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.build(emb, idx)
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val served = AnnIndex.serveTopK(spark, idx, queries, 5)
+    val served = distributed(AnnIndex.serveTopK(spark, idx, queries, 5))
     // the bounded probe-cell set reaches the parquet scan as In(cell, …).
     // Each codes file is one row group spanning all its cells, so the
     // filter skips no bytes yet: the scan reads every code row and the
@@ -544,7 +559,12 @@ class AnnIndexSpec extends AnyFunSuite {
       "serve returned an erased vector")
     assert(servedRows == expected) // anti-join(victims) ≡ semi-join(complement)
     // the probed-cell parquet pushdown survives the tombstone anti-join
-    val plan = served.queryExecution.executedPlan.toString
+    // on the distributed path, which serves the same rows
+    val plan = distributed {
+      val d = AnnIndex.serveTopK(spark, idx, queries, 5)
+      assert(collectTopK(d) == expected)
+      d.queryExecution.executedPlan.toString
+    }
     assert(plan.contains("In(cell"), plan)
     // the filtered path composes with tombstones too
     val filteredServed = collectTopK(AnnIndex.serveTopKFiltered(
@@ -668,42 +688,51 @@ class AnnIndexSpec extends AnyFunSuite {
   test("delete scopes tombstones to the admission cutoff: a later append " +
     "reusing the erased id is servable, compact folds exactly the scoped " +
     "rows, and a re-delete erases the recycled id again") {
-    val idx = tmp()
-    AnnIndex.build(emb.filter(col("vec_id") < 100), idx)
-    // query = id 7's own vector under a non-corpus query_id, so its cell
-    // is always probed and (when alive) it ranks with cos_sim = 1
-    val q = emb.filter(col("vec_id") === 7)
-      .select(lit(999L).as("query_id"), col("embedding").as("qv"))
-    val seven = emb.filter(col("vec_id") === 7)
-      .select(col("vec_id"), col("embedding"))
-    val only7 = spark.range(1).select(lit(7L).as("vec_id"))
-    def servable7(): Boolean = collectTopK(
-      AnnIndex.serveTopKFiltered(spark, idx, q, only7, 5)).exists(_._3 == 7L)
-    assert(servable7())
-    AnnIndex.delete(only7, idx)
-    assert(!servable7(), "deleted id still servable")
-    val (live0, dead0) = AnnIndex.deletionPressure(spark, idx)
-    assert(dead0 == 1L && live0 == 99L)
-    // the id comes BACK (re-consent / id recycling): an append ABOVE the
-    // delete's cutoff must be fully servable — a vec_id-only tombstone
-    // (the pre-r13 shape) hid it from every serve and the next compact
-    // physically dropped it while the corpus kept the doc (ADVICE r12)
-    AnnIndex.append(seven, idx, batchId = 1L)
-    assert(servable7(), "re-appended id hidden by the earlier tombstone")
-    val (live1, dead1) = AnnIndex.deletionPressure(spark, idx)
-    assert(dead1 == 1L && live1 == 100L,
-      "the re-appended row must not count as dead")
-    // compact folds ONLY the scoped (batch <= cutoff) row
-    AnnIndex.compact(spark, idx)
-    assert(Versioned.read(spark, idx, AnnIndex.CodesTable)
-      .filter(col("vec_id") === 7).count() == 1L)
-    assert(servable7(), "compact dropped the re-appended row")
-    // a SECOND delete's cutoff covers the recycled generation too
-    AnnIndex.delete(only7, idx)
-    assert(!servable7(), "re-delete must erase the recycled id")
-    // and an append after that cutoff is servable again
-    AnnIndex.append(seven, idx, batchId = 2L)
-    assert(servable7(), "append above the second cutoff hidden")
+    onBothPaths {
+      val idx = tmp()
+      AnnIndex.build(emb.filter(col("vec_id") < 100), idx)
+      // query = id 7's own vector under a non-corpus query_id, so its cell
+      // is always probed and (when alive) it ranks with cos_sim = 1
+      val q = emb.filter(col("vec_id") === 7)
+        .select(lit(999L).as("query_id"), col("embedding").as("qv"))
+      val seven = emb.filter(col("vec_id") === 7)
+        .select(col("vec_id"), col("embedding"))
+      val only7 = spark.range(1).select(lit(7L).as("vec_id"))
+      def servable7(): Boolean = {
+        val filtered = collectTopK(
+          AnnIndex.serveTopKFiltered(spark, idx, q, only7, 5)).exists(_._3 == 7L)
+        // k above the index size: id 7 (in a probed cell) ranks iff live
+        val unfiltered = collectTopK(
+          AnnIndex.serveTopK(spark, idx, q, 1000)).exists(_._3 == 7L)
+        assert(unfiltered == filtered, "serveTopK and the filtered serve disagree")
+        filtered
+      }
+      assert(servable7())
+      AnnIndex.delete(only7, idx)
+      assert(!servable7(), "deleted id still servable")
+      val (live0, dead0) = AnnIndex.deletionPressure(spark, idx)
+      assert(dead0 == 1L && live0 == 99L)
+      // the id comes BACK (re-consent / id recycling): an append ABOVE the
+      // delete's cutoff must be fully servable — a vec_id-only tombstone
+      // (the pre-r13 shape) hid it from every serve and the next compact
+      // physically dropped it while the corpus kept the doc (ADVICE r12)
+      AnnIndex.append(seven, idx, batchId = 1L)
+      assert(servable7(), "re-appended id hidden by the earlier tombstone")
+      val (live1, dead1) = AnnIndex.deletionPressure(spark, idx)
+      assert(dead1 == 1L && live1 == 100L,
+        "the re-appended row must not count as dead")
+      // compact folds ONLY the scoped (batch <= cutoff) row
+      AnnIndex.compact(spark, idx)
+      assert(Versioned.read(spark, idx, AnnIndex.CodesTable)
+        .filter(col("vec_id") === 7).count() == 1L)
+      assert(servable7(), "compact dropped the re-appended row")
+      // a SECOND delete's cutoff covers the recycled generation too
+      AnnIndex.delete(only7, idx)
+      assert(!servable7(), "re-delete must erase the recycled id")
+      // and an append after that cutoff is servable again
+      AnnIndex.append(seven, idx, batchId = 2L)
+      assert(servable7(), "append above the second cutoff hidden")
+    }
   }
 
   test("delete auto-compacts when the folded tombstone set crosses the " +
@@ -781,11 +810,17 @@ class AnnIndexSpec extends AnyFunSuite {
       .contains(AnnIndex.TombstonesTable),
       "5 distinct ids across two delete generations must not trip a bound of 7")
     // below the derived trigger, the serve anti-join IS broadcast-shaped
-    // — the invariant the derivation exists to provide
+    // — the invariant the derivation exists to provide. These codes fit
+    // the budget, so the unfiltered serve ranks on the driver; the
+    // filtered serve always scans, and an all-pass filter serves the
+    // same rows
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val plan = AnnIndex.serveTopK(spark, idx, queries, 5)
-      .queryExecution.executedPlan.toString
+    val scanned = AnnIndex.serveTopKFiltered(spark, idx, queries,
+      emb.select(col("vec_id")), 5)
+    assert(collectTopK(scanned) ==
+      collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5)))
+    val plan = scanned.queryExecution.executedPlan.toString
     assert("""BroadcastHashJoin[^\n]*LeftAnti""".r.findFirstIn(plan).isDefined,
       s"standing set below the broadcast budget must serve broadcast-anti:\n$plan")
     // and when the session budget shrinks below the standing set, the
@@ -856,84 +891,88 @@ class AnnIndexSpec extends AnyFunSuite {
   test("rank edge cases: k <= 0 and an empty query frame give the empty " +
     "four-column frame; a query whose probed cells hold only its own id " +
     "gets no rows") {
-    val idx = tmp()
-    AnnIndex.build(emb, idx)
-    val queries = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val columns = Seq("query_id", "rn", "neighbor_id", "cos_sim")
-    for (k <- Seq(0, -1)) {
-      val out = AnnIndex.serveTopK(spark, idx, queries, k)
-      assert(out.columns.toSeq == columns && out.isEmpty, s"k = $k")
+    onBothPaths {
+      val idx = tmp()
+      AnnIndex.build(emb, idx)
+      val queries = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+      val columns = Seq("query_id", "rn", "neighbor_id", "cos_sim")
+      for (k <- Seq(0, -1)) {
+        val out = AnnIndex.serveTopK(spark, idx, queries, k)
+        assert(out.columns.toSeq == columns && out.isEmpty, s"k = $k")
+      }
+      val none = AnnIndex.serveTopK(spark, idx, queries.filter(lit(false)), 5)
+      assert(none.columns.toSeq == columns && none.isEmpty)
+      // a one-vector index: every probed cell holds only the query's own id
+      val solo = tmp()
+      AnnIndex.build(emb.filter(col("vec_id") === 0), solo)
+      val v0 = emb.filter(col("vec_id") === 0)
+      assert(AnnIndex.serveTopK(spark, solo,
+        v0.select(col("vec_id").as("query_id"), col("embedding").as("qv")), 5)
+        .isEmpty)
+      // the same vector under another query id does find it
+      assert(collectTopK(AnnIndex.serveTopK(spark, solo,
+        v0.select(lit(999L).as("query_id"), col("embedding").as("qv")), 5))
+        .map(r => (r._2, r._3)) == Seq((1L, 0L)))
     }
-    val none = AnnIndex.serveTopK(spark, idx, queries.filter(lit(false)), 5)
-    assert(none.columns.toSeq == columns && none.isEmpty)
-    // a one-vector index: every probed cell holds only the query's own id
-    val solo = tmp()
-    AnnIndex.build(emb.filter(col("vec_id") === 0), solo)
-    val v0 = emb.filter(col("vec_id") === 0)
-    assert(AnnIndex.serveTopK(spark, solo,
-      v0.select(col("vec_id").as("query_id"), col("embedding").as("qv")), 5)
-      .isEmpty)
-    // the same vector under another query id does find it
-    assert(collectTopK(AnnIndex.serveTopK(spark, solo,
-      v0.select(lit(999L).as("query_id"), col("embedding").as("qv")), 5))
-      .map(r => (r._2, r._3)) == Seq((1L, 0L)))
   }
 
   test("a vec_id reused by a later append ranks once per query, at the " +
     "larger of its two scores, on every run and shuffle width") {
-    val idx = tmp()
-    AnnIndex.build(emb, idx)
-    val codes0 = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
-      .select("vec_id", "cell", "codes").as[(Long, Int, Array[Int])]
-      .collect()
-    val (_, cell5, codes5) = codes0.find(_._1 == 5L).get
-    // id 5 comes back with the vector of an id x in its cell whose codes
-    // differ: both rows of id 5 sit in one probed cell, scored apart
-    val x = codes0.filter(r => r._2 == cell5 && r._1 != 5L &&
-      !r._3.sameElements(codes5)).map(_._1).min
-    AnnIndex.append(emb.filter(col("vec_id") === x)
-      .select(lit(5L).as("vec_id"), col("embedding")), idx, batchId = 1L)
-    def vec(id: Long) = emb.filter(col("vec_id") === id).select("embedding")
-      .as[Array[Float]].head()
-    // 998 ranks id 5's first row higher, 999 its second
-    val probes = Seq(998L -> vec(5L), 999L -> vec(x))
-    val queries = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .unionByName(probes.toDF("query_id", "qv"))
-    // the two code rows of id 5, scored by the cosine expression itself
-    val (coarse, books) = AnnIndex.loadModel(spark, idx)
-    val sub = coarse.head._2.length / books.size
-    val recons = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
-      .filter(col("vec_id") === 5).select("cell", "codes")
-      .as[(Int, Array[Int])].collect().map { case (cell, cs) =>
-        val out = coarse.toMap.apply(cell).clone()
-        for (s <- books.indices; i <- 0 until sub)
-          out(s * sub + i) += books(s).toMap.apply(cs(s))(i)
-        out
+    onBothPaths {
+      val idx = tmp()
+      AnnIndex.build(emb, idx)
+      val codes0 = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+        .select("vec_id", "cell", "codes").as[(Long, Int, Array[Int])]
+        .collect()
+      val (_, cell5, codes5) = codes0.find(_._1 == 5L).get
+      // id 5 comes back with the vector of an id x in its cell whose codes
+      // differ: both rows of id 5 sit in one probed cell, scored apart
+      val x = codes0.filter(r => r._2 == cell5 && r._1 != 5L &&
+        !r._3.sameElements(codes5)).map(_._1).min
+      AnnIndex.append(emb.filter(col("vec_id") === x)
+        .select(lit(5L).as("vec_id"), col("embedding")), idx, batchId = 1L)
+      def vec(id: Long) = emb.filter(col("vec_id") === id).select("embedding")
+        .as[Array[Float]].head()
+      // 998 ranks id 5's first row higher, 999 its second
+      val probes = Seq(998L -> vec(5L), 999L -> vec(x))
+      val queries = emb.filter(col("vec_id") < 4)
+        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+        .unionByName(probes.toDF("query_id", "qv"))
+      // the two code rows of id 5, scored by the cosine expression itself
+      val (coarse, books) = AnnIndex.loadModel(spark, idx)
+      val sub = coarse.head._2.length / books.size
+      val recons = Versioned.readGroup(spark, idx)(AnnIndex.CodesTable)
+        .filter(col("vec_id") === 5).select("cell", "codes")
+        .as[(Int, Array[Int])].collect().map { case (cell, cs) =>
+          val out = coarse.toMap.apply(cell).clone()
+          for (s <- books.indices; i <- 0 until sub)
+            out(s * sub + i) += books(s).toMap.apply(cs(s))(i)
+          out
+        }
+      assert(recons.length == 2)
+      val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10))
+      assert(served.groupBy(r => (r._1, r._3)).forall(_._2.size == 1),
+        "a neighbor ranked twice for one query")
+      for ((qid, qv) <- probes) {
+        val scores = recons.toSeq.toDF("recon")
+          .select(graft.functions.CosineSimilarity.cosineSim(
+            typedLit(qv), col("recon")))
+          .as[Double].collect()
+        assert(scores(0) != scores(1))
+        assert(served.filter(r => r._1 == qid && r._3 == 5L).map(_._4) ==
+          Seq(scores.max), s"query $qid")
       }
-    assert(recons.length == 2)
-    val served = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10))
-    assert(served.groupBy(r => (r._1, r._3)).forall(_._2.size == 1),
-      "a neighbor ranked twice for one query")
-    for ((qid, qv) <- probes) {
-      val scores = recons.toSeq.toDF("recon")
-        .select(graft.functions.CosineSimilarity.cosineSim(
-          typedLit(qv), col("recon")))
-        .as[Double].collect()
-      assert(scores(0) != scores(1))
-      assert(served.filter(r => r._1 == qid && r._3 == 5L).map(_._4) ==
-        Seq(scores.max), s"query $qid")
+      assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) == served)
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      try {
+        for (n <- Seq("1", "8")) {
+          spark.conf.set("spark.sql.shuffle.partitions", n)
+          assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) ==
+            served, s"shuffle.partitions = $n")
+        }
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
-    assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) == served)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      for (n <- Seq("1", "8")) {
-        spark.conf.set("spark.sql.shuffle.partitions", n)
-        assert(collectTopK(AnnIndex.serveTopK(spark, idx, queries, 10)) ==
-          served, s"shuffle.partitions = $n")
-      }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   test("ivfPqRank == the relational rank (broadcast probe join, " +
@@ -983,7 +1022,7 @@ class AnnIndexSpec extends AnyFunSuite {
     val local = emb.filter(col("vec_id") < 4)
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "qv")
-    val plan = AnnIndex.serveTopK(spark, idx, local, 5)
+    val plan = distributed(AnnIndex.serveTopK(spark, idx, local, 5))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
     assert("Exchange".r.findAllMatchIn(plan).size <= 1, plan)
@@ -1033,5 +1072,70 @@ class AnnIndexSpec extends AnyFunSuite {
     val servedB = collectTopK(AnnIndex.serveTopK(spark, b, queries(shift), 5))
       .map { case (q, rn, n, sim) => (q - shift, rn, n - shift, sim) }
     assert(collectTopK(AnnIndex.serveTopK(spark, a, queries(0L), 5)) == servedB)
+  }
+
+  test("a warm serve starts no Spark job: an append's serve reads only the " +
+    "added partition in at most one job, build / compact / delete reload " +
+    "or re-scope the cached codes, and the cache holds one entry per " +
+    "directory") {
+    val idx = tmp()
+    AnnIndex.build(emb.filter(col("vec_id") < 200), idx)
+    AnnIndex.invalidateModelCache()
+    val local = emb.filter(col("vec_id") < 6)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "qv")
+    def serve() = SparkJobs.counted(spark)(
+      collectTopK(AnnIndex.serveTopK(spark, idx, local, 5)))
+    def scanned() = distributed(serve()._1)
+    def warm(expected: Seq[(Long, Long, Long, Double)], what: String) = {
+      val (rows, jobs) = serve()
+      assert(jobs == 0, s"a warm serve $what started $jobs jobs")
+      assert(rows == expected, what)
+    }
+    def loaded[A](body: => A): (A, Long) = {
+      val r0 = AnnIndex.codesRowsLoaded
+      val a = body
+      (a, AnnIndex.codesRowsLoaded - r0)
+    }
+    val (cold, coldRows) = loaded(serve()._1)
+    assert(coldRows == 200L)
+    assert(cold == collectTopK(
+      VectorOps.ivfPqTopK(emb.filter(col("vec_id") < 200), col("vec_id") < 6, 5)))
+    warm(cold, "after the build")
+    for (b <- 1 to 3) {
+      val batch = emb.filter(col("vec_id") >= 100 + 100 * b &&
+        col("vec_id") < 200 + 100 * b)
+      val (_, appendRows) = loaded(AnnIndex.append(batch, idx, batchId = b))
+      assert(appendRows == 0L, "append read codes into the cache")
+      val ((rows, jobs), extendRows) = loaded(serve())
+      assert(jobs <= 1, s"the serve after append $b started $jobs jobs")
+      assert(extendRows == 100L, s"append $b: the serve reloaded the codes")
+      assert(rows == scanned(), s"append $b")
+      warm(rows, s"after append $b")
+      assert(AnnIndex.cachedDirs == 1)
+    }
+    val beforeCompact = serve()._1
+    AnnIndex.compact(spark, idx)
+    val (afterCompact, compactRows) = loaded(serve()._1)
+    assert(compactRows == 500L)
+    assert(afterCompact == beforeCompact)
+    warm(afterCompact, "after the compact")
+    // a delete adds tombstones: the cached rows are re-scoped, not reread
+    val victimPred = col("vec_id") % 7 === 3
+    val complement = emb.filter(!victimPred).select(col("vec_id"))
+    val filtered = collectTopK(
+      AnnIndex.serveTopKFiltered(spark, idx, local, complement, 5))
+    AnnIndex.delete(emb.filter(victimPred).select(col("vec_id")), idx)
+    val (afterDelete, deleteRows) = loaded(serve()._1)
+    assert(deleteRows == 0L)
+    assert(afterDelete == filtered && afterDelete != afterCompact)
+    warm(afterDelete, "after the delete")
+    val l0 = AnnIndex.modelLoads
+    AnnIndex.build(emb, idx)
+    val rebuilt = serve()._1
+    assert(AnnIndex.modelLoads == l0 + 1)
+    assert(rebuilt == collectTopK(VectorOps.ivfPqTopK(emb, col("vec_id") < 6, 5)))
+    warm(rebuilt, "after the rebuild")
+    assert(AnnIndex.cachedDirs == 1)
   }
 }
