@@ -41,11 +41,11 @@ import graft.ops.Pin._
   *   - [[delete]]: row-level erasure WITHOUT a retrain — victims land
   *     as a tombstone delta (`ann_tombstones`, the fourth family
   *     member) and every serve drops them (anti-joined out of the
-  *     codes scan, or applied to the cached codes); [[compact]] folds
-  *     them into the codes rewrite and drops the table from the
-  *     snapshot; [[build]] clears them (the caller retrains over the
-  *     already-erased corpus). A GDPR erasure is one O(victims)
-  *     metadata transaction, not an O(corpus) retrain.
+  *     codes scan, also when the snapshot cache loads the codes);
+  *     [[compact]] folds them into the codes rewrite and drops the
+  *     table from the snapshot; [[build]] clears them (the caller
+  *     retrains over the already-erased corpus). A GDPR erasure is one
+  *     O(victims) metadata transaction, not an O(corpus) retrain.
   *   - [[append]]: encode a NEW batch against the FROZEN model
   *     (the incremental-dedup admission pattern), stage only that
   *     batch's partition, and link everything else — model tables
@@ -174,10 +174,13 @@ object AnnIndex {
   // cell, ids and packed codes only: no reconstruction is cached. An
   // append adds one `batch=` partition and links the rest, so the next
   // serve reads only the added partitions' files; a new tombstone
-  // version re-applies the tombstones to the cached rows; a manifest
-  // that drops an entry (build, compact) reloads in full. Entries are
-  // immutable and swapped with compare-and-set, so concurrent serves
-  // never see a half-built one.
+  // version (delete) or a manifest that drops an entry (build, compact)
+  // reloads in full, the tombstones anti-joined out as on the
+  // distributed path. The same budget bounds the codes held across
+  // directories: loading one directory's codes past it drops the codes
+  // (not the models) of the others. Entries are immutable and swapped
+  // with compare-and-set, so concurrent serves never see a half-built
+  // one.
 
   private type Model = (Seq[(Int, Array[Float])], Seq[Seq[(Int, Array[Float])]])
 
@@ -189,11 +192,6 @@ object AnnIndex {
     def codes(r: Int): Array[Int] =
       if (wide == null) Array.tabulate(m)(s => narrow(r * m + s) & 0xFF)
       else java.util.Arrays.copyOfRange(wide, r * m, r * m + m)
-
-    def filterIds(keep: Long => Boolean): CellRows = {
-      val rs = ids.indices.filter(r => keep(ids(r)))
-      CellRows(rs.map(r => (ids(r), codes(r))), m, wide != null)
-    }
   }
 
   private object CellRows {
@@ -204,15 +202,14 @@ object AnnIndex {
     }
   }
 
-  /** The live rows of one codes partition (`batch=` value), by cell. */
-  private final case class Segment(batch: Long, cells: Map[Int, CellRows])
-
   /** The live codes of one snapshot: its codes version, manifest entries
     * and tombstone version, the summed part-file bytes of those entries,
     * and — while the bytes are within budget — the rows themselves with
-    * the tombstones applied. */
+    * the tombstones applied, by partition (one map per manifest entry)
+    * and cell. */
   private final case class Codes(version: Long, entries: Seq[(String, String)],
-      tombstones: Option[Long], bytes: Long, rows: Option[Seq[Segment]])
+      tombstones: Option[Long], bytes: Long,
+      rows: Option[Seq[Map[Int, CellRows]]])
 
   /** The codes table's columns as build, append and compact write them,
     * the `batch` partition column last. Reading under it skips the footer
@@ -221,7 +218,10 @@ object AnnIndex {
     StructType.fromDDL("vec_id BIGINT, cell INT, codes ARRAY<INT>, batch BIGINT")
 
   private final case class Entry(key: (Long, Long, Long), model: Model,
-      codes: Option[Codes])
+      codes: Option[Codes]) {
+    /** Part-file bytes of the codes rows this entry holds (0 for none). */
+    def held: Long = codes.filter(_.rows.nonEmpty).fold(0L)(_.bytes)
+  }
 
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
   /** Directories whose entries the cache holds at once; the next new one
@@ -240,6 +240,10 @@ object AnnIndex {
 
   /** Directories the cache holds an entry for. */
   private[graft] def cachedDirs: Int = cache.size
+
+  /** Part-file bytes of the codes rows the cache holds, all directories. */
+  private[graft] def cachedCodesBytes: Long =
+    cache.values.stream.mapToLong(_.held).sum
 
   /** Test hook: drop every cached entry. */
   private[graft] def invalidateModelCache(): Unit = cache.clear()
@@ -300,11 +304,18 @@ object AnnIndex {
       snapshot: Map[String, Long], entry: Entry, budget: Long,
       cells: Array[Int]): Option[Iterator[(Long, Int, Array[Int])]] = {
     val codes = codesAt(spark, indexDir, snapshot, entry, budget)
-    if (!entry.codes.exists(_ eq codes))
-      swap(indexDir, Some(entry), entry.copy(codes = Some(codes)))
+    if (!entry.codes.exists(_ eq codes)) {
+      val next = entry.copy(codes = Some(codes))
+      // the rows held across directories stay within the same budget:
+      // the other directories give up their codes (not their models)
+      val elsewhere = cachedCodesBytes - entry.held
+      if (elsewhere > 0 && elsewhere + next.held > budget)
+        cache.replaceAll((d, e) => if (d == indexDir) e else e.copy(codes = None))
+      swap(indexDir, Some(entry), next)
+    }
     codes.rows.filter(_ => codes.bytes <= budget).map { segments =>
       for (seg <- segments.iterator; c <- cells.iterator;
-           rows <- seg.cells.get(c).iterator; r <- rows.ids.indices.iterator)
+           rows <- seg.get(c).iterator; r <- rows.ids.indices.iterator)
         yield (rows.ids(r), c, rows.codes(r))
     }
   }
@@ -320,34 +331,21 @@ object AnnIndex {
     }
     val m = codesManifest(indexDir, version)
     val now = m.entries.toSet
-    // an entry kept from the cached codes is still valid when the new
-    // manifest holds all of its partitions and still carries tombstones
-    // if it did (a tombstone set only grows until a compact or build,
-    // which rewrite the codes)
-    val kept = entry.codes.filter(c => c.entries.forall(now) &&
-      (c.tombstones.isEmpty || tombstones.nonEmpty))
+    // the cached partitions stay valid when the new manifest still holds
+    // all of them under the same tombstones (an append); a build, a
+    // compact or a delete reloads every partition
+    val kept = entry.codes.filter(c =>
+      c.tombstones == tombstones && c.entries.forall(now))
     val added = kept.fold(m.entries)(c => m.entries.filterNot(c.entries.toSet))
     val bytes = kept.fold(0L)(_.bytes) + partBytes(indexDir, added)
     val (nCodes, wide) =
       (entry.model._2.size, entry.model._2.exists(_.exists(_._1 > 255)))
+    def read(es: Seq[(String, String)]) =
+      readSegments(spark, indexDir, snapshot, m, es, nCodes, wide)
     val rows =
       if (bytes > budget) None
-      else kept.flatMap(_.rows) match {
-        case Some(segments) =>
-          val scoped =
-            if (kept.exists(_.tombstones == tombstones)) segments
-            else {
-              val dead = tombstoneMap(spark, indexDir, tombstones.get)
-              segments.map(seg => seg.copy(cells = seg.cells.map {
-                case (c, rs) => c -> rs.filterIds(id =>
-                  !dead.get(id).exists(seg.batch <= _))
-              }))
-            }
-          Some(scoped ++ (if (added.isEmpty) Nil else
-            readSegments(spark, indexDir, snapshot, m, added, nCodes, wide)))
-        case None =>
-          Some(readSegments(spark, indexDir, snapshot, m, m.entries, nCodes, wide))
-      }
+      else Some(kept.flatMap(_.rows).fold(read(m.entries))(segments =>
+        segments ++ (if (added.isEmpty) Nil else read(added))))
     Codes(version, m.entries, tombstones, bytes, rows)
   }
 
@@ -370,12 +368,11 @@ object AnnIndex {
     }.sum
 
   /** Read the codes partitions `entries` to the driver with `snapshot`'s
-    * tombstones anti-joined out: one job (plus the tombstone set's when
-    * the snapshot carries one). */
+    * tombstones anti-joined out, one map per entry, by cell. */
   private def readSegments(spark: SparkSession, indexDir: String,
       snapshot: Map[String, Long], m: Versioned.Manifest,
       entries: Seq[(String, String)], nCodes: Int,
-      wide: Boolean): Seq[Segment] = {
+      wide: Boolean): Seq[Map[Int, CellRows]] = {
     import spark.implicits._
     val rows = antiTombstones(spark, indexDir, snapshot,
         Versioned.readPartitions(spark, indexDir, CodesTable, m, entries,
@@ -385,20 +382,11 @@ object AnnIndex {
     codesRowCount.addAndGet(rows.length)
     val byBatch = rows.groupBy(_._4)
     entries.map { case (value, _) =>
-      val batch = value.toLong
-      Segment(batch, byBatch.getOrElse(batch, Array.empty)
+      byBatch.getOrElse(value.toLong, Array.empty)
         .groupBy(_._2).map { case (cell, rs) =>
           cell -> CellRows(rs.toSeq.map(r => (r._1, r._3)), nCodes, wide)
-        })
+        }
     }
-  }
-
-  /** `version`'s tombstones as vec_id → widest cutoff ([[tombstoneScope]]),
-    * on the driver. */
-  private def tombstoneMap(spark: SparkSession, indexDir: String,
-      version: Long): Map[Long, Long] = {
-    import spark.implicits._
-    tombstoneScope(spark, indexDir, version).as[(Long, Long)].collect().toMap
   }
 
   /** One row per tombstoned id with its widest batch CUTOFF — the scope
@@ -452,9 +440,9 @@ object AnnIndex {
     * model tables are LINKED unchanged, so the transaction stages
     * O(victims) bytes and zero corpus data. Every subsequent
     * [[serveTopK]] / [[serveTopKFiltered]] drops the snapshot's
-    * tombstones from the probed candidates (an anti-join on the
-    * distributed path, a filter over the cached codes on the driver
-    * path) SCOPED to that cutoff
+    * tombstones from the probed candidates (an anti-join, on the
+    * distributed path over the codes scan, on the driver path when the
+    * snapshot cache reloads the codes) SCOPED to that cutoff
     * (`batch <= cutoff`), so an erased vector can never be returned —
     * while a LATER [[append]] legitimately reusing the id (re-consent,
     * id recycling) lands above the cutoff and stays fully servable
@@ -634,7 +622,7 @@ object AnnIndex {
     *     driver. The result is a local relation, so a warm serve starts
     *     no Spark job; the first serve after an [[append]] reads only the
     *     added partition (one small job), and one after a [[build]],
-    *     [[compact]] or [[delete]] reloads or re-scopes the cache.
+    *     [[compact]] or [[delete]] reloads the cache in full.
     *   - distributed path, above that budget or at a threshold ≤ 0: the
     *     probe cells are pushed into the codes scan as an `In(cell, …)`
     *     parquet filter (which prunes no bytes today: each codes file is

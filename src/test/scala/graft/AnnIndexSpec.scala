@@ -1076,8 +1076,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("a warm serve starts no Spark job: an append's serve reads only the " +
     "added partition in at most one job, build / compact / delete reload " +
-    "or re-scope the cached codes, and the cache holds one entry per " +
-    "directory") {
+    "the cached codes, and the cache holds one entry per directory") {
     val idx = tmp()
     AnnIndex.build(emb.filter(col("vec_id") < 200), idx)
     AnnIndex.invalidateModelCache()
@@ -1120,14 +1119,17 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(compactRows == 500L)
     assert(afterCompact == beforeCompact)
     warm(afterCompact, "after the compact")
-    // a delete adds tombstones: the cached rows are re-scoped, not reread
+    // a delete adds tombstones: the live rows reload with them anti-joined
+    // out, in four jobs (the tombstone table's schema inference, the
+    // shuffle and the broadcast of its per-id cutoffs, the codes read)
     val victimPred = col("vec_id") % 7 === 3
     val complement = emb.filter(!victimPred).select(col("vec_id"))
     val filtered = collectTopK(
       AnnIndex.serveTopKFiltered(spark, idx, local, complement, 5))
     AnnIndex.delete(emb.filter(victimPred).select(col("vec_id")), idx)
-    val (afterDelete, deleteRows) = loaded(serve()._1)
-    assert(deleteRows == 0L)
+    val ((afterDelete, deleteJobs), deleteRows) = loaded(serve())
+    assert(deleteRows == 500L - (0 until 500).count(_ % 7 == 3))
+    assert(deleteJobs <= 4, s"the serve after the delete started $deleteJobs jobs")
     assert(afterDelete == filtered && afterDelete != afterCompact)
     warm(afterDelete, "after the delete")
     val l0 = AnnIndex.modelLoads
@@ -1137,5 +1139,50 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(rebuilt == collectTopK(VectorOps.ivfPqTopK(emb, col("vec_id") < 6, 5)))
     warm(rebuilt, "after the rebuild")
     assert(AnnIndex.cachedDirs == 1)
+  }
+
+  test("pqK above 256 packs the cached codes as ints: the driver path " +
+    "equals the distributed path and one-shot ivfPqTopK bit for bit") {
+    val idx = tmp()
+    AnnIndex.build(emb, idx, AnnIndex.Params(pqK = 300))
+    AnnIndex.invalidateModelCache()
+    assert(AnnIndex.loadModel(spark, idx)._2.exists(_.exists(_._1 > 255)),
+      "no code id above 255: the int packing is not exercised")
+    val queries = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val r0 = AnnIndex.codesRowsLoaded
+    val onDriver = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
+    assert(AnnIndex.codesRowsLoaded - r0 == 500L, "the serve did not rank on the driver")
+    assert(onDriver.nonEmpty)
+    assert(onDriver == distributed(
+      collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))))
+    assert(onDriver == collectTopK(
+      VectorOps.ivfPqTopK(emb, col("vec_id") < 8, 5, pqK = 300)))
+  }
+
+  test("the snapshot cache holds codes within the broadcast budget across " +
+    "directories: serving a second index drops the first one's codes, " +
+    "not its model") {
+    val (a, b) = (tmp(), tmp())
+    AnnIndex.build(emb.filter(col("vec_id") < 200), a)
+    AnnIndex.build(emb.filter(col("vec_id") < 200), b)
+    AnnIndex.invalidateModelCache()
+    val local = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id"), col("embedding"))
+      .as[(Long, Array[Float])].collect().toSeq.toDF("query_id", "qv")
+    def serve(idx: String) = collectTopK(AnnIndex.serveTopK(spark, idx, local, 5))
+    val first = serve(a)
+    val bytes = AnnIndex.cachedCodesBytes
+    assert(bytes > 0L)
+    withConf("spark.sql.autoBroadcastJoinThreshold", (bytes * 3 / 2).toString) {
+      serve(b)
+      assert(AnnIndex.cachedCodesBytes == bytes, "both indexes' codes are held")
+      assert(AnnIndex.cachedDirs == 2)
+      val (l0, r0) = (AnnIndex.modelLoads, AnnIndex.codesRowsLoaded)
+      assert(serve(a) == first)
+      assert(AnnIndex.codesRowsLoaded - r0 == 200L, "a's codes were kept")
+      assert(AnnIndex.modelLoads == l0, "a's model was dropped")
+      assert(AnnIndex.cachedCodesBytes == bytes)
+    }
   }
 }
