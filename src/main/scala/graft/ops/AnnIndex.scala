@@ -216,6 +216,10 @@ object AnnIndex {
     * read Spark runs as a job to infer a schema. */
   private val CodesSchema =
     StructType.fromDDL("vec_id BIGINT, cell INT, codes ARRAY<INT>, batch BIGINT")
+  /** The tombstone table's columns as [[delete]] writes them, the `batch`
+    * partition column last; pre-cutoff tables lack `cutoff`. */
+  private val TombstonesSchema =
+    StructType.fromDDL("vec_id BIGINT, cutoff BIGINT, batch BIGINT")
 
   private final case class Entry(key: (Long, Long, Long), model: Model,
       codes: Option[Codes]) {
@@ -397,20 +401,35 @@ object AnnIndex {
     * id recycling) from every serve and let the next compact physically
     * drop it while the corpus upsert kept the doc — exactly the
     * table-vs-index divergence [[graft.pipelines.Erasure]] exists to
-    * prevent. Tables written before the `cutoff` column existed read as
-    * cutoff = ∞ (their historical "ids are never reusable" semantics).
-    * A re-deleted id keeps its widest cutoff via `max` — the later
-    * delete's scope covers the earlier one's. */
+    * prevent. The table is read under its fixed schema
+    * ([[TombstonesSchema]]), which skips Spark's schema-inference job;
+    * tables written before the `cutoff` column existed then read a null
+    * cutoff, which counts as ∞ (their historical "ids are never
+    * reusable" semantics). A re-deleted id keeps its widest cutoff via
+    * `max` — the later delete's scope covers the earlier one's. */
   private def tombstoneScope(spark: SparkSession, indexDir: String,
-      version: Long): DataFrame = {
-    val raw = Versioned.read(spark, indexDir, TombstonesTable, Some(version))
-    val scoped =
-      if (raw.columns.contains("cutoff"))
-        raw.select(col("vec_id"),
-          coalesce(col("cutoff"), lit(Long.MaxValue)).as("cutoff"))
-      else raw.select(col("vec_id"), lit(Long.MaxValue).as("cutoff"))
-    scoped.groupBy("vec_id").agg(max("cutoff").as("cutoff"))
+      version: Long): DataFrame =
+    readTombstones(spark, indexDir, version)
+      .select(col("vec_id"),
+        coalesce(col("cutoff"), lit(Long.MaxValue)).as("cutoff"))
+      .groupBy("vec_id").agg(max("cutoff").as("cutoff"))
       .select(col("vec_id").as("__t_vec_id"), col("cutoff").as("__t_cutoff"))
+
+  /** The tombstone table's partition manifest at `version`; every
+    * published tombstone version has one. */
+  private def tombstoneManifest(indexDir: String,
+      version: Long): Versioned.Manifest =
+    Versioned.manifest(indexDir, TombstonesTable, version)
+      .getOrElse(throw new IllegalStateException(
+        s"$TombstonesTable v$version has no partition manifest"))
+
+  /** The tombstone table at `version`, read under [[TombstonesSchema]]
+    * (no schema-inference job). */
+  private def readTombstones(spark: SparkSession, indexDir: String,
+      version: Long): DataFrame = {
+    val m = tombstoneManifest(indexDir, version)
+    Versioned.readPartitions(spark, indexDir, TombstonesTable, m, m.entries,
+      Some(TombstonesSchema))
   }
 
   /** Anti-join the snapshot's tombstones (if the snapshot carries any)
@@ -487,9 +506,7 @@ object AnnIndex {
     val fresh = dedup.withColumn("cutoff", lit(cutoff))
     val (reuse, nextBatch, stage) = snapshot.get(TombstonesTable) match {
       case Some(v) =>
-        val m = Versioned.manifest(indexDir, TombstonesTable, v)
-          .getOrElse(throw new IllegalStateException(
-            s"$TombstonesTable v$v has no partition manifest"))
+        val m = tombstoneManifest(indexDir, v)
         val prior = Versioned.read(spark, indexDir, TombstonesTable, Some(v))
         if (prior.columns.contains("cutoff"))
           (m.entries, m.entries.flatMap(_._1.toLongOption)
@@ -517,8 +534,7 @@ object AnnIndex {
     // (rows would overcount re-deleted ids — the anti-join key set is
     // what must stay broadcastable, and that set is distinct by
     // construction in [[tombstoneScope]])
-    val folded = Versioned.read(spark, indexDir, TombstonesTable,
-        Some(published(TombstonesTable)))
+    val folded = readTombstones(spark, indexDir, published(TombstonesTable))
       .select(col("vec_id")).distinct().count()
     if (folded >= math.min(compactAbove, compactTrigger(spark)))
       compact(spark, indexDir, keep)

@@ -617,7 +617,8 @@ object VectorOps {
   /** The per-partition half of the rank: score each row only against the
     * queries probing its cell (recon = centroid(cell) + decode(codes),
     * [[cosine]]) and keep a bounded top-k per query, emitted as
-    * (query_id, neighbor_id, cos_sim). */
+    * (query_id, neighbor_id, cos_sim). Each query's norm is computed once
+    * per call and each reconstruction's once per row. */
   private def partitionTopK(q: ProbedQueries, k: Int,
       coarse: Seq[(Int, Array[Float])], books: Seq[Seq[(Int, Array[Float])]],
       dim: Int): Iterator[(Long, Int, Array[Int])] => Iterator[(Long, Long, Double)] = {
@@ -626,6 +627,7 @@ object VectorOps {
     val coarseMap = coarse.toMap
     val lookup: Array[Map[Int, Array[Float]]] = books.map(_.toMap).toArray
     val (ids, vecs) = (q.ids, q.vecs)
+    val qNorms = vecs.map(norm(_, dim))
     val probing: Map[Int, Array[Int]] = q.cells.zipWithIndex
       .flatMap { case (cs, qi) => cs.map(_ -> qi) }
       .groupMap(_._1)(_._2)
@@ -641,8 +643,10 @@ object VectorOps {
             while (i < sub) { recon(s * sub + i) += cv(i); i += 1 }
             s += 1
           }
+          val rNorm = norm(recon, dim)
           qis.foreach { qi =>
-            if (ids(qi) != id) tops(qi).offer(id, cosine(vecs(qi), recon))
+            if (ids(qi) != id)
+              tops(qi).offer(id, cosine(vecs(qi), recon, qNorms(qi), rNorm))
           }
         }
       }
@@ -675,14 +679,26 @@ object VectorOps {
     * to the expression's. */
   private def cosine(x: Array[Float], y: Array[Float]): Double = {
     val n = math.min(x.length, y.length)
-    var dot = 0.0; var nx = 0.0; var ny = 0.0; var i = 0
-    while (i < n) {
-      val xi = x(i).toDouble
-      val yi = y(i).toDouble
-      dot += xi * yi; nx += xi * xi; ny += yi * yi; i += 1
-    }
-    val denom = math.sqrt(nx) * math.sqrt(ny)
+    cosine(x, y, norm(x, n), norm(y, n))
+  }
+
+  /** [[cosine]] with both norms given ([[norm]] over the shorter length):
+    * the same dot product and `denom`, so the same score bit for bit. */
+  private def cosine(x: Array[Float], y: Array[Float], xNorm: Double,
+      yNorm: Double): Double = {
+    val n = math.min(x.length, y.length)
+    var dot = 0.0; var i = 0
+    while (i < n) { dot += x(i).toDouble * y(i).toDouble; i += 1 }
+    val denom = xNorm * yNorm
     if (denom == 0.0) 0.0 else dot / denom
+  }
+
+  /** `sqrt` of the sum of squares of `v`'s first `n` terms, in index
+    * order — one of [[cosine]]'s two norms. */
+  private def norm(v: Array[Float], n: Int): Double = {
+    var s = 0.0; var i = 0
+    while (i < n) { val vi = v(i).toDouble; s += vi * vi; i += 1 }
+    math.sqrt(s)
   }
 
   /** The best `k > 0` of a stream of (id, score) offers, one entry per

@@ -96,17 +96,22 @@ object Marts {
     attackProjectAndDerive(joined)
   }
 
-  /** The scale form: same mart from a pre-fused stat table (one scan, one
-    * shuffle — RefTables.fusedAttackStats) joined only with the assist
-    * rollup. Identical output to [[attack]] (shares its oracle via q13). */
+  /** The attack tables fused (one scan, one shuffle —
+    * RefTables.fusedAttackStats) joined only with the per-player assist
+    * rollup. Identical output to [[attack]] (shares its oracle via q13).
+    * A refresh (`Runner.martBuilders`) needs no join at all: its one
+    * aggregate carries the team-level assist sums
+    * (`RefTables.TeamAssists`) and goes straight to
+    * [[attackProjectAndDerive]]. */
   def attackFused(fusedStats: DataFrame, playerAssists: DataFrame): DataFrame =
     attackProjectAndDerive(
       fusedStats.join(assistRollup(playerAssists), Seq("Team"), "inner"))
 
   /** P1: 18-column projection incl. the reference's rename
     * (`Conversion Rate (%)` → `Penalties Conversion Rate (%)`, :192),
-    * then the 10 derived metrics. */
-  private def attackProjectAndDerive(joined: DataFrame): DataFrame = {
+    * then the 10 derived metrics, over any frame carrying the 17 input
+    * columns by name. */
+  private[pipelines] def attackProjectAndDerive(joined: DataFrame): DataFrame = {
     val projected = joined.select(
       col("Team"),
       col("Big Chances"), col("Clean Sheets"),

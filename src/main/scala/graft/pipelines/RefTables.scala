@@ -16,10 +16,15 @@ import graft.ops.Det
   * Values are arbitrary but fixed — the point is operator semantics
   * (join/agg/expr), not football.
   *
-  * Scale: each table is a groupBy over lineitem (shuffle on l_suppkey,
-  * map-side partial agg) followed by a broadcast join to supplier for the
-  * name. Output is #suppliers rows → the downstream 10-way mart join is
-  * broadcast-able at any realistic supplier count.
+  * Scale: [[tables]] keeps the reference's topology, one groupBy over
+  * lineitem ⋈ broadcast supplier per table — the parity form the marts'
+  * oracles and the benchmark's output check compare against. The
+  * production path is [[fusedStats]]: any set of tables as ONE groupBy
+  * over that join, so a mart refresh reads lineitem once
+  * (`Runner.martBuilders` aggregates all three marts' tables, plus the
+  * team-level assist sums [[TeamAssists]], in one pass). Output is
+  * #suppliers rows, which the refresh collects to the driver: its
+  * supplier count is bounded by the driver heap (`Runner.martBuilders`).
   */
 object RefTables {
 
@@ -87,8 +92,22 @@ object RefTables {
           .as("Fouls per Match")),
       "total_yel_card_team" -> Seq(
         cnt(col("l_returnflag") === "N").as("Yellow Cards"),
-        cnt(col("l_returnflag") === "R" && col("l_linestatus") === "F").as("Red Cards")))
+        cnt(col("l_returnflag") === "R" && col("l_linestatus") === "F").as("Red Cards")),
+      TeamAssists -> Seq(
+        Det.dsum(col("l_quantity") * col("l_discount")).as("Actual Assists"),
+        Det.dsum(col("l_extendedprice") * col("l_discount")).as("Expected Assists")))
   }
+
+  /** The attack mart's A1 assist columns summed straight to Team — the
+    * one [[fusedStats]] entry that is not a reference table. Each row is
+    * cast to decimal(38,6) before the sum, as in the per-player
+    * `player_expected_assists` sums, and a player's exact decimal sum
+    * (at most 15 significant digits, so the nearest double reads back as
+    * the same decimal) survives `Marts.assistRollup`'s double →
+    * decimal(38,6) round trip. So these equal the rollup of the
+    * per-player rows exactly (MartsSpec pins it), without a second,
+    * per-player aggregate. */
+  val TeamAssists = "team_expected_assists"
 
   /** The six defense / three discipline stat tables in join order. */
   val defenseTableNames: Seq[String] = Seq(

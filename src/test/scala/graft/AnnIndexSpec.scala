@@ -779,6 +779,46 @@ class AnnIndexSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("a distributed serve reads the tombstones under their fixed schema: " +
+    "no schema-inference job, same rows, and a pre-cutoff tombstone table " +
+    "still erases its ids") {
+    val idx = tmp()
+    AnnIndex.build(emb, idx)
+    val queries = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val victimPred = col("vec_id") % 7 === 3
+    val victims = emb.filter(victimPred).select(col("vec_id"))
+    val expected = collectTopK(AnnIndex.serveTopKFiltered(spark, idx, queries,
+      emb.filter(!victimPred).select(col("vec_id")), 5))
+    def serve() = distributed(SparkJobs.counted(spark)(
+      collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))))
+    val (_, clean) = serve()
+    AnnIndex.delete(victims, idx)
+    val (rows, scoped) = serve()
+    info(s"distributed serve: $clean jobs without tombstones, $scoped with")
+    assert(rows == expected)
+    // the shuffle anti-join adds two shuffle stages (the tombstone
+    // aggregate's and the codes side's); inferring the tombstone schema
+    // cost a third job
+    assert(scoped - clean == 2, s"$clean jobs without tombstones, $scoped with")
+
+    // a table written before the cutoff column existed: vec_id + batch
+    // only, every id erased for good (cutoff = ∞)
+    val legacy = tmp()
+    val vs = AnnIndex.build(emb, legacy)
+    Versioned.publishGroupMembers(Seq(
+      Versioned.GroupLink(AnnIndex.CentroidsTable, vs(AnnIndex.CentroidsTable)),
+      Versioned.GroupLink(AnnIndex.CodebooksTable, vs(AnnIndex.CodebooksTable)),
+      Versioned.GroupLink(AnnIndex.CodesTable, vs(AnnIndex.CodesTable)),
+      Versioned.GroupDelta(AnnIndex.TombstonesTable,
+        victims.withColumn("batch", lit(0L)), "batch", Nil)), legacy)
+    assert(!Versioned.read(spark, legacy, AnnIndex.TombstonesTable)
+      .columns.contains("cutoff"))
+    onBothPaths {
+      assert(collectTopK(AnnIndex.serveTopK(spark, legacy, queries, 5)) == expected)
+    }
+  }
+
   test("the forced-compact trigger derives from the session's broadcast " +
     "budget (bounded ⇒ broadcastable) and counts DISTINCT ids — a " +
     "re-deleted id is one anti-join key, not one row per generation") {

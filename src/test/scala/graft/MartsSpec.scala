@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
-import graft.pipelines.Marts
+import org.apache.spark.sql.functions.{col, floor}
+import graft.pipelines.{Marts, RefTables}
 
 /** Golden tests for reference-parity mart semantics (SURVEY §5.3):
   * exact output column sets, inner-join drop of teams missing from any
@@ -112,5 +113,23 @@ class MartsSpec extends AnyFunSuite {
     val row = out.collect()(0)
     assert(row.getDouble(row.fieldIndex("Save Effectiveness")) == 40.0 / 12)
     assert(row.getDouble(row.fieldIndex("Goals Conceded Efficiency")) == 1.2)
+  }
+
+  test("team-level assist sums equal the per-player assist rollup exactly") {
+    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
+      val players = RefTables.tables(spark, dir)("player_expected_assists")
+      // fractional per-player sums: the rollup's double → decimal round
+      // trip has digits to lose
+      for (c <- Seq("Actual Assists", "Expected Assists (xA)"))
+        assert(!players.filter(col(c) =!= floor(col(c))).isEmpty,
+          s"no fractional per-player $c at $dir")
+      def rows(df: DataFrame) = df
+        .select("Team", "Actual Assists", "Expected Assists")
+        .as[(String, Double, Double)].collect().sortBy(_._1).toSeq
+      val rolled = rows(Marts.assistRollup(players))
+      val direct = rows(RefTables.fusedStats(spark, dir, Seq(RefTables.TeamAssists)))
+      assert(rolled.nonEmpty)
+      assert(direct == rolled) // exact, every double bit
+    }
   }
 }

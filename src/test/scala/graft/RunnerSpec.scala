@@ -132,6 +132,42 @@ class RunnerSpec extends AnyFunSuite {
     assert(g("attack").columns.contains("run_date"))
   }
 
+  test("runGrouped publishes the join-topology marts row for row, exact " +
+    "doubles, on sf0.001 and sf0.01") {
+    import graft.pipelines.{Marts, RefTables, Versioned}
+    for (sf <- Seq(dir, "/root/testdata/sf0.01")) {
+      val out = java.nio.file.Files.createTempDirectory("runner-parity").toString
+      Runner.runGrouped(spark, sf, out).get
+      val got = Versioned.readGroup(spark, out)
+      val t = RefTables.tables(spark, sf)
+      for ((name, mart) <- Seq("attack" -> Marts.attack(t),
+          "defense" -> Marts.defense(t), "discipline" -> Marts.discipline(t))) {
+        val expected = mart.collect().toSeq
+        val published = got(name)
+          .select(mart.columns.map(org.apache.spark.sql.functions.col): _*)
+          .collect().toSeq
+        assert(expected.nonEmpty, s"$name mart of $sf is empty")
+        assert(published.diff(expected).isEmpty && expected.diff(published).isEmpty,
+          s"$name mart of $sf differs from the join-topology mart")
+      }
+    }
+  }
+
+  test("one runGrouped starts at most 8 Spark jobs and reads lineitem once") {
+    import graft.catalog.Catalog
+    val out = java.nio.file.Files.createTempDirectory("runner-jobs").toString
+    val rows = Seq("lineitem", "supplier")
+      .map(Catalog.load(spark, dir, _).count()).sum
+    for (run <- 1 to 2) {
+      val (_, jobs, records) =
+        SparkJobs.measured(spark)(Runner.runGrouped(spark, dir, out))
+      info(s"runGrouped call $run: $jobs jobs, $records input records")
+      assert(jobs <= 8, s"runGrouped call $run started $jobs jobs")
+      assert(records == rows,
+        s"runGrouped call $run read $records records, not lineitem + supplier once ($rows)")
+    }
+  }
+
   test("mart timeout: finite timeout → Left(TimeoutException); default is unbounded") {
     import scala.concurrent.duration._
     val out = java.nio.file.Files.createTempDirectory("runner-timeout").toString
