@@ -13,24 +13,17 @@ object Bench {
       .config("spark.ui.enabled", "false")
       // populate task-end executor metrics (peak storage/exec memory)
       // continuously instead of only at 10 s heartbeats — the peaks are
-      // SweepStats' memory-pressure signal and a sub-second query would
+      // the tracer's memory-pressure signal and a sub-second query would
       // otherwise never see a sample
       .config("spark.executor.metrics.pollingInterval", "250ms")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Resource instrumentation (r12 verdict item 1): per-query task /
-    // GC / spill / block-storage counters, snapshotted between queries
-    // with a forced listener-bus drain so attribution is exact. The
-    // full table lands in a sidecar JSON (committed per round as
-    // BENCH_STATS_r{N}.json) — the data that adjudicates the
-    // sweep-vs-focused gap on the checkpoint-heavy family.
-    val stats = new graft.bench.SweepStats
-    spark.sparkContext.addSparkListener(stats)
-    def statsWindow(): graft.bench.SweepStats.Window = {
-      org.apache.spark.graft.BenchBus.flush(spark.sparkContext)
-      stats.snapshotAndReset()
-    }
-    graft.bench.StageTimings.clear()
+    // Resource instrumentation: per-query task / GC / spill /
+    // block-storage totals and per-key job records from the engine's
+    // tracer ([[Trace]]), read between queries after a listener-bus
+    // drain so attribution is exact. The full table lands in a sidecar
+    // JSON (committed per round as BENCH_STATS_r{N}.json).
+    def statsWindow() = Trace.window(spark.sparkContext)
     // Untimed warmup: JVM/codegen/scan setup shouldn't be charged to
     // whichever query happens to run first.
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => }
@@ -130,6 +123,7 @@ object Bench {
     statsWriter.newLine()
     statsWriter.flush()
     val suspects = scala.collection.mutable.ArrayBuffer[String]()
+    val stages = scala.collection.mutable.Map[String, Seq[(String, Double)]]()
     var outlierReruns = 0
     val results = try selected.zipWithIndex.map { case ((name, fn), qi) =>
       // mid-sweep canary probe: re-calibrate the trigger's host scale
@@ -223,6 +217,7 @@ object Bench {
       if (suspect) suspects += name
       // only the KEPT set's failure counts (see runReps note)
       if (times.size < reps) err.foreach(errors(name) = _)
+      val (totals, byKey) = w
       def wallsJson(ts: Seq[Double]) = ts.map(t => math.rint(t * 1000) / 1000)
         .mkString("[", ",", "]")
       statsWriter.write(s"""{"query":"$name","walls":${wallsJson(times)},""" +
@@ -238,8 +233,20 @@ object Bench {
         // not the original sweep's (r15 ADVICE)
         s""""host_scale":${r3(canary.scale)},""" +
         s""""retried":$retried,"suspect":$suspect,"sf":"$sfDir",""" +
-        w.toJson.stripPrefix("{"))
+        totals.toJson.stripPrefix("{"))
       statsWriter.newLine()
+      // the query's stage spans ("<query>.<stage>"), mean wall per call
+      // over the kept reps, for the metric line's `stages`
+      val stageSpans = byKey.collect { case (k, r)
+          if k.startsWith(s"$name.") && r("calls") > 0 =>
+        k.stripPrefix(s"$name.") -> r("wall_ns") / 1e9 / r("calls") }
+      if (stageSpans.nonEmpty) stages(name) = stageSpans
+      // a focused run also writes the kept reps' per-key job records
+      if (only.nonEmpty) byKey.foreach { case (k, r) =>
+        statsWriter.write(s"""{"query":"$name","key":"$k",""" +
+          r.toJson.stripPrefix("{"))
+        statsWriter.newLine()
+      }
       statsWriter.flush()
       // Release engine-internal persisted state (localCheckpoint blocks
       // from the dedup/graph builders, cached plans) before the next
@@ -311,16 +318,21 @@ object Bench {
       .zip(byCost).takeWhile(_._1 <= maxQueryChars).map(_._2)
     val qsTop = kept.mkString("{", ",", "}")
     // `stages`: per-stage wall split of the multi-stage pipeline
-    // queries that record one (q446's build/audits/append/decision) —
-    // last (warmest) rep, so stage regressions read from the artifact.
+    // queries that record one as spans (q446's build/audits/append/
+    // decision) — mean over the kept reps, ms precision, so stage
+    // regressions read from the artifact.
     // `retried`: rep sets re-measured by either trigger (contention or
     // sidecar-median outlier); `suspect`: queries whose kept median is
     // STILL >3× the committed instrumented reference after the retry —
     // read those rows as host-polluted evidence, not engine cost.
     // Per-query detail in the stats sidecar.
+    val stagesJson = stages.toSeq.sortBy(_._1).map { case (q, ss) =>
+      s""""$q":""" + ss.map { case (st, v) => s""""$st":${r3(v)}""" }
+        .mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
     val suspectJson = suspects.sorted
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":$reps,"failed":${errors.size},"retried":$retriedQueries,"suspect":$suspectJson,"canary":$canaryJson,"errors":$es,"stages":${graft.bench.StageTimings.toJson},"queries":$qsTop,"queries_omitted":${results.size - kept.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":$reps,"failed":${errors.size},"retried":$retriedQueries,"suspect":$suspectJson,"canary":$canaryJson,"errors":$es,"stages":$stagesJson,"queries":$qsTop,"queries_omitted":${results.size - kept.size},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

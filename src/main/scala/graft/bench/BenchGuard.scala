@@ -168,24 +168,19 @@ object BenchGuard {
   final case class Reference(medians: Map[String, Double],
       canaryMtSec: Option[Double])
 
-  /** Parse a stats sidecar (one JSON object per line) into
-    * query → median(walls). Lines without both fields, or with empty
-    * or unparseable walls, are skipped — a truncated sidecar (the
-    * crash-resilient streamed format) degrades to a smaller reference
-    * table, never an error. `sf`, when given, drops rows recorded at a
-    * DIFFERENT scale factor — a 10× data-size mismatch would read as a
-    * mass outlier event (every query legitimately ~10× its reference,
-    * every rep set re-run, the whole suite flagged `suspect`). Rows
-    * WITHOUT an sf field exist only in pre-r14 sidecars, which were all
-    * recorded at the driver's sf0.1 — so they are kept exactly when the
-    * requested sf IS an sf0.1 directory and dropped otherwise (r14+
-    * rows carry the field and this rule never applies to them). */
-  def parseSidecarMedians(lines: Iterator[String],
-      sf: Option[String] = None): Map[String, Double] =
-    parseSidecar(lines, sf).medians
-
-  /** One-pass parse of a sidecar: query medians (sf-filtered as above)
-    * plus the first canary line's saturated seconds. */
+  /** One-pass parse of a stats sidecar (one JSON object per line) into
+    * query → median(walls), plus the first canary line's saturated
+    * seconds. Lines without both fields, or with empty or unparseable
+    * walls, are skipped — a truncated sidecar (the crash-resilient
+    * streamed format) degrades to a smaller reference table, never an
+    * error. `sf`, when given, drops rows recorded at a DIFFERENT scale
+    * factor — a 10× data-size mismatch would read as a mass outlier
+    * event (every query legitimately ~10× its reference, every rep set
+    * re-run, the whole suite flagged `suspect`). Rows WITHOUT an sf
+    * field exist only in pre-r14 sidecars, which were all recorded at
+    * the driver's sf0.1 — so they are kept exactly when the requested sf
+    * IS an sf0.1 directory and dropped otherwise (r14+ rows carry the
+    * field and this rule never applies to them). */
   def parseSidecar(lines: Iterator[String],
       sf: Option[String] = None): Reference = {
     def sfMatches(line: String, want: String): Boolean =
@@ -279,7 +274,9 @@ object BenchGuard {
       index > 0 && index % MidProbeEvery == 0
   }
 
-  /** The reference table: `SPARK_GRAFT_BENCH_REF` if set, else the
+  /** The reference sidecar ([[Reference]]: the medians plus the
+    * reference run's canary, which Bench wires into [[canaryScale]]):
+    * `SPARK_GRAFT_BENCH_REF` if set, else the
     * highest-round `BENCH_STATS_r<N>_final.json` in `dir`, else empty
     * (trigger disabled — e.g. a fresh clone). `exclude` names the file
     * the CURRENT run is writing: when the stats output is itself given
@@ -289,14 +286,6 @@ object BenchGuard {
     * silently disarms the trigger for exactly the run that was meant to
     * exercise it (observed r14: a 4.3× q135 shipped unflagged,
     * `retried: 0`). */
-  def loadReference(dir: String = ".",
-      explicit: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_REF"),
-      sf: Option[String] = None,
-      exclude: Option[String] = None): Map[String, Double] =
-    loadReferenceFull(dir, explicit, sf, exclude).medians
-
-  /** [[loadReference]] plus the reference run's canary (the full
-    * [[Reference]]) — what Bench wires into [[canaryScale]]. */
   def loadReferenceFull(dir: String = ".",
       explicit: Option[String] = sys.env.get("SPARK_GRAFT_BENCH_REF"),
       sf: Option[String] = None,

@@ -1,7 +1,7 @@
 package graft.bench
 
 /** Host-level CPU accounting for the bench sweep — the counterpart to
-  * [[SweepStats]]' Spark-internal counters, and the instrument that
+  * the tracer's Spark-internal counters ([[graft.Trace]]), and the instrument that
   * ended round 12's "ambient load" re-litigation: the official r12
   * per-query inflations clustered in CONTIGUOUS alphabetical windows of
   * the sweep schedule (q135–q175 at 1.5–10×, q487–q488 both ~5.5×)

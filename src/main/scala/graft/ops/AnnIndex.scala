@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Trace
 import graft.pipelines.{Fs, Versioned}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -74,8 +75,9 @@ object AnnIndex {
   private val AllTables =
     Seq(CentroidsTable, CodebooksTable, CodesTable, TombstonesTable)
 
-  /** Run `body` as THE writer of this index — every mutating lifecycle
-    * op wraps itself in this ([[Versioned.withFamilyLease]] over all
+  /** Run `body` as THE writer of this index, traced as the span
+    * `ops.AnnIndex.<op>` — every mutating lifecycle op wraps itself in
+    * this ([[Versioned.withFamilyLease]] over all
     * four member tables), so its read-snapshot → decide → publish span
     * can never interleave with another writer's: a delete racing an
     * append would otherwise commit a journal whose LINKED codes version
@@ -85,8 +87,10 @@ object AnnIndex {
     * and a `delete`-triggered `compact` nest for free; a SECOND
     * process's writer is refused loudly
     * ([[Versioned.ConcurrentWriterException]]). */
-  private def asIndexWriter[A](indexDir: String)(body: => A): A =
-    Versioned.withFamilyLease(indexDir, AllTables)(body)
+  private def asIndexWriter[A](op: String, indexDir: String)(body: => A): A =
+    Trace.span(s"ops.AnnIndex.$op") {
+      Versioned.withFamilyLease(indexDir, AllTables)(body)
+    }
 
   /** Index hyperparameters, persisted implicitly by the published model
     * shapes (nCells = centroid rows, m = distinct subspaces, pqK = codes
@@ -124,7 +128,7 @@ object AnnIndex {
     * the caller retrains over the current, already-erased corpus, so the
     * erase is physical in the new generation. */
   def build(emb: DataFrame, indexDir: String, p: Params = Params(),
-      keep: Int = 3): Map[String, Long] = asIndexWriter(indexDir) {
+      keep: Int = 3): Map[String, Long] = asIndexWriter("build", indexDir) {
     buildLabelled(emb, indexDir, p, keep, math.max(admittedHwm(indexDir), 0L))
   }
 
@@ -231,16 +235,15 @@ object AnnIndex {
   /** Directories whose entries the cache holds at once; the next new one
     * clears it (bounds a long session that serves many indexes). */
   private val MaxCachedDirs = 16
-  private val modelLoadCount = new java.util.concurrent.atomic.AtomicLong(0)
-  private val codesRowCount = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Driver-side [[graft.Trace]] counters: model-parquet loads, and code
+    * rows read into the cache. */
+  private[graft] val ModelLoads = "ops.AnnIndex.model_loads"
+  private[graft] val CodesRowsLoaded = "ops.AnnIndex.codes_rows_loaded"
 
   /** Number of ACTUAL model-parquet loads since JVM start — the
     * observability hook AnnIndexSpec uses to prove that a repeated serve
     * against an unchanged model reads no model files. */
-  def modelLoads: Long = modelLoadCount.get
-
-  /** Code rows read into the cache since JVM start. */
-  private[graft] def codesRowsLoaded: Long = codesRowCount.get
+  def modelLoads: Long = Trace.counter(ModelLoads)
 
   /** Directories the cache holds an entry for. */
   private[graft] def cachedDirs: Int = cache.size
@@ -297,7 +300,7 @@ object AnnIndex {
       .as[(Int, Int, Array[Float])].collect()
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (_, rows) => rows.sortBy(_._2).map(r => (r._2, r._3)).toSeq }
-    modelLoadCount.incrementAndGet()
+    Trace.count(ModelLoads)
     (coarse, books)
   }
 
@@ -383,7 +386,7 @@ object AnnIndex {
           Some(CodesSchema)))
       .select(col("vec_id"), col("cell"), col("codes"), col("batch"))
       .as[(Long, Int, Array[Int], Long)].collect()
-    codesRowCount.addAndGet(rows.length)
+    Trace.count(CodesRowsLoaded, rows.length)
     val byBatch = rows.groupBy(_._4)
     entries.map { case (value, _) =>
       byBatch.getOrElse(value.toLong, Array.empty)
@@ -496,7 +499,7 @@ object AnnIndex {
     * immediately. */
   def delete(victims: DataFrame, indexDir: String, keep: Int = 3,
       compactAbove: Long = 1L << 20): Map[String, Long] =
-      asIndexWriter(indexDir) {
+      asIndexWriter("delete", indexDir) {
     val spark = victims.sparkSession
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val dedup = victims.select(col("vec_id")).distinct()
@@ -669,7 +672,7 @@ object AnnIndex {
     * `allowed` semi join applied. */
   private def serveProbed(spark: SparkSession, indexDir: String,
       queries: DataFrame, k: Int, nProbe: Int,
-      allowed: Option[DataFrame]): DataFrame = {
+      allowed: Option[DataFrame]): DataFrame = Trace.span("ops.AnnIndex.serve") {
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val entry = cached(spark, indexDir, snapshot)
     val (coarse, books) = entry.model
@@ -730,7 +733,7 @@ object AnnIndex {
     * snapshot's highest manifested batch ([[admittedHwm]]) is a replay. */
   def append(batch: DataFrame, indexDir: String, batchId: Long,
       keep: Int = 3, skipIfExists: Boolean = false): Map[String, Long] =
-      asIndexWriter(indexDir) {
+      asIndexWriter("append", indexDir) {
     val spark = batch.sparkSession
     val snapshot = Versioned.latestGroupVersions(indexDir)
     val (coarse, books) = cached(spark, indexDir, snapshot).model
@@ -778,7 +781,7 @@ object AnnIndex {
     * dir ages out via vacuum/retention). */
   def buildOrAppend(batch: DataFrame, indexDir: String, batchId: Long,
       p: Params = Params(), keep: Int = 3): Map[String, Long] =
-    asIndexWriter(indexDir) {
+    asIndexWriter("buildOrAppend", indexDir) {
       // the bootstrap-or-grow DECISION is inside the writer span too: a
       // second writer between this check and the build would otherwise
       // race two bootstraps into one directory
@@ -802,7 +805,7 @@ object AnnIndex {
     * cutoff`) is unchanged, since any later [[delete]]'s cutoff is at
     * least the label. */
   def compact(spark: SparkSession, indexDir: String,
-      keep: Int = 3): Map[String, Long] = asIndexWriter(indexDir) {
+      keep: Int = 3): Map[String, Long] = asIndexWriter("compact", indexDir) {
     val snapshot = Versioned.latestGroupVersions(indexDir)
     // tombstones FOLD IN here: the rewrite anti-joins erased ids out of
     // the merged codes, and the new group journal simply omits the

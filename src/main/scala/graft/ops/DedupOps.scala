@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Trace
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.Pin._
@@ -413,9 +414,10 @@ object DedupOps {
       threshold: Double = 0.5, maxDf: Long = DefaultMaxDf): DataFrame = {
     // localCheckpoint: md fans out to the postings and docsets branches
     // (docsets twice) — without it the compiled shingle pass re-runs per
-    // consumer
+    // consumer. Eager, as in [[incrementalJaccardPairs]]: those branches
+    // run as concurrent stages
     val md = minhashDocs(docs, n, k = 0).filter(size(col("shs")) > 0)
-      .pinLazy
+      .pinEager
     val sh = md.select(col("doc_id"), explode(col("shs")).as("sh_h"))
     val docsets = md.select(col("doc_id"), col("shs"),
       size(col("shs")).cast("long").as("n_sh"))
@@ -557,7 +559,8 @@ object DedupOps {
     * never reruns ([[graft.pipelines.CorpusPublisher]] clusters at both
     * its thresholds this way). */
   def clustersFromPairs(docs: DataFrame, scoredPairs: DataFrame,
-      maxIters: Int = 25, driverEdgeCap: Long = 1L << 20): DataFrame = {
+      maxIters: Int = 25, driverEdgeCap: Long = 1L << 20): DataFrame =
+      Trace.span("ops.DedupOps.clusters") {
     val spark = docs.sparkSession
     import spark.implicits._
     val pairs = scoredPairs.select(col("doc_a"), col("doc_b"))
@@ -736,11 +739,16 @@ object DedupOps {
     *         batch doc). */
   def incrementalJaccardPairs(corpus: DataFrame, batch: DataFrame,
       n: Int = 5, threshold: Double = 0.5,
-      maxDf: Long = DefaultMaxDf): DataFrame = {
+      maxDf: Long = DefaultMaxDf): DataFrame = Trace.span("ops.DedupOps.pairs") {
+    // pinned EAGERLY: the postings and docsets exchanges below run as
+    // concurrent stages over both sets, and a lazy pin is checkpointed
+    // when the first of them finishes, dropping the lineage (and the
+    // SQL metrics) that the other stage's running tasks still report
+    // to — each such task logged "Failed to update accumulator"
     val cmd = minhashDocs(corpus, n, k = 0).filter(size(col("shs")) > 0)
-      .pinLazy
+      .pinEager
     val bmd = minhashDocs(batch, n, k = 0).filter(size(col("shs")) > 0)
-      .pinLazy
+      .pinEager
     def postings(md: DataFrame, side: String) =
       md.select(col("doc_id"), explode(col("shs")).as("sh_h"))
         .withColumn("side", lit(side))

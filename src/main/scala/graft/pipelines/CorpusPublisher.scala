@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.Trace
 import graft.ops.{DedupOps, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -200,7 +201,8 @@ object CorpusPublisher {
     * 0; returns (table → version). */
   def publish(docs: DataFrame, baseDir: String, qualityMin: Double = 0.38,
       dedupThreshold: Double = 0.5, splitThreshold: Double = 0.3,
-      trainPct: Int = 80, valPct: Int = 10, keep: Int = 3): Map[String, Long] = {
+      trainPct: Int = 80, valPct: Int = 10, keep: Int = 3): Map[String, Long] =
+      Trace.span("pipelines.CorpusPublisher.publish") {
     // limit(0) plans as an empty LocalRelation: the corpus-side joins of
     // the admission prune away instead of running over nothing
     val noCorpus = docs.select(col("doc_id"), col("text"), lit("").as("split"))
@@ -273,7 +275,8 @@ object CorpusPublisher {
   def appendBatch(batch: DataFrame, baseDir: String, batchId: Long,
       qualityMin: Double = 0.38, dedupThreshold: Double = 0.5,
       splitThreshold: Double = 0.3, trainPct: Int = 80, valPct: Int = 10,
-      keep: Int = 3): Map[String, Long] = {
+      keep: Int = 3): Map[String, Long] =
+      Trace.span("pipelines.CorpusPublisher.appendBatch") {
     val spark = batch.sparkSession
     import spark.implicits._
     underFamilyLease(baseDir) { vs =>
@@ -349,15 +352,17 @@ object CorpusPublisher {
     // committing between this snapshot read and the erase's journal
     // would be rolled back by the erase (resurrection in reverse — its
     // admitted docs silently vanish); the lease serializes them
-    underFamilyLease(baseDir) { vs =>
-      val vKeys = victims.select(col("doc_id")).distinct()
-      val survivors = SplitTables.map { case (t, s) =>
-        Versioned.read(spark, baseDir, t, Some(vs(t)))
-          .join(vKeys, Seq("doc_id"), "left_anti")
-          .withColumn("split", lit(s))
-      }.reduce(_ unionByName _)
-        .pinLazy // feeds the member writes AND the manifest
-      publishSides(survivors, budget(survivors), identity, _ => Nil,
-        baseDir, keep)
+    Trace.span("pipelines.CorpusPublisher.erase") {
+      underFamilyLease(baseDir) { vs =>
+        val vKeys = victims.select(col("doc_id")).distinct()
+        val survivors = SplitTables.map { case (t, s) =>
+          Versioned.read(spark, baseDir, t, Some(vs(t)))
+            .join(vKeys, Seq("doc_id"), "left_anti")
+            .withColumn("split", lit(s))
+        }.reduce(_ unionByName _)
+          .pinLazy // feeds the member writes AND the manifest
+        publishSides(survivors, budget(survivors), identity, _ => Nil,
+          baseDir, keep)
+      }
     }
 }

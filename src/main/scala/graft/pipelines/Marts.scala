@@ -97,7 +97,7 @@ object Marts {
   }
 
   /** The attack tables fused (one scan, one shuffle —
-    * RefTables.fusedAttackStats) joined only with the per-player assist
+    * RefTables.fusedStats) joined only with the per-player assist
     * rollup. Identical output to [[attack]] (shares its oracle via q13).
     * A refresh (`Runner.martBuilders`) needs no join at all: its one
     * aggregate carries the team-level assist sums
@@ -130,17 +130,16 @@ object Marts {
   /** Defense mart (reference dag-transform.py:243-320): 6-way inner join →
     * 13-column projection → 10 metrics. */
   def defense(t: Map[String, DataFrame]): DataFrame =
-    defenseProjectAndDerive(innerJoinAll(Seq(
+    defenseFused(innerJoinAll(Seq(
       t("expected_goals_conceded_team"), t("goals_conceded_team_match"),
       t("interception_team"), t("penalty_conceded_team"), t("saves_team"),
       t("won_tackle_team"))))
 
-  /** Scale form: defense mart from the fused one-scan stat table. */
-  def defenseFused(fusedStats: DataFrame): DataFrame =
-    defenseProjectAndDerive(fusedStats)
-
-  private def defenseProjectAndDerive(joined: DataFrame): DataFrame = {
-    val projected = joined.select(
+  /** The defense projection and metrics over any frame carrying its 13
+    * input columns by name: the fused one-scan stat table (scale form)
+    * or the joined reference tables ([[defense]]). */
+  def defenseFused(stats: DataFrame): DataFrame = {
+    val projected = stats.select(
       col("Team"), col("Matches"), col("Expected Goals Conceded"),
       col("Goals Conceded per Match"), col("Total Goals Conceded"),
       col("Interceptions per Match"), col("Total Interceptions"),
@@ -153,15 +152,14 @@ object Marts {
   /** Discipline mart (reference dag-transform.py:324-389): 3-way inner join
     * → 7-column projection → 10 metrics. */
   def discipline(t: Map[String, DataFrame]): DataFrame =
-    disciplineProjectAndDerive(innerJoinAll(Seq(
+    disciplineFused(innerJoinAll(Seq(
       t("fk_foul_lost_team"), t("interception_team"), t("total_yel_card_team"))))
 
-  /** Scale form: discipline mart from the fused one-scan stat table. */
-  def disciplineFused(fusedStats: DataFrame): DataFrame =
-    disciplineProjectAndDerive(fusedStats)
-
-  private def disciplineProjectAndDerive(joined: DataFrame): DataFrame = {
-    val projected = joined.select(
+  /** The discipline projection and metrics over any frame carrying its 7
+    * input columns by name: the fused one-scan stat table (scale form)
+    * or the joined reference tables ([[discipline]]). */
+  def disciplineFused(stats: DataFrame): DataFrame = {
+    val projected = stats.select(
       col("Team"), col("Matches"), col("Fouls per Match"),
       col("Interceptions per Match"), col("Total Interceptions"),
       col("Yellow Cards"), col("Red Cards"))

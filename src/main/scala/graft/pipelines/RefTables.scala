@@ -37,7 +37,7 @@ object RefTables {
   private def cnt(cond: org.apache.spark.sql.Column) = count(when(cond, lit(1)))
 
   /** Per-table aggregate expressions, shared by the per-table plans and
-    * the fused single-scan variant ([[fusedAttackStats]]). */
+    * the fused single-scan variant ([[fusedStats]]). */
   private def aggExprs: Map[String, Seq[org.apache.spark.sql.Column]] = {
     val matches = countDistinct(col("l_orderkey")).as("Matches")
     Map(
@@ -134,38 +134,15 @@ object RefTables {
     "expected_goals_team", "ontarget_scoring_att_team", "penalty_won_team",
     "possession_won_att", "team_goals_per_match", "touches_in_opp_box_team")
 
-  /** Scale rewrite of the attack input side: all nine per-team stat
-    * tables in ONE scan + ONE shuffle (a single groupBy computing the
-    * union of their aggregates) instead of nine scans and shuffles.
-    * Semantically identical to joining the nine tables (they share the
-    * groupBy key and inner-join on it) — q13 proves it against q10's
-    * oracle. At 100 TB this is the difference between reading lineitem
-    * once and reading it nine times. */
-  def fusedAttackStats(spark: SparkSession, dir: String): DataFrame =
-    fusedStats(spark, dir, attackTableNames)
-
-  /** All 18 reference-shaped tables as DataFrames keyed by reference name. */
+  /** All 18 reference-shaped tables as DataFrames keyed by reference
+    * name: one groupBy per team table of [[aggExprs]] (the assist sums
+    * [[TeamAssists]] are not a reference table), plus the per-player
+    * assists. */
   def tables(spark: SparkSession, dir: String): Map[String, DataFrame] = {
     val b = base(spark, dir)
-    def agg(cols: org.apache.spark.sql.Column*): DataFrame =
-      b.groupBy(col("s_name").as("Team")).agg(cols.head, cols.tail: _*)
-    def aggT(name: String): DataFrame = {
-      val cs = aggExprs(name)
-      b.groupBy(col("s_name").as("Team")).agg(cs.head, cs.tail: _*)
-    }
-
-    val matches = countDistinct(col("l_orderkey")).as("Matches")
-
-    Map(
-      "big_chance_team" -> aggT("big_chance_team"),
-      "clean_sheet_team" -> aggT("clean_sheet_team"),
-      "effective_clearance_team" -> aggT("effective_clearance_team"),
-      "expected_goals_team" -> aggT("expected_goals_team"),
-      "ontarget_scoring_att_team" -> aggT("ontarget_scoring_att_team"),
-      "penalty_won_team" -> aggT("penalty_won_team"),
-      "possession_won_att" -> aggT("possession_won_att"),
-      "team_goals_per_match" -> aggT("team_goals_per_match"),
-      "touches_in_opp_box_team" -> aggT("touches_in_opp_box_team"),
+    (aggExprs - TeamAssists).map { case (name, cs) =>
+      name -> b.groupBy(col("s_name").as("Team")).agg(cs.head, cs.tail: _*)
+    } + (
       // per-player rows: player = (Team, l_partkey); mart rolls up (A1)
       "player_expected_assists" -> b.groupBy(col("s_name").as("Team"), col("l_partkey").as("Player"))
         .agg(
@@ -175,15 +152,7 @@ object RefTables {
           // decimal hits 1e-6 midpoints where Spark (HALF_UP) and DuckDB
           // (exact-binary nearest) round differently.
           Det.dsum(col("l_extendedprice") * col("l_discount"))
-            .as("Expected Assists (xA)")),
-      "expected_goals_conceded_team" -> aggT("expected_goals_conceded_team"),
-      "goals_conceded_team_match" -> aggT("goals_conceded_team_match"),
-      "interception_team" -> aggT("interception_team"),
-      "penalty_conceded_team" -> aggT("penalty_conceded_team"),
-      "saves_team" -> aggT("saves_team"),
-      "won_tackle_team" -> aggT("won_tackle_team"),
-      "fk_foul_lost_team" -> aggT("fk_foul_lost_team"),
-      "total_yel_card_team" -> aggT("total_yel_card_team"))
+            .as("Expected Assists (xA)")))
   }
 
   // ---- DuckDB oracle CTEs (1:1 with the DataFrames above) -------------

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.Trace
 import org.apache.hadoop.fs.Path
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -137,7 +138,8 @@ object Runner {
     * with journal replay, like any write-ahead-log owner. */
   def runGrouped(spark: SparkSession, sfDir: String, baseDir: String,
       runDate: java.time.LocalDate = java.time.LocalDate.now(),
-      keep: Int = 3): Option[Map[String, Long]] = {
+      keep: Int = 3): Option[Map[String, Long]] =
+      Trace.span("pipelines.Runner.runGrouped") {
     if (!gate(sfDir)) return None
     Versioned.recoverGroups(baseDir)
     val marts = martBuilders(spark, sfDir).toSeq.sortBy(_._1).map {

@@ -1,5 +1,6 @@
 package graft.pipelines
 
+import graft.Trace
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
@@ -642,7 +643,8 @@ object Versioned {
     * [[readGroup]] snapshot contract. Linked members stage nothing and
     * are never re-committed (their `_COMMIT` already exists). */
   def publishGroupMembers(members: Seq[GroupMember], baseDir: String,
-      keep: Int = 3): Map[String, Long] = {
+      keep: Int = 3): Map[String, Long] =
+      Trace.span("pipelines.Versioned.publishGroupMembers") {
     require(keep >= 1, "keep must retain at least the current version")
     require(members.nonEmpty, "publishGroup needs at least one table")
     require(members.map(_.name).distinct.size == members.size,
@@ -1014,7 +1016,8 @@ object Versioned {
     * Partitioned versions come back as data columns in written order with
     * the partition column last. */
   def read(spark: SparkSession, baseDir: String, name: String,
-      version: Option[Long] = None): DataFrame = {
+      version: Option[Long] = None): DataFrame =
+      Trace.span("pipelines.Versioned.read") {
     val t = tableDir(baseDir, name)
     val v = version.orElse(latestVersion(baseDir, name)).getOrElse(
       throw new IllegalStateException(s"no published version of $name"))

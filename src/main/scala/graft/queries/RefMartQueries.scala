@@ -62,11 +62,11 @@ object RefMartQueries {
   // ---- attack, fused (scale rewrite) ----------------------------------
 
   /** Same mart, one lineitem scan + one shuffle for all nine stat tables
-    * (RefTables.fusedAttackStats) — proves the scan-sharing rewrite
-    * against the identical oracle. */
+    * (RefTables.fusedStats) — proves the scan-sharing rewrite against
+    * the identical oracle. */
   def attackFused(spark: SparkSession, dir: String): DataFrame =
     Marts.attackFused(
-      RefTables.fusedAttackStats(spark, dir),
+      RefTables.fusedStats(spark, dir, RefTables.attackTableNames),
       RefTables.tables(spark, dir)("player_expected_assists"))
       .orderBy(col("Team"))
 

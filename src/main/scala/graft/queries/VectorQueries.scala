@@ -304,21 +304,21 @@ object VectorQueries {
         graft.ops.AnnIndex.recallAudit(spark, idx, c, nq, k)
           .select(col("codes_version"), col("recall_at_k"))
           .as[(Long, Double)].head()
-      // stage wraps feed the bench artifact's `stages` field (r12
-      // verdict item 6): the ~8 s total decomposes as two model
-      // trainings (build + the rebuild inside maybeRebuild) + three
-      // O(sample×corpus) recall audits — structural cost, now visible
+      // stage spans ("<query>.<stage>") feed the bench artifact's
+      // `stages` field (r12 verdict item 6): the ~8 s total decomposes as
+      // two model trainings (build + the rebuild inside maybeRebuild) +
+      // three O(sample×corpus) recall audits — structural cost, visible
       // as data per round instead of re-litigated from the one total
       val Q = "q446_ann_recall_drift"
-      graft.bench.StageTimings.time(Q, "build") {
+      graft.Trace.span(s"$Q.build") {
         graft.ops.AnnIndex.build(base, idx) }
-      val fresh = graft.bench.StageTimings.time(Q, "audit_fresh") {
+      val fresh = graft.Trace.span(s"$Q.audit_fresh") {
         audit(base) }
-      graft.bench.StageTimings.time(Q, "append") {
+      graft.Trace.span(s"$Q.append") {
         graft.ops.AnnIndex.append(shifted, idx, batchId = 1L) }
       // maybeRebuild's decision row already carries the post-append audit
       // (recall_before at audited_version) — no separate drifted audit
-      val decision = graft.bench.StageTimings.time(Q, "rebuild_decide") {
+      val decision = graft.Trace.span(s"$Q.rebuild_decide") {
         graft.ops.AnnIndex.maybeRebuild(corpus, idx,
             minRecall = fresh._2 * 0.9, nQueries = nq, k = k)
           .select(col("audited_version"), col("recall_before"), col("rebuilt"),
@@ -552,7 +552,7 @@ object VectorQueries {
           p = graft.ops.AnnIndex.Params(nCells = 8, m = 4))
         .option("checkpointLocation", s"$tmp/_ck").start()
       try {
-        // Stage walls land in the bench artifact's `stages` field
+        // Stage spans land in the bench artifact's `stages` field
         // (q446's recipe — r13 verdict item 5): the reps' wall spread
         // was adjudicated as streaming per-epoch scheduling latency,
         // and this decomposition shows WHICH leg breathes — ingest
@@ -563,7 +563,7 @@ object VectorQueries {
           .select("doc_id", "text", "lang", "source", "n_chars")
           .as[IngestDoc].collect() // MemoryStream harness input, driver-fed
         val epochs = Seq(0L, 1L).map(m => rows.filter(_.doc_id % 2 == m))
-        graft.bench.StageTimings.time(QN, "ingest") {
+        graft.Trace.span(s"$QN.ingest") {
           epochs.foreach { ep => ms.addData(ep.toSeq); q.processAllAvailable() }
         }
         val corpusIds = graft.pipelines.Versioned.read(spark, base, "corpus")
@@ -574,7 +574,7 @@ object VectorQueries {
         val withEmb = e.select(col("vec_id")).as[Long].collect().toSet
         // logical replay: re-deliver epoch 1's docs — all already
         // published, so the dedup vet must admit nothing on either leg
-        graft.bench.StageTimings.time(QN, "logical_replay") {
+        graft.Trace.span(s"$QN.logical_replay") {
           ms.addData(epochs.head.toSeq); q.processAllAvailable()
         }
         val corpusAfter = graft.pipelines.Versioned
@@ -583,7 +583,7 @@ object VectorQueries {
           .read(spark, idx, graft.ops.AnnIndex.CodesTable).count()
         val queries = e.filter(col("vec_id") < NQ)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-        val served = graft.bench.StageTimings.time(QN, "serve") {
+        val served = graft.Trace.span(s"$QN.serve") {
           graft.ops.AnnIndex.serveTopK(spark, idx, queries, K)
             .select(col("neighbor_id")).as[Long].collect()
         }
@@ -607,7 +607,7 @@ object VectorQueries {
         // epochs(0) = even ids (bootstrap, batch 1); epochs(1) = odd
         // (batch 2) — replay whichever one admitted the victim
         val victimEpoch = (victim % 2).toInt
-        graft.bench.StageTimings.time(QN, "erase") {
+        graft.Trace.span(s"$QN.erase") {
           graft.pipelines.Erasure.eraseEverywhere(spark, base, "corpus",
             Seq("doc_id"), idx, Seq(victim).toDF("doc_id"), physical = false)
         }
@@ -618,7 +618,7 @@ object VectorQueries {
           .serveTopK(spark, idx, queries, K)
           .select(col("neighbor_id")).as[Long].collect()
         val (afterErase, afterReplay) =
-          graft.bench.StageTimings.time(QN, "replay_audit") {
+          graft.Trace.span(s"$QN.replay_audit") {
             val a = servedNow()
             graft.ops.AnnIndex.append(
               e.select(col("vec_id"), col("embedding"))

@@ -4,13 +4,10 @@ import org.apache.spark.SparkContext
 
 /** Measurement-fidelity bridge into the (package-private) listener bus.
   *
-  * [[graft.bench.SweepStats]] attributes task/storage events to the
-  * query that was running when they happened by snapshotting its
-  * counters between queries — but Spark posts listener events
-  * ASYNCHRONOUSLY, so without a drain the tail of query N's events can
-  * land in query N+1's window and the per-query attribution the whole
-  * instrument exists for becomes approximate exactly where it matters
-  * (the expensive queries emit the most events). `waitUntilEmpty` is
+  * [[graft.Trace.window]] reads the tracer's totals between the
+  * windows a caller measures (a bench query, a test block), but Spark
+  * posts listener events ASYNCHRONOUSLY: without a drain the tail of one
+  * window's events lands in the next. `waitUntilEmpty` is
   * `private[spark]`, hence this one-method accessor in the spark
   * namespace; nothing else in the repo reaches behind the public API.
   */

@@ -1132,9 +1132,9 @@ class AnnIndexSpec extends AnyFunSuite {
       assert(rows == expected, what)
     }
     def loaded[A](body: => A): (A, Long) = {
-      val r0 = AnnIndex.codesRowsLoaded
+      val r0 = Trace.counter(AnnIndex.CodesRowsLoaded)
       val a = body
-      (a, AnnIndex.codesRowsLoaded - r0)
+      (a, Trace.counter(AnnIndex.CodesRowsLoaded) - r0)
     }
     val (cold, coldRows) = loaded(serve()._1)
     assert(coldRows == 200L)
@@ -1190,9 +1190,9 @@ class AnnIndexSpec extends AnyFunSuite {
       "no code id above 255: the int packing is not exercised")
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val r0 = AnnIndex.codesRowsLoaded
+    val r0 = Trace.counter(AnnIndex.CodesRowsLoaded)
     val onDriver = collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))
-    assert(AnnIndex.codesRowsLoaded - r0 == 500L, "the serve did not rank on the driver")
+    assert(Trace.counter(AnnIndex.CodesRowsLoaded) - r0 == 500L, "the serve did not rank on the driver")
     assert(onDriver.nonEmpty)
     assert(onDriver == distributed(
       collectTopK(AnnIndex.serveTopK(spark, idx, queries, 5))))
@@ -1218,9 +1218,9 @@ class AnnIndexSpec extends AnyFunSuite {
       serve(b)
       assert(AnnIndex.cachedCodesBytes == bytes, "both indexes' codes are held")
       assert(AnnIndex.cachedDirs == 2)
-      val (l0, r0) = (AnnIndex.modelLoads, AnnIndex.codesRowsLoaded)
+      val (l0, r0) = (AnnIndex.modelLoads, Trace.counter(AnnIndex.CodesRowsLoaded))
       assert(serve(a) == first)
-      assert(AnnIndex.codesRowsLoaded - r0 == 200L, "a's codes were kept")
+      assert(Trace.counter(AnnIndex.CodesRowsLoaded) - r0 == 200L, "a's codes were kept")
       assert(AnnIndex.modelLoads == l0, "a's model was dropped")
       assert(AnnIndex.cachedCodesBytes == bytes)
     }

@@ -43,7 +43,7 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"query":"q4_d","walls":[3.0,1.0""",            // truncated → skipped
       """not json at all""",
       """{"query":"q5_e","walls":[5.5,4.5,6.5],"walls_rejected":[9.0]}""")
-    val m = BenchGuard.parseSidecarMedians(lines.iterator)
+    val m = BenchGuard.parseSidecar(lines.iterator).medians
     assert(m == Map("q1_a" -> 1.1, "q2_b" -> 2.0, "q5_e" -> 5.5))
   }
 
@@ -54,18 +54,18 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"query":"q1_a","walls":[1.0],"sf":"/data/sf0.1"}""",
       """{"query":"q2_b","walls":[2.0],"sf":"/data/sf1"}""",
       """{"query":"q3_c","walls":[3.0]}""") // pre-r14 row: no sf field
-    val m = BenchGuard.parseSidecarMedians(lines.iterator,
-      sf = Some("/data/sf0.1"))
+    val m = BenchGuard.parseSidecar(lines.iterator,
+      sf = Some("/data/sf0.1")).medians
     // the legacy sf-less row is kept at sf0.1 (the scale every pre-r14
     // sidecar was recorded at)…
     assert(m == Map("q1_a" -> 1.0, "q3_c" -> 3.0))
     // …but DROPPED at any other scale — keeping it at sf1 would make
     // the whole committed r13 reference a mass-outlier table
-    val m1 = BenchGuard.parseSidecarMedians(lines.iterator,
-      sf = Some("/data/sf1"))
+    val m1 = BenchGuard.parseSidecar(lines.iterator,
+      sf = Some("/data/sf1")).medians
     assert(m1 == Map("q2_b" -> 2.0))
     // no filter requested → everything parses
-    assert(BenchGuard.parseSidecarMedians(lines.iterator).size == 3)
+    assert(BenchGuard.parseSidecar(lines.iterator).medians.size == 3)
   }
 
   test("loadReference picks the highest ROUND number (numeric, not " +
@@ -80,14 +80,14 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"query":"q1_a","walls":[1.0,2.0,3.0]}""")
     write("BENCH_STATS_r13_sweep1.json",
       """{"query":"q1_a","walls":[8.0,8.0,8.0]}""") // non-final: ignored
-    assert(BenchGuard.loadReference(dir, explicit = None) ==
+    assert(BenchGuard.loadReferenceFull(dir, explicit = None).medians ==
       Map("q1_a" -> 2.0))
     // explicit path wins over the directory scan
-    assert(BenchGuard.loadReference(dir,
-      explicit = Some(s"$dir/BENCH_STATS_r9_final.json")) ==
+    assert(BenchGuard.loadReferenceFull(dir,
+      explicit = Some(s"$dir/BENCH_STATS_r9_final.json")).medians ==
       Map("q1_a" -> 9.0))
     val empty = java.nio.file.Files.createTempDirectory("benchguard_e_").toString
-    assert(BenchGuard.loadReference(empty, explicit = None).isEmpty)
+    assert(BenchGuard.loadReferenceFull(empty, explicit = None).medians.isEmpty)
   }
 
   test("loadReference EXCLUDES the current run's own stats output: a " +
@@ -101,10 +101,10 @@ class BenchGuardSpec extends AnyFunSuite {
       """{"query":"q1_a","walls":[1.0,2.0,3.0]}""")
     write("BENCH_STATS_r14_final.json", "") // the run's own, just created
     // without the exclusion the empty r14 file wins and the table is {}
-    assert(BenchGuard.loadReference(dir, explicit = None).isEmpty)
+    assert(BenchGuard.loadReferenceFull(dir, explicit = None).medians.isEmpty)
     // with it, the previous round's table arms the trigger
-    assert(BenchGuard.loadReference(dir, explicit = None,
-      exclude = Some(s"$dir/BENCH_STATS_r14_final.json")) ==
+    assert(BenchGuard.loadReferenceFull(dir, explicit = None,
+      exclude = Some(s"$dir/BENCH_STATS_r14_final.json")).medians ==
       Map("q1_a" -> 2.0))
   }
 
